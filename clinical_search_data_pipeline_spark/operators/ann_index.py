@@ -7,39 +7,43 @@ vectors per run. This module materializes the trained index once and makes
 every subsequent search a probe of the persisted artifacts — the FAISS
 production deployment shape (Jegou et al. TPAMI 2011; Johnson, Douze,
 Jegou, "Billion-scale similarity search with GPUs", 2017: train/add once,
-search many):
+search many), in FAISS's inverted-list layout:
 
-* ``build_ann_index`` derives the four index relations from the corpus —
-  `centroids` (cell, cv, cnorm: the coarse quantizer, K rows),
-  `codebook`  (m, j, cw: the PQ codewords, M x K rows),
-  `cells`     (vec_id, cell: the inverted-file assignment),
-  `codes`     (vec_id, m, code: the PQ-compressed corpus, M ints/vector —
-  the ONLY per-vector state a search ever scans; 25x smaller than raw);
+* ``build_ann_index`` derives the two index relations from the corpus —
+  `model` (ONE row: `cents` = array of (cell, cv, cnorm) sorted by cell,
+  the coarse quantizer; `cb` = the PQ codewords flattened so entry
+  m*PQ_K + j is codeword (m, j)) and
+  `lists` (cell, vec_id, codes: one row per vector, its PQ_M codes in m
+  order — the inverted lists, and the ONLY per-vector state a search
+  ever scans; 25x smaller than raw);
 * ``write_ann_index`` publishes each relation through the snapshot-
   committed sink (sinks/manifest.py) — an atomic, versioned index: a
   re-index publishes new versions while a racing search keeps reading the
   previous complete ones, and an index rollback is a version pin;
 * ``read_ann_index`` resolves the committed artifacts (latest or pinned);
+* ``add_to_ann_index`` encodes new vectors against the committed model
+  with the same `_encode` the build runs, so add == rebuild bit for bit;
 * ``remove_from_ann_index`` / ``compact_ann_index`` are the maintenance
   half of FAISS remove_ids(): removes are O(removed) tombstones masked at
   search time by a broadcast anti-join; compaction physically applies
   them and collapses the small files repeated ``add_to_ann_index``
   increments accrue — add+compact is pinned bit-equal to a fresh rebuild;
-* ``ann_index_topk`` searches FROM THE INDEX ALONE: the query vectors (a
-  tiny relation) compute their ADC lookup tables against the broadcast
-  persisted codebook and pick nprobe cells against the broadcast persisted
-  centroids; candidates are cell-pruned `cells` joined to `codes` — no raw
-  corpus vector is read at query time (tests/test_ann_index.py pins
+* ``ann_index_topk`` searches FROM THE INDEX ALONE in one narrow pass over
+  `lists`: the query relation (a tiny relation) crosses the broadcast
+  model row to pick its nprobe cells and build its ADC distance table,
+  and that query-sized relation broadcasts into `lists` on `cell` — no
+  raw corpus vector is read at query time (tests/test_ann_index.py pins
   `inputFiles()` of the probe plan to the index tables only).
 
-At 100 TB: `codes`/`cells` are the big sides — both partition by vec_id
-and meet in an equi-join; everything query-sided (queries, centroids,
-codebook, distance tables) is broadcast. Search cost per query is
-~ nprobe / n_centroids of the codes, exactly the on-the-fly
-`similarity.ann_ivfpq_topk` plan with the derivation scans amortized to
-zero. BOTH quantizers are TRAINED by default (FAISS's train() step,
-VERDICT r11 #3): the coarse quantizer with ANN_TRAIN_ROUNDS fixed Lloyd
-rounds and the PQ codebook with one order-pinned Lloyd round
+At 100 TB: `lists` is the only big side and it is never shuffled — the
+query relation meets it in a broadcast hash join on `cell`, each
+candidate's ADC distance is a per-row fold of its codes array, and the one
+shuffle is the (query_id)-keyed top-k window over the candidates. A search
+reads every `lists` row but keeps only the nprobe / n_centroids of them in
+its probed cells; partitioning `lists` by `cell` would make it read only
+those (ROADMAP open item). BOTH quantizers are TRAINED by default (FAISS's
+train() step, VERDICT r11 #3): the coarse quantizer with ANN_TRAIN_ROUNDS
+fixed Lloyd rounds and the PQ codebook with one order-pinned Lloyd round
 (similarity.pq_train_codebooks(pinned=True)) — at sf0.1 the trained
 index returns 12/40 true top-5 neighbors vs the all-seed index's 7/40.
 The driver hash-verifies the trained index against an oracle composing
@@ -56,6 +60,7 @@ from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.operators.fragments import (
     _DUCK_BASE_CTE,
+    _SPARK_V,
     N_QUERIES,
     TOP_K,
     _spark_dot,
@@ -63,10 +68,11 @@ from clinical_search_data_pipeline_spark.operators.fragments import (
 from clinical_search_data_pipeline_spark.operators.similarity import (
     CENTROID_BASE,
     N_CENTROIDS,
+    PQ_K,
+    PQ_M,
+    PQ_SUB,
     _spark_l2sq,
-    ivf_assignments,
     pq_codebook,
-    pq_codes,
     pq_subvectors,
     vectors_with_norms,
 )
@@ -74,7 +80,7 @@ from clinical_search_data_pipeline_spark.registry import register
 from clinical_search_data_pipeline_spark.sinks import manifest
 from clinical_search_data_pipeline_spark.sources.readers import read_table
 
-INDEX_TABLES = ("centroids", "codebook", "cells", "codes")
+INDEX_TABLES = ("model", "lists")
 META_TABLE = "meta"  # (table, version) pin rows — committed LAST
 TOMBSTONE_TABLE = "tombstones"  # (vec_id) rows pending physical removal
 
@@ -94,29 +100,98 @@ TOMBSTONE_TABLE = "tombstones"  # (vec_id) rows pending physical removal
 ANN_TRAIN_ROUNDS = 2
 
 
+def _ranked_cells(v: str, norm: str) -> str:
+    """SQL: the model's cells as (s, cell) structs ordered by cosine desc,
+    then cell asc — the order of the assignment window
+    (clustering._assign / similarity.ivf_assignments), with the same
+    `_spark_dot(v, cv) / (norm * cnorm)` score, so element 0 is a vector's
+    cell and the first nprobe elements a query's probes."""
+    return (
+        "array_sort(transform(cents, c -> named_struct("
+        f"'s', {_spark_dot(v, 'c.cv')} / ({norm} * c.cnorm), 'cell', c.cell)), "
+        "(a, b) -> CASE WHEN a.s > b.s THEN -1 WHEN a.s < b.s THEN 1 "
+        "WHEN a.cell < b.cell THEN -1 WHEN a.cell > b.cell THEN 1 ELSE 0 END)"
+    )
+
+
+def _sub_dists(v: str, norm: str) -> str:
+    """SQL: PQ_M x PQ_K squared-L2 distances from the unit vector's
+    subvectors to the model's codewords — entry [m][j] is the
+    `_spark_l2sq(su, cw)` that similarity.pq_codes and the ADC distance
+    table compute, with su = slice(v / norm) exactly as
+    similarity.pq_subvectors slices it. `v` and `norm` must be columns
+    computed below a join: an inlined expression would be re-evaluated
+    inside every lambda call."""
+    su = f"transform(slice({v}, sub_m * {PQ_SUB} + 1, {PQ_SUB}), x -> x / {norm})"
+    return (
+        f"transform(sequence(0, {PQ_M - 1}), sub_m -> "
+        f"transform(slice(cb, sub_m * {PQ_K} + 1, {PQ_K}), cw -> "
+        f"{_spark_l2sq(su, 'cw')}))"
+    )
+
+
+def _encode(emb: DataFrame, model: DataFrame) -> DataFrame:
+    """(cell, vec_id, codes) — `emb` encoded against the model row: the
+    max-cosine cell (ties to the lowest cell) and, per subspace, the
+    nearest codeword (ties to the lowest j), the choices the windowed
+    clustering._assign / similarity.pq_codes make. One narrow pass over
+    the vectors crossed with the broadcast 1-row model; build and add
+    both encode through here, so add == rebuild holds bit for bit."""
+    return (
+        vectors_with_norms(emb)
+        .crossJoin(F.broadcast(model))
+        .select(
+            F.expr(f"{_ranked_cells('v', 'norm')}[0].cell").alias("cell"),
+            "vec_id",
+            F.expr(
+                f"transform({_sub_dists('v', 'norm')}, "
+                "ds -> array_position(ds, array_min(ds)) - 1)"
+            )
+            .cast("array<int>")
+            .alias("codes"),
+        )
+    )
+
+
+def _model(centroids: DataFrame, codebook: DataFrame) -> DataFrame:
+    """The 1-row `model` relation from (cell, cv, cnorm) centroids and an
+    (m, j, cw) codebook, localCheckpointed: it is read by the publish AND
+    broadcast into the corpus encode, and its lineage is the training
+    (or, untrained, a corpus scan) that must run once per build."""
+    cents = centroids.agg(
+        F.sort_array(F.collect_list(F.struct("cell", "cv", "cnorm"))).alias(
+            "cents"
+        )
+    )
+    cb = codebook.agg(
+        F.expr("transform(sort_array(collect_list(struct(m, j, cw))), s -> s.cw)")
+        .alias("cb")
+    )
+    return cents.crossJoin(cb).localCheckpoint()
+
+
 def build_ann_index(
     emb: DataFrame,
     train_rounds: int = ANN_TRAIN_ROUNDS,
     train_on: DataFrame | None = None,
     train_pq: bool | None = None,
 ) -> dict[str, DataFrame]:
-    """Derive the four IVFADC index relations from the corpus vectors.
+    """Derive the two IVFADC index relations (`model`, `lists`) from the
+    corpus vectors.
 
     One-time cost, the 'train + add' phase: the coarse quantizer is
     TRAINED — `train_rounds` fixed Lloyd alternations from the
     deterministic seed (clustering.trained_quantizer) over `train_on`
     (default: the corpus itself; pass a fixed sample at 100 TB, FAISS's
-    own train/add split) — then every corpus vector is assigned to its
-    nearest trained centroid. `train_rounds=0` keeps the raw seed-slice
+    own train/add split) — then every corpus vector is encoded against the
+    trained model (`_encode`). `train_rounds=0` keeps the raw seed-slice
     quantizer (the pre-r12 behavior; the add/compact bit-equality
     fixtures use it so 'fresh rebuild' has a frozen quantizer to agree
-    with). The assignment is a broadcast-K-centroids scan + per-vec_id
-    argmax, the encode a broadcast-codebook scan + per-(vec_id, m)
-    argmin — both shuffle only on vec_id-keyed windows, never
-    vector x vector; each training round is one (cell, dim)-keyed
-    shuffle with no driver sync."""
+    with). The encode is one narrow pass of the corpus against the
+    broadcast 1-row model — no shuffle beyond the input fan-out; each
+    training round is one (cell, dim)-keyed shuffle with no per-round
+    collect."""
     from clinical_search_data_pipeline_spark.operators.clustering import (
-        _assign,
         trained_quantizer,
     )
     from clinical_search_data_pipeline_spark.operators.similarity import (
@@ -128,29 +203,22 @@ def build_ann_index(
         # coarse quantizer AND the PQ codebooks in one train() call) and
         # the seed path keeps both frozen for the equivalence fixtures
         train_pq = train_rounds > 0
-    subs = pq_subvectors(emb)
 
     def _train_pq_cb() -> DataFrame:
         # one order-pinned Lloyd round per subspace over the sliced init
         # (pq_train_codebooks(pinned=True)) — the exact training round
-        # q_ann_pq_trained_topk's oracle replays bit-exactly in SQL.
-        # localCheckpoint: the codebook is MODEL-sized (M x K rows) but its
-        # lineage is the whole training pass, and it feeds BOTH the
-        # published `codebook` relation and the corpus encode (`codes`) —
-        # without the cut the publish path executes PQ training twice.
+        # q_ann_pq_trained_topk's oracle replays bit-exactly in SQL
         return pq_train_codebooks(
             train_on or emb, rounds=1, pinned=True
         ).localCheckpoint()
 
     def _train_coarse() -> DataFrame:
-        # Same cut for the coarse quantizer: `trained_quantizer` is a lazy
-        # unroll of the Lloyd rounds, referenced by the published
-        # `centroids` relation AND the corpus assignment (`cells`) — the
-        # checkpoint makes coarse training execute once per build.
+        # `trained_quantizer` is a lazy unroll of the Lloyd rounds; the
+        # checkpoint is the action that runs it (in the pool below, beside
+        # the PQ training)
         cents, _ = trained_quantizer(train_on or emb, train_rounds)
         return cents.localCheckpoint()
 
-    base = vectors_with_norms(emb)
     if train_pq and train_rounds > 0:
         # The two training materializations are independent jobs on one
         # session; running them from a 2-thread pool lets the scheduler
@@ -165,56 +233,48 @@ def build_ann_index(
             cents_fut = pool.submit(_train_coarse)
             cb = cb_fut.result()
             centroids = cents_fut.result()
-        cells = _assign(base, centroids, "cell").select("vec_id", "cell")
-        return {
-            "centroids": centroids,
-            "codebook": cb,
-            "cells": cells,
-            "codes": pq_codes(subs, cb),
-        }
-    if train_pq:
-        cb = _train_pq_cb()
     else:
-        cb = pq_codebook(subs)
-    if train_rounds > 0:
-        centroids = _train_coarse()
-        cells = _assign(base, centroids, "cell").select("vec_id", "cell")
-    else:
-        centroids = base.filter(
-            (F.col("vec_id") >= CENTROID_BASE)
-            & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-        ).select(
-            (F.col("vec_id") - CENTROID_BASE).alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("norm").alias("cnorm"),
+        cb = _train_pq_cb() if train_pq else pq_codebook(pq_subvectors(emb))
+        if train_rounds > 0:
+            centroids = _train_coarse()
+        else:
+            centroids = vectors_with_norms(emb).filter(
+                (F.col("vec_id") >= CENTROID_BASE)
+                & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
+            ).select(
+                (F.col("vec_id") - CENTROID_BASE).alias("cell"),
+                F.col("v").alias("cv"),
+                F.col("norm").alias("cnorm"),
+            )
+    model = _model(centroids, cb)
+    n_cells, n_codewords = model.select(F.size("cents"), F.size("cb")).first()
+    if n_cells < 1 or n_codewords != PQ_M * PQ_K:
+        raise ValueError(
+            f"index training produced {n_cells} centroids and {n_codewords} "
+            f"codewords (need >= 1 and {PQ_M * PQ_K}): the training vectors "
+            "must include the seed rows (centroid and codebook vec_ids)"
         )
-        cells = ivf_assignments(emb).select("vec_id", "cell")
-    return {
-        "centroids": centroids,
-        "codebook": cb,
-        "cells": cells,
-        "codes": pq_codes(subs, cb),
-    }
+    return {"model": model, "lists": _encode(emb, model)}
 
 
 def write_ann_index(index: dict[str, DataFrame], root: str) -> dict[str, int]:
     """Publish the index relations as snapshot tables under `root`; returns
     {table: committed version} (including the meta pin's own version).
 
-    Multi-table consistency: each of the four relations commits atomically
-    on its own, but a re-index writes them in sequence — a reader
-    resolving "latest of each" mid-re-index could pair new codes with old
-    centroids. So the LAST commit is a 4-row `meta` table pinning the
-    exact (table, version) quadruple, and `read_ann_index` resolves
-    through it: until the meta pin lands, every reader keeps getting the
-    previous complete quadruple (the same resolve-the-manifest-first
-    discipline the snapshot sink applies per table, lifted one level)."""
-    # The four table publishes are independent write actions on disjoint
-    # paths; a thread pool overlaps them so the big `codes`/`cells` writes
-    # back-fill the tiny `centroids`/`codebook` commits' scheduling gaps
-    # (guide §2.6). Readers stay consistent regardless of landing order:
-    # nothing is visible until the meta pin — still committed LAST, after
-    # every table write returned — publishes the complete quadruple.
+    Multi-table consistency: each relation commits atomically on its own,
+    but a re-index writes them in sequence — a reader resolving "latest
+    of each" mid-re-index could pair new lists with an old model. So the
+    LAST commit is a `meta` table pinning the exact (table, version)
+    pair, and `read_ann_index` resolves through it: until the meta pin
+    lands, every reader keeps getting the previous complete index (the
+    same resolve-the-manifest-first discipline the snapshot sink applies
+    per table, lifted one level)."""
+    # The table publishes are independent write actions on disjoint
+    # paths; a thread pool overlaps them so the corpus-sized `lists` write
+    # back-fills the 1-row `model` commit's scheduling gaps (guide §2.6).
+    # Readers stay consistent regardless of landing order: nothing is
+    # visible until the meta pin — still committed LAST, after every
+    # table write returned — publishes the complete index.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(INDEX_TABLES)) as pool:
@@ -242,19 +302,68 @@ def write_ann_index(index: dict[str, DataFrame], root: str) -> dict[str, int]:
     return versions
 
 
+def _check_layout(root: str, versions: dict[str, int]) -> None:
+    """Refuse a pin set that lacks this layout's tables — an index written
+    before the inverted-list layout (centroids/codebook/cells/codes) has
+    no `model`/`lists` to search and must be rebuilt."""
+    missing = [t for t in INDEX_TABLES if t not in versions]
+    if missing:
+        raise ValueError(
+            f"ANN index at {root} pins {sorted(versions)}, not the "
+            f"{'/'.join(INDEX_TABLES)} layout (missing {missing}); re-index "
+            "it with write_ann_index(build_ann_index(...), root)"
+        )
+
+
+def _pinned(spark: SparkSession, root: str) -> tuple[int, dict[str, int]]:
+    """(meta version, {table: version}) of the latest meta pin. Resolves
+    the pin version ONCE and reads the pins AT that version — two
+    unpinned reads could straddle a concurrent commit, CAS-ing against a
+    tip whose pins were never read (ADVICE r10)."""
+    meta_version = manifest.latest_version(f"{root}/{META_TABLE}")
+    pins = manifest.read_snapshot(
+        spark, f"{root}/{META_TABLE}", version=meta_version
+    )
+    versions = {r.table: r.version for r in pins.collect()}
+    _check_layout(root, versions)
+    return meta_version, versions
+
+
+def _publish_pins(
+    spark: SparkSession, root: str, versions: dict[str, int], parent: int
+) -> dict[str, int]:
+    """Commit the meta pin for `versions` with CAS on `parent`; returns
+    `versions` with the new meta version added."""
+    pins_df = spark.createDataFrame(
+        # carry EVERY pinned relation forward (tombstones included when a
+        # remove happened since the last compaction)
+        sorted(versions.items()),
+        "table string, version int",
+    )
+    versions[META_TABLE] = manifest.write_snapshot(
+        pins_df,
+        f"{root}/{META_TABLE}",
+        mode="overwrite",
+        expected_parent=parent,
+    )
+    return versions
+
+
 def read_ann_index(
     spark: SparkSession, root: str, versions: dict[str, int] | None = None
 ) -> dict[str, DataFrame]:
     """Resolve the committed index: by explicit {table: version} pins, or
-    (default) through the latest `meta` quadruple — a CONSISTENT view even
+    (default) through the latest `meta` pin — a CONSISTENT view even
     while a re-index is mid-flight (its meta pin is the last thing to
     land). The meta read is a few bounded rows on the driver. When the
     pin carries a `tombstones` row (a remove happened since the last
     compaction), the pending-removal relation rides along and
-    `ann_index_topk` masks it out."""
+    `ann_index_topk` masks it out. A root written in the superseded
+    four-table layout raises ValueError (re-index it)."""
     if versions is None:
         pins = manifest.read_snapshot(spark, f"{root}/{META_TABLE}")
         versions = {r.table: r.version for r in pins.collect()}
+    _check_layout(root, versions)
     names = list(INDEX_TABLES)
     if TOMBSTONE_TABLE in versions:
         names.append(TOMBSTONE_TABLE)
@@ -270,19 +379,18 @@ def add_to_ann_index(
     spark: SparkSession, root: str, new_emb: DataFrame
 ) -> dict[str, int]:
     """FAISS `add()`: fold NEW vectors into the persisted index without
-    retraining — encode them under the FROZEN coarse quantizer and PQ
-    codebook (both broadcast from the committed artifacts), append the
-    resulting (vec_id, cell) and (vec_id, m, code) rows to the `cells` /
-    `codes` snapshot tables (append mode reuses every existing file by
-    reference — the increment is the only data written), and publish a
-    fresh meta pin. Because the quantizers are frozen, add-then-search is
-    EXACTLY equal to a full rebuild whenever the training vectors
-    (centroid + codebook rows) were already in the index — the property
-    tests/test_ann_index.py pins bit-for-bit.
+    retraining — encode them against the FROZEN committed model (the
+    build's own `_encode`, model row broadcast), append the resulting
+    (cell, vec_id, codes) rows to the `lists` snapshot table (append mode
+    reuses every existing file by reference — the increment is the only
+    data written), and publish a fresh meta pin. Because the quantizers
+    are frozen, add-then-search is EXACTLY equal to a full rebuild
+    whenever the training vectors (centroid + codebook rows) were already
+    in the index — the property tests/test_ann_index.py pins bit-for-bit.
 
     Concurrency: the meta pin commits with ``expected_parent`` — two
     racing adds cannot silently drop each other; the loser gets
-    `SnapshotConflict` and re-runs. The cells/codes appends fold in the
+    `SnapshotConflict` and re-runs. The lists append folds in the
     META-PINNED version's files (``base_version=``), not the table tip:
     rows appended by a racer or crashed add whose meta pin never landed
     are orphaned at the tip and NEVER folded forward — a re-run starts
@@ -291,15 +399,8 @@ def add_to_ann_index(
     refused outright (a doubled vector would surface twice in every
     candidate list).
 
-    Returns the new {table: version} map (centroids/codebook unchanged)."""
-    # resolve the pin version ONCE and read the pins AT that version —
-    # two unpinned reads could straddle a concurrent commit, CAS-ing
-    # against a tip whose pins were never read (ADVICE r10)
-    meta_version = manifest.latest_version(f"{root}/{META_TABLE}")
-    pins = manifest.read_snapshot(
-        spark, f"{root}/{META_TABLE}", version=meta_version
-    )
-    versions = {r.table: r.version for r in pins.collect()}
+    Returns the new {table: version} map (model unchanged)."""
+    meta_version, versions = _pinned(spark, root)
     index = {
         name: manifest.read_snapshot(
             spark, f"{root}/{name}", version=versions[name]
@@ -307,7 +408,7 @@ def add_to_ann_index(
         for name in INDEX_TABLES
     }
     dup = (
-        index["cells"]
+        index["lists"]
         .join(F.broadcast(new_emb.select("vec_id")), "vec_id", "left_semi")
         .count()
     )
@@ -316,49 +417,21 @@ def add_to_ann_index(
             f"{dup} vec_ids already present in the index at {root}; "
             "adds must be novel vectors (re-index to replace)"
         )
-    wq = Window.partitionBy("vec_id").orderBy(
-        F.col("_cscore").desc(), F.col("cell").asc()
+    versions["lists"] = manifest.write_snapshot(
+        _encode(new_emb, index["model"]),
+        f"{root}/lists",
+        mode="append",
+        collect_stats=False,
+        base_version=versions["lists"],
     )
-    new_cells = (
-        vectors_with_norms(new_emb)
-        .crossJoin(F.broadcast(index["centroids"]))
-        .withColumn(
-            "_cscore",
-            F.expr(_spark_dot("v", "cv")) / (F.col("norm") * F.col("cnorm")),
-        )
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "cell")
-    )
-    new_codes = pq_codes(pq_subvectors(new_emb), index["codebook"])
-    versions["cells"] = manifest.write_snapshot(
-        new_cells, f"{root}/cells", mode="append", collect_stats=False,
-        base_version=versions["cells"],
-    )
-    versions["codes"] = manifest.write_snapshot(
-        new_codes, f"{root}/codes", mode="append", collect_stats=False,
-        base_version=versions["codes"],
-    )
-    pins_df = spark.createDataFrame(
-        # carry EVERY pinned relation forward (tombstones included when a
-        # remove happened since the last compaction)
-        sorted(versions.items()),
-        "table string, version int",
-    )
-    versions[META_TABLE] = manifest.write_snapshot(
-        pins_df,
-        f"{root}/{META_TABLE}",
-        mode="overwrite",
-        expected_parent=meta_version,
-    )
-    return versions
+    return _publish_pins(spark, root, versions, meta_version)
 
 
 def remove_from_ann_index(
     spark: SparkSession, root: str, vec_ids
 ) -> dict[str, int]:
     """FAISS `remove_ids()`: mark vectors deleted via a TOMBSTONE relation
-    instead of rewriting the corpus-sided cells/codes tables — a remove is
+    instead of rewriting the corpus-sided `lists` table — a remove is
     O(removed), search masks the tombstones with a broadcast anti-join
     (their count is bounded between compactions), and
     `compact_ann_index` later applies them physically. `vec_ids` is a
@@ -371,19 +444,12 @@ def remove_from_ann_index(
             [(int(v),) for v in vec_ids], "vec_id long"
         )
     vec_ids = vec_ids.select("vec_id").distinct()
-    # resolve the pin version ONCE and read the pins AT that version —
-    # two unpinned reads could straddle a concurrent commit, CAS-ing
-    # against a tip whose pins were never read (ADVICE r10)
-    meta_version = manifest.latest_version(f"{root}/{META_TABLE}")
-    pins = manifest.read_snapshot(
-        spark, f"{root}/{META_TABLE}", version=meta_version
-    )
-    versions = {r.table: r.version for r in pins.collect()}
-    cells = manifest.read_snapshot(
-        spark, f"{root}/cells", version=versions["cells"]
+    meta_version, versions = _pinned(spark, root)
+    lists = manifest.read_snapshot(
+        spark, f"{root}/lists", version=versions["lists"]
     )
     missing = (
-        vec_ids.join(cells.select("vec_id"), "vec_id", "left_anti").count()
+        vec_ids.join(lists.select("vec_id"), "vec_id", "left_anti").count()
     )
     if missing:
         raise ValueError(
@@ -404,57 +470,40 @@ def remove_from_ann_index(
         versions[TOMBSTONE_TABLE] = manifest.write_snapshot(
             vec_ids, tomb_table, mode="overwrite", collect_stats=False
         )
-    pins_df = spark.createDataFrame(
-        sorted(versions.items()), "table string, version int"
-    )
-    versions[META_TABLE] = manifest.write_snapshot(
-        pins_df,
-        f"{root}/{META_TABLE}",
-        mode="overwrite",
-        expected_parent=meta_version,
-    )
-    return versions
+    return _publish_pins(spark, root, versions, meta_version)
 
 
 def compact_ann_index(
     spark: SparkSession, root: str, target_files: int = 4
 ) -> dict[str, int]:
     """Index maintenance: physically apply the pending tombstones to the
-    cells/codes relations and collapse the small files that repeated
+    `lists` relation and collapse the small files that repeated
     `add_to_ann_index` increments accrue (each add appends its own stage
-    directory) into `target_files` per relation. Publishes fresh
-    overwrite versions + an empty tombstone set + a meta pin (CAS), so a
-    racing search keeps reading the previous complete quadruple. The
-    rewrite is O(index), which is the amortized bargain: removes and adds
-    stay O(increment) between compactions. With no removes in the window
-    this is exactly `compact_snapshot` semantics — values unchanged,
-    layout collapsed — so add+compact stays bit-equal to a fresh rebuild
+    directory) into `target_files`. Publishes a fresh overwrite version +
+    an empty tombstone set + a meta pin (CAS), so a racing search keeps
+    reading the previous complete index. The rewrite is O(index), which
+    is the amortized bargain: removes and adds stay O(increment) between
+    compactions. With no removes in the window this is exactly
+    `compact_snapshot` semantics — values unchanged, layout collapsed —
+    so add+compact stays bit-equal to a fresh rebuild
     (tests/test_ann_index.py pins it)."""
-    # resolve the pin version ONCE and read the pins AT that version —
-    # two unpinned reads could straddle a concurrent commit, CAS-ing
-    # against a tip whose pins were never read (ADVICE r10)
-    meta_version = manifest.latest_version(f"{root}/{META_TABLE}")
-    pins = manifest.read_snapshot(
-        spark, f"{root}/{META_TABLE}", version=meta_version
+    meta_version, versions = _pinned(spark, root)
+    lists = manifest.read_snapshot(
+        spark, f"{root}/lists", version=versions["lists"]
     )
-    versions = {r.table: r.version for r in pins.collect()}
-    index = {
-        name: manifest.read_snapshot(
-            spark, f"{root}/{name}", version=versions[name]
+    tombs = None
+    if TOMBSTONE_TABLE in versions:
+        tombs = manifest.read_snapshot(
+            spark, f"{root}/{TOMBSTONE_TABLE}",
+            version=versions[TOMBSTONE_TABLE],
         )
-        for name in versions
-    }
-    tombs = index.get(TOMBSTONE_TABLE)
-    for name in ("cells", "codes"):
-        df = index[name]
-        if tombs is not None:
-            df = df.join(F.broadcast(tombs), "vec_id", "left_anti")
-        versions[name] = manifest.write_snapshot(
-            df.repartition(target_files),
-            f"{root}/{name}",
-            mode="overwrite",
-            collect_stats=False,
-        )
+        lists = lists.join(F.broadcast(tombs), "vec_id", "left_anti")
+    versions["lists"] = manifest.write_snapshot(
+        lists.repartition(target_files),
+        f"{root}/lists",
+        mode="overwrite",
+        collect_stats=False,
+    )
     if tombs is not None:
         versions[TOMBSTONE_TABLE] = manifest.write_snapshot(
             tombs.limit(0),
@@ -462,16 +511,7 @@ def compact_ann_index(
             mode="overwrite",
             collect_stats=False,
         )
-    pins_df = spark.createDataFrame(
-        sorted(versions.items()), "table string, version int"
-    )
-    versions[META_TABLE] = manifest.write_snapshot(
-        pins_df,
-        f"{root}/{META_TABLE}",
-        mode="overwrite",
-        expected_parent=meta_version,
-    )
-    return versions
+    return _publish_pins(spark, root, versions, meta_version)
 
 
 def ann_index_topk(
@@ -492,6 +532,18 @@ def ann_index_topk(
     same max-cosine/lowest-cell rule, so the persisted path is
     hash-interchangeable with the on-the-fly one.
 
+    Per-request plan, one narrow pass over `lists`:
+    * `queries` is scanned ONCE and crosses the broadcast 1-row model:
+      per query, its nprobe best cells (an array sort in the assignment
+      window's order) and its PQ_M x PQ_K decimal(18,9) distance table;
+    * that query-sized relation, exploded per probed cell, broadcasts
+      into `lists` on `cell` (pending tombstones anti-joined first);
+    * a candidate's `adist` is the decimal(28,9) fold of
+      dt[m*PQ_K + code] over its codes array — decimal addition is
+      exact, so it equals the per-code `sum(d)` of the on-the-fly plan;
+    * the (adist, vec_id) top-k window is the plan's ONE shuffle
+      (query_id-keyed, fed only the probed cells' candidates).
+
     ``rerank=R`` adds FAISS's refine step (IndexRefineFlat; VERDICT r12
     #4): the ADC stage proposes its top-R pool per query, then ONLY those
     R rows are re-scored with the exact cosine against ``vectors`` (the
@@ -500,69 +552,59 @@ def ann_index_topk(
     neighbor_id, rank, score). Recall@k is provably >= the ADC-alone
     top-k at the same nprobe: the pool is a superset of ADC's own top-k,
     and any exact-top-k member in the pool outranks every other pool row
-    under exact scoring. Scale shape: the candidate pairs (n_queries x R
-    rows) BROADCAST into the join against `vectors`, so the
-    full-precision relation is never shuffled and never scanned beyond
-    the candidate probe — on a snapshot-committed corpus sorted by
-    vec_id, footer-stats pruning makes that probe sub-scan too."""
+    under exact scoring. Scale shape: the pool rows (n_queries x R, each
+    carrying its query's qv/qnorm) BROADCAST into a join against the
+    `vectors` scan itself, so the full-precision relation is never
+    shuffled and never scanned beyond the candidate probe — on a
+    snapshot-committed corpus sorted by vec_id, footer-stats pruning
+    makes that probe sub-scan too."""
     if rerank is not None and vectors is None:
         raise ValueError("rerank needs the full-precision `vectors` relation")
-    qsubs = pq_subvectors(queries).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("su").alias("qsu")
-    )
-    dt = qsubs.join(index["codebook"], "m").select(
-        "query_id",
-        "m",
-        F.col("j").alias("code"),
-        F.round(F.expr(_spark_l2sq("qsu", "cw")), 9)
-        .cast("decimal(18,9)")
-        .alias("d"),
-    )
-    qvecs = vectors_with_norms(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cscore").desc(), F.col("cell").asc()
-    )
-    qcells = (
-        qvecs.crossJoin(F.broadcast(index["centroids"]))
-        .withColumn(
-            "_cscore",
-            F.expr(_spark_dot("qv", "cv")) / (F.col("qnorm") * F.col("cnorm")),
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.expr(_SPARK_V).alias("qv")
+    ).withColumn("qnorm", F.expr(f"sqrt({_spark_dot('qv', 'qv')})"))
+    probes = (
+        q.crossJoin(F.broadcast(index["model"]))
+        .select(
+            "query_id",
+            "qv",
+            "qnorm",
+            F.explode(
+                F.expr(
+                    f"transform(slice({_ranked_cells('qv', 'qnorm')}, 1, "
+                    f"{nprobe}), p -> p.cell)"
+                )
+            ).alias("qcell"),
+            F.expr(
+                f"flatten(transform({_sub_dists('qv', 'qnorm')}, "
+                "ds -> transform(ds, d -> CAST(round(d, 9) AS DECIMAL(18,9)))))"
+            ).alias("dt"),
         )
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", F.col("cell").alias("qcell"))
     )
-    cells = index["cells"]
+    if rerank is None:
+        probes = probes.drop("qv", "qnorm")
+    lists = index["lists"]
     tombs = index.get(TOMBSTONE_TABLE)
     if tombs is not None:
         # pending removals: masked at the candidate source — tombstone
         # count is bounded between compactions, so the anti-join side
         # broadcasts
-        cells = cells.join(F.broadcast(tombs), "vec_id", "left_anti")
-    cand = (
-        cells
-        .join(
-            F.broadcast(qcells),
+        lists = lists.join(F.broadcast(tombs), "vec_id", "left_anti")
+    scored = (
+        lists.join(
+            F.broadcast(probes),
             (F.col("cell") == F.col("qcell"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .select("query_id", "vec_id", "cell")
-        .join(index["codes"], "vec_id")
-    )
-    scored = (
-        cand.join(
-            F.broadcast(dt),
-            (cand["m"] == dt["m"])
-            & (cand["code"] == dt["code"])
-            & (cand["query_id"] == dt["query_id"]),
+        .withColumn(
+            "adist",
+            F.expr(
+                f"aggregate(transform(codes, (c, i) -> dt[i * {PQ_K} + c]), "
+                "CAST(0 AS DECIMAL(28,9)), "
+                "(acc, d) -> CAST(acc + d AS DECIMAL(28,9)))"
+            ),
         )
-        .drop(dt["query_id"])
-        .groupBy("query_id", "vec_id", "cell")
-        .agg(F.sum("d").alias("adist"))
+        .drop("dt", "codes", "qcell")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("vec_id").asc()
@@ -582,17 +624,12 @@ def ann_index_topk(
     pool = (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= rerank)
-        .select("query_id", "vec_id")
+        .select("query_id", "vec_id", "qv", "qnorm")
     )
-    base = vectors_with_norms(vectors)
     rescored = (
-        base.join(F.broadcast(pool), "vec_id")
-        .join(
-            F.broadcast(
-                qvecs  # the same (query_id, qv, qnorm) stage-1 used
-            ),
-            "query_id",
-        )
+        vectors.select("vec_id", F.expr(_SPARK_V).alias("v"))
+        .withColumn("norm", F.expr(f"sqrt({_spark_dot('v', 'v')})"))
+        .join(F.broadcast(pool), "vec_id")
         .withColumn(
             "score",
             F.expr(_spark_dot("v", "qv")) / (F.col("norm") * F.col("qnorm")),
@@ -659,8 +696,8 @@ FROM ivf_adc QUALIFY rank <= {TOP_K}
 def q_ann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC search over the PERSISTED index, coarse quantizer TRAINED
     with ANN_TRAIN_ROUNDS Lloyd rounds (VERDICT r11 #3): build_ann_index's
-    four relations are committed through the snapshot sink and read back
-    before scoring — no raw corpus vector is scanned at query time. The
+    model/lists relations are committed through the snapshot sink and read
+    back before scoring — no raw corpus vector is scanned at query time. The
     oracle unrolls the same fixed training rounds in SQL, so the driver
     hash-verifies the trained index end to end."""
     import hashlib
@@ -864,9 +901,9 @@ def q_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-ONLY search of the persisted trained index at nprobe=2
     (VERDICT r12 #6): `serve_index` resolves the committed artifacts —
     building them only if this source has never been indexed — so the
-    timed work is what a deployment's query path actually pays: broadcast
-    centroids/codebook/distance tables against the cell-pruned
-    cells ⋈ codes equi-join. The end-to-end build+train+search twin is
+    timed work is what a deployment's query path actually pays: the query
+    relation crossed with the broadcast model row, broadcast into the
+    `lists` scan on `cell`. The end-to-end build+train+search twin is
     `q_ann_index_topk`; this row is the serving latency the bench tracks
     round over round."""
     index = serve_index(spark, sf_dir)

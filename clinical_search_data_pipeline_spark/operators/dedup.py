@@ -564,7 +564,18 @@ def minhash_recall(
     shingle subplan is plan-matched by the CacheManager, so the corpus is
     shingled once). The `possible` scalar rides a broadcast equi-join on a
     constant key — no BroadcastNestedLoop.
+
+    `num_hashes` is pinned by MINHASH_RECALL_CONFIGS: its finest config
+    must be num_hashes single-hash bands, so any other value raises
+    ValueError.
     """
+    fine_bands, fine_rows = MINHASH_RECALL_CONFIGS[0]
+    if fine_rows != 1 or fine_bands != num_hashes:
+        raise ValueError(
+            f"minhash_recall needs num_hashes == {fine_bands} single-hash "
+            f"bands, the finest of MINHASH_RECALL_CONFIGS "
+            f"({fine_bands}x{fine_rows}); got num_hashes={num_hashes}"
+        )
     spark = docs.sparkSession
     sets = engine_cache(shingle_sets(docs, k).hint("rebalance"))
     # Signature as a NARROW pass (r14, guide §2.4 "remove shuffles
@@ -600,8 +611,6 @@ def minhash_recall(
         .select("doc_id", *sig_cols)
         .hint("rebalance")
     )
-    fine_bands, fine_rows = MINHASH_RECALL_CONFIGS[0]
-    assert fine_rows == 1 and fine_bands == num_hashes
     frames = [
         sig.select(
             "doc_id",

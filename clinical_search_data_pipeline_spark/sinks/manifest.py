@@ -204,7 +204,13 @@ def _enforce_expectations(
     how null keys reach serving — stricter than SQL CHECK on purpose).
 
     ``on_violation='fail'``: any violation raises ExpectationViolation
-    BEFORE anything is staged — the previous version stays live.
+    and nothing commits — the previous version stays live. On
+    write_snapshot's observed-metrics path the data IS staged first (the
+    gate metrics ride the staged write) and the stage directory is
+    deleted before the raise; only this pinned fallback (reached when
+    CollectMetrics rejects a gate) raises before staging. A crash between
+    staging and the delete leaves an unreferenced stage directory that
+    readers never see and `vacuum` reclaims.
     ``'quarantine'``: violating rows are appended to the sibling
     ``<table>__quarantine`` snapshot table (with a `_violations` array
     naming the failed expectations and a `_quarantined_at` stamp), the

@@ -970,8 +970,8 @@ def main() -> None:
     # Persisted ANN index: split the one-time train/add cost from the
     # per-query search cost (the amortization FAISS deployments bank on —
     # q_ann_index_topk measures both fused because its oracle contract
-    # rebuilds per run). `train` = build + snapshot-publish the four
-    # relations + meta; `search` = probe the committed artifacts alone.
+    # rebuilds per run). `train` = build + snapshot-publish the model and
+    # lists relations + meta; `search` = probe the committed artifacts alone.
     import shutil as _shutil
     import time as _t
 

@@ -51,8 +51,8 @@ def test_index_probe_equals_on_the_fly_ivfadc(spark, persisted):
 
 def test_probe_plan_never_scans_raw_vectors(spark, persisted):
     """The reason the index exists at 100 TB: query-time file accesses are
-    the index tables ONLY (codes/cells/centroids/codebook under the index
-    root) — never the embeddings parquet. Queries arrive as an in-memory
+    the index tables ONLY (model/lists under the index root) — never the
+    embeddings parquet. Queries arrive as an in-memory
     relation, exactly the serving shape."""
     root, emb = persisted
     index = ai.read_ann_index(spark, root)
@@ -63,6 +63,92 @@ def test_probe_plan_never_scans_raw_vectors(spark, persisted):
     opened = out.inputFiles()
     assert opened and all("/index/" in f for f in opened)
     assert not any("embeddings" in f for f in opened)
+
+
+def _scan_to_join(plan: str, marker: str) -> list[list[str]]:
+    """For every FileScan line containing `marker`, the plan nodes from the
+    scan up to (and including) its first Join ancestor."""
+    from clinical_search_data_pipeline_spark.plans.introspect import (
+        _tree_depth,
+    )
+
+    lines = plan.splitlines()
+    paths = []
+    for i, line in enumerate(lines):
+        if "FileScan" not in line or marker not in line:
+            continue
+        depth, path = _tree_depth(line), []
+        for up in reversed(lines[:i]):
+            if up.strip() and _tree_depth(up) < depth:
+                depth = _tree_depth(up)
+                path.append(up.lstrip(":+- "))
+                if "Join" in up:
+                    break
+        paths.append(path)
+    return paths
+
+
+def test_probe_and_rerank_plans_never_shuffle_the_big_sides(spark, persisted):
+    """The per-request plan shape: a probe is ONE narrow pass over `lists`
+    — the query relation (never round-robin fanned out) crosses the 1-row
+    model and broadcasts into the lists scan, whose only exchange is the
+    query-keyed top-k window above the join. A rerank joins the
+    full-precision `vectors` scan directly: no exchange between that scan
+    and its broadcast join."""
+    from clinical_search_data_pipeline_spark.operators.similarity import (
+        IVF_NPROBE,
+        RERANK_POOL,
+    )
+    from clinical_search_data_pipeline_spark.plans.introspect import (
+        physical_plan,
+    )
+
+    root, emb = persisted
+    index = ai.read_ann_index(spark, root)
+    queries = emb.filter(F.col("vec_id") < 8)
+    probe = physical_plan(
+        ai.ann_index_topk(index, queries, nprobe=IVF_NPROBE), "simple"
+    )
+    assert probe.count("Exchange hashpartitioning") == 1, probe
+    assert "RoundRobinPartitioning" not in probe, probe
+    lists_paths = _scan_to_join(probe, "/lists/")
+    assert len(lists_paths) == 1, probe
+    assert "BroadcastHashJoin" in lists_paths[0][-1], probe
+    assert not any("Exchange" in n for n in lists_paths[0]), probe
+
+    rerank = physical_plan(
+        ai.ann_index_topk(
+            index, queries, nprobe=IVF_NPROBE, rerank=RERANK_POOL,
+            vectors=emb,
+        ),
+        "simple",
+    )
+    assert "RoundRobinPartitioning" not in rerank, rerank
+    vec_paths = _scan_to_join(rerank, "embeddings")
+    assert len(vec_paths) == 2, rerank  # the query relation + `vectors`
+    for path in vec_paths:
+        assert "Join" in path[-1], rerank
+        assert not any("Exchange" in n for n in path), rerank
+
+
+def test_old_four_table_root_refuses_with_reindex(spark, tmp_path):
+    """A root whose meta pin names the superseded centroids/codebook/
+    cells/codes layout fails loudly at open (and at add) with a message
+    to re-index — not with a KeyError deep inside a search."""
+    root = str(tmp_path / "index")
+    m.write_snapshot(
+        spark.createDataFrame(
+            [(t, 1) for t in ("centroids", "codebook", "cells", "codes")],
+            "table string, version int",
+        ),
+        f"{root}/{ai.META_TABLE}",
+        mode="overwrite",
+    )
+    with pytest.raises(ValueError, match="re-index"):
+        ai.read_ann_index(spark, root)
+    emb = read_table(spark, SF, "embeddings")
+    with pytest.raises(ValueError, match="re-index"):
+        ai.add_to_ann_index(spark, root, emb.filter(F.col("vec_id") < 4))
 
 
 def test_reindex_is_versioned_and_pinnable(spark, persisted):
@@ -76,7 +162,7 @@ def test_reindex_is_versioned_and_pinnable(spark, persisted):
     assert all(v2[t] == v1[t] + 1 for t in ai.INDEX_TABLES)
     old = ai.read_ann_index(spark, root, versions=v1)
     new = ai.read_ann_index(spark, root)
-    assert old["codes"].count() > new["codes"].count()
+    assert old["lists"].count() > new["lists"].count()
     # the pinned old index still answers searches identically
     queries = emb.filter(F.col("vec_id") < 8)
     assert _rows(ai.ann_index_topk(old, queries)) == _rows(
@@ -85,23 +171,26 @@ def test_reindex_is_versioned_and_pinnable(spark, persisted):
 
 
 def test_mid_reindex_reader_gets_consistent_quadruple(spark, persisted):
-    """Multi-table consistency: a re-index commits the four relations in
-    sequence and the meta pin LAST. A reader resolving mid-re-index (new
-    codes committed, meta not yet bumped) must get the previous complete
-    quadruple — never new codes paired with old centroids."""
+    """Multi-table consistency: a re-index commits the model and lists
+    relations in sequence and the meta pin LAST. A reader resolving
+    mid-re-index (new lists committed, meta not yet bumped) must get the
+    previous complete index — never new lists paired with an old model."""
     root, emb = persisted
     before = ai.read_ann_index(spark, root)
-    before_codes = before["codes"].count()
-    # simulate a torn re-index: ONLY the codes table moves forward
-    tiny = emb.filter(F.col("vec_id") < 50)
+    before_lists = before["lists"].count()
+    # simulate a torn re-index: ONLY the lists table moves forward (a
+    # smaller corpus that still holds the seed training rows)
+    smaller = emb.filter(F.col("vec_id") < 300)
     m.write_snapshot(
-        ai.build_ann_index(tiny)["codes"], f"{root}/codes", mode="overwrite"
+        ai.build_ann_index(smaller, train_rounds=0)["lists"],
+        f"{root}/lists",
+        mode="overwrite",
     )
-    latest_codes = m.read_snapshot(spark, f"{root}/codes").count()
-    assert latest_codes < before_codes  # the torn write really landed
+    latest_lists = m.read_snapshot(spark, f"{root}/lists").count()
+    assert 0 < latest_lists < before_lists  # the torn write really landed
     # default (meta-resolved) read still serves the old consistent view
     after = ai.read_ann_index(spark, root)
-    assert after["codes"].count() == before_codes
+    assert after["lists"].count() == before_lists
 
 
 def test_incremental_add_equals_full_rebuild(spark, tmp_path):
@@ -116,16 +205,16 @@ def test_incremental_add_equals_full_rebuild(spark, tmp_path):
     # train_rounds=0: this pin compares against the seed-quantizer
     # on-the-fly path; the trained twin is pinned separately below
     ai.write_ann_index(ai.build_ann_index(initial, train_rounds=0), root)
-    pre_cells = {
+    pre_lists = {
         e["path"]
         for e in m._entries(
-            m._read_manifest(f"{root}/cells", m._versions(f"{root}/cells")[-1])
+            m._read_manifest(f"{root}/lists", m._versions(f"{root}/lists")[-1])
         )
     }
     v = ai.add_to_ann_index(spark, root, emb.filter(F.col("vec_id") >= 300))
-    assert v["cells"] >= 2 and v["codes"] >= 2 and v["meta"] >= 2
-    post = m._entries(m._read_manifest(f"{root}/cells", v["cells"]))
-    assert pre_cells < {e["path"] for e in post}  # old files referenced, not rewritten
+    assert v["lists"] >= 2 and v["meta"] >= 2
+    post = m._entries(m._read_manifest(f"{root}/lists", v["lists"]))
+    assert pre_lists < {e["path"] for e in post}  # old files referenced, not rewritten
     idx = ai.read_ann_index(spark, root)
     queries = emb.filter(F.col("vec_id") < 8)
     assert _rows(ai.ann_index_topk(idx, queries)) == _rows(
@@ -143,8 +232,7 @@ def test_remove_masks_then_compact_applies(spark, tmp_path):
     """FAISS remove_ids(): a tombstoned vector disappears from every
     search immediately (broadcast anti-join mask), the tombstone-masked
     results equal the post-compaction physical results EXACTLY, and after
-    compaction the cells/codes tables no longer contain the vector at
-    all. Unknown ids and re-adds of tombstoned ids refuse."""
+    compaction the lists table no longer contains the vector at all. Unknown ids and re-adds of tombstoned ids refuse."""
     emb = read_table(spark, SF, "embeddings")
     root = str(tmp_path / "index")
     ai.write_ann_index(ai.build_ann_index(emb, train_rounds=0), root)
@@ -166,8 +254,7 @@ def test_remove_masks_then_compact_applies(spark, tmp_path):
 
     ai.compact_ann_index(spark, root, target_files=2)
     idx = ai.read_ann_index(spark, root)
-    assert idx["cells"].filter(F.col("vec_id") == victim).count() == 0
-    assert idx["codes"].filter(F.col("vec_id") == victim).count() == 0
+    assert idx["lists"].filter(F.col("vec_id") == victim).count() == 0
     assert idx[ai.TOMBSTONE_TABLE].count() == 0
     physical = ai.ann_index_topk(idx, queries)
     assert _rows(masked) == _rows(physical)
@@ -175,7 +262,7 @@ def test_remove_masks_then_compact_applies(spark, tmp_path):
 
 def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path):
     """Maintenance cadence: repeated adds accrue one stage dir each;
-    compact_ann_index collapses cells/codes to target_files and the
+    compact_ann_index collapses lists to target_files and the
     result is pinned equal to a from-scratch build of the union corpus —
     relation contents AND search rows."""
     emb = read_table(spark, SF, "embeddings")
@@ -191,12 +278,12 @@ def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path):
     )
     ai.add_to_ann_index(spark, root, emb.filter(F.col("vec_id") >= 400))
     v = ai.compact_ann_index(spark, root, target_files=2)
-    man = m._read_manifest(f"{root}/cells", v["cells"])
+    man = m._read_manifest(f"{root}/lists", v["lists"])
     assert man["num_files"] <= 2  # small files collapsed
     idx = ai.read_ann_index(spark, root)
     fresh = ai.build_ann_index(emb, train_rounds=0)
-    assert _rows(idx["cells"]) == _rows(fresh["cells"])
-    assert _rows(idx["codes"]) == _rows(fresh["codes"])
+    assert _rows(idx["model"]) == _rows(fresh["model"])
+    assert _rows(idx["lists"]) == _rows(fresh["lists"])
     queries = emb.filter(F.col("vec_id") < 8)
     assert _rows(ai.ann_index_topk(idx, queries)) == _rows(
         ann_ivfpq_topk(emb)
@@ -204,7 +291,7 @@ def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path):
 
 
 def test_crashed_add_orphan_never_duplicates(spark, tmp_path):
-    """ADVICE r9 #2 regression: an add that appended cells/codes but died
+    """ADVICE r9 #2 regression: an add that appended lists rows but died
     before its meta pin leaves orphaned rows at the table tips. The next
     add of the same increment must succeed (the pinned index lacks it)
     and fold in ONLY the pinned files — no duplicate vec_ids ever reach a
@@ -217,24 +304,23 @@ def test_crashed_add_orphan_never_duplicates(spark, tmp_path):
         ), root
     )
     increment = emb.filter(F.col("vec_id") >= 300)
-    # simulate the crash: stage the increment's cells/codes appends on the
-    # tips exactly as add_to_ann_index would, but never pin meta
+    # simulate the crash: stage the increment's lists append on the tip
+    # exactly as add_to_ann_index would, but never pin meta
     idx = ai.read_ann_index(spark, root)
     crashed = ai.build_ann_index(emb, train_rounds=0)  # same frozen quantizers
+    orphan = crashed["lists"].join(
+        idx["lists"].select("vec_id"), "vec_id", "left_anti"
+    ).select(*crashed["lists"].columns)
     m.write_snapshot(
-        crashed["cells"].join(idx["cells"], "vec_id", "left_anti"),
-        f"{root}/cells", mode="append", collect_stats=False,
+        orphan, f"{root}/lists", mode="append", collect_stats=False
     )
-    m.write_snapshot(
-        crashed["codes"].join(idx["codes"].select("vec_id").distinct(),
-                              "vec_id", "left_anti"),
-        f"{root}/codes", mode="append", collect_stats=False,
-    )
+    tip = m.read_snapshot(spark, f"{root}/lists")
+    assert tip.join(increment.select("vec_id"), "vec_id", "left_semi").count()
     # the retry (same increment) succeeds and duplicates nothing
     v = ai.add_to_ann_index(spark, root, increment)
-    cells = m.read_snapshot(spark, f"{root}/cells", version=v["cells"])
+    lists = m.read_snapshot(spark, f"{root}/lists", version=v["lists"])
     dup = (
-        cells.groupBy("vec_id").count().filter(F.col("count") > 1).count()
+        lists.groupBy("vec_id").count().filter(F.col("count") > 1).count()
     )
     assert dup == 0
     queries = emb.filter(F.col("vec_id") < 8)
@@ -257,9 +343,9 @@ def test_trained_add_equals_trained_rebuild(spark, tmp_path):
     ai.add_to_ann_index(spark, root, emb.filter(F.col("vec_id") >= 300))
     idx = ai.read_ann_index(spark, root)
     fresh = ai.build_ann_index(emb, train_on=initial)  # same frozen quantizer
-    assert _rows(idx["centroids"]) == _rows(fresh["centroids"])
-    assert _rows(idx["codebook"]) == _rows(fresh["codebook"])  # trained PQ too
-    assert _rows(idx["cells"]) == _rows(fresh["cells"])
+    # both trained quantizers (model row) and every encoded vector
+    assert _rows(idx["model"]) == _rows(fresh["model"])
+    assert _rows(idx["lists"]) == _rows(fresh["lists"])
     queries = emb.filter(F.col("vec_id") < 8)
     fresh_root = str(tmp_path / "fresh")
     ai.write_ann_index(fresh, fresh_root)

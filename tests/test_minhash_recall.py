@@ -6,6 +6,8 @@ test_ann_recall pins the ANN curve."""
 
 from __future__ import annotations
 
+import pytest
+
 from clinical_search_data_pipeline_spark.operators.dedup import (
     MINHASH_RECALL_CONFIGS,
     minhash_recall,
@@ -28,6 +30,11 @@ def test_recall_table_shape_and_totals(spark):
         assert 0 <= r["hits"] <= r["possible"]
         assert r["hits"] <= r["candidates"]
         assert r["recall_bp"] == r["hits"] * 10000 // r["possible"]
+    # num_hashes is pinned by the config table: any other value is a
+    # contract error naming the constraint, not a bare assert
+    docs = read_table(spark, SF_SMOKE, "documents")
+    with pytest.raises(ValueError, match="num_hashes == 8"):
+        minhash_recall(docs, num_hashes=16)
 
 
 def test_candidates_and_hits_monotone_in_band_width(spark):

@@ -128,9 +128,9 @@ BOUNDED_BROADCAST_NLJ_OK = {
     "q_cms_heavy_hitters",         # broadcast 1-row corpus event total
     "q_pps_sample",                # broadcast 1-row stride (grand total)
     "q_contrastive_pairs",         # broadcast fixed query set (cosine_topk's shape)
-    "q_ann_index_topk",            # broadcast K persisted centroids (coarse probe)
-    "q_ann_index_probe",           # same K-centroid coarse probe, served index
-    "q_ann_index_rerank",          # same coarse probe + candidate-bounded refine
+    "q_ann_index_topk",            # queries x broadcast 1-row persisted model
+    "q_ann_index_probe",           # same 1-row model cross, served index
+    "q_ann_index_rerank",          # same 1-row model cross + bounded refine
 }
 
 
