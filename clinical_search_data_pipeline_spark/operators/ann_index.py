@@ -9,7 +9,8 @@ production deployment shape (Jegou et al. TPAMI 2011; Johnson, Douze,
 Jegou, "Billion-scale similarity search with GPUs", 2017: train/add once,
 search many), in FAISS's inverted-list layout:
 
-* ``build_ann_index`` derives the two index relations from the corpus —
+* ``build_ann_index`` trains the quantizers and ``encode_ann_index``
+  derives the two index relations from the corpus under them —
   `model` (ONE row: `cents` = array of (cell, cv, cnorm) sorted by cell,
   the coarse quantizer; `cb` = the PQ codewords flattened so entry
   m*PQ_K + j is codeword (m, j)) and
@@ -66,14 +67,13 @@ from clinical_search_data_pipeline_spark.operators.fragments import (
     _spark_dot,
 )
 from clinical_search_data_pipeline_spark.operators.similarity import (
-    CENTROID_BASE,
-    N_CENTROIDS,
     PQ_K,
     PQ_M,
     PQ_SUB,
     _spark_l2sq,
     pq_codebook,
     pq_subvectors,
+    seed_centroids,
     vectors_with_norms,
 )
 from clinical_search_data_pipeline_spark.registry import register
@@ -153,44 +153,26 @@ def _encode(emb: DataFrame, model: DataFrame) -> DataFrame:
     )
 
 
-def _model(centroids: DataFrame, codebook: DataFrame) -> DataFrame:
-    """The 1-row `model` relation from (cell, cv, cnorm) centroids and an
-    (m, j, cw) codebook, localCheckpointed: it is read by the publish AND
-    broadcast into the corpus encode, and its lineage is the training
-    (or, untrained, a corpus scan) that must run once per build."""
-    cents = centroids.agg(
-        F.sort_array(F.collect_list(F.struct("cell", "cv", "cnorm"))).alias(
-            "cents"
-        )
-    )
-    cb = codebook.agg(
-        F.expr("transform(sort_array(collect_list(struct(m, j, cw))), s -> s.cw)")
-        .alias("cb")
-    )
-    return cents.crossJoin(cb).localCheckpoint()
-
-
 def build_ann_index(
     emb: DataFrame,
     train_rounds: int = ANN_TRAIN_ROUNDS,
     train_on: DataFrame | None = None,
-    train_pq: bool | None = None,
 ) -> dict[str, DataFrame]:
     """Derive the two IVFADC index relations (`model`, `lists`) from the
     corpus vectors.
 
-    One-time cost, the 'train + add' phase: the coarse quantizer is
-    TRAINED — `train_rounds` fixed Lloyd alternations from the
-    deterministic seed (clustering.trained_quantizer) over `train_on`
-    (default: the corpus itself; pass a fixed sample at 100 TB, FAISS's
-    own train/add split) — then every corpus vector is encoded against the
-    trained model (`_encode`). `train_rounds=0` keeps the raw seed-slice
-    quantizer (the pre-r12 behavior; the add/compact bit-equality
-    fixtures use it so 'fresh rebuild' has a frozen quantizer to agree
-    with). The encode is one narrow pass of the corpus against the
-    broadcast 1-row model — no shuffle beyond the input fan-out; each
-    training round is one (cell, dim)-keyed shuffle with no per-round
-    collect."""
+    One-time cost, the 'train + add' phase: BOTH quantizers are TRAINED
+    (FAISS trains the coarse quantizer and the PQ codebooks in one
+    train() call) over `train_on` (default: the corpus itself; pass a
+    fixed sample at 100 TB, FAISS's own train/add split) — the coarse
+    quantizer with `train_rounds` fixed Lloyd alternations from the
+    deterministic seed (clustering.trained_quantizer), the codebook with
+    one order-pinned Lloyd round — then `encode_ann_index` encodes every
+    corpus vector against them. `train_rounds=0` keeps both seed
+    quantizers (similarity.seed_index: the on-the-fly IVF-PQ queries
+    search it, and the add/compact bit-equality fixtures use it so 'fresh
+    rebuild' has a frozen quantizer to agree with). Each training round
+    is one (cell, dim)-keyed shuffle with no per-round collect."""
     from clinical_search_data_pipeline_spark.operators.clustering import (
         trained_quantizer,
     )
@@ -198,13 +180,12 @@ def build_ann_index(
         pq_train_codebooks,
     )
 
-    if train_pq is None:
-        # by default both quantizers train together (FAISS trains the
-        # coarse quantizer AND the PQ codebooks in one train() call) and
-        # the seed path keeps both frozen for the equivalence fixtures
-        train_pq = train_rounds > 0
+    if train_rounds <= 0:
+        return encode_ann_index(
+            emb, seed_centroids(emb), pq_codebook(pq_subvectors(emb))
+        )
 
-    def _train_pq_cb() -> DataFrame:
+    def _train_codebook() -> DataFrame:
         # one order-pinned Lloyd round per subspace over the sliced init
         # (pq_train_codebooks(pinned=True)) — the exact training round
         # q_ann_pq_trained_topk's oracle replays bit-exactly in SQL
@@ -219,34 +200,45 @@ def build_ann_index(
         cents, _ = trained_quantizer(train_on or emb, train_rounds)
         return cents.localCheckpoint()
 
-    if train_pq and train_rounds > 0:
-        # The two training materializations are independent jobs on one
-        # session; running them from a 2-thread pool lets the scheduler
-        # back-fill each job's straggler tail with the other's tasks
-        # instead of idling the cluster between sequential actions
-        # (guide §2.6). Determinism is untouched — each plan is the same
-        # fixed-seed unroll either way.
-        from concurrent.futures import ThreadPoolExecutor
+    # The two training materializations are independent jobs on one
+    # session; running them from a 2-thread pool lets the scheduler
+    # back-fill each job's straggler tail with the other's tasks instead
+    # of idling the cluster between sequential actions (guide §2.6).
+    # Determinism is untouched — each plan is the same fixed-seed unroll
+    # either way.
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            cb_fut = pool.submit(_train_pq_cb)
-            cents_fut = pool.submit(_train_coarse)
-            cb = cb_fut.result()
-            centroids = cents_fut.result()
-    else:
-        cb = _train_pq_cb() if train_pq else pq_codebook(pq_subvectors(emb))
-        if train_rounds > 0:
-            centroids = _train_coarse()
-        else:
-            centroids = vectors_with_norms(emb).filter(
-                (F.col("vec_id") >= CENTROID_BASE)
-                & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-            ).select(
-                (F.col("vec_id") - CENTROID_BASE).alias("cell"),
-                F.col("v").alias("cv"),
-                F.col("norm").alias("cnorm"),
-            )
-    model = _model(centroids, cb)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        cb_fut = pool.submit(_train_codebook)
+        cents_fut = pool.submit(_train_coarse)
+        cb = cb_fut.result()
+        centroids = cents_fut.result()
+    return encode_ann_index(emb, centroids, cb)
+
+
+def encode_ann_index(
+    emb: DataFrame, centroids: DataFrame, codebook: DataFrame
+) -> dict[str, DataFrame]:
+    """The index relations of `emb` under given quantizers — (cell, cv,
+    cnorm) centroids and an (m, j, cw) codebook: the encode half of
+    `build_ann_index`, and how an on-the-fly query gets an in-memory
+    index to search with `ann_index_topk`.
+
+    The 1-row `model` is localCheckpointed: it is read by the publish AND
+    broadcast into the corpus encode, and its lineage is the training
+    (or, untrained, a corpus scan) that must run once per build. `lists`
+    is the lazy `_encode` of `emb` against it. A model without centroids
+    or with a codebook of size != PQ_M * PQ_K raises ValueError."""
+    cents = centroids.agg(
+        F.sort_array(F.collect_list(F.struct("cell", "cv", "cnorm"))).alias(
+            "cents"
+        )
+    )
+    cb = codebook.agg(
+        F.expr("transform(sort_array(collect_list(struct(m, j, cw))), s -> s.cw)")
+        .alias("cb")
+    )
+    model = cents.crossJoin(cb).localCheckpoint()
     n_cells, n_codewords = model.select(F.size("cents"), F.size("cb")).first()
     if n_cells < 1 or n_codewords != PQ_M * PQ_K:
         raise ValueError(
@@ -522,15 +514,20 @@ def ann_index_topk(
     rerank: int | None = None,
     vectors: DataFrame | None = None,
 ) -> DataFrame:
-    """IVFADC top-k over the PERSISTED index: `queries` is a raw vector
-    relation (vec_id, ..., embedding) — typically tiny — and everything
-    corpus-sided comes from `index`. Zero raw corpus-vector scans.
+    """IVFADC top-k over an index — persisted (`read_ann_index`) or in
+    memory (`build_ann_index` / `encode_ann_index`): `queries` is a raw
+    vector relation (vec_id, ..., embedding) — typically tiny — and
+    everything corpus-sided comes from `index`. Zero raw corpus-vector
+    scans. This is the engine's one IVF-PQ search: the on-the-fly PQ,
+    refine and IVFADC queries (similarity.q_ann_pq_topk, q_ann_rerank,
+    q_ann_pq_trained_topk, q_ann_ivfpq_*) are an in-memory index searched
+    here.
 
-    Output schema and values match `similarity.ann_ivfpq_topk` exactly
-    (query_id, neighbor_id, cell, rank, adist): the ADC table entries are
-    the same order-pinned 9dp-rounded DECIMAL folds, the cell choice the
-    same max-cosine/lowest-cell rule, so the persisted path is
-    hash-interchangeable with the on-the-fly one.
+    Output (query_id, neighbor_id, cell, rank, adist) is hash-equal to the
+    DuckDB oracles of those queries: the ADC table entries are the
+    order-pinned 9dp-rounded DECIMAL folds, the cell choice the
+    max-cosine/lowest-cell rule. Probing all cells (nprobe = the model's
+    cell count) scores every vector — plain PQ/ADC.
 
     Per-request plan, one narrow pass over `lists`:
     * `queries` is scanned ONCE and crosses the broadcast 1-row model:
@@ -540,7 +537,7 @@ def ann_index_topk(
       into `lists` on `cell` (pending tombstones anti-joined first);
     * a candidate's `adist` is the decimal(28,9) fold of
       dt[m*PQ_K + code] over its codes array — decimal addition is
-      exact, so it equals the per-code `sum(d)` of the on-the-fly plan;
+      exact, so it equals the oracles' per-code `sum(d)`;
     * the (adist, vec_id) top-k window is the plan's ONE shuffle
       (query_id-keyed, fed only the probed cells' candidates).
 
@@ -548,8 +545,8 @@ def ann_index_topk(
     #4): the ADC stage proposes its top-R pool per query, then ONLY those
     R rows are re-scored with the exact cosine against ``vectors`` (the
     full-precision relation) and cut to the final top-k — output then
-    matches `similarity.ann_pq_rerank_topk`'s shape (query_id,
-    neighbor_id, rank, score). Recall@k is provably >= the ADC-alone
+    has cosine_topk's shape (query_id, neighbor_id, rank, score).
+    Recall@k is provably >= the ADC-alone
     top-k at the same nprobe: the pool is a superset of ADC's own top-k,
     and any exact-top-k member in the pool outranks every other pool row
     under exact scoring. Scale shape: the pool rows (n_queries x R, each
@@ -557,7 +554,18 @@ def ann_index_topk(
     `vectors` scan itself, so the full-precision relation is never
     shuffled and never scanned beyond the candidate probe — on a
     snapshot-committed corpus sorted by vec_id, footer-stats pruning
-    makes that probe sub-scan too."""
+    makes that probe sub-scan too.
+
+    Bad arguments raise ValueError: nprobe < 1, k < 1, rerank < k (a pool
+    smaller than the final top-k), or rerank without `vectors`."""
+    if nprobe < 1 or k < 1:
+        raise ValueError(
+            f"ann_index_topk needs nprobe >= 1 and k >= 1, got nprobe={nprobe}, k={k}"
+        )
+    if rerank is not None and rerank < k:
+        raise ValueError(
+            f"rerank pool must hold at least k candidates, got rerank={rerank} < k={k}"
+        )
     if rerank is not None and vectors is None:
         raise ValueError("rerank needs the full-precision `vectors` relation")
     q = queries.select(

@@ -514,11 +514,12 @@ def image_vs_corpus(
     exactly the former distinct-pairs-then-verify result). The previous
     form referenced `batch_hashes` three times (bands, verify, universe) —
     forcing callers to localCheckpoint the batch decode+hash as its own
-    job per micro-batch; now the hash relation is consumed exactly once
-    and stays lazy inside the verdict action. ``batch_docs`` supplies the
-    all-docs universe projection (plain doc_ids, no decode) for the final
-    left join; it defaults to `batch_hashes.select("doc_id")` for callers
-    that only have the hash frame.
+    job per micro-batch; now the hash relation stays lazy inside the
+    verdict action. ``batch_docs`` supplies the all-docs universe
+    projection (plain doc_ids, no decode) for the final left join; with it
+    the hash relation is consumed exactly once. Without it the universe
+    defaults to `batch_hashes.select("doc_id")`, which re-reads the hash
+    relation: the decode+hash lineage then runs twice per action.
 
     Modality-agnostic (like image_neardup_pairs): any 4x16-bit-band hash
     frame works — the audio/video admission gates pass their fingerprint

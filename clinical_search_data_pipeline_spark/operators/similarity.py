@@ -530,26 +530,31 @@ N_CENTROIDS = 8
 CENTROID_BASE = 100  # deterministic coarse centroids: vec_ids 100..107
 
 
-def ivf_assignments(emb: DataFrame, n_centroids: int = N_CENTROIDS) -> DataFrame:
-    """(vec_id, v, norm, cell) — each vector assigned to its max-cosine
-    coarse centroid (IVF cell).
-
-    Centroids here are a deterministic sample (fixed vec_ids) so the oracle
-    reproduces them; production seeds them with k-means|| (pyspark.ml
-    KMeans) — the assignment/search plan shape is identical. Assignment is
-    a broadcast of K centroids against one scan + an argmax window keyed by
-    vec_id (shuffle on vec_id only).
-    """
-    base = vectors_with_norms(emb)
-    cents = base.filter(
+def seed_centroids(emb: DataFrame) -> DataFrame:
+    """(cell, cv, cnorm) — the deterministic coarse centroids: vector
+    CENTROID_BASE + c is the centroid of cell c, for c < N_CENTROIDS."""
+    return vectors_with_norms(emb).filter(
         (F.col("vec_id") >= CENTROID_BASE)
-        & (F.col("vec_id") < CENTROID_BASE + n_centroids)
+        & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
     ).select(
         (F.col("vec_id") - CENTROID_BASE).alias("cell"),
         F.col("v").alias("cv"),
         F.col("norm").alias("cnorm"),
     )
-    scored = base.crossJoin(F.broadcast(cents)).withColumn(
+
+
+def ivf_assignments(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, norm, cell) — each vector assigned to its max-cosine
+    coarse centroid (IVF cell).
+
+    Centroids here are a deterministic sample (`seed_centroids`) so the
+    oracle reproduces them; production seeds them with k-means|| (pyspark.ml
+    KMeans) — the assignment/search plan shape is identical. Assignment is
+    a broadcast of K centroids against one scan + an argmax window keyed by
+    vec_id (shuffle on vec_id only).
+    """
+    base = vectors_with_norms(emb)
+    scored = base.crossJoin(F.broadcast(seed_centroids(emb))).withColumn(
         "_cscore", F.expr(_spark_dot("v", "cv")) / (F.col("norm") * F.col("cnorm"))
     )
     w = Window.partitionBy("vec_id").orderBy(
@@ -649,7 +654,6 @@ def ann_ivf_multiprobe_topk(
     n_queries: int = N_QUERIES,
     k: int = TOP_K,
     nprobe: int = IVF_NPROBE,
-    assignments_fn=None,
 ) -> DataFrame:
     """IVF with nprobe>1: each query searches its `nprobe` best cells (by
     centroid cosine), not just the argmax cell — the standard recall knob.
@@ -657,33 +661,25 @@ def ann_ivf_multiprobe_topk(
     (nprobe rows per query in the broadcast), the big side is still scanned
     once and equi-joined on cell; no duplicate candidates since every vector
     belongs to exactly one cell."""
-    assigned = (assignments_fn or ivf_assignments)(emb)
-    base = vectors_with_norms(emb)
-    cents = base.filter(
-        (F.col("vec_id") >= CENTROID_BASE)
-        & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - CENTROID_BASE).alias("pcell"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-    )
+    assigned = ivf_assignments(emb)
     wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cscore").desc(), F.col("pcell").asc()
+        F.col("_cscore").desc(), F.col("cell").asc()
     )
     probes = (
-        base.filter(F.col("vec_id") < n_queries)
+        vectors_with_norms(emb)
+        .filter(F.col("vec_id") < n_queries)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.col("norm").alias("qnorm"),
         )
-        .crossJoin(F.broadcast(cents))
+        .crossJoin(F.broadcast(seed_centroids(emb)))
         .withColumn(
             "_cscore", F.expr(_spark_dot("qv", "cv")) / (F.col("qnorm") * F.col("cnorm"))
         )
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "qnorm", F.col("pcell").alias("qcell"))
+        .select("query_id", "qv", "qnorm", F.col("cell").alias("qcell"))
     )
     cand = assigned.join(
         F.broadcast(probes),
@@ -880,11 +876,12 @@ def pq_codebook(subs: DataFrame) -> DataFrame:
 
 
 def pq_codes(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, code) — each subvector encoded as its nearest codeword
-    (squared L2, ties to the lowest j). This is the compressed index a
-    100 TB deployment PERSISTS: M small ints per vector instead of DIM
-    floats (64x here). Encode = one scan x broadcast M*K codebook + an
-    argmin window keyed (vec_id, m) — shuffle on the composite key only."""
+    """(vec_id, m, code) — each subvector assigned its nearest codeword
+    (squared L2, ties to the lowest j): the Lloyd assignment step of
+    `pq_train_codebooks` and `pq_distortion`. One scan x broadcast M*K
+    codebook + an argmin window keyed (vec_id, m) — shuffle on the
+    composite key only. The persisted index encodes with the equivalent
+    per-row argmin (operators/ann_index.py `_encode`)."""
     w = Window.partitionBy("vec_id", "m").orderBy(F.col("_d").asc(), F.col("j").asc())
     return (
         subs.join(F.broadcast(cb), "m")
@@ -895,69 +892,31 @@ def pq_codes(subs: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def ann_pq_adc_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    codebook: DataFrame | None = None,
-    subs: DataFrame | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes (Jegou, Douze, Schmid,
-    "Product Quantization for Nearest Neighbor Search", TPAMI 2011): each
-    query precomputes an M x K table of exact query-to-codeword squared
-    distances, and a candidate's approximate distance is the sum of M table
-    lookups on its codes — the scan touches only the compressed codes,
-    never the raw vectors.
+def seed_index(emb: DataFrame) -> dict[str, DataFrame]:
+    """The in-memory IVF-PQ index of `emb` under the deterministic seed
+    quantizers (`seed_centroids` cells, `pq_codebook` codewords) — what
+    every on-the-fly IVF-PQ query below searches with
+    ann_index.ann_index_topk, the one ADC search kernel (Jegou, Douze,
+    Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI
+    2011: per query an M x K table of query-to-codeword distances, a
+    candidate's distance the sum of M lookups on its codes)."""
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
+        build_ann_index,
+    )
 
-    Plan: codes (one row per vec_id x m) equi-join the BROADCAST distance
-    table on (m, code), then one (query_id, vec_id)-keyed partial-agg sum.
-    Float discipline: each table entry is an order-pinned fold rounded to
-    9dp and summed as DECIMAL, so `adist` is exact integer arithmetic in
-    both engines — order-free, hash-stable. At production scale the same
-    table drives a mapInPandas lookup kernel over code arrays; this
-    declarative form is the oracled semantics.
+    return build_ann_index(emb, train_rounds=0)
 
-    `codebook` swaps in a trained (m, j, cw) relation (pq_train_codebooks)
-    for the default sliced one — encode/score plan shape identical.
-    `subs` / `codes` let a multi-variant harness (ann_recall) pass ONE
-    shared (and cached) subvector / encode relation instead of rebuilding
-    the corpus encode per variant — results are identical by construction
-    (`codes` must be the encode of `subs` under `codebook`)."""
-    if subs is None:
-        subs = pq_subvectors(emb)
-    cb = codebook if codebook is not None else pq_codebook(subs)
-    dt = (
-        subs.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), "m", F.col("su").alias("qsu"))
-        .join(cb, "m")
-        .select(
-            "query_id",
-            "m",
-            F.col("j").alias("code"),
-            F.round(F.expr(_spark_l2sq("qsu", "cw")), 9)
-            .cast("decimal(18,9)")
-            .alias("d"),
-        )
+
+def index_topk(emb: DataFrame, index: dict[str, DataFrame], **search) -> DataFrame:
+    """ann_index.ann_index_topk of the fixed query set (vec_id <
+    N_QUERIES) against an in-memory `index` of `emb`. Probing all
+    N_CENTROIDS cells scores every vector — plain PQ/ADC, no cell
+    pruning."""
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
+        ann_index_topk,
     )
-    scored = (
-        (codes if codes is not None else pq_codes(subs, cb))
-        .join(F.broadcast(dt), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d").alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round(F.col("adist").cast("double"), 6).alias("adist"),
-        )
-    )
+
+    return ann_index_topk(index, emb.filter(F.col("vec_id") < N_QUERIES), **search)
 
 
 _DUCK_PQ_CTE = f"""
@@ -1009,9 +968,11 @@ FROM adc QUALIFY rank <= {TOP_K}
 )
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC approximate top-k: vectors compressed to PQ_M 5-bit codes
-    (25x smaller than the raw vector), scored by broadcast lookup tables.
-    Recall vs the exact scan is recorded in q_ann_recall / ANN_RECALL.md."""
-    return ann_pq_adc_topk(read_table(spark, sf_dir, "embeddings"))
+    (25x smaller than the raw vector), scored by lookup tables — the seed
+    index searched in every cell. Recall vs the exact scan is recorded in
+    q_ann_recall / ANN_RECALL.md."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    return index_topk(emb, seed_index(emb), nprobe=N_CENTROIDS).drop("cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1290,60 +1251,6 @@ def embedding_vs_corpus(
 RERANK_POOL = 30  # stage-1 ADC pool per query; 6x the final k
 
 
-def ann_pq_rerank_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    pool: int = RERANK_POOL,
-    subs: DataFrame | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """Two-stage ANN: PQ/ADC proposes `pool` candidates per query from the
-    compressed codes, then ONLY those pool rows are re-scored with the exact
-    cosine and cut to the final top-k — the FAISS IVF-PQ + refine serving
-    pattern (Jegou et al. TPAMI 2011 §V). The scan-side economics at 100 TB:
-    stage 1 touches codes (25x smaller than vectors), stage 2 touches
-    n_queries * pool raw vectors via a broadcast semi-join on vec_id —
-    the full-precision relation is never shuffled, and recall is provably
-    >= the PQ-alone top-k (the pool is a superset of PQ's own top-k, and
-    any global exact-top-k member present in the pool outranks every other
-    pool row under exact scoring).
-
-    Output matches cosine_topk's shape/discipline (order-pinned dot fold,
-    round-4 score) so the two are directly comparable in q_ann_recall.
-    """
-    cand = ann_pq_adc_topk(emb, n_queries, k=pool, subs=subs, codes=codes).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    base = vectors_with_norms(emb)
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    rescored = (
-        base.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .withColumn(
-            "score",
-            F.expr(_spark_dot("v", "qv")) / (F.col("norm") * F.col("qnorm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("score", 4).alias("score"),
-        )
-    )
-
-
 @register(
     "q_ann_rerank",
     oracle=f"""
@@ -1377,18 +1284,20 @@ FROM rescored QUALIFY rank <= {TOP_K}
     tags=("similarity", "northstar", "pq", "rerank"),
 )
 def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC candidates refined by exact cosine — the two-stage serving
-    pattern; recall vs both the exact scan and PQ-alone is recorded in
+    """Two-stage ANN — the FAISS IVF-PQ + refine serving pattern (Jegou
+    et al. TPAMI 2011 §V): PQ/ADC over the seed index proposes
+    RERANK_POOL candidates per query, then only those are re-scored with
+    the exact cosine and cut to the final top-k (cosine_topk's output
+    discipline). Recall vs both the exact scan and PQ-alone is recorded in
     q_ann_recall / ANN_RECALL.md."""
-    return ann_pq_rerank_topk(read_table(spark, sf_dir, "embeddings"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    return index_topk(
+        emb, seed_index(emb), nprobe=N_CENTROIDS, rerank=RERANK_POOL, vectors=emb
+    )
 
 
 def pq_train_codebooks(
-    emb: DataFrame,
-    rounds: int = 2,
-    k: int = PQ_K,
-    pinned: bool = False,
-    subs: DataFrame | None = None,
+    emb: DataFrame, rounds: int = 2, pinned: bool = False
 ) -> DataFrame:
     """Per-subspace Lloyd k-means over the subvectors — the production
     codebook trainer the sliced-fixture `pq_codebook` stands in for
@@ -1411,10 +1320,7 @@ def pq_train_codebooks(
     one (m, j, ci)-keyed shuffle — M x K x PQ_SUB uniform groups, the
     same skew-free shape as the avg path; a float-tolerant production
     run keeps the default."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-
-    if subs is None:
-        subs = engine_cache(pq_subvectors(emb))
+    subs = engine_cache(pq_subvectors(emb))
     cb = pq_codebook(subs)
     comp_avgs = [
         F.avg(F.expr(f"su[{i}]")).alias(f"_c{i}") for i in range(PQ_SUB)
@@ -1559,125 +1465,25 @@ def q_ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     learning itself is hash-verified, not just pytest-pinned. Recall vs
     exact is the pq_trained row in q_ann_recall / ANN_RECALL.md."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann_pq_adc_topk(
-        emb, codebook=pq_train_codebooks(emb, rounds=1, pinned=True)
+    return index_topk(emb, pq_trained_index(emb), nprobe=N_CENTROIDS).drop("cell")
+
+
+def pq_trained_index(emb: DataFrame) -> dict[str, DataFrame]:
+    """`seed_index` with the codebook trained by one order-pinned Lloyd
+    round (pq_train_codebooks(pinned=True)) — q_ann_pq_trained_topk's
+    index."""
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
+        encode_ann_index,
+    )
+
+    return encode_ann_index(
+        emb, seed_centroids(emb), pq_train_codebooks(emb, rounds=1, pinned=True)
     )
 
 
 # ---------------------------------------------------------------------------
 # IVF + PQ composition: prune to the query's cell, score the cell by ADC
 # ---------------------------------------------------------------------------
-
-
-def ann_ivfpq_topk(
-    emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
-    nprobe: int = 1,
-    assignments_fn=None,
-    subs: DataFrame | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """The full FAISS IVFADC composition (Jegou et al. TPAMI 2011 §V.A):
-    the coarse quantizer prunes the search to the query's `nprobe` best
-    IVF cells, and the surviving candidates are scored by PQ asymmetric
-    distance — the scan touches cell-filtered CODES only, never raw
-    vectors. At 100 TB this is the memory-and-compute production shape:
-    candidate count ~ nprobe / n_centroids, bytes / 25, and the only
-    big-side operations are one cell equi-join and one (m, code)
-    broadcast-table lookup join. Recall compounds the two stages' losses
-    (see q_ann_recall: the fixture's decorrelated geometry makes the
-    coarse stage the binding loss) — nprobe>1 widens the probe set on the
-    BROADCAST side only (no duplicate candidates: each vector lives in
-    exactly one cell), and the exact-refine stage (ann_pq_rerank_topk)
-    buys back the quantization loss.
-    """
-    assigned = (assignments_fn or ivf_assignments)(emb).select("vec_id", "cell")
-    if subs is None:
-        subs = pq_subvectors(emb)
-    cb = pq_codebook(subs)
-    dt = (
-        subs.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), "m", F.col("su").alias("qsu"))
-        .join(cb, "m")
-        .select(
-            "query_id",
-            "m",
-            F.col("j").alias("code"),
-            F.round(F.expr(_spark_l2sq("qsu", "cw")), 9)
-            .cast("decimal(18,9)")
-            .alias("d"),
-        )
-    )
-    if nprobe == 1:
-        queries = assigned.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"), F.col("cell").alias("qcell")
-        )
-    else:
-        # the ann_ivf_multiprobe_topk probe relation: rank ALL centroids
-        # per query by cosine, keep the nprobe best — n_queries x nprobe
-        # rows, still broadcast-sized.
-        base = vectors_with_norms(emb)
-        cents = base.filter(
-            (F.col("vec_id") >= CENTROID_BASE)
-            & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-        ).select(
-            (F.col("vec_id") - CENTROID_BASE).alias("pcell"),
-            F.col("v").alias("cv"),
-            F.col("norm").alias("cnorm"),
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("_cscore").desc(), F.col("pcell").asc()
-        )
-        queries = (
-            base.filter(F.col("vec_id") < n_queries)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                F.col("norm").alias("qnorm"),
-            )
-            .crossJoin(F.broadcast(cents))
-            .withColumn(
-                "_cscore",
-                F.expr(_spark_dot("qv", "cv")) / (F.col("qnorm") * F.col("cnorm")),
-            )
-            .withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= nprobe)
-            .select("query_id", F.col("pcell").alias("qcell"))
-        )
-    # cell prune FIRST: only the query-cell members' codes reach the ADC join
-    cand_codes = (
-        assigned.join(
-            F.broadcast(queries),
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id", "cell")
-        .join(codes if codes is not None else pq_codes(subs, cb), "vec_id")
-    )
-    scored = (
-        cand_codes.join(
-            F.broadcast(dt),
-            (cand_codes["m"] == dt["m"])
-            & (cand_codes["code"] == dt["code"])
-            & (cand_codes["query_id"] == dt["query_id"]),
-        )
-        .drop(dt["query_id"])
-        .groupBy("query_id", "vec_id", "cell")
-        .agg(F.sum("d").alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            "rank",
-            F.round(F.col("adist").cast("double"), 6).alias("adist"),
-        )
-    )
 
 
 @register(
@@ -1716,10 +1522,12 @@ FROM ivf_adc QUALIFY rank <= {TOP_K}
     tags=("similarity", "northstar", "ivf", "pq"),
 )
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cell pruning composed with PQ/ADC scoring — the production
-    IVFADC shape; its compounded recall loss is a recorded row in
-    q_ann_recall / ANN_RECALL.md."""
-    return ann_ivfpq_topk(read_table(spark, sf_dir, "embeddings"))
+    """The FAISS IVFADC composition (Jegou et al. TPAMI 2011 §V.A): the
+    coarse quantizer prunes the search to the query's cell and ADC scores
+    the cell's codes — the seed index at nprobe=1. Its compounded recall
+    loss is a recorded row in q_ann_recall / ANN_RECALL.md."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    return index_topk(emb, seed_index(emb))
 
 
 @register(
@@ -1765,9 +1573,8 @@ def q_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's two best cells (the recall knob FAISS tunes first), ADC scores
     the widened candidate set — the `ivfpq_p2` recall row quantifies what
     one extra probe buys back of the compounded loss."""
-    return ann_ivfpq_topk(
-        read_table(spark, sf_dir, "embeddings"), nprobe=IVF_NPROBE
-    )
+    emb = read_table(spark, sf_dir, "embeddings")
+    return index_topk(emb, seed_index(emb), nprobe=IVF_NPROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -1777,39 +1584,61 @@ def q_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_RECALL_POSSIBLE = N_QUERIES * TOP_K
 
 # (variant label, Spark builder, registered oracle name, probes-per-query).
+# Each builder takes (emb, index): `index` is the seed IVF-PQ index of emb,
+# built once per ann_recall and searched by every variant that uses it.
 # `probes` is the tuner-facing knob: IVF searches that many cells
 # (nprobe), LSH probes that many buckets (own bucket + Hamming-1 flips).
 # The labels sort so each family's curve reads probes-ascending.
 ANN_RECALL_VARIANTS = (
-    ("ivf_p1", ann_ivf_topk, "q_ann_ivf_topk", 1),
-    ("ivf_p2", ann_ivf_multiprobe_topk, "q_ann_ivf_multiprobe", IVF_NPROBE),
-    ("lsh_p1", ann_lsh_topk, "q_ann_lsh_topk", 1),
-    ("lsh_p9", ann_lsh_multiprobe_topk, "q_ann_lsh_multiprobe", N_PLANES + 1),
+    ("ivf_p1", lambda emb, _index: ann_ivf_topk(emb), "q_ann_ivf_topk", 1),
+    (
+        "ivf_p2",
+        lambda emb, _index: ann_ivf_multiprobe_topk(emb),
+        "q_ann_ivf_multiprobe",
+        IVF_NPROBE,
+    ),
+    ("lsh_p1", lambda emb, _index: ann_lsh_topk(emb), "q_ann_lsh_topk", 1),
+    (
+        "lsh_p9",
+        lambda emb, _index: ann_lsh_multiprobe_topk(emb),
+        "q_ann_lsh_multiprobe",
+        N_PLANES + 1,
+    ),
     # PQ scans ALL codes (compression, not candidate pruning), so its
     # "probes" knob is the full codebook width per subspace.
-    ("pq_m32k32", ann_pq_adc_topk, "q_ann_pq_topk", PQ_K),
+    (
+        "pq_m32k32",
+        lambda emb, index: index_topk(emb, index, nprobe=N_CENTROIDS),
+        "q_ann_pq_topk",
+        PQ_K,
+    ),
     # Two-stage refine: the tuner knob is the stage-1 pool width; recall is
     # provably >= pq_m32k32's at equal final k (pool superset argument).
-    ("pq_rerank", ann_pq_rerank_topk, "q_ann_rerank", RERANK_POOL),
+    (
+        "pq_rerank",
+        lambda emb, index: index_topk(
+            emb, index, nprobe=N_CENTROIDS, rerank=RERANK_POOL, vectors=emb
+        ),
+        "q_ann_rerank",
+        RERANK_POOL,
+    ),
     # Full IVFADC composition: coarse prune x quantized scoring — the
     # compounded-loss row a tuner reads against its single-stage parents,
     # plus the first knob FAISS turns (nprobe=2) to buy the loss back.
-    ("ivfpq_p1", ann_ivfpq_topk, "q_ann_ivfpq_topk", 1),
+    ("ivfpq_p1", index_topk, "q_ann_ivfpq_topk", 1),
     (
         "ivfpq_p2",
-        lambda emb, **kw: ann_ivfpq_topk(emb, nprobe=IVF_NPROBE, **kw),
+        lambda emb, index: index_topk(emb, index, nprobe=IVF_NPROBE),
         "q_ann_ivfpq_multiprobe",
         IVF_NPROBE,
     ),
     # Trained codebook (one pinned Lloyd round over the sliced init): the
     # quantization-quality payoff of pq_train_codebooks, at pq_m32k32's
-    # exact scan shape and bit budget.
+    # exact scan shape and bit budget — its own index (different codes).
     (
         "pq_trained",
-        lambda emb, subs=None: ann_pq_adc_topk(
-            emb,
-            codebook=pq_train_codebooks(emb, rounds=1, pinned=True, subs=subs),
-            subs=subs,
+        lambda emb, _index: index_topk(
+            emb, pq_trained_index(emb), nprobe=N_CENTROIDS
         ),
         "q_ann_pq_trained_topk",
         PQ_K,
@@ -1833,41 +1662,17 @@ def ann_recall(emb: DataFrame) -> DataFrame:
     variant-count-sized literal dim left-joins the hit counts so one with ZERO
     overlap still reports recall 0 instead of vanishing.
 
-    Shared index relations (r14, guide §3.3/§5): the 10 variants previously
-    each re-embedded the corpus — the PQ encode (`pq_codes`, a corpus-wide
-    argmin window) appeared 4x in the union's static plan and the IVF
-    assignment 4x, and Catalyst re-analyzed every copy (the minhash-recall
-    fan-out lesson). The subvector, encode, and coarse-assignment relations
-    are now built ONCE, engine_cached, and passed into every variant; the
-    trained-codebook variant shares the cached subvectors but keeps its own
-    cb1 encode (different codebook — different codes by definition). Results
-    identical by construction; oracle unchanged.
+    The four seed-quantizer IVF-PQ variants (pq_m32k32, pq_rerank,
+    ivfpq_p1, ivfpq_p2) search ONE in-memory `seed_index`, so its model
+    row is derived once per call; only the encode of `lists` is a lazy
+    narrow pass each search re-runs.
     """
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-
     spark = emb.sparkSession
-    subs = engine_cache(pq_subvectors(emb))
-    cb = pq_codebook(subs)
-    codes = engine_cache(pq_codes(subs, cb))
-    assigned = engine_cache(ivf_assignments(emb))
-    shared_kw = {
-        "ivf_p1": dict(assignments_fn=lambda e: assigned),
-        "ivf_p2": dict(assignments_fn=lambda e: assigned),
-        "pq_m32k32": dict(subs=subs, codes=codes),
-        "pq_rerank": dict(subs=subs, codes=codes),
-        "ivfpq_p1": dict(
-            assignments_fn=lambda e: assigned, subs=subs, codes=codes
-        ),
-        "ivfpq_p2": dict(
-            assignments_fn=lambda e: assigned, subs=subs, codes=codes
-        ),
-        "pq_trained": dict(subs=subs),
-    }
+    index = seed_index(emb)
     exact = cosine_topk(emb).select("query_id", "neighbor_id")
     approx = None
     for label, fn, _oracle_name, probes in ANN_RECALL_VARIANTS:
-        kw = shared_kw.get(label)
-        part = (fn(emb, **kw) if kw else fn(emb)).select(
+        part = fn(emb, index).select(
             F.lit(label).alias("variant"),
             F.lit(probes).cast("long").alias("probes"),
             "query_id",

@@ -1,6 +1,8 @@
-"""Persisted ANN index (operators/ann_index.py): artifact round-trip
-equal to the on-the-fly IVFADC path, no raw-vector scan at query time,
-and versioned re-index with a pinnable history."""
+"""Persisted ANN index (operators/ann_index.py): a search of the
+committed artifacts is row-identical to the DuckDB IVFADC oracles
+(q_ann_ivfpq_topk / q_ann_ivfpq_multiprobe over the same parquet), no
+raw-vector scan at query time, versioned re-index with a pinnable
+history, and bad search arguments refused."""
 
 from __future__ import annotations
 
@@ -8,11 +10,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from clinical_search_data_pipeline_spark.operators import ann_index as ai
-from clinical_search_data_pipeline_spark.operators.similarity import (
-    ann_ivfpq_topk,
-)
+from clinical_search_data_pipeline_spark.registry import oracle_of
 from clinical_search_data_pipeline_spark.sinks import manifest as m
 from clinical_search_data_pipeline_spark.sources.readers import read_table
+from clinical_search_data_pipeline_spark.testing import duck_connection
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,7 +21,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def persisted(spark, tmp_path_factory):
     # train_rounds=0: this fixture backs the frozen-SEED equivalence pins
-    # (persisted path == on-the-fly ann_ivfpq_topk, which quantizes with
+    # (persisted path == the q_ann_ivfpq_* oracles, which quantize with
     # the seed slice). The TRAINED default is pinned separately by
     # test_trained_add_equals_trained_rebuild and driver-verified via
     # q_ann_index_topk's unrolled-Lloyd oracle.
@@ -30,22 +31,34 @@ def persisted(spark, tmp_path_factory):
     return root, emb
 
 
+@pytest.fixture(scope="module")
+def ivfadc_oracle():
+    """{nprobe: sorted rows} of the seed-quantizer IVFADC top-k over the
+    whole fixture, from the registered DuckDB oracles (nprobe 1 and 2)."""
+    con = duck_connection(SF)
+    return {
+        nprobe: sorted(con.execute(oracle_of(name)).fetchall())
+        for nprobe, name in (
+            (1, "q_ann_ivfpq_topk"),
+            (2, "q_ann_ivfpq_multiprobe"),
+        )
+    }
+
+
 def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_index_probe_equals_on_the_fly_ivfadc(spark, persisted):
+def test_index_probe_equals_on_the_fly_ivfadc(spark, persisted, ivfadc_oracle):
     """The core pin: searching the persisted artifacts returns the exact
-    rows (values, ranks, DECIMAL-derived adist) of the on-the-fly plan, at
+    rows (values, ranks, DECIMAL-derived adist) of the IVFADC oracle, at
     nprobe=1 and at the multiprobe recall knob."""
     root, emb = persisted
     index = ai.read_ann_index(spark, root)
     queries = emb.filter(F.col("vec_id") < 8)
-    assert _rows(ai.ann_index_topk(index, queries)) == _rows(
-        ann_ivfpq_topk(emb)
-    )
-    assert _rows(ai.ann_index_topk(index, queries, nprobe=2)) == _rows(
-        ann_ivfpq_topk(emb, nprobe=2)
+    assert _rows(ai.ann_index_topk(index, queries)) == ivfadc_oracle[1]
+    assert _rows(ai.ann_index_topk(index, queries, nprobe=2)) == (
+        ivfadc_oracle[2]
     )
 
 
@@ -151,7 +164,7 @@ def test_old_four_table_root_refuses_with_reindex(spark, tmp_path):
         ai.add_to_ann_index(spark, root, emb.filter(F.col("vec_id") < 4))
 
 
-def test_reindex_is_versioned_and_pinnable(spark, persisted):
+def test_reindex_is_versioned_and_pinnable(spark, persisted, ivfadc_oracle):
     """A re-index (e.g. after a corpus refresh) publishes new versions
     atomically; a searcher pinning the previous versions still reads the
     complete old index — the rollback story is a version map."""
@@ -165,9 +178,7 @@ def test_reindex_is_versioned_and_pinnable(spark, persisted):
     assert old["lists"].count() > new["lists"].count()
     # the pinned old index still answers searches identically
     queries = emb.filter(F.col("vec_id") < 8)
-    assert _rows(ai.ann_index_topk(old, queries)) == _rows(
-        ann_ivfpq_topk(emb)
-    )
+    assert _rows(ai.ann_index_topk(old, queries)) == ivfadc_oracle[1]
 
 
 def test_mid_reindex_reader_gets_consistent_quadruple(spark, persisted):
@@ -193,7 +204,7 @@ def test_mid_reindex_reader_gets_consistent_quadruple(spark, persisted):
     assert after["lists"].count() == before_lists
 
 
-def test_incremental_add_equals_full_rebuild(spark, tmp_path):
+def test_incremental_add_equals_full_rebuild(spark, tmp_path, ivfadc_oracle):
     """FAISS add(): vectors folded in under the FROZEN quantizers. Because
     the training rows (centroids 100..107, codebook 200..231) are in the
     initial build, add-then-search must equal a full rebuild BIT FOR BIT —
@@ -203,7 +214,7 @@ def test_incremental_add_equals_full_rebuild(spark, tmp_path):
     root = str(tmp_path / "index")
     initial = emb.filter(F.col("vec_id") < 300)  # includes all training rows
     # train_rounds=0: this pin compares against the seed-quantizer
-    # on-the-fly path; the trained twin is pinned separately below
+    # IVFADC oracle; the trained twin is pinned separately below
     ai.write_ann_index(ai.build_ann_index(initial, train_rounds=0), root)
     pre_lists = {
         e["path"]
@@ -217,11 +228,9 @@ def test_incremental_add_equals_full_rebuild(spark, tmp_path):
     assert pre_lists < {e["path"] for e in post}  # old files referenced, not rewritten
     idx = ai.read_ann_index(spark, root)
     queries = emb.filter(F.col("vec_id") < 8)
-    assert _rows(ai.ann_index_topk(idx, queries)) == _rows(
-        ann_ivfpq_topk(emb)
-    )
-    assert _rows(ai.ann_index_topk(idx, queries, nprobe=2)) == _rows(
-        ann_ivfpq_topk(emb, nprobe=2)
+    assert _rows(ai.ann_index_topk(idx, queries)) == ivfadc_oracle[1]
+    assert _rows(ai.ann_index_topk(idx, queries, nprobe=2)) == (
+        ivfadc_oracle[2]
     )
     # duplicate vectors refuse
     with pytest.raises(ValueError, match="already present"):
@@ -260,7 +269,7 @@ def test_remove_masks_then_compact_applies(spark, tmp_path):
     assert _rows(masked) == _rows(physical)
 
 
-def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path):
+def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path, ivfadc_oracle):
     """Maintenance cadence: repeated adds accrue one stage dir each;
     compact_ann_index collapses lists to target_files and the
     result is pinned equal to a from-scratch build of the union corpus —
@@ -285,12 +294,10 @@ def test_add_then_compact_equals_fresh_rebuild(spark, tmp_path):
     assert _rows(idx["model"]) == _rows(fresh["model"])
     assert _rows(idx["lists"]) == _rows(fresh["lists"])
     queries = emb.filter(F.col("vec_id") < 8)
-    assert _rows(ai.ann_index_topk(idx, queries)) == _rows(
-        ann_ivfpq_topk(emb)
-    )
+    assert _rows(ai.ann_index_topk(idx, queries)) == ivfadc_oracle[1]
 
 
-def test_crashed_add_orphan_never_duplicates(spark, tmp_path):
+def test_crashed_add_orphan_never_duplicates(spark, tmp_path, ivfadc_oracle):
     """ADVICE r9 #2 regression: an add that appended lists rows but died
     before its meta pin leaves orphaned rows at the table tips. The next
     add of the same increment must succeed (the pinned index lacks it)
@@ -326,7 +333,7 @@ def test_crashed_add_orphan_never_duplicates(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 8)
     assert _rows(
         ai.ann_index_topk(ai.read_ann_index(spark, root), queries)
-    ) == _rows(ann_ivfpq_topk(emb))
+    ) == ivfadc_oracle[1]
 
 
 def test_trained_add_equals_trained_rebuild(spark, tmp_path):
@@ -361,7 +368,7 @@ def test_rerank_recall_geq_probe_only_at_same_nprobe(spark, tmp_path):
     superset of ADC's own top-k, and any exact-top-k member in the pool
     outranks every other pool row under exact scoring). Also pins the
     refine output discipline (rank by exact cosine desc / vec_id asc,
-    round-4 score) against similarity.ann_pq_rerank_topk's shape."""
+    round-4 score) against cosine_topk's shape."""
     from clinical_search_data_pipeline_spark.operators.similarity import (
         IVF_NPROBE,
         RERANK_POOL,
@@ -401,13 +408,27 @@ def test_rerank_recall_geq_probe_only_at_same_nprobe(spark, tmp_path):
         assert scores == sorted(scores, reverse=True), q
 
 
-def test_rerank_requires_vectors(spark, tmp_path):
-    emb = read_table(spark, SF, "embeddings")
-    root = str(tmp_path / "index")
-    ai.write_ann_index(ai.build_ann_index(emb, train_rounds=0), root)
+@pytest.mark.parametrize(
+    "search, with_vectors, match",
+    [
+        (dict(nprobe=0), False, "nprobe >= 1"),
+        (dict(nprobe=-1), False, "nprobe >= 1"),
+        (dict(k=0), False, "k >= 1"),
+        (dict(rerank=3, k=5), True, "at least k"),
+        (dict(rerank=10), False, "vectors"),
+    ],
+    ids=["nprobe0", "nprobe-1", "k0", "rerank-lt-k", "rerank-no-vectors"],
+)
+def test_bad_search_arguments_raise(spark, persisted, search, with_vectors, match):
+    """Arguments outside the search contract fail loudly when the search
+    is planned, naming the contract — not as 0 rows, a short pool, or a
+    Spark error at collect."""
+    root, emb = persisted
     idx = ai.read_ann_index(spark, root)
-    with pytest.raises(ValueError, match="vectors"):
-        ai.ann_index_topk(idx, emb.filter(F.col("vec_id") < 8), rerank=10)
+    if with_vectors:
+        search = dict(search, vectors=emb)
+    with pytest.raises(ValueError, match=match):
+        ai.ann_index_topk(idx, emb.filter(F.col("vec_id") < 8), **search)
 
 
 def test_serve_index_builds_once_per_source_content(spark, monkeypatch):

@@ -9,24 +9,30 @@ for the tuner; `python ann_recall_report.py` regenerates it.
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from clinical_search_data_pipeline_spark.operators.similarity import (
     ANN_RECALL_POSSIBLE,
     ANN_RECALL_VARIANTS,
-    ann_recall,
 )
 from clinical_search_data_pipeline_spark.registry import all_specs
-from clinical_search_data_pipeline_spark.sources.readers import read_table
 from tests.conftest import SF_SMOKE
 
 
-def _rows(spark):
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    return {r.variant: r.asDict() for r in ann_recall(emb).collect()}
+@pytest.fixture(scope="module")
+def rows(spark):
+    """{variant: row} of the registered q_ann_recall at the smoke SF,
+    computed once for every test here (each run is ~9 variant searches)."""
+    from clinical_search_data_pipeline_spark.caching import release_caches
+
+    try:
+        out = all_specs()["q_ann_recall"].builder(spark, SF_SMOKE).collect()
+    finally:
+        release_caches()
+    return {r.variant: r.asDict() for r in out}
 
 
-def test_recall_table_shape_and_totals(spark):
-    rows = _rows(spark)
+def test_recall_table_shape_and_totals(rows):
     assert set(rows) == {label for label, *_ in ANN_RECALL_VARIANTS}
     for r in rows.values():
         assert r["possible"] == ANN_RECALL_POSSIBLE
@@ -34,11 +40,10 @@ def test_recall_table_shape_and_totals(spark):
         assert r["recall_bp"] == r["hits"] * 10000 // r["possible"]
 
 
-def test_recall_monotone_in_probes(spark):
+def test_recall_monotone_in_probes(rows):
     """Widening the probe set must not lose true neighbors: every candidate
     a single-probe search scores is also scored by its multiprobe variant,
     so recall is monotone in probes — and on this fixture strictly so."""
-    rows = _rows(spark)
     assert rows["ivf_p2"]["hits"] > rows["ivf_p1"]["hits"]
     assert rows["lsh_p9"]["hits"] > rows["lsh_p1"]["hits"]
     assert rows["ivfpq_p2"]["hits"] > rows["ivfpq_p1"]["hits"]
@@ -49,11 +54,10 @@ def test_recall_monotone_in_probes(spark):
     assert rows["ivfpq_p1"]["hits"] <= rows["ivf_p1"]["hits"]
 
 
-def test_recall_pinned_at_smoke_sf(spark):
+def test_recall_pinned_at_smoke_sf(rows):
     """Exact basis-points pins at sf0.001 — deterministic end to end. If a
     variant's plane/centroid/tie-break behavior changes, this is the first
     test to say which variant and by how much."""
-    rows = _rows(spark)
     got = {v: r["recall_bp"] for v, r in rows.items()}
     assert got == {
         "ivf_p1": 2250,
@@ -74,12 +78,11 @@ def test_recall_pinned_at_smoke_sf(spark):
     }, got
 
 
-def test_rerank_recall_dominates_pq_alone(spark):
+def test_rerank_recall_dominates_pq_alone(rows):
     """The pool-superset argument made measurable: exact refinement of the
     ADC pool can only keep or raise recall vs the PQ-alone top-k (the pool
     contains PQ's own top-k, and any global exact-top-k member in the pool
     outranks every other pool row under exact scoring)."""
-    rows = _rows(spark)
     assert rows["pq_rerank"]["hits"] >= rows["pq_m32k32"]["hits"], rows
 
 
@@ -93,7 +96,7 @@ def test_recall_oracle_embeds_registered_variant_sql():
     assert specs["q_cosine_topk"].oracle in recall_sql
 
 
-def test_recall_duckdb_parity_at_smoke_sf(spark):
+def test_recall_duckdb_parity_at_smoke_sf(rows):
     """Value-level parity of the composed oracle at the smoke SF (the
     driver checks sf0.01; this pins the other fixture too)."""
     spec = all_specs()["q_ann_recall"]
@@ -106,7 +109,7 @@ def test_recall_duckdb_parity_at_smoke_sf(spark):
         r[0]: (r[1], r[2], r[3], r[4]) for r in con.execute(spec.oracle).fetchall()
     }
     got = {
-        r.variant: (r.probes, r.hits, r.possible, r.recall_bp)
-        for r in spec.builder(spark, SF_SMOKE).collect()
+        v: (r["probes"], r["hits"], r["possible"], r["recall_bp"])
+        for v, r in rows.items()
     }
     assert got == oracle

@@ -122,8 +122,11 @@ BOUNDED_BROADCAST_NLJ_OK = {
     "q_bm25_topk",                 # broadcast 1-row (N, avgdl) corpus stats
     "q_bm25_index_topk",           # same 1-row stats, read from the index
     "q_zorder_keys",               # broadcast 1-row per-dimension bounds
-    "q_ann_ivfpq_topk",            # broadcast K centroids (coarse assignment)
-    "q_ann_ivfpq_multiprobe",      # broadcast K centroids (probe ranking)
+    "q_ann_ivfpq_topk",            # queries/vectors x broadcast 1-row model
+    "q_ann_ivfpq_multiprobe",      # queries/vectors x broadcast 1-row model
+    "q_ann_pq_topk",               # queries/vectors x broadcast 1-row model
+    "q_ann_rerank",                # queries/vectors x broadcast 1-row model
+    "q_ann_pq_trained_topk",       # queries/vectors x broadcast 1-row model
     "q_minhash_recall",            # broadcast 1-row |exact pairs| scalar
     "q_cms_heavy_hitters",         # broadcast 1-row corpus event total
     "q_pps_sample",                # broadcast 1-row stride (grand total)

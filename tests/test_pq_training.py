@@ -6,27 +6,38 @@ gain over the sliced-fixture init at equal bit budget."""
 from __future__ import annotations
 
 from clinical_search_data_pipeline_spark.caching import release_caches
+from clinical_search_data_pipeline_spark.operators.ann_index import (
+    encode_ann_index,
+)
 from clinical_search_data_pipeline_spark.operators.similarity import (
+    N_CENTROIDS,
     PQ_K,
     PQ_M,
-    ann_pq_adc_topk,
     cosine_topk,
+    index_topk,
     pq_codebook,
     pq_distortion,
     pq_subvectors,
     pq_train_codebooks,
+    seed_centroids,
 )
 from clinical_search_data_pipeline_spark.sources.readers import read_table
 from tests.conftest import SF_SMOKE
 
 
 def _recall(emb, codebook=None) -> int:
+    """True top-k neighbors found by PQ/ADC over every vector: an
+    in-memory index of the seed cells and `codebook` (default: the
+    sliced init), searched in all cells."""
+    if codebook is None:
+        codebook = pq_codebook(pq_subvectors(emb))
+    index = encode_ann_index(emb, seed_centroids(emb), codebook)
     exact = {
         (r["query_id"], r["neighbor_id"]) for r in cosine_topk(emb).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_pq_adc_topk(emb, codebook=codebook).collect()
+        for r in index_topk(emb, index, nprobe=N_CENTROIDS).collect()
     }
     return len(approx & exact)
 

@@ -47,11 +47,6 @@ def test_cartesian_and_global_window_flagged(spark):
 # blanket advisory is now the same named-allowlist discipline as the NLJ
 # check).
 SINGLE_PARTITION_OK = {
-    "q_ann_recall",                # runtime Bloom-filter builds Spark
-    #                                injects on the shared cached encode
-    #                                joins (bloom_filter_agg — a scalar,
-    #                                1-row-per-build aggregate; the
-    #                                might_contain probes ride the scans)
     "q_bigram_nll",                # 1-row corpus token total
     "q_bm25_topk",                 # 1-row (N, avgdl) corpus stats
     "q_cms_heavy_hitters",         # 1-row corpus event total
