@@ -39,7 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StructField,
@@ -70,22 +69,9 @@ AUDIO_FP_SCHEMA = StructType(
 )
 
 
-def attach_neardup_audio(docs: DataFrame, wrap_base: int | None = None) -> DataFrame:
-    """(doc_id, payload) — one real WAV per document; see _audio_encoder
-    for the construction. The fused fingerprint path
-    (`audio_neardup_fingerprints`) composes the same encoder with the
-    fingerprinter in one Python crossing."""
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _audio_encoder(wrap_base),
-        schema=StructType(
-            [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-        ),
-    )
-
-
 def _audio_encoder(wrap_base: int | None):
-    """Encode one real WAV per document whose samples are pure integer
-    functions of doc_id:
+    """Batch generator (doc_id) -> (doc_id, payload): one real WAV per
+    document whose samples are pure integer functions of doc_id:
 
         base = doc_id - doc_id % 10  if doc_id % 10 >= 8 else doc_id
         n    = base % 60 + 140
@@ -96,10 +82,11 @@ def _audio_encoder(wrap_base: int | None):
     With `wrap_base`, a copy's leader is taken MOD wrap_base — so copies
     reference recordings BELOW the corpus/batch split (cross-split planted
     duplicates for the streaming admission gate), mirroring
-    phash.attach_neardup_images. The base-dependent quadratic/periodic
+    phash._image_encoder. The base-dependent quadratic/periodic
     coefficients give every base signal a distinct energy profile; odd
     doc_ids carry the pre-fmt JUNK chunk so the decode path stays the
-    chunk-walking parser."""
+    chunk-walking parser. `audio_neardup_fingerprints` runs it with the
+    fingerprinter in one Python crossing."""
     import numpy as _np
 
     from clinical_search_data_pipeline_spark.operators.multimodal import encode_wav
@@ -132,31 +119,14 @@ def _audio_encoder(wrap_base: int | None):
     return _encode
 
 
-def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """Arrow-batched fingerprinting over real WAV bytes: chunk-walk decode
-    (`decode_wav_array` — frombuffer, no per-sample Python ints), pool
-    |sample| sums into FP_FRAMES frames, compare consecutive frames with
-    the integer cross-product form, pack the 64 bits into 4 16-bit bands.
-
-    Framing/bit extraction is vectorized across the WHOLE batch (guide
-    §4.2): per-doc work is only the header walk + one frombuffer; the
-    frame energies come from two `bincount`s over a (doc, frame) key and
-    the band values from one matmul against the bit-weight vector. Energy
-    sums ride float64 through bincount — exact for |sum| < 2^53, and the
-    per-frame |sample| sum is bounded far below that — then cast back to
-    int64 so the cross-product comparison stays the integer arithmetic
-    the oracle replays. Output: (doc_id, sample_rate, n_samples, b0..b3),
-    values identical to the per-doc form."""
-    return media.mapInPandas(_audio_fingerprinter(), schema=AUDIO_FP_SCHEMA)
-
-
 def audio_neardup_fingerprints(
     docs: DataFrame, wrap_base: int | None = None
 ) -> DataFrame:
-    """attach_neardup_audio ∘ audio_fingerprints fused into ONE Python
-    crossing (guide §4.1, the dhash_neardup_images rationale): the WAV
-    payloads never round-trip through the JVM between encode and decode.
-    Values identical to the chained form (same two generators, composed)."""
+    """(doc_id, sample_rate, n_samples, b0..b3) — each document's fixture
+    WAV (`_audio_encoder`) fingerprinted (`_audio_fingerprinter`) in ONE
+    Python crossing (the dhash_neardup_images rationale): the
+    WAV payloads never round-trip through the JVM between encode and
+    decode."""
     enc = _audio_encoder(wrap_base)
     fp = _audio_fingerprinter()
 
@@ -169,7 +139,20 @@ def audio_neardup_fingerprints(
 
 
 def _audio_fingerprinter():
-    """The audio_fingerprints batch generator (see audio_neardup_fingerprints)."""
+    """Batch generator (doc_id, payload) -> AUDIO_FP_SCHEMA rows:
+    fingerprinting over real WAV bytes — chunk-walk decode
+    (`decode_wav_array` — frombuffer, no per-sample Python ints), pool
+    |sample| sums into FP_FRAMES frames, compare consecutive frames with
+    the integer cross-product form, pack the 64 bits into 4 16-bit bands.
+
+    Framing/bit extraction is vectorized across the WHOLE batch: per-doc
+    work is only the header walk + one frombuffer; the
+    frame energies come from two `bincount`s over a (doc, frame) key and
+    the band values from one matmul against the bit-weight vector. Energy
+    sums ride float64 through bincount — exact for |sum| < 2^53, and the
+    per-frame |sample| sum is bounded far below that — then cast back to
+    int64 so the cross-product comparison stays the integer arithmetic
+    the oracle replays."""
     import numpy as _np
 
     from clinical_search_data_pipeline_spark.operators.multimodal import (
@@ -234,7 +217,7 @@ def _audio_fingerprinter():
 
 # DuckDB twin: recompute samples, frame energies, bits, band values from
 # doc_id arithmetic (`f` is the frame index, `amp` the |sample| value).
-# `wrap_base` mirrors attach_neardup_audio: with it, copies reference the
+# `wrap_base` mirrors _audio_encoder: with it, copies reference the
 # leader MOD wrap_base (planting cross-split duplicates for the ingest
 # gate oracle).
 def duck_audio_fp_cte(wrap_base: int | None = None) -> str:

@@ -1,20 +1,21 @@
-"""Distributed k-means (one Lloyd refinement round) over the embedding
-corpus, bit-exact against a DuckDB oracle.
+"""Distributed k-means over the embedding corpus, bit-exact against a
+DuckDB oracle.
 
-North-star extension: the IVF index (operators/similarity.py) assigns
-vectors to FIXED seed centroids and notes that production seeds them with
-k-means||. This module supplies the missing refinement step as a native
-DataFrame program — assign → recompute centroids → reassign — so the
-coarse quantizer actually adapts to the corpus, and `q_semdedup` / the IVF
-family inherit better cells by swapping `ivf_assignments` for
-`kmeans_refined_assignments`.
+North-star extension: the IVF index seeds its coarse quantizer with FIXED
+centroids and notes that production refines them with Lloyd rounds. The
+Lloyd steps themselves — assign, order-pinned centroid update, and the
+fixed-round unroll `trained_quantizer(emb, rounds)` with its DuckDB twin
+`duck_lloyd_ctes` — live in operators/ann_index.py beside the encode and
+search they feed. This module composes them: `q_kmeans_refine` (seed vs
+one-round cells), `q_semdedup_refined` (SemDeDup over the one-round
+cells), `kmeans_train` (Lloyd to convergence with a per-round movement
+count), k-means|| seeding and DBSCAN.
 
 Cross-engine float determinism (same discipline as curation.unigram_nll):
 a centroid component is a MEAN of doubles, and float addition is
 order-dependent, so the per-(cell, dim) sum is NOT a groupBy sum — member
 values are collected sorted by vec_id and folded LEFT-TO-RIGHT from an
-explicit 0.0 seed (Spark `aggregate` over `array_sort(collect_list(...))`;
-DuckDB `list_reduce` over a 0.0-prepended `list(x ORDER BY vec_id)`), making
+explicit 0.0 seed (ann_index._pinned_means and its DuckDB twin), making
 the summation order identical on both engines. The dot products on both
 sides are already index-ordered folds (fragments._spark_dot/_duck_dot).
 
@@ -23,9 +24,8 @@ scan + an argmax window keyed on vec_id; the update is ONE shuffle keyed on
 (cell, dim) — D x K groups, uniformly sized, skew-free regardless of how
 lopsided the cells are (a cell-keyed update would put a hot cell on one
 task; the dim split spreads it D ways). The pinned-order fold only changes
-the aggregation expression, not the shuffle shape; a float-tolerant
-production run swaps it for the native `avg`. Empty cells drop out of the
-next round (standard Lloyd behavior), mirrored exactly by the oracle.
+the aggregation expression, not the shuffle shape. Empty cells drop out of
+the next round (standard Lloyd behavior), mirrored exactly by the oracle.
 """
 
 from __future__ import annotations
@@ -33,125 +33,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clinical_search_data_pipeline_spark.operators.ann_index import (
+    N_CENTROIDS,
+    _assign,
+    duck_lloyd_ctes,
+    trained_quantizer,
+    updated_centroids,
+    vectors_with_norms,
+)
 from clinical_search_data_pipeline_spark.operators.fragments import (
     _DUCK_BASE_CTE,
     _duck_dot,
     _spark_dot,
 )
 from clinical_search_data_pipeline_spark.operators.similarity import (
-    CENTROID_BASE,
-    N_CENTROIDS,
-    ivf_assignments,
-    vectors_with_norms,
+    embedding_neardup_pairs,
 )
 from clinical_search_data_pipeline_spark.registry import register
 from clinical_search_data_pipeline_spark.sources.readers import read_table
 
 
-def _assign(base: DataFrame, cents: DataFrame, out_cell: str) -> DataFrame:
-    """(vec_id, v, norm, <out_cell>) — max-cosine assignment, ties to the
-    lowest cell id (deterministic)."""
-    scored = base.crossJoin(F.broadcast(cents)).withColumn(
-        "_s", F.expr(_spark_dot("v", "cv")) / (F.col("norm") * F.col("cnorm"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("_s").desc(), F.col("cell").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "v", "norm", F.col("cell").alias(out_cell))
-    )
-
-
-def updated_centroids(assigned: DataFrame, cell_col: str = "cell") -> DataFrame:
-    """(cell, cv, cnorm) — per-cell mean vector with order-pinned summation
-    (see module docstring), reassembled in dim order."""
-    comp = assigned.select(
-        F.col(cell_col).alias("cell"), "vec_id", F.posexplode("v").alias("dim", "x")
-    )
-    pinned_mean = F.expr(
-        "aggregate(array_sort(collect_list(struct(vec_id, x))), "
-        "CAST(0.0 AS DOUBLE), (acc, s) -> acc + s.x)"
-    ) / F.count("*")
-    dims = comp.groupBy("cell", "dim").agg(pinned_mean.alias("m"))
-    cents = dims.groupBy("cell").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(dim, m))), s -> s.m)"
-        ).alias("cv")
-    )
-    return cents.withColumn("cnorm", F.expr(f"sqrt({_spark_dot('cv', 'cv')})"))
-
-
-def kmeans_refined_assignments(emb: DataFrame) -> DataFrame:
-    """(vec_id, cell0, cell1) — the seed-centroid assignment and the
-    assignment after one Lloyd round over the seed cells."""
-    base = vectors_with_norms(emb)
-    a0 = ivf_assignments(emb).select("vec_id", "v", "norm", F.col("cell").alias("cell0"))
-    cents1 = updated_centroids(a0, "cell0")
-    a1 = _assign(base, cents1, "cell1")
-    return a0.select("vec_id", "cell0").join(a1.select("vec_id", "cell1"), "vec_id")
-
-
-# Oracle: the same two assignment rounds as nested CTEs. `cells0` mirrors
-# ivf_assignments (identical text shape to the q_ann_ivf_* oracles); the
-# centroid update folds list(x ORDER BY vec_id) from a 0.0 seed.
-_DUCK_KMEANS_CTE = f"""
-{_DUCK_BASE_CTE},
-cents0 AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign0 AS (
-  SELECT vec_id, v, norm, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents0
-),
-cells0 AS (SELECT vec_id, v, norm, cell AS cell0 FROM assign0 WHERE rn = 1),
-comp AS (
-  SELECT cell0 AS cell, vec_id, unnest(v) AS x,
-         generate_subscripts(v, 1) AS dim
-  FROM cells0
-),
-dims AS (
-  SELECT cell, dim,
-         list_reduce(
-           list_prepend(0.0::DOUBLE, list(x ORDER BY vec_id)),
-           (acc, e) -> acc + e
-         ) / count(*) AS m
-  FROM comp GROUP BY cell, dim
-),
-cents1 AS (
-  SELECT cell, list(m ORDER BY dim) AS cv,
-         sqrt(list_reduce(list_transform(list(m ORDER BY dim), e -> e * e),
-              (acc, e) -> acc + e)) AS cnorm
-  FROM dims GROUP BY cell
-),
-assign1 AS (
-  SELECT n.vec_id, cents1.cell,
-         row_number() OVER (
-           PARTITION BY n.vec_id
-           ORDER BY {_duck_dot('n.v', 'cents1.cv')} / (n.norm * cents1.cnorm) DESC,
-                    cents1.cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents1
-),
-cells1 AS (SELECT vec_id, cell AS cell1 FROM assign1 WHERE rn = 1)"""
-
-
 @register(
     "q_kmeans_refine",
     oracle=f"""
-WITH {_DUCK_KMEANS_CTE}
-SELECT cells0.vec_id AS vec_id, cell0, cell1
-FROM cells0 JOIN cells1 ON cells0.vec_id = cells1.vec_id
+WITH {_DUCK_BASE_CTE},
+{duck_lloyd_ctes(1)}
+SELECT c0.vec_id, c0.cell AS cell0, c1.cell AS cell1
+FROM cells_r0 c0 JOIN cells_r1 c1 ON c0.vec_id = c1.vec_id
 """,
     tags=("clustering", "similarity", "northstar"),
 )
 def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed-cell vs one-Lloyd-round assignment for every vector."""
-    return kmeans_refined_assignments(read_table(spark, sf_dir, "embeddings"))
+    emb = read_table(spark, sf_dir, "embeddings")
+    cells = [
+        trained_quantizer(emb, r)[1].select("vec_id", F.col("cell").alias(f"cell{r}"))
+        for r in (0, 1)
+    ]
+    return cells[0].join(cells[1], "vec_id")
 
 
 def kmeans_parallel_seeds(
@@ -332,13 +251,9 @@ def kmeans_train(
 
     base = vectors_with_norms(emb)
     if init == "parallel":
-        cur = engine_cache(
-            _assign(base, kmeans_parallel_seeds(emb), "cell")
-        )
+        cur = engine_cache(_assign(base, kmeans_parallel_seeds(emb)))
     elif init == "ivf":
-        cur = engine_cache(
-            ivf_assignments(emb).select("vec_id", "v", "norm", "cell")
-        )
+        cur = engine_cache(trained_quantizer(emb, 0)[1])
     else:
         raise ValueError(f"unknown kmeans init: {init!r}")
     n_total = cur.count() if tol > 0 else 0
@@ -347,7 +262,7 @@ def kmeans_train(
     try:
         for _ in range(rounds):
             cents = updated_centroids(cur)
-            nxt = engine_cache(_assign(base, cents, "cell"))
+            nxt = engine_cache(_assign(base, cents))
             moved = (
                 nxt.select("vec_id", "cell")
                 .join(
@@ -379,115 +294,12 @@ def kmeans_train(
 # ---------------------------------------------------------------------------
 
 
-def trained_quantizer(
-    emb: DataFrame, rounds: int
-) -> tuple[DataFrame, DataFrame]:
-    """((cell, cv, cnorm), (vec_id, cell)) after exactly `rounds` Lloyd
-    alternations from the deterministic seed assignment — the coarse
-    quantizer `build_ann_index(train_rounds=...)` persists (VERDICT r11
-    #3: converged cells nearly double seed-cell IVF recall).
-
-    FIXED rounds, deliberately no early-stop: (a) a fixed unroll is what
-    `duck_lloyd_ctes` can express, so the persisted index keeps a bit-
-    exact cross-engine oracle; (b) convergence is a fixpoint — once an
-    assignment repeats, further rounds change nothing — so fixed-R equals
-    early-stopped training whenever the data converges within R; (c) no
-    per-round driver sync at all (kmeans_train pays one scalar per round
-    to report movement; the index builder doesn't need the history).
-    Plan depth grows linearly in `rounds` (each round references the
-    previous once), so no caching is needed for the small fixed R."""
-    if rounds < 1:
-        raise ValueError("trained_quantizer needs rounds >= 1")
-    base = vectors_with_norms(emb)
-    cur = ivf_assignments(emb).select("vec_id", "v", "norm", "cell")
-    cents = None
-    for _ in range(rounds):
-        cents = updated_centroids(cur)
-        cur = _assign(base, cents, "cell")
-    return cents, cur.select("vec_id", "cell")
-
-
-def duck_lloyd_ctes(rounds: int) -> str:
-    """DuckDB CTE chain `cents_r0/assign_r0/cells_r0 .. cells_r{rounds}`
-    mirroring `trained_quantizer` round for round (the same order-pinned
-    folds as _DUCK_KMEANS_CTE, generalized to R unrolled rounds). Callers
-    compose it after _DUCK_BASE_CTE and read `cents_r{rounds}` /
-    `cells_r{rounds}`."""
-    parts = [
-        f"""cents_r0 AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign_r0 AS (
-  SELECT vec_id, v, norm, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents_r0
-),
-cells_r0 AS (SELECT vec_id, v, norm, cell FROM assign_r0 WHERE rn = 1)"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f""",
-comp_r{i} AS (
-  SELECT cell, vec_id, unnest(v) AS x,
-         generate_subscripts(v, 1) AS dim
-  FROM cells_r{i - 1}
-),
-dims_r{i} AS (
-  SELECT cell, dim,
-         list_reduce(
-           list_prepend(0.0::DOUBLE, list(x ORDER BY vec_id)),
-           (acc, e) -> acc + e
-         ) / count(*) AS m
-  FROM comp_r{i} GROUP BY cell, dim
-),
-cents_r{i} AS (
-  SELECT cell, list(m ORDER BY dim) AS cv,
-         sqrt(list_reduce(list_transform(list(m ORDER BY dim), e -> e * e),
-              (acc, e) -> acc + e)) AS cnorm
-  FROM dims_r{i} GROUP BY cell
-),
-assign_r{i} AS (
-  SELECT n.vec_id, n.v, n.norm, c.cell,
-         row_number() OVER (
-           PARTITION BY n.vec_id
-           ORDER BY {_duck_dot('n.v', 'c.cv')} / (n.norm * c.cnorm) DESC,
-                    c.cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents_r{i} c
-),
-cells_r{i} AS (SELECT vec_id, v, norm, cell FROM assign_r{i} WHERE rn = 1)"""
-        )
-    return "".join(parts)
-
-
-def kmeans_refined_cells(emb: DataFrame) -> DataFrame:
-    """(vec_id, v, norm, cell) under the one-Lloyd-round centroids — a
-    drop-in replacement for similarity.ivf_assignments."""
-    a0 = ivf_assignments(emb).select("vec_id", "v", "norm", F.col("cell").alias("cell0"))
-    return _assign(vectors_with_norms(emb), updated_centroids(a0, "cell0"), "cell")
-
-
 def _q_semdedup_refined_oracle() -> str:
-    from clinical_search_data_pipeline_spark.operators.curation import SEMDEDUP_TAU
+    from clinical_search_data_pipeline_spark.operators.curation import (
+        semdedup_oracle,
+    )
 
-    return f"""
-WITH {_DUCK_KMEANS_CTE},
-cellsr AS (
-  SELECT n.vec_id, n.v, n.norm, a.cell
-  FROM assign1 a JOIN n ON a.vec_id = n.vec_id WHERE a.rn = 1
-),
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM cellsr a JOIN cellsr b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_duck_dot('a.v', 'b.v')} / (a.norm * b.norm) >= {SEMDEDUP_TAU}
-)
-SELECT c.vec_id, c.cell, d.vec_id IS NULL AS kept
-FROM cellsr c LEFT JOIN dropped d ON c.vec_id = d.vec_id
-"""
+    return semdedup_oracle(1)
 
 
 @register(
@@ -503,7 +315,8 @@ def q_semdedup_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.curation import semdedup
 
     return semdedup(
-        read_table(spark, sf_dir, "embeddings"), assignments_fn=kmeans_refined_cells
+        read_table(spark, sf_dir, "embeddings"),
+        assignments_fn=lambda emb: trained_quantizer(emb, 1)[1],
     )
 
 
@@ -550,10 +363,6 @@ def dbscan_clusters(
     from clinical_search_data_pipeline_spark.caching import engine_cache
     from clinical_search_data_pipeline_spark.operators.components import (
         connected_components,
-    )
-    from clinical_search_data_pipeline_spark.operators.similarity import (
-        embedding_neardup_pairs,
-        vectors_with_norms,
     )
 
     pairs = engine_cache(

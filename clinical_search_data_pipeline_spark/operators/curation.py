@@ -26,7 +26,7 @@ oracle (hashes are the md5-derived 60-bit ints from functions/hashing).
 Scale posture: passage dedup is two keyed shuffles (passage text, then
 doc_id for reassembly); SemDeDup's quadratic term is bounded per cell and
 the cell count grows with the corpus (sqrt(N) cells in production, seeded
-by k-means|| — same argument as the IVF index, similarity.py); train order
+by k-means|| — same argument as the IVF index, ann_index.py); train order
 replaces the W2 single-partition rank hazard with a 64-way uniform bucket
 shuffle whose only global step is a 64-row offsets relation.
 """
@@ -42,10 +42,9 @@ from clinical_search_data_pipeline_spark.operators.fragments import (
     _duck_dot,
     _spark_dot,
 )
-from clinical_search_data_pipeline_spark.operators.similarity import (
-    CENTROID_BASE,
-    N_CENTROIDS,
-    ivf_assignments,
+from clinical_search_data_pipeline_spark.operators.ann_index import (
+    duck_lloyd_ctes,
+    trained_quantizer,
 )
 from clinical_search_data_pipeline_spark.registry import register
 from clinical_search_data_pipeline_spark.sources.readers import fan_out, read_table
@@ -273,10 +272,12 @@ def semdedup(
     """
     from clinical_search_data_pipeline_spark.caching import engine_cache
 
-    # assignments_fn swaps the coarse quantizer: default IVF seed cells;
-    # clustering.kmeans_refined_cells plugs in the Lloyd-refined ones
-    # (q_semdedup_refined) — the dedup plan is identical either way.
-    cells = engine_cache((assignments_fn or ivf_assignments)(emb))
+    # assignments_fn swaps the coarse quantizer: default the IVF seed
+    # cells; q_semdedup_refined plugs in the one-Lloyd-round cells — the
+    # dedup plan is identical either way.
+    cells = engine_cache(
+        assignments_fn(emb) if assignments_fn else trained_quantizer(emb, 0)[1]
+    )
     nb = n_blocks
     base = cells.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(nb)).cast("int"))
     left = base.withColumn(
@@ -320,35 +321,26 @@ def semdedup(
     )
 
 
-_DUCK_CELLS_CTE = f"""
-cents AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign AS (
-  SELECT vec_id, v, norm, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents
-),
-cells AS (SELECT vec_id, v, norm, cell FROM assign WHERE rn = 1)"""
+def semdedup_oracle(rounds: int) -> str:
+    """DuckDB oracle of `semdedup` over the cells of `rounds` Lloyd rounds
+    (ann_index.duck_lloyd_ctes): all pairs within a cell, the higher id of
+    each pair at or above tau dropped."""
+    return f"""
+WITH {_DUCK_BASE_CTE},
+{duck_lloyd_ctes(rounds)},
+dropped AS (
+  SELECT DISTINCT b.vec_id
+  FROM cells_r{rounds} a JOIN cells_r{rounds} b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  WHERE {_duck_dot('a.v', 'b.v')} / (a.norm * b.norm) >= {SEMDEDUP_TAU}
+)
+SELECT c.vec_id, c.cell, d.vec_id IS NULL AS kept
+FROM cells_r{rounds} c LEFT JOIN dropped d ON c.vec_id = d.vec_id
+"""
 
 
 @register(
     "q_semdedup",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_CELLS_CTE},
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_duck_dot('a.v', 'b.v')} / (a.norm * b.norm) >= {SEMDEDUP_TAU}
-)
-SELECT c.vec_id, c.cell, d.vec_id IS NULL AS kept
-FROM cells c LEFT JOIN dropped d ON c.vec_id = d.vec_id
-""",
+    oracle=semdedup_oracle(0),
     tags=("curation", "northstar", "similarity"),
 )
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:

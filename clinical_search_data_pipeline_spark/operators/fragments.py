@@ -10,7 +10,11 @@ from here at module level and defer their imports of the actual DataFrame
 builders into the query functions.
 
 Everything here is plain text/constants; the Spark-side builder functions
-stay in their home modules (`similarity`, `dedup`).
+stay in their home modules (`similarity`, `dedup`). It is also the one
+operator module `ann_index` imports: the ANN quantizers (seed, Lloyd
+training, encode) and their DuckDB CTE twins live in `ann_index`, built on
+the dot-product folds and `_DUCK_BASE_CTE` below, and `similarity`,
+`clustering` and `curation` import them from there.
 """
 
 from __future__ import annotations

@@ -44,7 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -76,12 +75,11 @@ HASH_SCHEMA = StructType(
 )
 
 
-def attach_neardup_images(
-    docs: DataFrame, wrap_base: int | None = None
-) -> DataFrame:
-    """Encode one real raster file per document — BMP (stored bottom-up,
-    per the spec) for even doc_ids, PPM for odd — whose LOGICAL top-down
-    pixels are pure integer functions of doc_id:
+def _image_encoder(wrap_base: int | None):
+    """Batch generator (doc_id) -> (doc_id, payload): one real raster file
+    per document — BMP (stored bottom-up, per the spec) for even doc_ids,
+    PPM for odd — whose LOGICAL top-down pixels are pure integer functions
+    of doc_id:
 
         base   = doc_id - doc_id % 10  if doc_id % 10 >= 8 else doc_id
         w      = base % 7 + 12             h = (base * 3) % 7 + 12
@@ -99,19 +97,9 @@ def attach_neardup_images(
     perturbation leaves copies within a few Hamming bits of their leader.
     Because the BMP rows are reversed at encode time, a decoder that
     forgets the bottom-up flip hashes a vertically-mirrored image and
-    diverges from the oracle — the positional honesty device."""
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _image_encoder(wrap_base),
-        schema=StructType(
-            [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-        ),
-    )
-
-
-def _image_encoder(wrap_base: int | None):
-    """The attach_neardup_images batch generator, as a composable piece so
-    the fused encode∘hash path (`dhash_neardup_images`) can run both in ONE
-    Python crossing."""
+    diverges from the oracle — the positional honesty device.
+    `dhash_neardup_images` runs it with the hasher in one Python
+    crossing."""
     import numpy as _np
 
     from clinical_search_data_pipeline_spark.operators.multimodal import (
@@ -156,27 +144,15 @@ def _image_encoder(wrap_base: int | None):
     return _encode
 
 
-def dhash_images(media: DataFrame) -> DataFrame:
-    """Arrow-batched dHash over real image bytes: decode to logical pixels
-    (`decode_pixel_rows`), average-pool the per-pixel channel sums to a
-    PHASH_ROWS x PHASH_COLS integer grid, compare horizontally-adjacent
-    cells with the integer cross-product form (no float averages — both
-    engines agree bit-for-bit), pack the 64 bits into PHASH_BANDS 16-bit
-    band values. Output: (doc_id, fmt, width, height, b0..b3)."""
-    return media.mapInPandas(_image_hasher(), schema=HASH_SCHEMA)
-
-
 def dhash_neardup_images(
     docs: DataFrame, wrap_base: int | None = None
 ) -> DataFrame:
-    """attach_neardup_images ∘ dhash_images fused into ONE Python crossing
-    (guide §4.1): the chained form runs two adjacent MapInPandas nodes, so
-    every encoded image payload makes an extra JVM→Python→JVM round trip
-    just to be decoded again on the other side (measured ~0.4 s per
-    evaluation on a 125-doc micro-batch — pure boundary cost). Here the
-    encoder generator feeds the hasher generator inside one Python worker;
-    the payload bytes never enter the JVM. Output and values are identical
-    to the chained form (same two functions, composed)."""
+    """(doc_id, fmt, width, height, b0..b3) — each document's fixture
+    image (`_image_encoder`) dHashed (`_image_hasher`) in ONE Python
+    crossing: the encoder generator feeds the hasher
+    generator inside one Python worker, so the payload bytes never enter
+    the JVM (a two-stage chain of MapInPandas nodes measured ~0.4 s per
+    evaluation on a 125-doc micro-batch of pure boundary cost)."""
     enc = _image_encoder(wrap_base)
     hsh = _image_hasher()
 
@@ -189,7 +165,12 @@ def dhash_neardup_images(
 
 
 def _image_hasher():
-    """The dhash_images batch generator (see dhash_neardup_images)."""
+    """Batch generator (doc_id, payload) -> HASH_SCHEMA rows: dHash over
+    real image bytes — decode to logical pixels (`decode_pixel_rows`),
+    average-pool the per-pixel channel sums to a PHASH_ROWS x PHASH_COLS
+    integer grid, compare horizontally-adjacent cells with the integer
+    cross-product form (no float averages — both engines agree
+    bit-for-bit), pack the 64 bits into PHASH_BANDS 16-bit band values."""
     import numpy as _np
 
     from clinical_search_data_pipeline_spark.operators.multimodal import (
@@ -319,7 +300,7 @@ def image_neardup_pairs(
 
 # DuckDB twin of the synthetic image + dHash arithmetic: recompute logical
 # pixels from doc_id, pool to the grid, compare cells, pack band values.
-# `wrap_base` mirrors attach_neardup_images: with it, copies reference the
+# `wrap_base` mirrors _image_encoder: with it, copies reference the
 # leader MOD wrap_base (planting cross-split duplicates for the ingest
 # gate); without it, the leader of the doc's own decade.
 def duck_phash_cte(wrap_base: int | None = None) -> str:

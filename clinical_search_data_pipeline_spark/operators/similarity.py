@@ -47,6 +47,22 @@ from clinical_search_data_pipeline_spark.operators.fragments import (  # noqa: F
     _duck_dot,
     _spark_dot,
 )
+from clinical_search_data_pipeline_spark.operators.ann_index import (
+    IVF_NPROBE,
+    N_CENTROIDS,
+    PQ_K,
+    RERANK_POOL,
+    _assign,
+    ann_index_topk,
+    build_ann_index,
+    duck_lloyd_ctes,
+    encode_ann_index,
+    ivfadc_oracle,
+    pq_train_codebooks,
+    seed_centroids,
+    trained_quantizer,
+    vectors_with_norms,
+)
 
 
 def _plane_weight(plane: int, dim: int) -> float:
@@ -58,20 +74,6 @@ def _plane_weight(plane: int, dim: int) -> float:
 
 def plane_weights(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
     return [[_plane_weight(p, d) for d in range(dim)] for p in range(n_planes)]
-
-
-def vectors_with_norms(emb: DataFrame) -> DataFrame:
-    """(vec_id, label, v: array<double>, norm) — the canonical vector relation.
-
-    `fan_out` first: every downstream op (cross join probe, broadcast-join
-    stream side, LSH bucket projection) is narrow, so without it the whole
-    vector pipeline would run at the input-split count — one task for a
-    single-file scan (sources/readers.fan_out)."""
-    return fan_out(emb).select(
-        "vec_id",
-        "label",
-        F.expr(_SPARK_V).alias("v"),
-    ).withColumn("norm", F.expr(f"sqrt({_spark_dot('v', 'v')})"))
 
 
 def cosine_topk(
@@ -526,73 +528,21 @@ def q_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style ANN: coarse quantization cells + within-cell search
 # ---------------------------------------------------------------------------
 
-N_CENTROIDS = 8
-CENTROID_BASE = 100  # deterministic coarse centroids: vec_ids 100..107
 
-
-def seed_centroids(emb: DataFrame) -> DataFrame:
-    """(cell, cv, cnorm) — the deterministic coarse centroids: vector
-    CENTROID_BASE + c is the centroid of cell c, for c < N_CENTROIDS."""
-    return vectors_with_norms(emb).filter(
-        (F.col("vec_id") >= CENTROID_BASE)
-        & (F.col("vec_id") < CENTROID_BASE + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - CENTROID_BASE).alias("cell"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-    )
-
-
-def ivf_assignments(emb: DataFrame) -> DataFrame:
-    """(vec_id, v, norm, cell) — each vector assigned to its max-cosine
-    coarse centroid (IVF cell).
-
-    Centroids here are a deterministic sample (`seed_centroids`) so the
-    oracle reproduces them; production seeds them with k-means|| (pyspark.ml
-    KMeans) — the assignment/search plan shape is identical. Assignment is
-    a broadcast of K centroids against one scan + an argmax window keyed by
-    vec_id (shuffle on vec_id only).
-    """
-    base = vectors_with_norms(emb)
-    scored = base.crossJoin(F.broadcast(seed_centroids(emb))).withColumn(
-        "_cscore", F.expr(_spark_dot("v", "cv")) / (F.col("norm") * F.col("cnorm"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("_cscore").desc(), F.col("cell").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "v", "norm", "cell")
-    )
-
-
-def ann_ivf_topk(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    assignments_fn=None,
-) -> DataFrame:
-    """Approximate top-k searching only the query's IVF cell (equi-join on
-    cell — the candidate set shrinks ~n_centroids-fold; recall grows with
-    nprobe>1 by also joining the next-best cells, same plan shape).
-    `assignments_fn` swaps the coarse quantizer (default: seed-centroid
-    `ivf_assignments`; pass `clustering.kmeans_refined_cells` for the
-    Lloyd-refined cells — ann_recall_report.py measures the recall uplift
-    that swap buys)."""
-    # Deliberately NOT cached: the relation feeds only the (tiny,
-    # broadcast) query branch and one full scan; recomputing the assignment
-    # is one narrow pass and measured faster than any materialization
-    # (cache 1.8s / localCheckpoint 5.4s / recompute 1.2s at sf0.1).
-    assigned = (assignments_fn or ivf_assignments)(emb)
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
+def _cell_search(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cell, rank, score) — exact-cosine top-k over
+    the vectors of each query's probed cells: `probes` holds one (vec_id,
+    v, norm, cell) row per (query, probed cell) and is the small side,
+    broadcast into one scan of the assigned vectors and equi-joined on
+    cell."""
+    probes = probes.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"),
         F.col("cell").alias("qcell"),
     )
     cand = assigned.join(
-        F.broadcast(queries),
+        F.broadcast(probes),
         (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
     ).withColumn("score", F.expr(_spark_dot("v", "qv")) / (F.col("norm") * F.col("qnorm")))
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
@@ -609,44 +559,60 @@ def ann_ivf_topk(
     )
 
 
-@register(
-    "q_ann_ivf_topk",
-    oracle=f"""
+def ann_ivf_topk(
+    emb: DataFrame,
+    n_queries: int = N_QUERIES,
+    k: int = TOP_K,
+    assignments_fn=None,
+) -> DataFrame:
+    """Approximate top-k searching only the query's IVF cell (equi-join on
+    cell — the candidate set shrinks ~n_centroids-fold; recall grows with
+    nprobe>1, `ann_ivf_multiprobe_topk`). The cells are the seed
+    quantizer's (`ann_index.trained_quantizer(emb, 0)`: deterministic
+    centroids the oracle reproduces; production seeds them with k-means||
+    — the plan shape is identical). `assignments_fn` swaps in other
+    (vec_id, v, norm, cell) cells — ann_recall_report.py measures the
+    recall uplift Lloyd-trained cells buy."""
+    # Deliberately NOT cached: the relation feeds only the (tiny,
+    # broadcast) query branch and one full scan; recomputing the assignment
+    # is one narrow pass and measured faster than any materialization
+    # (cache 1.8s / localCheckpoint 5.4s / recompute 1.2s at sf0.1).
+    assigned = (
+        assignments_fn(emb) if assignments_fn else trained_quantizer(emb, 0)[1]
+    )
+    return _cell_search(assigned, assigned.filter(F.col("vec_id") < n_queries), k)
+
+
+def _ivf_oracle(nprobe: int, cell: bool) -> str:
+    """DuckDB oracle of the seed-cell IVF search: each fixed query probes
+    its `nprobe` best cells and every vector in them is scored by the
+    exact cosine."""
+    return f"""
 WITH {_DUCK_BASE_CTE},
-cents AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign AS (
-  SELECT vec_id, v, norm, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents
-),
-cells AS (SELECT vec_id, v, norm, cell FROM assign WHERE rn = 1),
+{duck_lloyd_ctes(0)},
 q AS (
   SELECT vec_id AS query_id, v AS qv, norm AS qnorm, cell AS qcell
-  FROM cells WHERE vec_id < {N_QUERIES}
+  FROM assign_r0 WHERE vec_id < {N_QUERIES} AND rn <= {nprobe}
 ),
 cand AS (
   SELECT q.query_id, c.vec_id AS neighbor_id, c.cell,
          {_duck_dot('c.v', 'q.qv')} / (c.norm * q.qnorm) AS raw
-  FROM cells c JOIN q ON c.cell = q.qcell AND c.vec_id <> q.query_id
+  FROM cells_r0 c JOIN q ON c.cell = q.qcell AND c.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cell,
+SELECT query_id, neighbor_id,{' cell,' if cell else ''}
        row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id ASC) AS rank,
        round(raw, 4) AS score
 FROM cand QUALIFY rank <= {TOP_K}
-""",
+"""
+
+
+@register(
+    "q_ann_ivf_topk",
+    oracle=_ivf_oracle(1, cell=True),
     tags=("similarity", "northstar", "ivf"),
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ivf_topk(read_table(spark, sf_dir, "embeddings"))
-
-
-IVF_NPROBE = 2
 
 
 def ann_ivf_multiprobe_topk(
@@ -661,74 +627,14 @@ def ann_ivf_multiprobe_topk(
     (nprobe rows per query in the broadcast), the big side is still scanned
     once and equi-joined on cell; no duplicate candidates since every vector
     belongs to exactly one cell."""
-    assigned = ivf_assignments(emb)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cscore").desc(), F.col("cell").asc()
-    )
-    probes = (
-        vectors_with_norms(emb)
-        .filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-        )
-        .crossJoin(F.broadcast(seed_centroids(emb)))
-        .withColumn(
-            "_cscore", F.expr(_spark_dot("qv", "cv")) / (F.col("qnorm") * F.col("cnorm"))
-        )
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "qnorm", F.col("cell").alias("qcell"))
-    )
-    cand = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn("score", F.expr(_spark_dot("v", "qv")) / (F.col("norm") * F.col("qnorm")))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("score", 4).alias("score"),
-        )
-    )
+    cents, assigned = trained_quantizer(emb, 0)
+    queries = vectors_with_norms(emb).filter(F.col("vec_id") < n_queries)
+    return _cell_search(assigned, _assign(queries, cents, nprobe), k).drop("cell")
 
 
 @register(
     "q_ann_ivf_multiprobe",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-cents AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign AS (
-  SELECT vec_id, v, norm, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents
-),
-cells AS (SELECT vec_id, v, norm, cell FROM assign WHERE rn = 1),
-probes AS (
-  SELECT vec_id AS query_id, v AS qv, norm AS qnorm, cell AS qcell
-  FROM assign WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}
-),
-cand AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id,
-         {_duck_dot('c.v', 'p.qv')} / (c.norm * p.qnorm) AS raw
-  FROM cells c JOIN probes p ON c.cell = p.qcell AND c.vec_id <> p.query_id
-)
-SELECT query_id, neighbor_id,
-       row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id ASC) AS rank,
-       round(raw, 4) AS score
-FROM cand QUALIFY rank <= {TOP_K}
-""",
+    oracle=_ivf_oracle(IVF_NPROBE, cell=False),
     tags=("similarity", "northstar", "ivf", "multiprobe"),
 )
 def q_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -819,151 +725,21 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product quantization (PQ) with ADC scoring — the memory-compression path
 # ---------------------------------------------------------------------------
 
-PQ_M = 32  # subspaces; each vector compresses to M codes
-PQ_SUB = DIM // PQ_M  # dims per subspace
-PQ_K = 32  # codewords per subspace -> 5 bits/code, 160 bits/vector (25x)
-PQ_CODEBOOK_BASE = 200  # deterministic codebooks: unit vecs 200..231, sliced
-# (M, K) swept at sf0.001 against the exact top-k: (8,16)->5%, (8,32)->7%,
-# (16,16)->17%, (16,32)->32%, (32,16)->50%, (32,32)->62% recall@5 — short
-# 2-dim subspaces quantize the fixture's decorrelated dims far better than
-# wide ones at equal bit budget. Production trains codebooks with k-means
-# (clustering.kmeans_train) instead of slicing fixture rows; plan unchanged.
-
-
-def _spark_l2sq(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def _duck_l2sq(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(range(1, len({a}) + 1), "
-        f"i -> (({a})[i] - ({b})[i]) * (({a})[i] - ({b})[i])), "
-        f"(acc, v) -> acc + v)"
-    )
-
-
-def pq_subvectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, m, su) — every vector L2-normalized (so squared-L2 ordering
-    == cosine ordering: ||a-b||^2 = 2 - 2cos for unit vectors) and split
-    into PQ_M contiguous subvectors. One narrow pass riding the scan."""
-    return (
-        vectors_with_norms(emb)
-        .select("vec_id", F.expr("transform(v, x -> x / norm)").alias("u"))
-        .select(
-            "vec_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {PQ_M - 1}), "
-                    f"m -> slice(u, m * {PQ_SUB} + 1, {PQ_SUB}))"
-                )
-            ).alias("m", "su"),
-        )
-    )
-
-
-def pq_codebook(subs: DataFrame) -> DataFrame:
-    """(m, j, cw) — PQ_K codewords per subspace, sliced from a fixed range
-    of unit vectors so any engine regenerates them (the IVF fixed-centroid
-    discipline; production trains per-subspace k-means — clustering.
-    kmeans_train — and the encode/score plan shape is identical)."""
-    return subs.filter(
-        (F.col("vec_id") >= PQ_CODEBOOK_BASE)
-        & (F.col("vec_id") < PQ_CODEBOOK_BASE + PQ_K)
-    ).select((F.col("vec_id") - PQ_CODEBOOK_BASE).alias("j"), "m", F.col("su").alias("cw"))
-
-
-def pq_codes(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, code) — each subvector assigned its nearest codeword
-    (squared L2, ties to the lowest j): the Lloyd assignment step of
-    `pq_train_codebooks` and `pq_distortion`. One scan x broadcast M*K
-    codebook + an argmin window keyed (vec_id, m) — shuffle on the
-    composite key only. The persisted index encodes with the equivalent
-    per-row argmin (operators/ann_index.py `_encode`)."""
-    w = Window.partitionBy("vec_id", "m").orderBy(F.col("_d").asc(), F.col("j").asc())
-    return (
-        subs.join(F.broadcast(cb), "m")
-        .withColumn("_d", F.expr(_spark_l2sq("su", "cw")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
-    )
-
-
-def seed_index(emb: DataFrame) -> dict[str, DataFrame]:
-    """The in-memory IVF-PQ index of `emb` under the deterministic seed
-    quantizers (`seed_centroids` cells, `pq_codebook` codewords) — what
-    every on-the-fly IVF-PQ query below searches with
-    ann_index.ann_index_topk, the one ADC search kernel (Jegou, Douze,
-    Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI
-    2011: per query an M x K table of query-to-codeword distances, a
-    candidate's distance the sum of M lookups on its codes)."""
-    from clinical_search_data_pipeline_spark.operators.ann_index import (
-        build_ann_index,
-    )
-
-    return build_ann_index(emb, train_rounds=0)
-
 
 def index_topk(emb: DataFrame, index: dict[str, DataFrame], **search) -> DataFrame:
     """ann_index.ann_index_topk of the fixed query set (vec_id <
-    N_QUERIES) against an in-memory `index` of `emb`. Probing all
-    N_CENTROIDS cells scores every vector — plain PQ/ADC, no cell
-    pruning."""
-    from clinical_search_data_pipeline_spark.operators.ann_index import (
-        ann_index_topk,
-    )
-
+    N_QUERIES) against an in-memory `index` of `emb` — the one ADC search
+    kernel (Jegou, Douze, Schmid, "Product Quantization for Nearest
+    Neighbor Search", TPAMI 2011: per query an M x K table of
+    query-to-codeword distances, a candidate's distance the sum of M
+    lookups on its codes). Probing all N_CENTROIDS cells scores every
+    vector — plain PQ/ADC, no cell pruning."""
     return ann_index_topk(index, emb.filter(F.col("vec_id") < N_QUERIES), **search)
-
-
-_DUCK_PQ_CTE = f"""
-u AS (SELECT vec_id, list_transform(v, x -> x / norm) AS u FROM n),
-subs AS (
-  SELECT vec_id, m, list_slice(u, m * {PQ_SUB} + 1, m * {PQ_SUB} + {PQ_SUB}) AS su
-  FROM u, unnest(range(0, {PQ_M})) AS t(m)
-),
-cb AS (
-  SELECT vec_id - {PQ_CODEBOOK_BASE} AS j, m, su AS cw FROM subs
-  WHERE vec_id >= {PQ_CODEBOOK_BASE} AND vec_id < {PQ_CODEBOOK_BASE + PQ_K}
-),
-codes AS (
-  SELECT vec_id, m, j AS code FROM (
-    SELECT s.vec_id, s.m, c.j,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {_duck_l2sq('s.su', 'c.cw')} ASC, c.j ASC
-           ) AS rn
-    FROM subs s JOIN cb c ON s.m = c.m
-  ) WHERE rn = 1
-),
-dt AS (
-  SELECT q.vec_id AS query_id, q.m, c.j AS code,
-         CAST(round({_duck_l2sq('q.su', 'c.cw')}, 9) AS DECIMAL(18,9)) AS d
-  FROM subs q JOIN cb c ON q.m = c.m
-  WHERE q.vec_id < {N_QUERIES}
-),
-adc AS (
-  SELECT t.query_id, s.vec_id, sum(t.d) AS adist
-  FROM codes s JOIN dt t ON s.m = t.m AND s.code = t.code
-  WHERE s.vec_id <> t.query_id
-  GROUP BY 1, 2
-)"""
 
 
 @register(
     "q_ann_pq_topk",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_PQ_CTE.lstrip()}
-SELECT query_id, vec_id AS neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY adist ASC, vec_id ASC) AS rank,
-       round(CAST(adist AS DOUBLE), 6) AS adist
-FROM adc QUALIFY rank <= {TOP_K}
-""",
+    oracle=ivfadc_oracle(0, 0, nprobe=N_CENTROIDS, cell=False),
     tags=("similarity", "northstar", "pq"),
 )
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -972,7 +748,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index searched in every cell. Recall vs the exact scan is recorded in
     q_ann_recall / ANN_RECALL.md."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return index_topk(emb, seed_index(emb), nprobe=N_CENTROIDS).drop("cell")
+    seed = build_ann_index(emb, train_rounds=0)
+    return index_topk(emb, seed, nprobe=N_CENTROIDS).drop("cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1248,39 +1025,9 @@ def embedding_vs_corpus(
 # Two-stage retrieval: compressed candidate generation + exact refine
 # ---------------------------------------------------------------------------
 
-RERANK_POOL = 30  # stage-1 ADC pool per query; 6x the final k
-
-
 @register(
     "q_ann_rerank",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_PQ_CTE.lstrip()},
-pool AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adist ASC, vec_id ASC) AS rn
-    FROM adc
-  ) WHERE rn <= {RERANK_POOL}
-),
-q AS (
-  SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-  WHERE vec_id < {N_QUERIES}
-),
-rescored AS (
-  SELECT p.query_id, p.vec_id AS neighbor_id,
-         {_duck_dot('n.v', 'q.qv')} / (n.norm * q.qnorm) AS raw
-  FROM pool p
-  JOIN n ON n.vec_id = p.vec_id
-  JOIN q ON q.query_id = p.query_id
-)
-SELECT query_id, neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY raw DESC, neighbor_id ASC) AS rank,
-       round(raw, 4) AS score
-FROM rescored QUALIFY rank <= {TOP_K}
-""",
+    oracle=ivfadc_oracle(0, 0, nprobe=N_CENTROIDS, rerank=RERANK_POOL),
     tags=("similarity", "northstar", "pq", "rerank"),
 )
 def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,175 +1038,20 @@ def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline). Recall vs both the exact scan and PQ-alone is recorded in
     q_ann_recall / ANN_RECALL.md."""
     emb = read_table(spark, sf_dir, "embeddings")
+    seed = build_ann_index(emb, train_rounds=0)
     return index_topk(
-        emb, seed_index(emb), nprobe=N_CENTROIDS, rerank=RERANK_POOL, vectors=emb
+        emb, seed, nprobe=N_CENTROIDS, rerank=RERANK_POOL, vectors=emb
     )
-
-
-def pq_train_codebooks(
-    emb: DataFrame, rounds: int = 2, pinned: bool = False
-) -> DataFrame:
-    """Per-subspace Lloyd k-means over the subvectors — the production
-    codebook trainer the sliced-fixture `pq_codebook` stands in for
-    (Jegou et al. TPAMI 2011 §III trains exactly this, independently per
-    subspace). One declarative update per round, ALL subspaces at once:
-    assignment is the same (vec_id, m)-keyed argmin `pq_codes` runs, the
-    centroid update is a (m, j)-keyed mean over PQ_SUB component columns —
-    the kmeans_train pattern (operators/clustering.py) with the subspace
-    index as an extra key, so the whole M x K codebook trains in ONE pass
-    per round, never M sequential jobs. Empty cells keep their previous
-    codeword (left join + coalesce). Total distortion is monotone
-    non-increasing per Lloyd; tests/test_pq_training.py pins that and the
-    recall gain over the sliced init.
-
-    `pinned=True` swaps the native `avg` for the order-pinned left fold
-    (the clustering.updated_centroids discipline: members sorted by
-    vec_id, folded from an explicit 0.0 seed, per (m, j, component) key)
-    so the trained codewords are bit-identical to a DuckDB replay —
-    q_ann_pq_trained_topk's hash oracle rides this. The pinned update is
-    one (m, j, ci)-keyed shuffle — M x K x PQ_SUB uniform groups, the
-    same skew-free shape as the avg path; a float-tolerant production
-    run keeps the default."""
-    subs = engine_cache(pq_subvectors(emb))
-    cb = pq_codebook(subs)
-    comp_avgs = [
-        F.avg(F.expr(f"su[{i}]")).alias(f"_c{i}") for i in range(PQ_SUB)
-    ]
-    for _ in range(rounds):
-        assigned = pq_codes(subs, cb).withColumnRenamed("code", "j")
-        joined = subs.join(assigned, ["vec_id", "m"])
-        if pinned:
-            comp = joined.select(
-                "m", "j", "vec_id", F.posexplode("su").alias("ci", "x")
-            )
-            pinned_mu = F.expr(
-                "aggregate(array_sort(collect_list(struct(vec_id, x))), "
-                "CAST(0.0 AS DOUBLE), (acc, s) -> acc + s.x)"
-            ) / F.count("*")
-            means = (
-                comp.groupBy("m", "j", "ci")
-                .agg(pinned_mu.alias("mu"))
-                .groupBy("m", "j")
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list(struct(ci, mu))), "
-                        "s -> s.mu)"
-                    ).alias("cw_new")
-                )
-            )
-        else:
-            means = (
-                joined.groupBy("m", "j")
-                .agg(*comp_avgs)
-                .withColumn(
-                    "cw_new", F.array(*[F.col(f"_c{i}") for i in range(PQ_SUB)])
-                )
-                .select("m", "j", "cw_new")
-            )
-        cb = engine_cache(
-            cb.join(means, ["m", "j"], "left")
-            .select(
-                "m", "j", F.coalesce("cw_new", "cw").alias("cw")
-            )
-        )
-        cb.count()  # materialize the round (checkpointed-loop discipline)
-    return cb
-
-
-def pq_distortion(subs: DataFrame, cb: DataFrame) -> float:
-    """Mean squared quantization error of `subs` under codebook `cb` —
-    the Lloyd objective, for monotonicity evidence."""
-    codes = pq_codes(subs, cb).withColumnRenamed("code", "j")
-    return (
-        subs.join(codes, ["vec_id", "m"])
-        .join(cb, ["m", "j"])
-        .agg(F.avg(F.expr(_spark_l2sq("su", "cw"))).alias("d"))
-        .first()["d"]
-    )
-
-
-# Oracle for the TRAINED-codebook ADC query: one pinned Lloyd round over
-# the subvectors (cb0 = sliced init -> codes0 assignment -> per
-# (m, j, component) order-pinned mean -> cb1, empty cells keeping their
-# init codeword), then the identical encode/distance-table/ADC pipeline as
-# q_ann_pq_topk but against cb1. The pinned fold mirrors
-# clustering._DUCK_KMEANS_CTE's dims CTE, keyed by subspace.
-_DUCK_PQ_TRAINED_CTE = f"""
-u AS (SELECT vec_id, list_transform(v, x -> x / norm) AS u FROM n),
-subs AS (
-  SELECT vec_id, m, list_slice(u, m * {PQ_SUB} + 1, m * {PQ_SUB} + {PQ_SUB}) AS su
-  FROM u, unnest(range(0, {PQ_M})) AS t(m)
-),
-cb0 AS (
-  SELECT vec_id - {PQ_CODEBOOK_BASE} AS j, m, su AS cw FROM subs
-  WHERE vec_id >= {PQ_CODEBOOK_BASE} AND vec_id < {PQ_CODEBOOK_BASE + PQ_K}
-),
-codes0 AS (
-  SELECT vec_id, m, j FROM (
-    SELECT s.vec_id, s.m, c.j,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {_duck_l2sq('s.su', 'c.cw')} ASC, c.j ASC
-           ) AS rn
-    FROM subs s JOIN cb0 c ON s.m = c.m
-  ) WHERE rn = 1
-),
-pcomp AS (
-  SELECT s.m, c.j, s.vec_id, unnest(s.su) AS x,
-         generate_subscripts(s.su, 1) AS ci
-  FROM subs s JOIN codes0 c ON s.vec_id = c.vec_id AND s.m = c.m
-),
-pmu AS (
-  SELECT m, j, ci,
-         list_reduce(list_prepend(0.0::DOUBLE, list(x ORDER BY vec_id)),
-                     (acc, e) -> acc + e) / count(*) AS mu
-  FROM pcomp GROUP BY m, j, ci
-),
-cwnew AS (SELECT m, j, list(mu ORDER BY ci) AS cw_new FROM pmu GROUP BY m, j),
-cb1 AS (
-  SELECT c.m, c.j, coalesce(w.cw_new, c.cw) AS cw
-  FROM cb0 c LEFT JOIN cwnew w ON c.m = w.m AND c.j = w.j
-),
-codes1 AS (
-  SELECT vec_id, m, j AS code FROM (
-    SELECT s.vec_id, s.m, c.j,
-           row_number() OVER (
-             PARTITION BY s.vec_id, s.m
-             ORDER BY {_duck_l2sq('s.su', 'c.cw')} ASC, c.j ASC
-           ) AS rn
-    FROM subs s JOIN cb1 c ON s.m = c.m
-  ) WHERE rn = 1
-),
-dt1 AS (
-  SELECT q.vec_id AS query_id, q.m, c.j AS code,
-         CAST(round({_duck_l2sq('q.su', 'c.cw')}, 9) AS DECIMAL(18,9)) AS d
-  FROM subs q JOIN cb1 c ON q.m = c.m
-  WHERE q.vec_id < {N_QUERIES}
-),
-adc1 AS (
-  SELECT t.query_id, s.vec_id, sum(t.d) AS adist
-  FROM codes1 s JOIN dt1 t ON s.m = t.m AND s.code = t.code
-  WHERE s.vec_id <> t.query_id
-  GROUP BY 1, 2
-)"""
 
 
 @register(
     "q_ann_pq_trained_topk",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_PQ_TRAINED_CTE.lstrip()}
-SELECT query_id, vec_id AS neighbor_id,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY adist ASC, vec_id ASC) AS rank,
-       round(CAST(adist AS DOUBLE), 6) AS adist
-FROM adc1 QUALIFY rank <= {TOP_K}
-""",
+    oracle=ivfadc_oracle(0, 1, nprobe=N_CENTROIDS, cell=False),
     tags=("similarity", "pq", "northstar"),
 )
 def q_ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC top-k under a TRAINED codebook: one order-pinned Lloyd round
-    (pq_train_codebooks(pinned=True)) over the sliced init, then the same
+    """ADC top-k under a TRAINED codebook: one Lloyd round
+    (ann_index.pq_train_codebooks) over the sliced init, then the same
     broadcast-lookup ADC scoring as q_ann_pq_topk — the whole training
     round is replayed bit-exactly by the DuckDB oracle, so codebook
     learning itself is hash-verified, not just pytest-pinned. Recall vs
@@ -1469,15 +1061,10 @@ def q_ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pq_trained_index(emb: DataFrame) -> dict[str, DataFrame]:
-    """`seed_index` with the codebook trained by one order-pinned Lloyd
-    round (pq_train_codebooks(pinned=True)) — q_ann_pq_trained_topk's
-    index."""
-    from clinical_search_data_pipeline_spark.operators.ann_index import (
-        encode_ann_index,
-    )
-
+    """The seed index with the codebook trained by one Lloyd round
+    (ann_index.pq_train_codebooks) — q_ann_pq_trained_topk's index."""
     return encode_ann_index(
-        emb, seed_centroids(emb), pq_train_codebooks(emb, rounds=1, pinned=True)
+        emb, seed_centroids(emb), pq_train_codebooks(emb, rounds=1)
     )
 
 
@@ -1488,37 +1075,7 @@ def pq_trained_index(emb: DataFrame) -> dict[str, DataFrame]:
 
 @register(
     "q_ann_ivfpq_topk",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_PQ_CTE.lstrip()},
-cents AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign AS (
-  SELECT vec_id, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents
-),
-cells AS (SELECT vec_id, cell FROM assign WHERE rn = 1),
-q AS (SELECT vec_id AS query_id, cell AS qcell FROM cells WHERE vec_id < {N_QUERIES}),
-ivf_adc AS (
-  SELECT q.query_id, c.vec_id, c.cell, sum(t.d) AS adist
-  FROM cells c
-  JOIN q ON c.cell = q.qcell AND c.vec_id <> q.query_id
-  JOIN codes s ON s.vec_id = c.vec_id
-  JOIN dt t ON t.query_id = q.query_id AND t.m = s.m AND t.code = s.code
-  GROUP BY 1, 2, 3
-)
-SELECT query_id, vec_id AS neighbor_id, cell,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY adist ASC, vec_id ASC) AS rank,
-       round(CAST(adist AS DOUBLE), 6) AS adist
-FROM ivf_adc QUALIFY rank <= {TOP_K}
-""",
+    oracle=ivfadc_oracle(0, 0, nprobe=1),
     tags=("similarity", "northstar", "ivf", "pq"),
 )
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1527,45 +1084,12 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell's codes — the seed index at nprobe=1. Its compounded recall
     loss is a recorded row in q_ann_recall / ANN_RECALL.md."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return index_topk(emb, seed_index(emb))
+    return index_topk(emb, build_ann_index(emb, train_rounds=0))
 
 
 @register(
     "q_ann_ivfpq_multiprobe",
-    oracle=f"""
-WITH {_DUCK_BASE_CTE},
-{_DUCK_PQ_CTE.lstrip()},
-cents AS (
-  SELECT vec_id - {CENTROID_BASE} AS cell, v AS cv, norm AS cnorm
-  FROM n WHERE vec_id >= {CENTROID_BASE} AND vec_id < {CENTROID_BASE + N_CENTROIDS}
-),
-assign AS (
-  SELECT vec_id, cell,
-         row_number() OVER (
-           PARTITION BY vec_id
-           ORDER BY {_duck_dot('v', 'cv')} / (norm * cnorm) DESC, cell ASC
-         ) AS rn
-  FROM n CROSS JOIN cents
-),
-cells AS (SELECT vec_id, cell FROM assign WHERE rn = 1),
-q AS (
-  SELECT vec_id AS query_id, cell AS qcell
-  FROM assign WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}
-),
-ivf_adc AS (
-  SELECT q.query_id, c.vec_id, c.cell, sum(t.d) AS adist
-  FROM cells c
-  JOIN q ON c.cell = q.qcell AND c.vec_id <> q.query_id
-  JOIN codes s ON s.vec_id = c.vec_id
-  JOIN dt t ON t.query_id = q.query_id AND t.m = s.m AND t.code = s.code
-  GROUP BY 1, 2, 3
-)
-SELECT query_id, vec_id AS neighbor_id, cell,
-       row_number() OVER (PARTITION BY query_id
-                          ORDER BY adist ASC, vec_id ASC) AS rank,
-       round(CAST(adist AS DOUBLE), 6) AS adist
-FROM ivf_adc QUALIFY rank <= {TOP_K}
-""",
+    oracle=ivfadc_oracle(0, 0, nprobe=IVF_NPROBE),
     tags=("similarity", "ivf", "pq"),
 )
 def q_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1574,7 +1098,7 @@ def q_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the widened candidate set — the `ivfpq_p2` recall row quantifies what
     one extra probe buys back of the compounded loss."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return index_topk(emb, seed_index(emb), nprobe=IVF_NPROBE)
+    return index_topk(emb, build_ann_index(emb, train_rounds=0), nprobe=IVF_NPROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -1663,12 +1187,13 @@ def ann_recall(emb: DataFrame) -> DataFrame:
     overlap still reports recall 0 instead of vanishing.
 
     The four seed-quantizer IVF-PQ variants (pq_m32k32, pq_rerank,
-    ivfpq_p1, ivfpq_p2) search ONE in-memory `seed_index`, so its model
+    ivfpq_p1, ivfpq_p2) search ONE in-memory seed index
+    (`build_ann_index(emb, train_rounds=0)`), so its model
     row is derived once per call; only the encode of `lists` is a lazy
     narrow pass each search re-runs.
     """
     spark = emb.sparkSession
-    index = seed_index(emb)
+    index = build_ann_index(emb, train_rounds=0)
     exact = cosine_topk(emb).select("query_id", "neighbor_id")
     approx = None
     for label, fn, _oracle_name, probes in ANN_RECALL_VARIANTS:

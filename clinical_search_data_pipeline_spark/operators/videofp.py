@@ -35,7 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StructField,
@@ -67,9 +66,9 @@ VIDEO_FP_SCHEMA = StructType(
 )
 
 
-def attach_neardup_video(docs: DataFrame, wrap_base: int | None = None) -> DataFrame:
-    """Encode one real Y4M clip per document whose luma planes are pure
-    integer functions of doc_id:
+def _video_encoder(wrap_base: int | None):
+    """Batch generator (doc_id) -> (doc_id, payload): one real Y4M clip
+    per document whose luma planes are pure integer functions of doc_id:
 
         base = doc_id - doc_id % 10  if doc_id % 10 >= 8 else doc_id
         w = (base%4 + 2)*2    h = (base%3 + 2)*2    fps = base%30 + 1
@@ -80,21 +79,11 @@ def attach_neardup_video(docs: DataFrame, wrap_base: int | None = None) -> DataF
 
     With `wrap_base`, a copy's leader is taken MOD wrap_base — cross-split
     planted duplicates for the streaming admission gate, mirroring
-    phash.attach_neardup_images. The f*k cross term gives every base clip
+    phash._image_encoder. The f*k cross term gives every base clip
     a distinct temporal energy profile; odd frame indexes carry marker
     parameters so the decode path stays the parameter-tolerant FRAME
-    walker."""
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _video_encoder(wrap_base),
-        schema=StructType(
-            [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-        ),
-    )
-
-
-def _video_encoder(wrap_base: int | None):
-    """The attach_neardup_video batch generator, composable for the fused
-    encode∘fingerprint path (`video_neardup_fingerprints`)."""
+    walker. `video_neardup_fingerprints` runs it with the fingerprinter in
+    one Python crossing."""
     import numpy as _np
 
     from clinical_search_data_pipeline_spark.operators.multimodal import encode_y4m
@@ -138,22 +127,14 @@ def _video_encoder(wrap_base: int | None):
     return _encode
 
 
-def video_fingerprints(media: DataFrame) -> DataFrame:
-    """Arrow-batched temporal fingerprinting over real Y4M bytes: walk the
-    container (`decode_y4m_frame_sums`), take the per-frame luma-energy
-    sequence, emit one sign bit per consecutive-frame comparison over the
-    first FP_BITS+1 frames, pack into 4 16-bit bands.
-    Output: (doc_id, width, height, fps_num, n_frames, b0..b3)."""
-    return media.mapInPandas(_video_fingerprinter(), schema=VIDEO_FP_SCHEMA)
-
-
 def video_neardup_fingerprints(
     docs: DataFrame, wrap_base: int | None = None
 ) -> DataFrame:
-    """attach_neardup_video ∘ video_fingerprints fused into ONE Python
-    crossing (guide §4.1, the dhash_neardup_images rationale): the Y4M
-    payloads never round-trip through the JVM between encode and decode.
-    Values identical to the chained form (same two generators, composed)."""
+    """(doc_id, width, height, fps_num, n_frames, b0..b3) — each
+    document's fixture clip (`_video_encoder`) fingerprinted
+    (`_video_fingerprinter`) in ONE Python crossing (the
+    dhash_neardup_images rationale): the Y4M payloads never round-trip
+    through the JVM between encode and decode."""
     enc = _video_encoder(wrap_base)
     fp = _video_fingerprinter()
 
@@ -166,7 +147,11 @@ def video_neardup_fingerprints(
 
 
 def _video_fingerprinter():
-    """The video_fingerprints batch generator (see video_neardup_fingerprints)."""
+    """Batch generator (doc_id, payload) -> VIDEO_FP_SCHEMA rows: temporal
+    fingerprinting over real Y4M bytes — walk the container
+    (`decode_y4m_frame_sums`), take the per-frame luma-energy sequence,
+    emit one sign bit per consecutive-frame comparison over the first
+    FP_BITS+1 frames, pack into 4 16-bit bands."""
     from clinical_search_data_pipeline_spark.operators.multimodal import (
         decode_y4m_frame_sums,
     )
@@ -213,7 +198,7 @@ def _video_fingerprinter():
 
 # DuckDB twin: per-frame luma energies, difference-sign bits, band values
 # — all recomputed from doc_id arithmetic. `wrap_base` mirrors
-# attach_neardup_video (cross-split duplicates for the ingest gate oracle).
+# _video_encoder (cross-split duplicates for the ingest gate oracle).
 def duck_video_fp_cte(wrap_base: int | None = None) -> str:
     leader = "doc_id - doc_id % 10"
     if wrap_base is not None:

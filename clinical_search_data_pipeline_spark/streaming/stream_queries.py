@@ -1432,6 +1432,8 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         GATE_BITS,
         banded_lsh_keys,
         embedding_vs_corpus,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table

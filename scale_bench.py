@@ -242,18 +242,15 @@ def _timed_admission_gates(
 
     from clinical_search_data_pipeline_spark.operators.audiofp import (
         AF_HAM_MAX,
-        attach_neardup_audio,
-        audio_fingerprints,
+        audio_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.phash import (
-        attach_neardup_images,
-        dhash_images,
+        dhash_neardup_images,
         image_vs_corpus,
     )
     from clinical_search_data_pipeline_spark.operators.videofp import (
         VF_HAM_MAX,
-        attach_neardup_video,
-        video_fingerprints,
+        video_neardup_fingerprints,
     )
 
     # Perceptual gates measured with plain in-decade planting (no
@@ -280,25 +277,25 @@ def _timed_admission_gates(
             quality_score,
         ),
         "admission_image": (
-            lambda c: dhash_images(attach_neardup_images(c)),
+            dhash_neardup_images,
             lambda b, idx: image_vs_corpus(
-                idx, dhash_images(attach_neardup_images(b))
+                idx, dhash_neardup_images(b)
             ),
         ),
         "admission_audio": (
-            lambda c: audio_fingerprints(attach_neardup_audio(c)),
+            audio_neardup_fingerprints,
             lambda b, idx: image_vs_corpus(
                 idx,
-                audio_fingerprints(attach_neardup_audio(b)),
+                audio_neardup_fingerprints(b),
                 ham_max=AF_HAM_MAX,
                 dup_status="dup_audio",
             ),
         ),
         "admission_video": (
-            lambda c: video_fingerprints(attach_neardup_video(c)),
+            video_neardup_fingerprints,
             lambda b, idx: image_vs_corpus(
                 idx,
-                video_fingerprints(attach_neardup_video(b)),
+                video_neardup_fingerprints(b),
                 ham_max=VF_HAM_MAX,
                 dup_status="dup_video",
             ),
@@ -353,6 +350,8 @@ def _timed_admission_gates(
         GATE_BITS,
         banded_lsh_keys,
         embedding_vs_corpus,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
 
@@ -623,8 +622,7 @@ def _timed_gate_index_lifecycle(
     )
     from clinical_search_data_pipeline_spark.operators.audiofp import (
         AF_HAM_MAX,
-        attach_neardup_audio,
-        audio_fingerprints,
+        audio_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.classifier import (
         quality_score,
@@ -637,8 +635,7 @@ def _timed_gate_index_lifecycle(
         dsir_score,
     )
     from clinical_search_data_pipeline_spark.operators.phash import (
-        attach_neardup_images,
-        dhash_images,
+        dhash_neardup_images,
         image_vs_corpus,
     )
     from clinical_search_data_pipeline_spark.operators.spans import (
@@ -646,8 +643,7 @@ def _timed_gate_index_lifecycle(
     )
     from clinical_search_data_pipeline_spark.operators.videofp import (
         VF_HAM_MAX,
-        attach_neardup_video,
-        video_fingerprints,
+        video_neardup_fingerprints,
     )
 
     split = INCREMENT_SPLIT
@@ -669,17 +665,17 @@ def _timed_gate_index_lifecycle(
             quality_score(b, idx["clf_model"]),
             image_vs_corpus(
                 idx["image_index"],
-                dhash_images(attach_neardup_images(b, wrap_base=split)),
+                dhash_neardup_images(b, wrap_base=split),
             ),
             image_vs_corpus(
                 idx["audio_index"],
-                audio_fingerprints(attach_neardup_audio(b, wrap_base=split)),
+                audio_neardup_fingerprints(b, wrap_base=split),
                 ham_max=AF_HAM_MAX,
                 dup_status="dup_audio",
             ),
             image_vs_corpus(
                 idx["video_index"],
-                video_fingerprints(attach_neardup_video(b, wrap_base=split)),
+                video_neardup_fingerprints(b, wrap_base=split),
                 ham_max=VF_HAM_MAX,
                 dup_status="dup_video",
             ),

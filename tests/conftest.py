@@ -10,6 +10,20 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def encoded_payloads(encoder, doc_ids) -> dict[int, bytes]:
+    """{doc_id: payload} — a media encoder batch generator
+    (phash._image_encoder, audiofp._audio_encoder, videofp._video_encoder)
+    run in process on a pandas frame of the given doc_ids."""
+    import pandas as pd
+
+    frame = pd.DataFrame({"doc_id": sorted(int(d) for d in doc_ids)})
+    return {
+        int(d): bytes(p)
+        for pdf in encoder(iter([frame]))
+        for d, p in zip(pdf["doc_id"], pdf["payload"])
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     from clinical_search_data_pipeline_spark.session import get_spark

@@ -108,7 +108,7 @@ def test_probe_and_rerank_plans_never_shuffle_the_big_sides(spark, persisted):
     query-keyed top-k window above the join. A rerank joins the
     full-precision `vectors` scan directly: no exchange between that scan
     and its broadcast join."""
-    from clinical_search_data_pipeline_spark.operators.similarity import (
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         IVF_NPROBE,
         RERANK_POOL,
     )
@@ -369,9 +369,11 @@ def test_rerank_recall_geq_probe_only_at_same_nprobe(spark, tmp_path):
     outranks every other pool row under exact scoring). Also pins the
     refine output discipline (rank by exact cosine desc / vec_id asc,
     round-4 score) against cosine_topk's shape."""
-    from clinical_search_data_pipeline_spark.operators.similarity import (
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         IVF_NPROBE,
         RERANK_POOL,
+    )
+    from clinical_search_data_pipeline_spark.operators.similarity import (
         cosine_topk,
     )
 
@@ -429,6 +431,24 @@ def test_bad_search_arguments_raise(spark, persisted, search, with_vectors, matc
         search = dict(search, vectors=emb)
     with pytest.raises(ValueError, match=match):
         ai.ann_index_topk(idx, emb.filter(F.col("vec_id") < 8), **search)
+
+
+@pytest.mark.parametrize(
+    "train",
+    [
+        lambda emb: ai.trained_quantizer(emb, -1),
+        lambda emb: ai.pq_train_codebooks(emb, rounds=-1),
+        lambda emb: ai.build_ann_index(emb, train_rounds=-1),
+    ],
+    ids=["trained_quantizer", "pq_train_codebooks", "build_ann_index"],
+)
+def test_negative_training_rounds_raise(spark, train):
+    """A negative round count is outside the training contract (0 means
+    the seed quantizer): it fails loudly before any plan is built instead
+    of silently returning the seed quantizers."""
+    emb = read_table(spark, SF, "embeddings")
+    with pytest.raises(ValueError, match="rounds >= 0"):
+        train(emb)
 
 
 def test_serve_index_builds_once_per_source_content(spark, monkeypatch):

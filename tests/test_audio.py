@@ -8,7 +8,7 @@ import random
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, encoded_payloads
 
 from clinical_search_data_pipeline_spark.operators.multimodal import (
     attach_synthetic_audio,
@@ -179,8 +179,8 @@ def test_audio_fingerprint_matches_exact_fraction_reference(spark):
 
     from clinical_search_data_pipeline_spark.operators.audiofp import (
         FP_FRAMES,
-        attach_neardup_audio,
-        audio_fingerprints,
+        _audio_encoder,
+        audio_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.multimodal import (
         decode_wav_samples,
@@ -188,14 +188,11 @@ def test_audio_fingerprint_matches_exact_fraction_reference(spark):
     from clinical_search_data_pipeline_spark.sources.readers import read_table
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(12)
-    media = {
-        r.doc_id: bytes(r.payload)
-        for r in attach_neardup_audio(docs).collect()
-    }
     got = {
         r.doc_id: (r.sample_rate, r.n_samples, [r.b0, r.b1, r.b2, r.b3])
-        for r in audio_fingerprints(attach_neardup_audio(docs)).collect()
+        for r in audio_neardup_fingerprints(docs).collect()
     }
+    media = encoded_payloads(_audio_encoder(None), got)
     assert len(got) == 12
     for doc_id, payload in media.items():
         rate, samples = decode_wav_samples(payload)
@@ -260,20 +257,17 @@ def test_video_fingerprint_matches_frame_sum_reference(spark):
     )
     from clinical_search_data_pipeline_spark.operators.videofp import (
         FP_BITS,
-        attach_neardup_video,
-        video_fingerprints,
+        _video_encoder,
+        video_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(12)
-    media = {
-        r.doc_id: bytes(r.payload)
-        for r in attach_neardup_video(docs).collect()
-    }
     got = {
         r.doc_id: (r.width, r.height, r.fps_num, r.n_frames, [r.b0, r.b1, r.b2, r.b3])
-        for r in video_fingerprints(attach_neardup_video(docs)).collect()
+        for r in video_neardup_fingerprints(docs).collect()
     }
+    media = encoded_payloads(_video_encoder(None), got)
     assert len(got) == 12
     for doc_id, payload in media.items():
         w, h, fps, sums = decode_y4m_frame_sums(payload)

@@ -25,21 +25,19 @@ def _batch_screen(spark, modality):
     if modality == "audio":
         from clinical_search_data_pipeline_spark.operators.audiofp import (
             AF_HAM_MAX as ham_max,
-            attach_neardup_audio as attach,
-            audio_fingerprints as fingerprint,
+            audio_neardup_fingerprints as fingerprint,
         )
     else:
         from clinical_search_data_pipeline_spark.operators.videofp import (
             VF_HAM_MAX as ham_max,
-            attach_neardup_video as attach,
-            video_fingerprints as fingerprint,
+            video_neardup_fingerprints as fingerprint,
         )
 
     docs = read_table(spark, SF_SMOKE, "documents")
     corpus = docs.filter(F.col("doc_id") < INCREMENT_SPLIT)
     batch = docs.filter(F.col("doc_id") >= INCREMENT_SPLIT)
-    ci = fingerprint(attach(corpus, wrap_base=INCREMENT_SPLIT))
-    bi = fingerprint(attach(batch, wrap_base=INCREMENT_SPLIT))
+    ci = fingerprint(corpus, wrap_base=INCREMENT_SPLIT)
+    bi = fingerprint(batch, wrap_base=INCREMENT_SPLIT)
     return image_vs_corpus(
         ci, bi, ham_max=ham_max, dup_status=f"dup_{modality}"
     )

@@ -7,22 +7,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clinical_search_data_pipeline_spark.operators.clustering import (
-    _assign,
-    kmeans_refined_assignments,
+from clinical_search_data_pipeline_spark.operators.ann_index import (
+    trained_quantizer,
     updated_centroids,
-)
-from clinical_search_data_pipeline_spark.operators.fragments import _spark_dot
-from clinical_search_data_pipeline_spark.operators.similarity import (
-    ivf_assignments,
     vectors_with_norms,
 )
+from clinical_search_data_pipeline_spark.operators.fragments import _spark_dot
 from tests.conftest import SF_CORRECTNESS
 
 
-def _mean_assigned_cosine(base, cents, assigned, cell_col):
+def _mean_assigned_cosine(base, cents, assigned):
     joined = (
-        assigned.select("vec_id", F.col(cell_col).alias("cell"))
+        assigned.select("vec_id", "cell")
         .join(base, "vec_id")
         .join(cents, "cell")
         .withColumn(
@@ -35,24 +31,19 @@ def _mean_assigned_cosine(base, cents, assigned, cell_col):
 def test_refinement_improves_fit_and_moves_vectors(spark):
     emb = spark.read.parquet(f"{SF_CORRECTNESS}/embeddings.parquet")
     base = vectors_with_norms(emb)
-    a0 = ivf_assignments(emb).select("vec_id", "v", "norm", F.col("cell").alias("cell0"))
-    cents0 = base.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 108)).select(
-        (F.col("vec_id") - 100).alias("cell"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-    )
-    cents1 = updated_centroids(a0, "cell0")
-    a1 = _assign(base, cents1, "cell1")
+    cents0, a0 = trained_quantizer(emb, 0)
+    cents1, a1 = trained_quantizer(emb, 1)
 
-    fit0 = _mean_assigned_cosine(base, cents0, a0, "cell0")
-    fit1 = _mean_assigned_cosine(base, cents1, a1, "cell1")
+    fit0 = _mean_assigned_cosine(base, cents0, a0)
+    fit1 = _mean_assigned_cosine(base, cents1, a1)
     # One Lloyd round must not worsen the mean member-to-centroid cosine
     # (on this fixture it improves substantially: seed centroids are
     # arbitrary corpus vectors, the mean is a far better representative).
     assert fit1 > fit0, (fit0, fit1)
 
     moved = (
-        kmeans_refined_assignments(emb)
+        a0.select("vec_id", F.col("cell").alias("cell0"))
+        .join(a1.select("vec_id", F.col("cell").alias("cell1")), "vec_id")
         .filter(F.col("cell0") != F.col("cell1"))
         .count()
     )
@@ -98,7 +89,7 @@ def test_kmeans_parallel_seeds_deterministic_and_bounded(spark):
         kmeans_parallel_seeds,
         kmeans_train,
     )
-    from clinical_search_data_pipeline_spark.operators.similarity import (
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         N_CENTROIDS,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table

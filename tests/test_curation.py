@@ -246,11 +246,11 @@ def test_semdedup_fixture_dropped_have_lower_id_witness(spark):
     # witnesses: re-derive pairs once and anti-join — no dropped vec may
     # lack a witness
     from clinical_search_data_pipeline_spark.operators.fragments import _spark_dot
-    from clinical_search_data_pipeline_spark.operators.similarity import (
-        ivf_assignments,
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
+        trained_quantizer,
     )
 
-    cells = ivf_assignments(emb)
+    _, cells = trained_quantizer(emb, 0)
     a = cells.select(
         F.col("vec_id").alias("va"), F.col("v").alias("av"),
         F.col("norm").alias("an"), "cell",

@@ -18,6 +18,8 @@ def _batch_screen(spark):
         GATE_BITS,
         banded_lsh_keys,
         embedding_vs_corpus,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
@@ -152,6 +154,8 @@ def test_auto_banding_catches_cross_split_dups(spark):
         banded_lsh_keys,
         embedding_vs_corpus,
         gate_banding_for,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
@@ -238,6 +242,8 @@ def test_multiprobe_measured_recall_at_x10_density(spark, tmp_path):
         embedding_vs_corpus,
         gate_banding_for,
         gate_multiprobe_banding_for,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.testing import make_scaled_corpus
@@ -312,6 +318,8 @@ def test_multiprobe_plan_stays_equi_join(spark):
         EMB_SPLIT,
         banded_lsh_keys,
         embedding_vs_corpus,
+    )
+    from clinical_search_data_pipeline_spark.operators.ann_index import (
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table

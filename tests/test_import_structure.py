@@ -1,0 +1,64 @@
+"""Module structure of the package: the ANN quantizers have one owner
+(operators/ann_index.py imports no other operator module but
+`fragments`), and every `from clinical_search_data_pipeline_spark... import
+X` in the package and the root scripts resolves — including imports inside
+functions, which otherwise fail only when a rarely run path is taken."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+import pathlib
+import subprocess
+import sys
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = "clinical_search_data_pipeline_spark"
+
+
+def test_ann_index_imports_neither_similarity_nor_clustering():
+    code = (
+        "import sys\n"
+        f"import {PACKAGE}.operators.ann_index\n"
+        "print(sorted(m for m in sys.modules if m.startswith("
+        f"'{PACKAGE}.operators.')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    loaded = ast.literal_eval(out.strip().splitlines()[-1])
+    assert f"{PACKAGE}.operators.ann_index" in loaded
+    assert f"{PACKAGE}.operators.similarity" not in loaded, loaded
+    assert f"{PACKAGE}.operators.clustering" not in loaded, loaded
+
+
+def _package_imports():
+    files = sorted((REPO / PACKAGE).rglob("*.py")) + sorted(REPO.glob("*.py"))
+    for path in files:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and node.module
+                and node.module.startswith(PACKAGE)
+            ):
+                for alias in node.names:
+                    yield path.relative_to(REPO), node.lineno, node.module, alias.name
+
+
+def test_every_package_import_resolves():
+    missing = []
+    for path, line, module, name in _package_imports():
+        mod = importlib.import_module(module)
+        submodule = hasattr(mod, "__path__") and importlib.util.find_spec(
+            f"{module}.{name}"
+        )
+        if not hasattr(mod, name) and not submodule:
+            missing.append(f"{path}:{line}: from {module} import {name}")
+    assert not missing, "\n".join(missing)

@@ -317,18 +317,15 @@ def test_ingest_admission_job_matches_oneshot_batch(spark, tmp_path):
     )
     from clinical_search_data_pipeline_spark.operators.audiofp import (
         AF_HAM_MAX,
-        attach_neardup_audio,
-        audio_fingerprints,
+        audio_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.phash import (
-        attach_neardup_images,
-        dhash_images,
+        dhash_neardup_images,
         image_vs_corpus,
     )
     from clinical_search_data_pipeline_spark.operators.videofp import (
         VF_HAM_MAX,
-        attach_neardup_video,
-        video_fingerprints,
+        video_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
@@ -387,15 +384,15 @@ def test_ingest_admission_job_matches_oneshot_batch(spark, tmp_path):
     img = {
         r.doc_id: r.status
         for r in image_vs_corpus(
-            dhash_images(attach_neardup_images(corpus, wrap_base=INCREMENT_SPLIT)),
-            dhash_images(attach_neardup_images(batch, wrap_base=INCREMENT_SPLIT)),
+            dhash_neardup_images(corpus, wrap_base=INCREMENT_SPLIT),
+            dhash_neardup_images(batch, wrap_base=INCREMENT_SPLIT),
         ).collect()
     }
     aud = {
         r.doc_id: r.status
         for r in image_vs_corpus(
-            audio_fingerprints(attach_neardup_audio(corpus, wrap_base=INCREMENT_SPLIT)),
-            audio_fingerprints(attach_neardup_audio(batch, wrap_base=INCREMENT_SPLIT)),
+            audio_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
+            audio_neardup_fingerprints(batch, wrap_base=INCREMENT_SPLIT),
             ham_max=AF_HAM_MAX,
             dup_status="dup_audio",
         ).collect()
@@ -403,8 +400,8 @@ def test_ingest_admission_job_matches_oneshot_batch(spark, tmp_path):
     vid = {
         r.doc_id: r.status
         for r in image_vs_corpus(
-            video_fingerprints(attach_neardup_video(corpus, wrap_base=INCREMENT_SPLIT)),
-            video_fingerprints(attach_neardup_video(batch, wrap_base=INCREMENT_SPLIT)),
+            video_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
+            video_neardup_fingerprints(batch, wrap_base=INCREMENT_SPLIT),
             ham_max=VF_HAM_MAX,
             dup_status="dup_video",
         ).collect()
@@ -483,12 +480,10 @@ def test_every_admission_gate_is_total_over_degenerate_docs(spark):
         dsir_score,
     )
     from clinical_search_data_pipeline_spark.operators.audiofp import (
-        attach_neardup_audio,
-        audio_fingerprints,
+        audio_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.operators.phash import (
-        attach_neardup_images,
-        dhash_images,
+        dhash_neardup_images,
         image_vs_corpus,
     )
     from clinical_search_data_pipeline_spark.operators.spans import (
@@ -496,8 +491,7 @@ def test_every_admission_gate_is_total_over_degenerate_docs(spark):
         span_contamination,
     )
     from clinical_search_data_pipeline_spark.operators.videofp import (
-        attach_neardup_video,
-        video_fingerprints,
+        video_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
     from tests.conftest import SF_SMOKE
@@ -522,17 +516,17 @@ def test_every_admission_gate_is_total_over_degenerate_docs(spark):
             batch, nb_quality_model(quality_labels(corpus))
         ),
         "image": image_vs_corpus(
-            dhash_images(attach_neardup_images(corpus, wrap_base=INCREMENT_SPLIT)),
-            dhash_images(attach_neardup_images(batch, wrap_base=INCREMENT_SPLIT)),
+            dhash_neardup_images(corpus, wrap_base=INCREMENT_SPLIT),
+            dhash_neardup_images(batch, wrap_base=INCREMENT_SPLIT),
         ),
         "audio": image_vs_corpus(
-            audio_fingerprints(attach_neardup_audio(corpus, wrap_base=INCREMENT_SPLIT)),
-            audio_fingerprints(attach_neardup_audio(batch, wrap_base=INCREMENT_SPLIT)),
+            audio_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
+            audio_neardup_fingerprints(batch, wrap_base=INCREMENT_SPLIT),
             dup_status="dup_audio",
         ),
         "video": image_vs_corpus(
-            video_fingerprints(attach_neardup_video(corpus, wrap_base=INCREMENT_SPLIT)),
-            video_fingerprints(attach_neardup_video(batch, wrap_base=INCREMENT_SPLIT)),
+            video_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
+            video_neardup_fingerprints(batch, wrap_base=INCREMENT_SPLIT),
             dup_status="dup_video",
         ),
     }

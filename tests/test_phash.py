@@ -19,11 +19,11 @@ from clinical_search_data_pipeline_spark.operators.phash import (
     PHASH_COLS,
     PHASH_HAM_MAX,
     PHASH_ROWS,
-    attach_neardup_images,
-    dhash_images,
+    _image_encoder,
+    dhash_neardup_images,
 )
 from clinical_search_data_pipeline_spark.registry import all_specs
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, encoded_payloads
 
 
 def _logical_image(w: int, h: int, seed: int) -> np.ndarray:
@@ -79,12 +79,9 @@ def test_dhash_matches_exact_fraction_reference(spark):
     docs = read_table(spark, SF_SMOKE, "documents").limit(12)
     hashed = {
         r.doc_id: (r.fmt, r.width, r.height, [r.b0, r.b1, r.b2, r.b3])
-        for r in dhash_images(attach_neardup_images(docs)).collect()
+        for r in dhash_neardup_images(docs).collect()
     }
-    media = {
-        r.doc_id: bytes(r.payload)
-        for r in attach_neardup_images(docs).collect()
-    }
+    media = encoded_payloads(_image_encoder(None), hashed)
     assert len(hashed) == 12
     for doc_id, (fmt, w, h, bands) in hashed.items():
         gfmt, gw, gh, _m, rows = decode_pixel_rows(media[doc_id])
@@ -197,8 +194,6 @@ def test_stream_image_gate_equals_batch_screen(spark):
         INCREMENT_SPLIT,
     )
     from clinical_search_data_pipeline_spark.operators.phash import (
-        attach_neardup_images,
-        dhash_images,
         image_vs_corpus,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
@@ -212,8 +207,8 @@ def test_stream_image_gate_equals_batch_screen(spark):
     docs = read_table(spark, SF_SMOKE, "documents")
     corpus = docs.filter(F.col("doc_id") < INCREMENT_SPLIT)
     batch = docs.filter(F.col("doc_id") >= INCREMENT_SPLIT)
-    ch = dhash_images(attach_neardup_images(corpus, wrap_base=INCREMENT_SPLIT))
-    bh = dhash_images(attach_neardup_images(batch, wrap_base=INCREMENT_SPLIT))
+    ch = dhash_neardup_images(corpus, wrap_base=INCREMENT_SPLIT)
+    bh = dhash_neardup_images(batch, wrap_base=INCREMENT_SPLIT)
     expect = {
         r.doc_id: (r.n_corpus_matches, r.status)
         for r in image_vs_corpus(ch, bh).collect()

@@ -7,19 +7,19 @@ from __future__ import annotations
 
 from clinical_search_data_pipeline_spark.caching import release_caches
 from clinical_search_data_pipeline_spark.operators.ann_index import (
-    encode_ann_index,
-)
-from clinical_search_data_pipeline_spark.operators.similarity import (
     N_CENTROIDS,
     PQ_K,
     PQ_M,
-    cosine_topk,
-    index_topk,
+    encode_ann_index,
     pq_codebook,
     pq_distortion,
     pq_subvectors,
     pq_train_codebooks,
     seed_centroids,
+)
+from clinical_search_data_pipeline_spark.operators.similarity import (
+    cosine_topk,
+    index_topk,
 )
 from clinical_search_data_pipeline_spark.sources.readers import read_table
 from tests.conftest import SF_SMOKE
