@@ -51,106 +51,21 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 # Being listed is NOT a correctness statement — it is this round's claim on
 # the driver's budget.
 #
-# Round-13 window: 63 claims on 50 slots, the same arithmetic as r9-r12.
-# The 13 names deferred in r12 (r12's ROUND_BACKLOG) carry r9 driver rows
-# — age 4 at r13, so the staleness guard makes their slots MANDATORY —
-# and the 50-name r10 cohort is at age 3 (refresh now or they're
-# mandatory at r14). The window is the 13 mandatory names, q_media_decode
-# (row r12 but its RESULT changes this round: the decode fixture mix
-# gains real PNG rows, VERDICT r12 #5 — a fresh driver row must cover
-# the new behavior), the round's TWO new registrations (the persisted
-# index's probe-only and rerank twins, VERDICT r12 #4/#6 — never-checked
-# queries must claim slots), and 34 of the r10 cohort. The 16 leftover
-# r10 names are deferred to r14 under the in-window exemption
-# (ROUND_BACKLOG below, DEFERRED_IN = 13). The round's other new surface
-# (CommitStore backends, CDC evolution continuation, PNG decode,
-# watermark carry-forward) lands under pytest pins and existing queries.
+# Round-15 window: 65 claims on 50 slots. Round 14 checked r13's window
+# unchanged (CORRECTNESS_r13.json and CORRECTNESS_r14.json name the same
+# 50 queries), so the 16 names r13 deferred still carry r10 driver rows —
+# age 4 behind the r14 artifact, past the staleness bound, and MANDATORY
+# here. The 49 rotating r11-row names are at age 3 (the 50 of
+# CORRECTNESS_r11.json less the retired q_dedup_keys_xxhash, which stays
+# out of the window); no registered query is without a driver row. The
+# window, in order: (a) the 16 mandatory r10-row names; (b) the 9 r11-row
+# names whose DuckDB oracle text changed after their r11 row (the IVF/PQ/
+# k-means oracles recomposed from duck_lloyd_ctes / duck_pq_ctes /
+# ivfadc_oracle — r13's q_media_decode rule: a changed result needs a
+# fresh driver row); (c) the first 25 of the other 40 r11-row names in
+# registration order. No r10-row oracle changed since its r10 row.
 ROUND_PRIORITY: tuple[str, ...] = (
-    # (a) the 13 MANDATORY names: deferred in r12, latest driver row r9,
-    # at the staleness bound exactly this round.
-    "q_bpe_token_counts",
-    "q_bpe_tokenize2",
-    "q_bpe_train2",
-    "q_ewma_user_values_chunked",
-    "q_media_audio",
-    "q_media_features",
-    "q_media_frames",
-    "q_media_meta",
-    "q_media_resize",
-    "q_media_video",
-    "q_source_overlap",
-    "q_stream_anomaly",
-    "q_stream_dedup_keys",
-    # (b) the one non-cohort name whose observable result changes this
-    # round (PNG rows join the decode fixture mix, VERDICT r12 #5).
-    "q_media_decode",
-    # (c) 34 of the 50-name r10 cohort (rows r10, age 3 — refreshed here
-    # so they never cross the bound).
-    # (c') the round's TWO new registrations (never-checked guard: a new
-    # query claims a slot in the commit that registers it): the persisted
-    # index's probe-only serving twin and its FAISS-refine rerank twin
-    # (VERDICT r12 #4/#6).
-    "q_ann_index_probe",
-    "q_ann_index_rerank",
-    "q_cluster_safe_split",
-    "q_column_audit",
-    "q_curation_funnel",
-    "q_customer_running_spend",
-    "q_customers_without_orders",
-    "q_daily_events",
-    "q_doc_dedup_apply",
-    "q_dsir_resample",
-    "q_embedding_neardup_lsh",
-    "q_minhash_lsh_pairs",
-    "q_parse_msdate",
-    "q_passage_dedup",
-    "q_pricing_rollup",
-    "q_props_extract",
-    "q_quality_classifier",
-    "q_range_join_windows",
-    "q_region_customer_stats",
-    "q_semdedup",
-    "q_session_clicks",
-    "q_stream_incremental_dedup",
-    "q_stream_traffic_minute",
-    "q_strip_dup_spans",
-    "q_text_quality",
-    "q_time_remap",
-    "q_token_stats",
-    "q_top_docs",
-    "q_top_revenue_orders",
-    "q_traffic_minute",
-    "q_traffic_rollup",
-    "q_unigram_nll",
-    "q_union_days",
-    "q_user_cohorts",
-    "q_value_stats",
-    "q_zipf_profile",
-)
-
-# The 16 r10-cohort names deferred to r14 (rows r10 — age 4 at r14, so
-# the staleness guard makes their r14 slots MANDATORY; the
-# backlog-neglect test below enforces the same one round after
-# DEFERRED_IN). The split moves out names whose value evidence has an
-# in-window or fresher sibling: the three perceptual-fingerprint
-# queries (their banded near-dup twins q_audio/image/video_neardup are
-# r11-green and the hash families are property-tested against fixed
-# vectors), q_image_dedup_apply (q_doc_dedup_apply stays in-window),
-# q_embedding_neardup (its LSH twin stays in-window), q_cosine_topk
-# (its vectorized twin is r11-green and the exact path is embedded as
-# the ground truth inside q_ann_recall's composed oracle, r12-green),
-# q_jaccard_pairs (normalized twin r11-green; embedded in
-# q_minhash_recall's oracle, r12-green), q_stream_dsir_gate /
-# q_stream_span_gate (batch twins q_dsir_resample in-window,
-# q_span_gate_bloom r11), q_pricing_summary (siblings q_pricing_rollup
-# in-window + q_pricing_cube r12), q_word_entropy (siblings
-# q_zipf_profile in-window, q_repetition_quality r11), and five
-# single-purpose relational queries unchanged since registration
-# (q_order_priority_counts, q_salted_counts, q_segment_stats,
-# q_supplier_part_volume, q_unpivot_order_stats). All 16 are unchanged
-# code with green r10 rows and J12 full-contract confirmation on the
-# r12 final tree.
-ROUND_BACKLOG: tuple[str, ...] = (
+    # (a) the 16 MANDATORY names: deferred in r13, latest driver row r10.
     "q_audio_fingerprints",
     "q_cosine_topk",
     "q_embedding_neardup",
@@ -167,8 +82,68 @@ ROUND_BACKLOG: tuple[str, ...] = (
     "q_unpivot_order_stats",
     "q_video_fingerprints",
     "q_word_entropy",
+    # (b) the 9 r11-row names whose oracle changed since that row.
+    "q_ann_ivf_topk",
+    "q_ann_ivf_multiprobe",
+    "q_ann_pq_topk",
+    "q_ann_rerank",
+    "q_ann_pq_trained_topk",
+    "q_ann_ivfpq_topk",
+    "q_ann_ivfpq_multiprobe",
+    "q_kmeans_refine",
+    "q_semdedup_refined",
+    # (c) 25 of the other 40 r11-row names, registration order.
+    "q_doc_exact_dedup",
+    "q_simhash_fingerprints",
+    "q_simhash_buckets",
+    "q_ann_lsh_topk",
+    "q_cosine_topk_vectorized",
+    "q_ann_lsh_multiprobe",
+    "q_contrastive_pairs",
+    "q_mixture_weights",
+    "q_sequence_pack",
+    "q_pps_sample",
+    "q_lang_id",
+    "q_repetition_quality",
+    "q_tfidf_top_terms",
+    "q_neardup_clusters",
+    "q_approx_daily_traffic",
+    "q_value_quantiles",
+    "q_cms_heavy_hitters",
+    "q_stream_stream_join",
+    "q_stream_stream_left_outer",
+    "q_stream_session_window",
+    "q_stream_enriched_traffic",
+    "q_stream_running_counts",
+    "q_passage_dup_stats",
+    "q_train_order",
+    "q_token_budget",
 )
-ROUND_BACKLOG_DEFERRED_IN = 13  # the round whose window displaced them
+
+# The last 15 of those 40 r11-row names in registration order, deferred
+# from the r15 window. Their rows reach age 4 with the r15 artifact, so the
+# staleness guard makes their r16 slots MANDATORY; the backlog-neglect test
+# enforces the same once an artifact past r16 lands. Their oracles are
+# unchanged since the r11 rows, and tier-1's oracle parity checks them at
+# sf0.001 on every run.
+ROUND_BACKLOG: tuple[str, ...] = (
+    "q_span_gate_bloom",
+    "q_quality_classifier_refined",
+    "q_stream_quality_gate",
+    "q_image_neardup",
+    "q_stream_image_gate",
+    "q_audio_neardup",
+    "q_video_neardup",
+    "q_normalize_text",
+    "q_jaccard_pairs_normalized",
+    "q_minhash_lsh_normalized",
+    "q_dbscan_clusters",
+    "q_zorder_keys",
+    "q_bucketed_join",
+    "q_bm25_topk",
+    "q_bm25_index_topk",
+)
+ROUND_BACKLOG_DEFERRED_IN = 15  # the round whose window displaced them
 
 # Permanently retired from window rotation (VERDICT r11 #8): checks that
 # can never tighten past rows-only, whose hash evidence lives in an
