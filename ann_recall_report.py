@@ -225,10 +225,12 @@ def main() -> None:
     print("all-seed IVFADC at the same nprobe=1 plan shape): the gap")
     print("between the two rows IS the training uplift on the served")
     print("artifact (+1000 bp at sf0.01, +1750 bp at sf0.1 — 12.5% to")
-    print("30%). The sf0.001 row sits at its seed baseline — 250 vectors")
-    print("across 8 cells is too small for Lloyd means to beat the seed")
-    print("slice, the same small-fixture quirk ivf_p1_lloyd1 shows;")
-    print("training decisions read the sf0.1 row.")
+    print("30%). The sf0.001 row sits at its seed baseline, the same")
+    print("quirk ivf_p1_lloyd1 shows. Size does not explain it: sf0.001")
+    print("and sf0.01 both hold 500 vectors (different ones — a join on")
+    print("vec_id finds 0 identical rows), and sf0.01 gains +1000 bp.")
+    print("It is a property of that one 500-vector draw; training")
+    print("decisions read the sf0.1 row.")
     print("The SERVING rows (r13): ivfadc_index_p2 is the probe-only")
     print("search of that trained index at nprobe=2 (q_ann_index_probe),")
     print("ivfadc_index_rerank_p2 adds the FAISS refine (q_ann_index_")
@@ -239,10 +241,11 @@ def main() -> None:
     print("ivfpq_p2 — the all-seed on-the-fly IVFADC at the SAME probe")
     print("budget — the served rerank wins +2750 bp at sf0.01 and")
     print("+1500 bp at sf0.1. The sf0.001 row lands BELOW ivfpq_p2 for")
-    print("the reason already documented for ivfadc_trained_index: at")
-    print("250 vectors the trained cells capture fewer true neighbors")
-    print("than the seed slice, and no refine can recover a neighbor the")
-    print("probed cells never contained; serving decisions read sf0.1.")
+    print("the reason already documented for ivfadc_trained_index: on")
+    print("that fixture's 500 vectors the trained cells capture fewer")
+    print("true neighbors than the seed slice, and no refine can recover")
+    print("a neighbor the probed cells never contained; serving decisions")
+    print("read sf0.1.")
     print("The ivf_p1_lloyd1 / ivf_p1_converged rows isolate the coarse")
     print("quantizer's quality (VERDICT r10 #6): the SAME nprobe=1 search")
     print("over trained_quantizer cells (one Lloyd round) and kmeans_train")

@@ -20,7 +20,9 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clinical_search_data_pipeline_spark.caching import engine_cache
 from clinical_search_data_pipeline_spark.operators import ingest, marts
+from clinical_search_data_pipeline_spark.operators.gates import APPEND, GATES
 from clinical_search_data_pipeline_spark.sinks import manifest as manifest_sink
 from clinical_search_data_pipeline_spark.sinks import parquet as pq_sink
 from clinical_search_data_pipeline_spark.streaming.dedup import (
@@ -794,309 +796,17 @@ def training_export_job(
     return {"docs_exported": n, "tokens_exported": int(toks)}
 
 
-# The eight gate indexes as persisted lake artifacts: ten component
-# relations (the near-dup prefix index is a 3-relation tuple), each a
-# snapshot table plus a (table, version) meta pin committed LAST — the
-# exact consistency discipline of operators/ann_index.write_ann_index.
-# At 100 TB a per-run rebuild of the standing-corpus indexes is the cost
-# the BM25/ANN index work already retired on the retrieval side;
+# The gate indexes as persisted lake artifacts: one snapshot table per
+# index relation (operators/gates.py lists them per gate) plus a
+# (table, version) meta pin committed LAST — the exact consistency
+# discipline of operators/ann_index.write_ann_index. At 100 TB a per-run
+# rebuild of the standing-corpus indexes is the cost the BM25/ANN index
+# work already retired on the retrieval side;
 # `ingest_admission_job(gate_index_root=...)` closes the same gap for the
 # admission path: first run builds + publishes, every later run probes
 # the committed artifacts without touching the corpus.
-GATE_INDEX_TABLES = (
-    "prefix_sets",
-    "prefix_prefixes",
-    "prefix_dfreq",
-    "lr_model",
-    "gram_index",
-    "gram_bloom",
-    "clf_model",
-    "image_index",
-    "audio_index",
-    "video_index",
-)
+GATE_INDEX_TABLES = tuple(t for g in GATES for t in g.tables)
 _GATE_META = "meta"
-
-
-def _flatten_gate_indexes(idx: Mapping[str, object]) -> dict[str, DataFrame]:
-    sets, prefixes, dfreq = idx["prefix_index"]
-    flat = {
-        "prefix_sets": sets,
-        "prefix_prefixes": prefixes,
-        "prefix_dfreq": dfreq,
-    }
-    for k in GATE_INDEX_TABLES[3:]:
-        flat[k] = idx[k]
-    return flat
-
-
-def write_gate_indexes(idx: Mapping[str, object], root: str) -> dict[str, int]:
-    """Publish the gate indexes under `root`; returns {table: version}
-    including the meta pin (committed last — readers resolving mid-publish
-    keep the previous complete ten-table view)."""
-    flat = _flatten_gate_indexes(idx)
-    versions = {}
-    for name in GATE_INDEX_TABLES:
-        versions[name] = manifest_sink.write_snapshot(
-            flat[name], f"{root}/{name}", mode="overwrite"
-        )
-    spark = flat[GATE_INDEX_TABLES[0]].sparkSession
-    pins = spark.createDataFrame(
-        [(t, versions[t]) for t in GATE_INDEX_TABLES],
-        "table string, version int",
-    )
-    versions[_GATE_META] = manifest_sink.write_snapshot(
-        pins, f"{root}/{_GATE_META}", mode="overwrite"
-    )
-    return versions
-
-
-def gate_meta_versions(spark: SparkSession, root: str) -> dict[str, int]:
-    """The meta pin's {table: version} map, resolved at ONE pinned meta
-    commit (version lookup + pinned read — never two unpinned reads that
-    could straddle a concurrent refresh)."""
-    meta_v = manifest_sink.latest_version(f"{root}/{_GATE_META}")
-    pins = manifest_sink.read_snapshot(
-        spark, f"{root}/{_GATE_META}", version=meta_v
-    )
-    return {r.table: r.version for r in pins.collect()}
-
-
-def read_gate_indexes(
-    spark: SparkSession, root: str, versions: dict[str, int] | None = None
-) -> dict[str, object]:
-    """Resolve the committed gate indexes through the meta pin; each
-    relation is engine-cached (the job probes them per micro-batch).
-    Pass `versions` (a `gate_meta_versions` result) when the caller also
-    needs the watermark pins — resolving once keeps indexes and
-    watermarks on the SAME commit."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-
-    if versions is None:
-        versions = gate_meta_versions(spark, root)
-    flat = {
-        name: engine_cache(
-            manifest_sink.read_snapshot(
-                spark, f"{root}/{name}", version=versions[name]
-            )
-        )
-        for name in GATE_INDEX_TABLES
-    }
-    idx: dict[str, object] = {
-        "prefix_index": (
-            flat["prefix_sets"],
-            flat["prefix_prefixes"],
-            flat["prefix_dfreq"],
-        )
-    }
-    for k in GATE_INDEX_TABLES[3:]:
-        idx[k] = flat[k]
-    return idx
-
-
-def gate_indexes_published(root: str) -> bool:
-    from clinical_search_data_pipeline_spark.sinks.manifest import _versions
-
-    return bool(_versions(f"{root}/{_GATE_META}"))
-
-
-def build_gate_indexes(corpus_df: DataFrame, split: int) -> dict[str, object]:
-    """All eight gate indexes from scratch over a standing corpus — the
-    one-time (or re-baseline) O(corpus) derivation every micro-batch then
-    probes. `split` is the media wrap base (fixture geometry)."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        nb_quality_model,
-        quality_labels,
-    )
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        corpus_prefix_index,
-    )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        dsir_model,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-    )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        corpus_gram_bloom,
-        corpus_gram_index,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        video_neardup_fingerprints,
-    )
-
-    gram_index = engine_cache(corpus_gram_index(corpus_df))
-    return {
-        "prefix_index": corpus_prefix_index(corpus_df),
-        "lr_model": engine_cache(dsir_model(corpus_df)),
-        "gram_index": gram_index,
-        "gram_bloom": engine_cache(corpus_gram_bloom(gram_index)),
-        "clf_model": engine_cache(
-            nb_quality_model(quality_labels(corpus_df))
-        ),
-        "image_index": engine_cache(
-            dhash_neardup_images(corpus_df, wrap_base=split)
-        ),
-        "audio_index": engine_cache(
-            audio_neardup_fingerprints(corpus_df, wrap_base=split)
-        ),
-        "video_index": engine_cache(
-            video_neardup_fingerprints(corpus_df, wrap_base=split)
-        ),
-    }
-
-
-def update_gate_indexes(
-    old: Mapping[str, object],
-    increment: DataFrame,
-    merged: DataFrame,
-    split: int,
-    deltas: tuple[dict, dict] | None = None,
-) -> dict[str, object]:
-    """Fold an admitted INCREMENT into the gate indexes in O(increment) —
-    VERDICT r9 #2: the refresh cadence no longer re-derives O(corpus)
-    state. Per index:
-
-    * shingle sets / fingerprint relations (image, audio, video) are
-      doc-local and deterministic — the increment's rows union in, which
-      is EXACTLY the full-rebuild relation;
-    * the gram index unions the increment's NOVEL grams (distinct-set
-      semantics: union == rebuild), and the gram Bloom folds exactly those
-      grams in via `bloom_add` — one pass over the increment, same bit
-      domain;
-    * the near-dup prefix relation appends the increment docs' rarest-
-      first prefixes ranked under the FROZEN baseline document-frequency
-      order (`dfreq` is deliberately NOT updated: the prefix-filter lemma
-      is lossless under any single consistent total order, and mixing two
-      orders across old and new prefixes could miss true pairs — so
-      verdicts match the full rebuild even though the prefix ROWS differ;
-      a periodic full re-baseline re-optimizes selectivity);
-    * the two small dense models (DSIR bucket model, NB quality
-      classifier) re-aggregate over `merged` — O(corpus) scans but cheap
-      single-pass aggregations with no joins/windows, the sanctioned
-      full-rebuild remainder.
-
-    Between refreshes the union lineage deepens; the persisted
-    `gate_index_root` artifacts (maintained by
-    `publish_gate_index_increment` — per-relation APPEND commits, never a
-    full republish) are the production cut-point a restarted job reads
-    back flat. Pass `deltas` (a `_gate_index_deltas` result) when the
-    caller also publishes — computing them once halves the refresh."""
-    inc, small = (
-        deltas
-        if deltas is not None
-        else _gate_index_deltas(old, increment, merged, split)
-    )
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-
-    old_sets, old_prefix, dfreq = old["prefix_index"]
-    return {
-        "prefix_index": (
-            engine_cache(old_sets.unionByName(inc["prefix_sets"])),
-            engine_cache(old_prefix.unionByName(inc["prefix_prefixes"])),
-            dfreq,
-        ),
-        "gram_index": engine_cache(
-            old["gram_index"].unionByName(inc["gram_index"])
-        ),
-        "image_index": engine_cache(
-            old["image_index"].unionByName(inc["image_index"])
-        ),
-        "audio_index": engine_cache(
-            old["audio_index"].unionByName(inc["audio_index"])
-        ),
-        "video_index": engine_cache(
-            old["video_index"].unionByName(inc["video_index"])
-        ),
-        **{k: engine_cache(v) for k, v in small.items()},
-    }
-
-
-def _gate_index_deltas(
-    old: Mapping[str, object],
-    increment: DataFrame,
-    merged: DataFrame,
-    split: int,
-) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-    """The refresh's two row-sets: (increment-side relations to APPEND,
-    small relations rebuilt whole). The append side is O(increment)
-    compute; the rebuild side is the gram Bloom fold (one pass over the
-    novel grams) plus the two dense models (single-pass aggregations over
-    `merged`)."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.bloom import bloom_add
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        nb_quality_model,
-        quality_labels,
-    )
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        _batch_prefix,
-    )
-    from clinical_search_data_pipeline_spark.operators.dedup import (
-        shingle_sets,
-    )
-    from clinical_search_data_pipeline_spark.operators.fragments import (
-        JACCARD_THRESHOLD,
-        SHINGLE_K,
-    )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        dsir_model,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-    )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        corpus_gram_index,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        video_neardup_fingerprints,
-    )
-
-    _, _, dfreq = old["prefix_index"]
-    inc_sets = engine_cache(
-        shingle_sets(increment, SHINGLE_K).hint("rebalance")
-    )
-    # novel grams = increment grams minus the old index, WITHOUT shuffling
-    # the O(corpus) index: the gram Bloom screens the increment down to
-    # possibly-known grams first (no false negatives), the old index is
-    # then SCANNED once against that broadcast set (no shuffle), and the
-    # confirmed members broadcast back out of the anti-join.
-    from clinical_search_data_pipeline_spark.operators.bloom import (
-        bloom_probe,
-    )
-
-    inc_grams = corpus_gram_index(increment)
-    maybe_known = bloom_probe(inc_grams, "gram", old["gram_bloom"])
-    confirmed = old["gram_index"].join(
-        F.broadcast(maybe_known), "gram", "left_semi"
-    )
-    novel_grams = engine_cache(
-        inc_grams.join(F.broadcast(confirmed), "gram", "left_anti")
-    )
-    inc = {
-        "prefix_sets": inc_sets,
-        "prefix_prefixes": _batch_prefix(inc_sets, dfreq, JACCARD_THRESHOLD),
-        "gram_index": novel_grams,
-        "image_index": dhash_neardup_images(increment, wrap_base=split),
-        "audio_index": audio_neardup_fingerprints(increment, wrap_base=split),
-        "video_index": video_neardup_fingerprints(increment, wrap_base=split
-        ),
-    }
-    small = {
-        "gram_bloom": bloom_add(old["gram_bloom"], novel_grams, "gram"),
-        "lr_model": dsir_model(merged),
-        "clf_model": nb_quality_model(quality_labels(merged)),
-    }
-    return inc, small
-
-
 _LAKE_WATERMARK = "__corpus_lake_version__"  # meta-pin sentinel row: the
 #                   admitted-lake version the artifacts have folded in —
 #                   what makes a RESTARTED incremental job resume from the
@@ -1108,75 +818,173 @@ _CORPUS_PIN = "__corpus_table_version__"  # meta-pin sentinel row: the
 #                   crashed rows instead of duplicating doc_ids (ADVICE r11)
 
 
-def publish_gate_index_increment(
+def _publish_gate_meta(
     spark: SparkSession,
     root: str,
-    old: Mapping[str, object],
+    versions: dict[str, int],
+    expected_parent=manifest_sink._UNSET,
+) -> int:
+    rows = [(t, versions[t]) for t in GATE_INDEX_TABLES]
+    rows += [
+        (s, versions[s]) for s in (_LAKE_WATERMARK, _CORPUS_PIN) if s in versions
+    ]
+    return manifest_sink.write_snapshot(
+        spark.createDataFrame(rows, "table string, version int"),
+        f"{root}/{_GATE_META}",
+        mode="overwrite",
+        expected_parent=expected_parent,
+    )
+
+
+def write_gate_indexes(idx: Mapping[str, DataFrame], root: str) -> dict[str, int]:
+    """Publish the gate indexes under `root`; returns {table: version}
+    including the meta pin (committed last — readers resolving mid-publish
+    keep the previous complete view)."""
+    versions = {
+        t: manifest_sink.write_snapshot(idx[t], f"{root}/{t}", mode="overwrite")
+        for t in GATE_INDEX_TABLES
+    }
+    spark = idx[GATE_INDEX_TABLES[0]].sparkSession
+    versions[_GATE_META] = _publish_gate_meta(spark, root, versions)
+    return versions
+
+
+def _gate_meta(spark: SparkSession, root: str) -> tuple[int, dict[str, int]]:
+    """(meta version, its {table: version} pins), resolved at ONE pinned
+    meta commit (version lookup + pinned read — never two unpinned reads
+    that could straddle a concurrent refresh)."""
+    meta_v = manifest_sink.latest_version(f"{root}/{_GATE_META}")
+    pins = manifest_sink.read_snapshot(
+        spark, f"{root}/{_GATE_META}", version=meta_v
+    )
+    return meta_v, {r.table: r.version for r in pins.collect()}
+
+
+def gate_meta_versions(spark: SparkSession, root: str) -> dict[str, int]:
+    """The meta pin's {table: version} map, sentinel rows included."""
+    return _gate_meta(spark, root)[1]
+
+
+def read_gate_indexes(
+    spark: SparkSession, root: str, versions: dict[str, int] | None = None
+) -> dict[str, DataFrame]:
+    """Resolve the committed gate indexes through the meta pin; each
+    relation is engine-cached (the job probes them per micro-batch).
+    Pass `versions` (a `gate_meta_versions` result) when the caller also
+    needs the watermark pins — resolving once keeps indexes and
+    watermarks on the SAME commit."""
+    if versions is None:
+        versions = gate_meta_versions(spark, root)
+    return {
+        t: engine_cache(
+            manifest_sink.read_snapshot(spark, f"{root}/{t}", version=versions[t])
+        )
+        for t in GATE_INDEX_TABLES
+    }
+
+
+def gate_indexes_published(root: str) -> bool:
+    try:
+        manifest_sink.latest_version(f"{root}/{_GATE_META}")
+    except FileNotFoundError:
+        return False
+    return True
+
+
+def build_gate_indexes(corpus_df: DataFrame, split: int) -> dict[str, DataFrame]:
+    """Every gate's index from scratch over a standing corpus — the
+    one-time (or re-baseline) O(corpus) derivation every micro-batch then
+    probes. `split` is the media wrap base (fixture geometry)."""
+    return {t: df for g in GATES for t, df in g.build(corpus_df, split).items()}
+
+
+def gate_index_deltas(
+    old: Mapping[str, DataFrame],
     increment: DataFrame,
     merged: DataFrame,
     split: int,
-    deltas: tuple[dict, dict] | None = None,
+) -> dict[str, tuple[DataFrame, str]]:
+    """Every gate's refresh row-sets, {table: (rows, "append" |
+    "overwrite")}; tables absent are carried unchanged. The append side is
+    O(increment) compute, the overwrite side small by construction (the
+    reasons live with each gate's `delta`, operators/gates.py)."""
+    return {
+        t: d
+        for g in GATES
+        for t, d in g.delta(old, increment, merged, split).items()
+    }
+
+
+def update_gate_indexes(
+    old: Mapping[str, DataFrame],
+    increment: DataFrame,
+    merged: DataFrame,
+    split: int,
+    deltas: Mapping[str, tuple[DataFrame, str]] | None = None,
+) -> dict[str, DataFrame]:
+    """Fold an admitted INCREMENT into the gate indexes in O(increment) —
+    VERDICT r9 #2: the refresh cadence no longer re-derives O(corpus)
+    state. Appended rows union into the old relation, overwritten ones
+    replace it; verdicts match a full rebuild (pytest-pinned).
+
+    Between refreshes the union lineage deepens; the persisted
+    `gate_index_root` artifacts (maintained by
+    `publish_gate_index_increment` — per-relation APPEND commits, never a
+    full republish) are the production cut-point a restarted job reads
+    back flat. Pass `deltas` (a `gate_index_deltas` result) when the
+    caller also publishes — computing them once halves the refresh."""
+    if deltas is None:
+        deltas = gate_index_deltas(old, increment, merged, split)
+    new = dict(old)
+    for t, (df, mode) in deltas.items():
+        new[t] = engine_cache(old[t].unionByName(df) if mode == APPEND else df)
+    return new
+
+
+def publish_gate_index_increment(
+    spark: SparkSession,
+    root: str,
+    old: Mapping[str, DataFrame],
+    increment: DataFrame,
+    merged: DataFrame,
+    split: int,
+    deltas: Mapping[str, tuple[DataFrame, str]] | None = None,
     lake_version: int | None = None,
     corpus_version: int | None = None,
 ) -> dict[str, int]:
-    """Incremental refresh of the PERSISTED gate artifacts: the six
-    increment-side relations commit as APPENDs folding in the meta-pinned
-    base version (the `add_to_ann_index` discipline — a crashed or
-    race-losing refresh's rows are never folded forward), the Bloom/model
-    relations overwrite (they are small by construction), `prefix_dfreq`
-    carries its pinned version UNTOUCHED (the frozen prefix order), and a
-    fresh meta pin lands LAST with `expected_parent` CAS. Data written
-    per refresh is O(increment + small models), not O(corpus) — the
-    production cadence VERDICT r9 #2 asked for.
+    """Incremental refresh of the PERSISTED gate artifacts: the appended
+    relations commit as APPENDs folding in the meta-pinned base version
+    (the `add_to_ann_index` discipline — a crashed or race-losing
+    refresh's rows are never folded forward), the overwritten ones (small
+    by construction) replace theirs, a carried relation such as
+    `prefix_dfreq` keeps its pinned version UNTOUCHED (the frozen prefix
+    order), and a fresh meta pin lands LAST with `expected_parent` CAS.
+    Data written per refresh is O(increment + small models), not
+    O(corpus) — the production cadence VERDICT r9 #2 asked for.
 
     `lake_version` records the admitted-lake tip these artifacts now
     reflect (a sentinel pin row); a restarted job reads it back via
     `gate_index_lake_version` and resumes the change feed from there.
-    `deltas` (a `_gate_index_deltas` result) avoids recomputing the
+    `deltas` (a `gate_index_deltas` result) avoids recomputing the
     increment when the caller also updates the in-memory indexes."""
-    from clinical_search_data_pipeline_spark.sinks.manifest import (
-        read_snapshot,
-        snapshots,
-        write_snapshot,
-    )
-
-    # resolve the pin version ONCE and read the pins AT that version — an
-    # unpinned read plus a separate tip lookup could straddle a concurrent
-    # commit, CAS-ing against a tip whose pins were never read (the same
-    # two-reads race mart_load_job fixed; ADVICE r10)
-    meta_version = snapshots(f"{root}/{_GATE_META}")[-1]["version"]
-    pins = read_snapshot(spark, f"{root}/{_GATE_META}", version=meta_version)
-    versions = {r.table: r.version for r in pins.collect()}
-    inc, small = (
-        deltas
-        if deltas is not None
-        else _gate_index_deltas(old, increment, merged, split)
-    )
-    for name, df in inc.items():
-        versions[name] = write_snapshot(
-            df, f"{root}/{name}", mode="append",
-            base_version=versions[name],
-        )
-    for name, df in small.items():
-        versions[name] = write_snapshot(
-            df, f"{root}/{name}", mode="overwrite"
+    # the CAS parent and the base versions come from ONE pinned resolution
+    # — an unpinned read plus a separate tip lookup could straddle a
+    # concurrent commit, CAS-ing against a tip whose pins were never read
+    # (the same two-reads race mart_load_job fixed; ADVICE r10)
+    meta_version, versions = _gate_meta(spark, root)
+    if deltas is None:
+        deltas = gate_index_deltas(old, increment, merged, split)
+    for t, (df, mode) in deltas.items():
+        versions[t] = manifest_sink.write_snapshot(
+            df, f"{root}/{t}", mode=mode,
+            base_version=versions[t] if mode == APPEND else None,
         )
     if lake_version is not None:
         versions[_LAKE_WATERMARK] = lake_version
     if corpus_version is not None:
         versions[_CORPUS_PIN] = corpus_version
-    pin_rows = [(t, versions[t]) for t in GATE_INDEX_TABLES]
-    for sentinel in (_LAKE_WATERMARK, _CORPUS_PIN):
-        if sentinel in versions:
-            pin_rows.append((sentinel, versions[sentinel]))
-    pins_df = pins.sparkSession.createDataFrame(
-        pin_rows, "table string, version int"
-    )
-    versions[_GATE_META] = write_snapshot(
-        pins_df,
-        f"{root}/{_GATE_META}",
-        mode="overwrite",
-        expected_parent=meta_version,
+    versions[_GATE_META] = _publish_gate_meta(
+        spark, root, versions, expected_parent=meta_version
     )
     return versions
 
@@ -1185,18 +993,31 @@ def gate_index_lake_version(spark: SparkSession, root: str) -> int:
     """The admitted-lake version the persisted gate artifacts reflect
     (0 when they were built from the base corpus alone) — the restart
     cut-point for `ingest_admission_job(incremental_refresh=True)`."""
-    pins = manifest_sink.read_snapshot(spark, f"{root}/{_GATE_META}")
-    row = pins.filter(F.col("table") == _LAKE_WATERMARK).collect()
-    return int(row[0].version) if row else 0
+    return int(gate_meta_versions(spark, root).get(_LAKE_WATERMARK, 0))
 
 
 def gate_index_corpus_version(spark: SparkSession, root: str) -> int | None:
     """The standing-corpus snapshot version the persisted gate artifacts
     reflect, or None for artifacts pinned before the corpus pin existed
     (callers fall back to the corpus table tip)."""
-    pins = manifest_sink.read_snapshot(spark, f"{root}/{_GATE_META}")
-    row = pins.filter(F.col("table") == _CORPUS_PIN).collect()
-    return int(row[0].version) if row else None
+    return gate_meta_versions(spark, root).get(_CORPUS_PIN)
+
+
+def _admission_verdicts(
+    batch: DataFrame, idx: Mapping[str, DataFrame], split: int
+) -> DataFrame:
+    """One verdict row per batch document: every gate's admission
+    projection joined on doc_id, and `admitted` only if every gate
+    passes."""
+    verdicts = None
+    admitted = None
+    for g in GATES:
+        cols = [F.col(c).alias(a) for c, a in g.admission]
+        v = g.verdict(batch, idx, split).select("doc_id", *cols)
+        verdicts = v if verdicts is None else verdicts.join(v, "doc_id")
+        ok = F.col(g.status) == g.passing
+        admitted = ok if admitted is None else admitted & ok
+    return verdicts.withColumn("admitted", admitted)
 
 
 def ingest_admission_job(
@@ -1211,16 +1032,14 @@ def ingest_admission_job(
     incremental_refresh: bool = False,
     expect: Mapping[str, object] | None = None,
 ) -> Mapping[str, int]:
-    """Ingest-time admission over a document stream: ALL SEVEN gates run
-    inside ONE foreachBatch — near-dup vs the standing corpus
-    (batch_vs_corpus), DSIR distribution scoring under the frozen bucket
-    model (dsir_score), substring-contamination screening vs the frozen
-    gram index (span_contamination), the learned naive-Bayes quality
-    classifier under its frozen dense model (quality_score), and the
-    perceptual IMAGE / AUDIO / VIDEO near-dup screens vs the frozen
-    corpus fingerprint indexes (image_vs_corpus over each document's
-    attached media — the banded-Hamming probe is modality-agnostic) —
-    joined on doc_id into a single verdict row per incoming document.
+    """Ingest-time admission over a document stream: ALL SEVEN gates of
+    operators/gates.GATES run inside ONE foreachBatch — text near-dup vs
+    the standing corpus, DSIR distribution scoring under the frozen bucket
+    model, substring-contamination screening vs the frozen gram index, the
+    learned naive-Bayes quality classifier under its frozen dense model,
+    and the perceptual IMAGE / AUDIO / VIDEO near-dup screens vs the
+    frozen corpus fingerprint indexes — joined on doc_id into a single
+    verdict row per incoming document.
 
     `out_dir` must not already exist: verdicts are appended per micro-batch
     and the summary is computed by reading the sink back, so replaying into
@@ -1280,32 +1099,10 @@ def ingest_admission_job(
     """
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
-        batch_vs_corpus,
-    )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        DSIR_GATE,
-        dsir_score,
-    )
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        quality_score,
-    )
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        AF_HAM_MAX,
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-        image_vs_corpus,
-    )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        span_contamination,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        VF_HAM_MAX,
-        video_neardup_fingerprints,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
     from clinical_search_data_pipeline_spark.streaming.stream_queries import (
+        run_staged_stream,
         stage_incremental_batch_source,
     )
 
@@ -1434,7 +1231,7 @@ def ingest_admission_job(
             merged = manifest_sink.read_snapshot(
                 spark, corpus_table, version=new_corpus
             )
-            deltas = _gate_index_deltas(old, increment, merged, split)
+            deltas = gate_index_deltas(old, increment, merged, split)
             state["idx"] = update_gate_indexes(
                 old, increment, merged, split, deltas=deltas
             )
@@ -1473,75 +1270,9 @@ def ingest_admission_job(
                     pass
 
     staging = staging_dir or stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
 
     def admit(batch_df: DataFrame, _batch_id: int) -> None:
-        idx = state["idx"]
-        dup = batch_vs_corpus(idx["prefix_index"], batch_df).select(
-            "doc_id", F.col("status").alias("dup_status"), "n_corpus_matches"
-        )
-        imp = dsir_score(batch_df, idx["lr_model"]).select(
-            "doc_id", "logw",
-            F.when(F.col("logw") >= DSIR_GATE, "admitted")
-            .otherwise("rejected").alias("dsir_status"),
-        )
-        span = span_contamination(
-            batch_df, idx["gram_index"], bloom=idx["gram_bloom"]
-        ).select(
-            "doc_id", "covered_words", "longest_run",
-            F.col("status").alias("span_status"),
-        )
-        qual = quality_score(batch_df, idx["clf_model"]).select(
-            "doc_id", F.col("logit").alias("quality_logit"),
-            F.col("status").alias("quality_status"),
-        )
-        img = image_vs_corpus(
-            idx["image_index"],
-            dhash_neardup_images(batch_df, wrap_base=split),
-            batch_docs=batch_df,
-        ).select(
-            "doc_id", F.col("n_corpus_matches").alias("n_image_matches"),
-            F.col("status").alias("image_status"),
-        )
-        aud = image_vs_corpus(
-            idx["audio_index"],
-            audio_neardup_fingerprints(batch_df, wrap_base=split),
-            ham_max=AF_HAM_MAX,
-            dup_status="dup_audio",
-            batch_docs=batch_df,
-        ).select(
-            "doc_id", F.col("n_corpus_matches").alias("n_audio_matches"),
-            F.col("status").alias("audio_status"),
-        )
-        vid = image_vs_corpus(
-            idx["video_index"],
-            video_neardup_fingerprints(batch_df, wrap_base=split),
-            ham_max=VF_HAM_MAX,
-            dup_status="dup_video",
-            batch_docs=batch_df,
-        ).select(
-            "doc_id", F.col("n_corpus_matches").alias("n_video_matches"),
-            F.col("status").alias("video_status"),
-        )
-        verdicts = (
-            dup.join(imp, "doc_id").join(span, "doc_id").join(qual, "doc_id")
-            .join(img, "doc_id").join(aud, "doc_id").join(vid, "doc_id")
-            .withColumn(
-                "admitted",
-                (F.col("dup_status") == "admitted")
-                & (F.col("dsir_status") == "admitted")
-                & (F.col("span_status") == "clean")
-                & (F.col("quality_status") == "admitted")
-                & (F.col("image_status") == "admitted")
-                & (F.col("audio_status") == "admitted")
-                & (F.col("video_status") == "admitted"),
-            )
-        )
+        verdicts = _admission_verdicts(batch_df, state["idx"], split)
         if snapshot_table is None:
             verdicts.write.mode("append").parquet(out_dir)
             return
@@ -1552,7 +1283,7 @@ def ingest_admission_job(
             verdicts.write.mode("append").parquet(out_dir)
             admitted = batch_df.join(
                 verdicts.filter("admitted").select("doc_id"), "doc_id"
-            ).select(*(f.name for f in schema.fields))
+            ).select(*batch_df.columns)
             if admitted.limit(1).count() > 0:
                 # `expect` gates the lake publish itself (VERDICT r11 #5
                 # integrated into the reference ingest path): rows that
@@ -1572,7 +1303,7 @@ def ingest_admission_job(
         if refresh_every is not None and state["batches"] % refresh_every == 0:
             refresh_indexes()
 
-    run_foreach_batch(stream, admit, shuffle_partitions=8)
+    run_staged_stream(spark, staging, admit)
     if not pathlib.Path(out_dir).exists():
         # zero micro-batches fired (empty staging source): nothing was
         # appended, so there is no sink to read back

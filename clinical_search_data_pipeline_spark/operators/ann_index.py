@@ -114,9 +114,10 @@ PQ_CODEBOOK_BASE = 200  # deterministic codebooks: unit vecs 200..231, sliced
 # one-round trained PQ codebook, with the ADC loss compounded — the
 # persisted index scores 12/40 vs the all-seed index's 7/40 at sf0.1
 # and 10/40 vs 6/40 at sf0.01 (ANN_RECALL.md ivfadc_trained_index row;
-# the sf0.001 row sits at its seed baseline — 250 vectors over 8 cells
-# is too small for Lloyd means to help, the same quirk ivf_p1_lloyd1
-# shows). Two coarse rounds buy most of the converged uplift while
+# the sf0.001 row sits at its seed baseline, the same quirk
+# ivf_p1_lloyd1 shows: a property of that fixture's 500 vectors, not of
+# its size — sf0.01 holds 500 different vectors and gains). Two coarse
+# rounds buy most of the converged uplift while
 # keeping the cross-engine oracle two unrolled CTEs deep. Fixed rounds,
 # not early-stopped: see trained_quantizer.
 ANN_TRAIN_ROUNDS = 2

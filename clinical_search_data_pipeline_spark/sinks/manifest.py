@@ -170,22 +170,37 @@ def quarantine_table(table: str) -> str:
     return table + QUARANTINE_SUFFIX
 
 
+def _predicates(param: str, preds: dict | None) -> dict:
+    """{name: Column} for an `expect`/`expect_agg` mapping, or ValueError
+    naming the contract — checked once, before anything runs."""
+    from pyspark.sql import Column
+
+    out = {}
+    for name, p in (preds or {}).items():
+        if not isinstance(p, (str, Column)):
+            raise ValueError(
+                f"write_snapshot {param}[{name!r}] must be a SQL string or "
+                f"a Column, got {type(p).__name__}"
+            )
+        out[name] = F.expr(p) if isinstance(p, str) else p
+    return out
+
+
 def _enforce_agg_expectations(
     df: DataFrame, table: str, expect_agg: dict
 ) -> dict[str, int]:
-    """Table-level expectations: each value is a boolean AGGREGATE over
-    the publishing frame (`count(DISTINCT k) = count(k)`, `count(*) >=
-    100`, ...). All evaluate in ONE aggregation; any false/NULL refuses
-    the publish (`ExpectationViolation`; nothing staged). Returns
-    {name: 0} for the manifest — the recorded zero is the evidence the
-    gate ran and held."""
-    from pyspark.sql import Column
-
-    aggs = []
-    for name, p in expect_agg.items():
-        col = F.expr(p) if isinstance(p, str) else p
-        assert isinstance(col, Column)
-        aggs.append(F.coalesce(col, F.lit(False)).alias(name))
+    """Table-level expectations: each value is a boolean AGGREGATE Column
+    over the publishing frame (`count(DISTINCT k) = count(k)`, `count(*)
+    >= 100`, ...). All evaluate in ONE exact aggregation — a collected
+    result row, which task retries cannot inflate the way they can the
+    accumulators behind observed metrics; any false/NULL refuses the
+    publish (`ExpectationViolation`; nothing staged). Returns {name: 0}
+    for the manifest — the recorded zero is the evidence the gate ran and
+    held."""
+    aggs = [
+        F.coalesce(col, F.lit(False)).alias(name)
+        for name, col in expect_agg.items()
+    ]
     row = df.agg(*aggs).collect()[0]
     failed = {name: 1 for name in expect_agg if not row[name]}
     if failed:
@@ -207,10 +222,10 @@ def _enforce_expectations(
     and nothing commits — the previous version stays live. On
     write_snapshot's observed-metrics path the data IS staged first (the
     gate metrics ride the staged write) and the stage directory is
-    deleted before the raise; only this pinned fallback (reached when
-    CollectMetrics rejects a gate) raises before staging. A crash between
-    staging and the delete leaves an unreferenced stage directory that
-    readers never see and `vacuum` reclaims.
+    deleted before the raise; this pinned path (taken with table-level
+    gates, or when CollectMetrics rejects a gate) raises before staging.
+    A crash between staging and the delete leaves an unreferenced stage
+    directory that readers never see and `vacuum` reclaims.
     ``'quarantine'``: violating rows are appended to the sibling
     ``<table>__quarantine`` snapshot table (with a `_violations` array
     naming the failed expectations and a `_quarantined_at` stamp), the
@@ -225,10 +240,10 @@ def _enforce_expectations(
 
     if on_violation not in ("fail", "quarantine"):
         raise ValueError(f"unknown on_violation: {on_violation!r}")
-    preds: dict[str, Column] = {}
-    for name, p in expect.items():
-        col = F.expr(p) if isinstance(p, str) else p
-        preds[name] = F.coalesce(col, F.lit(False))  # NULL -> violation
+    preds: dict[str, Column] = {
+        name: F.coalesce(col, F.lit(False))  # NULL -> violation
+        for name, col in expect.items()
+    }
     counts_row = df.agg(
         *[
             F.coalesce(
@@ -742,11 +757,18 @@ def write_snapshot(
     aggregate (SQL string or Column), e.g. ``"count(*) > 0"`` or the
     key-uniqueness gate ``"count(DISTINCT k) = count(k)"`` — the
     replication precondition `net_changes` enforces downstream, checked
-    at the source instead. Evaluated in ONE aggregation over the
-    (row-gated) frame; false or NULL refuses the publish outright —
-    there is no quarantine for a table-level property, so these fail
-    even under ``on_violation='quarantine'``. Recorded in the manifest
-    as 0 (held) per name."""
+    at the source instead. Decided EXACTLY, before anything is staged:
+    one collected aggregation over the pinned (row-gated) frame
+    (`_enforce_agg_expectations`), never observed metrics, whose
+    accumulators stage retries or speculative tasks can inflate into a
+    false pass. False or NULL refuses the publish outright — there is no
+    quarantine for a table-level property, so these fail even under
+    ``on_violation='quarantine'``. Recorded in the manifest as 0 (held)
+    per name. Row-level ``expect`` gates alone ride the write as observed
+    metrics: an inflated violation count can only fail closed.
+
+    Every ``expect``/``expect_agg`` value must be a SQL string or a
+    Column; anything else raises ValueError before any work."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unsupported snapshot mode: {mode}")
     if base_version is not None and mode != "append":
@@ -758,63 +780,58 @@ def write_snapshot(
     expectation_counts: dict[str, int] | None = None
     gated = None
     observation = None
-    if expect or expect_agg:
-        if on_violation not in ("fail", "quarantine"):
-            raise ValueError(f"unknown on_violation: {on_violation!r}")
+    expect = _predicates("expect", expect)
+    expect_agg = _predicates("expect_agg", expect_agg)
+    if (expect or expect_agg) and on_violation not in ("fail", "quarantine"):
+        raise ValueError(f"unknown on_violation: {on_violation!r}")
+    if expect and not expect_agg:
         # Fast path (guide §2.6/§5: fold the gate into the write action):
-        # expectation predicates ride the staged write itself as observed
+        # row-level predicates ride the staged write itself as observed
         # metrics (`DataFrame.observe` / CollectMetrics), so the common
-        # all-pass publish pays ZERO extra actions — previously every gated
-        # publish ran persist + a counts aggregation (+ a second aggregation
-        # for table-level gates) before the write. The metrics are computed
-        # on EXACTLY the rows the write staged (stronger than the persist
-        # pinning this replaces — code review r12's nondeterministic-lineage
-        # concern). On violation the staged directory — never visible to
-        # readers, the manifest link has not landed — is deleted before the
-        # gate raises or falls back to the quarantine split below.
+        # all-pass publish pays ZERO extra actions. The metrics are computed
+        # on EXACTLY the rows the write staged (code review r12's
+        # nondeterministic-lineage concern), and a retried task can only
+        # inflate a violation count, which fails closed. On violation the
+        # staged directory — never visible to readers, the manifest link
+        # has not landed — is deleted before the gate raises or falls back
+        # to the quarantine split below.
         try:
-            from pyspark.sql import Column, Observation
+            from pyspark.sql import Observation
 
-            metrics = []
-            for name, p in (expect or {}).items():
-                col = F.expr(p) if isinstance(p, str) else p
-                assert isinstance(col, Column)
-                pred = F.coalesce(col, F.lit(False))  # NULL -> violation
-                metrics.append(
-                    F.coalesce(F.sum((~pred).cast("long")), F.lit(0)).alias(
-                        f"row::{name}"
-                    )
-                )
-            for name, p in (expect_agg or {}).items():
-                col = F.expr(p) if isinstance(p, str) else p
-                assert isinstance(col, Column)
-                metrics.append(
-                    F.coalesce(col, F.lit(False)).alias(f"agg::{name}")
-                )
             observation = Observation()
-            df = df.observe(observation, *metrics)
+            df = df.observe(
+                observation,
+                *[
+                    F.coalesce(
+                        F.sum((~F.coalesce(col, F.lit(False))).cast("long")),
+                        F.lit(0),
+                    ).alias(name)
+                    for name, col in expect.items()
+                ],
+            )
         except Exception:
-            # CollectMetrics rejects some shapes (e.g. DISTINCT aggregates
-            # in table-level gates) at analysis time — fall back to the
-            # pinned two-action gate, identical semantics.
+            # CollectMetrics rejects some shapes at analysis time — take
+            # the pinned path below, identical semantics
             observation = None
-            gated = df.persist()
-            try:
-                expectation_counts = {}
-                if expect:
-                    df, row_counts = _enforce_expectations(
-                        gated, table, expect, on_violation
-                    )
-                    expectation_counts.update(row_counts)
-                if expect_agg:
-                    # table-level gates see the frame that will PUBLISH (the
-                    # row-gated survivors under quarantine mode)
-                    expectation_counts.update(
-                        _enforce_agg_expectations(df, table, expect_agg)
-                    )
-            except BaseException:
-                gated.unpersist()
-                raise
+    if (expect or expect_agg) and observation is None:
+        # pinned path: the row gate, then the exact table-level gate over
+        # the frame that will PUBLISH (the row-gated survivors under
+        # quarantine mode), all before staging
+        gated = df.persist()
+        try:
+            expectation_counts = {}
+            if expect:
+                df, row_counts = _enforce_expectations(
+                    gated, table, expect, on_violation
+                )
+                expectation_counts.update(row_counts)
+            if expect_agg:
+                expectation_counts.update(
+                    _enforce_agg_expectations(df, table, expect_agg)
+                )
+        except BaseException:
+            gated.unpersist()
+            raise
     # Stage data under a writer-unique name first: the snapshot version is
     # only decided at commit time, so two racing writers never write into
     # the same directory.
@@ -834,12 +851,7 @@ def write_snapshot(
             gated.unpersist()
     if observation is not None:
         got = observation.get  # blocks on the write action just executed
-        row_counts = {
-            name: int(got[f"row::{name}"]) for name in (expect or {})
-        }
-        agg_failed = {
-            name: 1 for name in (expect_agg or {}) if not got[f"agg::{name}"]
-        }
+        row_counts = {name: int(got[name]) for name in expect}
         if any(row_counts.values()):
             shutil.rmtree(stage_dir, ignore_errors=True)
             if on_violation == "fail":
@@ -852,16 +864,10 @@ def write_snapshot(
                 df, row_counts = _enforce_expectations(
                     gated, table, expect, on_violation
                 )
-                if expect_agg:
-                    _enforce_agg_expectations(df, table, expect_agg)
                 _write_stage(df)
             finally:
                 gated.unpersist()
-        elif agg_failed:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            raise ExpectationViolation(table, agg_failed)
-        expectation_counts = dict(row_counts)
-        expectation_counts.update({name: 0 for name in (expect_agg or {})})
+        expectation_counts = row_counts
     new_entries = []
     for rel in _list_part_files(stage_dir):
         rows, stats = (

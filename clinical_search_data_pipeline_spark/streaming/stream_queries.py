@@ -559,6 +559,58 @@ def stage_incremental_batch_source(spark: SparkSession, sf_dir: str, n_files: in
     return staging
 
 
+
+def run_staged_stream(spark: SparkSession, staging: str, process) -> None:
+    """The one micro-batch driver of the admission path: a file-streaming
+    scan of the parquet `staging` dir (schema from its footers), one file
+    per micro-batch (maxFilesPerTrigger=1, so a multi-file staging dir
+    genuinely runs MULTIPLE micro-batches), each handed to
+    `process(batch_df, batch_id)` inside foreachBatch, run to completion."""
+    from clinical_search_data_pipeline_spark.streaming.runner import (
+        run_foreach_batch,
+    )
+
+    schema = spark.read.parquet(staging).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staging)
+    )
+    run_foreach_batch(stream, process, shuffle_partitions=8)
+
+
+def screen_stream(spark: SparkSession, sf_dir: str, gate: str) -> DataFrame:
+    """One admission gate (operators/gates.GATE[gate]) as a streaming
+    query: its index is built ONCE over the standing corpus (doc_id <
+    INCREMENT_SPLIT) as a static side, the batch partition streams in over
+    several micro-batches, and each micro-batch's verdicts append to the
+    sink — how a 100 TB pipeline admits deltas without re-pairing the
+    corpus against itself. Verdicts are micro-batch-invariant, so the
+    accumulated sink equals the one-shot batch run. Each verdict frame is
+    linted right before its write (plans/introspect.collect_stream_lint:
+    the linted plan IS the executed plan)."""
+    from clinical_search_data_pipeline_spark.operators.curation import (
+        INCREMENT_SPLIT,
+    )
+    from clinical_search_data_pipeline_spark.operators.gates import GATE
+    from clinical_search_data_pipeline_spark.sources.readers import read_table
+
+    g = GATE[gate]
+    apply_runtime_confs(spark)
+    corpus = read_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < INCREMENT_SPLIT
+    )
+    idx = g.build(corpus, INCREMENT_SPLIT)
+    out_dir = tempfile.mkdtemp(prefix=f"csdp_{gate}_gate_out_")
+
+    def screen(batch_df: DataFrame, _batch_id: int) -> None:
+        verdicts = g.verdict(batch_df, idx, INCREMENT_SPLIT)
+        collect_stream_lint(verdicts)
+        verdicts.write.mode("append").parquet(out_dir)
+
+    run_staged_stream(spark, stage_incremental_batch_source(spark, sf_dir), screen)
+    return spark.read.parquet(out_dir)
+
 def _stream_incremental_oracle() -> str:
     # The micro-batch-invariant half of q_incremental_dedup's contract:
     # each batch doc judged against the FROZEN corpus only (operators/
@@ -609,38 +661,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-pairing the corpus against itself. Per-doc verdicts are
     micro-batch-invariant (see batch_vs_corpus), so the accumulated result
     equals the one-shot batch run and the query is fully oracled."""
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-        batch_vs_corpus,
-        corpus_prefix_index,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    index = corpus_prefix_index(corpus)
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix="csdp_incr_out_")
-
-    def admit(batch_df: DataFrame, _batch_id: int) -> None:
-        verdicts = batch_vs_corpus(index, batch_df)
-        collect_stream_lint(verdicts)
-        verdicts.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, admit, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
+    return screen_stream(spark, sf_dir, "dup")
 
 
 # ---------------------------------------------------------------------------
@@ -717,45 +738,7 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     only on itself and the frozen model, so the accumulated sink equals
     the one-shot batch scoring and the query is fully hash-oracled —
     the importance-resampling twin of q_stream_incremental_dedup."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        DSIR_GATE,
-        dsir_model,
-        dsir_score,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    lr = engine_cache(dsir_model(corpus))
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix="csdp_dsir_out_")
-
-    def admit(batch_df: DataFrame, _batch_id: int) -> None:
-        scored = dsir_score(batch_df, lr).withColumn(
-            "status",
-            F.when(F.col("logw") >= DSIR_GATE, "admitted").otherwise("rejected"),
-        )
-        collect_stream_lint(scored)
-        scored.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, admit, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
+    return screen_stream(spark, sf_dir, "dsir")
 
 
 # ---------------------------------------------------------------------------
@@ -845,43 +828,7 @@ def q_stream_span_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spans.corpus_gram_bloom): definitely-novel batch grams never reach
     the gram-keyed shuffle. Output is bit-identical (exact join verifies
     every Bloom survivor), so the oracle is unchanged."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        corpus_gram_bloom,
-        corpus_gram_index,
-        span_contamination,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    index = engine_cache(corpus_gram_index(corpus))
-    bloom = engine_cache(corpus_gram_bloom(index))
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix="csdp_spangate_out_")
-
-    def screen(batch_df: DataFrame, _batch_id: int) -> None:
-        verdicts = span_contamination(batch_df, index, bloom=bloom)
-        collect_stream_lint(verdicts)
-        verdicts.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, screen, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
+    return screen_stream(spark, sf_dir, "span")
 
 
 @register(
@@ -908,25 +855,19 @@ def q_span_gate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
     )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        corpus_gram_bloom,
-        corpus_gram_index,
-        span_contamination,
-    )
+    from clinical_search_data_pipeline_spark.operators.gates import GATE
     from clinical_search_data_pipeline_spark.sources.readers import read_table
 
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < INCREMENT_SPLIT)
     batch = docs.filter(F.col("doc_id") >= INCREMENT_SPLIT)
-    # cache the gram index like the streaming twin does: it is a SHUFFLED
-    # intermediate (gram explode + distinct) with THREE consumers — the
-    # bloom self-sizing count (its own action), the bloom bitset build,
-    # and the exact verify join — so without the cache the distinct
-    # shuffle executes up to three times per run
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-
-    index = engine_cache(corpus_gram_index(corpus))
-    return span_contamination(batch, index, bloom=corpus_gram_bloom(index))
+    # the gate caches the gram index: it is a SHUFFLED intermediate (gram
+    # explode + distinct) with THREE consumers — the bloom self-sizing
+    # count (its own action), the bloom bitset build, and the exact verify
+    # join — so without the cache the distinct shuffle runs up to three
+    # times per run
+    span = GATE["span"]
+    return span.verdict(batch, span.build(corpus, INCREMENT_SPLIT), INCREMENT_SPLIT)
 
 
 # ---------------------------------------------------------------------------
@@ -965,42 +906,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholded inside foreachBatch. The FOURTH admission gate: near-dup,
     distribution (DSIR), verbatim spans, and now learned quality. Scores
     are micro-batch-invariant, fully hash-oracled."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        nb_quality_model,
-        quality_labels,
-        quality_score,
-    )
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    model = engine_cache(nb_quality_model(quality_labels(corpus)))
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix="csdp_qualgate_out_")
-
-    def score(batch_df: DataFrame, _batch_id: int) -> None:
-        scored = quality_score(batch_df, model)
-        collect_stream_lint(scored)
-        scored.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, score, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
+    return screen_stream(spark, sf_dir, "quality")
 
 
 # ---------------------------------------------------------------------------
@@ -1063,59 +969,7 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus leaders via the wrap_base planting, so the gate has real
     cross-split duplicates to catch; verdicts are micro-batch-invariant
     and fully hash-oracled."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-        image_vs_corpus,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    corpus_hashes = engine_cache(
-        dhash_neardup_images(corpus, wrap_base=INCREMENT_SPLIT)
-    )
-    # materialize the frozen index BEFORE the stream starts: the first
-    # micro-batch must not pay the corpus decode+hash build (the index
-    # build is an offline step in production; the scale bench times it
-    # separately from the per-batch screen for the same reason)
-    corpus_hashes.count()
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix="csdp_imggate_out_")
-
-    def screen(batch_df: DataFrame, _batch_id: int) -> None:
-        # ONE job per micro-batch (guide §2.4): image_vs_corpus consumes
-        # the batch hash relation exactly once, so the decode+hash stays
-        # LAZY inside the verdict write action — the former per-batch
-        # localCheckpoint (a second job whose only purpose was to pin the
-        # thrice-referenced batch hashes) is gone; the all-docs universe
-        # comes from the raw batch's doc_ids (no decode).
-        batch_hashes = dhash_neardup_images(
-            batch_df, wrap_base=INCREMENT_SPLIT
-        )
-        verdicts = image_vs_corpus(
-            corpus_hashes, batch_hashes, batch_docs=batch_df
-        )
-        collect_stream_lint(verdicts)
-        verdicts.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, screen, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
+    return screen_stream(spark, sf_dir, "image")
 
 
 # ---------------------------------------------------------------------------
@@ -1159,57 +1013,6 @@ WHERE d.doc_id >= {s}
 """
 
 
-def _run_fp_gate(
-    spark: SparkSession,
-    sf_dir: str,
-    corpus_fp: DataFrame,
-    batch_fp_fn,
-    ham_max: int,
-    dup_status: str,
-    out_prefix: str,
-) -> DataFrame:
-    """Shared driver for the fingerprint admission gates: materialize the
-    frozen corpus index BEFORE the stream (the index build is an offline
-    step in production), then per micro-batch decode+fingerprint in Arrow
-    batches and probe via band equi-join + bit_count verify — never
-    batch x corpus."""
-    from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.phash import image_vs_corpus
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
-    corpus_hashes = engine_cache(corpus_fp)
-    corpus_hashes.count()
-
-    staging = stage_incremental_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out_dir = tempfile.mkdtemp(prefix=out_prefix)
-
-    def screen(batch_df: DataFrame, _batch_id: int) -> None:
-        # one job per micro-batch — same restructure as the image gate:
-        # the fingerprint relation is consumed once inside the verdict
-        # write, no per-batch localCheckpoint job
-        batch_hashes = batch_fp_fn(batch_df)
-        verdicts = image_vs_corpus(
-            corpus_hashes,
-            batch_hashes,
-            ham_max=ham_max,
-            dup_status=dup_status,
-            batch_docs=batch_df,
-        )
-        collect_stream_lint(verdicts)
-        verdicts.write.mode("append").parquet(out_dir)
-
-    run_foreach_batch(stream, screen, shuffle_partitions=8)
-    return spark.read.parquet(out_dir)
-
-
 def _stream_audio_gate_oracle() -> str:
     from clinical_search_data_pipeline_spark.operators.audiofp import (
         AF_HAM_MAX,
@@ -1239,28 +1042,7 @@ def q_stream_audio_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference corpus leaders via wrap_base planting, so the gate has real
     cross-split duplicates to catch; verdicts are micro-batch-invariant
     and fully hash-oracled."""
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        AF_HAM_MAX,
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    return _run_fp_gate(
-        spark,
-        sf_dir,
-        audio_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
-        lambda b: audio_neardup_fingerprints(b, wrap_base=INCREMENT_SPLIT),
-        AF_HAM_MAX,
-        "dup_audio",
-        "csdp_audgate_out_",
-    )
+    return screen_stream(spark, sf_dir, "audio")
 
 
 def _stream_video_gate_oracle() -> str:
@@ -1290,28 +1072,7 @@ def q_stream_video_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-cached; each micro-batch is decoded + fingerprinted in Arrow
     batches and probed against the frozen band index. Cross-split planted
     copies via wrap_base; micro-batch-invariant, fully hash-oracled."""
-    from clinical_search_data_pipeline_spark.operators.curation import (
-        INCREMENT_SPLIT,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        VF_HAM_MAX,
-        video_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.sources.readers import read_table
-
-    apply_runtime_confs(spark)
-    corpus = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INCREMENT_SPLIT
-    )
-    return _run_fp_gate(
-        spark,
-        sf_dir,
-        video_neardup_fingerprints(corpus, wrap_base=INCREMENT_SPLIT),
-        lambda b: video_neardup_fingerprints(b, wrap_base=INCREMENT_SPLIT),
-        VF_HAM_MAX,
-        "dup_video",
-        "csdp_vidgate_out_",
-    )
+    return screen_stream(spark, sf_dir, "video")
 
 
 # ---------------------------------------------------------------------------
@@ -1437,9 +1198,6 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         vectors_with_norms,
     )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
-    from clinical_search_data_pipeline_spark.streaming.runner import (
-        run_foreach_batch,
-    )
 
     apply_runtime_confs(spark)
     corpus = read_table(spark, sf_dir, "embeddings").filter(
@@ -1462,13 +1220,6 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         fk, fv = pool.submit(corpus_keys.count), pool.submit(corpus_vecs.count)
         fk.result(), fv.result()
 
-    staging = stage_embedding_batch_source(spark, sf_dir)
-    schema = spark.read.parquet(staging).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
     out_dir = tempfile.mkdtemp(prefix="csdp_embgate_out_")
 
     def screen(batch_df: DataFrame, _batch_id: int) -> None:
@@ -1476,5 +1227,5 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         collect_stream_lint(verdicts)
         verdicts.write.mode("append").parquet(out_dir)
 
-    run_foreach_batch(stream, screen, shuffle_partitions=8)
+    run_staged_stream(spark, stage_embedding_batch_source(spark, sf_dir), screen)
     return spark.read.parquet(out_dir)

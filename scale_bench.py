@@ -620,31 +620,10 @@ def _timed_gate_index_lifecycle(
         read_gate_indexes,
         write_gate_indexes,
     )
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        AF_HAM_MAX,
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        quality_score,
-    )
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
-        batch_vs_corpus,
     )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        dsir_score,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-        image_vs_corpus,
-    )
-    from clinical_search_data_pipeline_spark.operators.spans import (
-        span_contamination,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        VF_HAM_MAX,
-        video_neardup_fingerprints,
-    )
+    from clinical_search_data_pipeline_spark.operators.gates import GATES
 
     split = INCREMENT_SPLIT
     docs_base = spark.read.parquet(f"{src}/documents.parquet")
@@ -656,39 +635,11 @@ def _timed_gate_index_lifecycle(
     )
 
     def _probe_all(b, idx):
-        frames = (
-            batch_vs_corpus(idx["prefix_index"], b),
-            dsir_score(b, idx["lr_model"]),
-            span_contamination(
-                b, idx["gram_index"], bloom=idx["gram_bloom"]
-            ),
-            quality_score(b, idx["clf_model"]),
-            image_vs_corpus(
-                idx["image_index"],
-                dhash_neardup_images(b, wrap_base=split),
-            ),
-            image_vs_corpus(
-                idx["audio_index"],
-                audio_neardup_fingerprints(b, wrap_base=split),
-                ham_max=AF_HAM_MAX,
-                dup_status="dup_audio",
-            ),
-            image_vs_corpus(
-                idx["video_index"],
-                video_neardup_fingerprints(b, wrap_base=split),
-                ham_max=VF_HAM_MAX,
-                dup_status="dup_video",
-            ),
-        )
-        for f in frames:
-            f.write.format("noop").mode("overwrite").save()
+        for g in GATES:
+            g.verdict(b, idx, split).write.format("noop").mode("overwrite").save()
 
     def _force(idx) -> int:
-        n = 0
-        for v in idx.values():
-            for part in v if isinstance(v, tuple) else (v,):
-                n += part.count()
-        return n
+        return sum(df.count() for df in idx.values())
 
     bvp: dict = {"increment_docs": 40}
     rfr: dict = {"increment_docs": 40}

@@ -62,3 +62,36 @@ def test_every_package_import_resolves():
         if not hasattr(mod, name) and not submodule:
             missing.append(f"{path}:{line}: from {module} import {name}")
     assert not missing, "\n".join(missing)
+
+
+GATE_VERDICT_PRIMITIVES = {
+    "batch_vs_corpus",
+    "dsir_score",
+    "span_contamination",
+    "quality_score",
+    "image_vs_corpus",
+}
+
+
+def test_only_the_gate_module_calls_gate_verdicts():
+    """Each admission gate's verdict is written once, in
+    operators/gates.py: no job or streaming module calls (or imports) a
+    gate verdict primitive, so a second copy of a gate cannot come back
+    unnoticed."""
+    found = []
+    for sub in ("jobs", "streaming"):
+        for path in sorted((REPO / PACKAGE / sub).rglob("*.py")):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            for node in ast.walk(tree):
+                names = []
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    names = [getattr(f, "id", None) or getattr(f, "attr", None)]
+                elif isinstance(node, ast.ImportFrom):
+                    names = [a.name for a in node.names]
+                for name in names:
+                    if name in GATE_VERDICT_PRIMITIVES:
+                        found.append(
+                            f"{path.relative_to(REPO)}:{node.lineno}: {name}"
+                        )
+    assert not found, "\n".join(found)

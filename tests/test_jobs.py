@@ -359,6 +359,25 @@ def test_ingest_admission_job_matches_oneshot_batch(spark, tmp_path):
         )
         for r in spark.read.parquet(out_dir).collect()
     }
+    assert spark.read.parquet(out_dir).dtypes == [
+        ("doc_id", "bigint"),
+        ("dup_status", "string"),
+        ("n_corpus_matches", "bigint"),
+        ("logw", "double"),
+        ("dsir_status", "string"),
+        ("covered_words", "bigint"),
+        ("longest_run", "int"),
+        ("span_status", "string"),
+        ("quality_logit", "double"),
+        ("quality_status", "string"),
+        ("n_image_matches", "bigint"),
+        ("image_status", "string"),
+        ("n_audio_matches", "bigint"),
+        ("audio_status", "string"),
+        ("n_video_matches", "bigint"),
+        ("video_status", "string"),
+        ("admitted", "boolean"),
+    ]
 
     docs = read_table(spark, SF_SMOKE, "documents")
     corpus = docs.filter(F.col("doc_id") < INCREMENT_SPLIT)

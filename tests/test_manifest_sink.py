@@ -812,6 +812,45 @@ def test_agg_expectations_gate_table_level_properties(spark, tmp_path):
     assert _ids(m.read_snapshot(spark, table)) == [0, 1, 2, 3, 4, 7, 8]
 
 
+@pytest.mark.parametrize("param", ["expect", "expect_agg"])
+def test_non_predicate_expectation_fails_loudly(spark, tmp_path, param):
+    """A predicate that is neither a SQL string nor a Column raises a
+    ValueError naming that contract before anything runs: no version, no
+    staged files."""
+    table = str(tmp_path / "t")
+    v = m.write_snapshot(_df(spark, 0, 3), table)
+    staged = os.listdir(os.path.join(table, "files"))
+    with pytest.raises(ValueError, match="a SQL string or a Column"):
+        m.write_snapshot(
+            _df(spark, 3, 5), table, mode="append", **{param: {"bad": 42}}
+        )
+    assert m.latest_version(table) == v
+    assert os.listdir(os.path.join(table, "files")) == staged
+
+
+def test_agg_expectation_is_decided_by_the_exact_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """A passing table-level gate is decided by `_enforce_agg_expectations`
+    (one collected aggregation before staging), never by observed metrics
+    that task retries could inflate."""
+    calls = []
+    exact = m._enforce_agg_expectations
+
+    def spy(df, table, expect_agg):
+        calls.append(sorted(expect_agg))
+        return exact(df, table, expect_agg)
+
+    monkeypatch.setattr(m, "_enforce_agg_expectations", spy)
+    table = str(tmp_path / "t")
+    v = m.write_snapshot(
+        _df(spark, 0, 3), table, expect_agg={"non_empty": "count(*) >= 1"}
+    )
+    assert calls == [["non_empty"]]
+    assert m._read_stored(table, v)["expectations"] == {"non_empty": 0}
+    assert _ids(m.read_snapshot(spark, table)) == [0, 1, 2]
+
+
 def test_concurrent_appends_single_winner_per_version(spark, tmp_path):
     """The delta log under real concurrency: racing threads appending to
     one table each win exactly one version (create-exclusive link +
