@@ -64,6 +64,7 @@ and oracle cannot drift.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -80,6 +81,7 @@ from clinical_search_data_pipeline_spark.operators.fragments import (
     _spark_dot,
 )
 from clinical_search_data_pipeline_spark.registry import register
+from clinical_search_data_pipeline_spark.session import run_concurrently
 from clinical_search_data_pipeline_spark.sinks import manifest
 from clinical_search_data_pipeline_spark.sources.readers import fan_out, read_table
 
@@ -545,14 +547,21 @@ def _sub_dists(v: str, norm: str) -> str:
     subvectors to the model's codewords — entry [m][j] is the
     `_spark_l2sq(su, cw)` that `pq_codes` and the ADC distance table
     compute, with su = slice(v / norm) exactly as `pq_subvectors` slices
-    it. `v` and `norm` must be columns
-    computed below a join: an inlined expression would be re-evaluated
-    inside every lambda call."""
-    su = f"transform(slice({v}, sub_m * {PQ_SUB} + 1, {PQ_SUB}), x -> x / {norm})"
-    return (
+    it. The PQ_M subvectors are sliced once per row and zipped with the
+    PQ_M codebook chunks. `v` and `norm` must be columns computed below a
+    join: an inlined expression would be re-evaluated inside every lambda
+    call."""
+    subs = (
         f"transform(sequence(0, {PQ_M - 1}), sub_m -> "
-        f"transform(slice(cb, sub_m * {PQ_K} + 1, {PQ_K}), cw -> "
-        f"{_spark_l2sq(su, 'cw')}))"
+        f"transform(slice({v}, sub_m * {PQ_SUB} + 1, {PQ_SUB}), x -> x / {norm}))"
+    )
+    chunks = (
+        f"transform(sequence(0, {PQ_M - 1}), sub_m -> "
+        f"slice(cb, sub_m * {PQ_K} + 1, {PQ_K}))"
+    )
+    return (
+        f"zip_with({subs}, {chunks}, (su, cws) -> "
+        f"transform(cws, cw -> {_spark_l2sq('su', 'cw')}))"
     )
 
 
@@ -623,18 +632,13 @@ def build_ann_index(
         return cents.localCheckpoint()
 
     # The two training materializations are independent jobs on one
-    # session; running them from a 2-thread pool lets the scheduler
-    # back-fill each job's straggler tail with the other's tasks instead
-    # of idling the cluster between sequential actions (guide §2.6).
-    # Determinism is untouched — each plan is the same fixed-seed unroll
-    # either way.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cb_fut = pool.submit(_train_codebook)
-        cents_fut = pool.submit(_train_coarse)
-        cb = cb_fut.result()
-        centroids = cents_fut.result()
+    # session; running them concurrently lets the scheduler back-fill each
+    # job's straggler tail with the other's tasks instead of idling the
+    # cluster between sequential actions (guide §2.6). Determinism is
+    # untouched — each plan is the same fixed-seed unroll either way.
+    cb, centroids = run_concurrently(
+        emb.sparkSession, _train_codebook, _train_coarse
+    )
     return encode_ann_index(emb, centroids, cb)
 
 
@@ -684,29 +688,26 @@ def write_ann_index(index: dict[str, DataFrame], root: str) -> dict[str, int]:
     same resolve-the-manifest-first discipline the snapshot sink applies
     per table, lifted one level)."""
     # The table publishes are independent write actions on disjoint
-    # paths; a thread pool overlaps them so the corpus-sized `lists` write
-    # back-fills the 1-row `model` commit's scheduling gaps (guide §2.6).
+    # paths; running them concurrently lets the corpus-sized `lists` write
+    # back-fill the 1-row `model` commit's scheduling gaps (guide §2.6).
     # Readers stay consistent regardless of landing order: nothing is
     # visible until the meta pin — still committed LAST, after every
     # table write returned — publishes the complete index.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(INDEX_TABLES)) as pool:
-        futs = {
-            name: pool.submit(
-                manifest.write_snapshot,
-                index[name],
-                f"{root}/{name}",
-                mode="overwrite",
-                # collect_stats=False: these relations are probed by
-                # equi-join, never range-pruned — per-file footer stats
-                # would be dead weight collected on the publish path
-                collect_stats=False,
-            )
-            for name in INDEX_TABLES
-        }
-        versions = {name: fut.result() for name, fut in futs.items()}
     spark = next(iter(index.values())).sparkSession
+    # collect_stats=False: these relations are probed by equi-join, never
+    # range-pruned — per-file footer stats would be dead weight collected on
+    # the publish path
+    publishes = [
+        functools.partial(
+            manifest.write_snapshot,
+            index[name],
+            f"{root}/{name}",
+            mode="overwrite",
+            collect_stats=False,
+        )
+        for name in INDEX_TABLES
+    ]
+    versions = dict(zip(INDEX_TABLES, run_concurrently(spark, *publishes)))
     pins = spark.createDataFrame(
         [(t, versions[t]) for t in INDEX_TABLES], "table string, version int"
     )

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.functions import timeops
 from clinical_search_data_pipeline_spark.registry import register
+from clinical_search_data_pipeline_spark.session import run_concurrently
 from clinical_search_data_pipeline_spark.sources.readers import load_events, read_table
 
 ZORDER_BITS = 8  # per-dimension bucket lattice width; z fits in 2*bits
@@ -207,20 +208,19 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("orderkey"), "l_extendedprice", "l_discount"
     )
     # The two bucketed writes are independent jobs to distinct tables;
-    # overlapping them in a 2-thread pool lets the lineitem write's tasks
-    # back-fill the orders write's straggler tail (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_o = pool.submit(
-            write_bucketed, orders, f"csdp_bkt_orders_{suffix}", "orderkey",
+    # overlapping them lets the lineitem write's tasks back-fill the orders
+    # write's straggler tail (guide §2.6).
+    t_o, t_l = run_concurrently(
+        spark,
+        lambda: write_bucketed(
+            orders, f"csdp_bkt_orders_{suffix}", "orderkey",
             path_root="/tmp/csdp_bucketed",
-        )
-        f_l = pool.submit(
-            write_bucketed, items, f"csdp_bkt_lineitem_{suffix}", "orderkey",
+        ),
+        lambda: write_bucketed(
+            items, f"csdp_bkt_lineitem_{suffix}", "orderkey",
             path_root="/tmp/csdp_bucketed",
-        )
-        t_o, t_l = f_o.result(), f_l.result()
+        ),
+    )
     return (
         read_bucketed(spark, t_l)
         .join(read_bucketed(spark, t_o), "orderkey")

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from clinical_search_data_pipeline_spark.caching import engine_cache
 from clinical_search_data_pipeline_spark.functions import textfns
 from clinical_search_data_pipeline_spark.registry import register
+from clinical_search_data_pipeline_spark.session import run_concurrently
 from clinical_search_data_pipeline_spark.sources.readers import fan_out, read_table
 
 # Binary-exact constants: 1.5, 0.75, 0.25, 2.5 and 0.5 are all dyadic
@@ -336,16 +337,11 @@ def q_bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = f"/tmp/csdp_bm25_index/{suffix}"
     # independent writes to disjoint paths — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fp = pool.submit(
-            lambda: postings.write.mode("overwrite").parquet(f"{root}/postings")
-        )
-        fs = pool.submit(
-            lambda: stats.write.mode("overwrite").parquet(f"{root}/stats")
-        )
-        fp.result(), fs.result()
+    run_concurrently(
+        spark,
+        lambda: postings.write.mode("overwrite").parquet(f"{root}/postings"),
+        lambda: stats.write.mode("overwrite").parquet(f"{root}/stats"),
+    )
     return bm25_topk_from_postings(
         spark.read.parquet(f"{root}/postings"),
         spark.read.parquet(f"{root}/stats"),

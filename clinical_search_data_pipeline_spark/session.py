@@ -15,14 +15,30 @@ everything here is our scale posture:
   PySpark 4.1.2, so the engine no longer depends on any conf for time
   correctness.
 * Arrow on for the few Pandas-UDF operators (multimodal, embeddings).
+* Python workers fork from the engine's daemon (`pydaemon`). PySpark's
+  worker calls `importlib.invalidate_caches()` before every Python task, and
+  on Python 3.11 each zip importer on the worker path (pyspark.zip, py4j,
+  the spark-core jar) then re-reads its archive's whole directory: 100-185 ms
+  per task, measured inside workers on 4 vCPUs, for tasks whose work takes a
+  few milliseconds. The daemon re-reads an archive only when it changed; a
+  1-row Python task's launch-to-function latency fell from 231 to 84 ms
+  (median of 15). Workers must be able to import this package, as the
+  engine's `mapInPandas` closures already require. A session built
+  elsewhere and handed in (`apply_runtime_confs`) keeps PySpark's default
+  daemon.
 """
 
 from __future__ import annotations
 
 import os
 import warnings
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 # Confs that are runtime-settable (SQL confs). Applied both at build time and
 # defensively at read time (`apply_runtime_confs`) because the driver harness
@@ -70,6 +86,9 @@ BUILD_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.warehouse.dir": "/tmp/csdp_spark_warehouse",
+    # fork Python workers from the engine's daemon, which skips the per-task
+    # zip-archive re-read (module docstring)
+    "spark.python.daemon.module": "clinical_search_data_pipeline_spark.pydaemon",
 }
 
 
@@ -139,3 +158,18 @@ def get_spark(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)
+
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], T]) -> list[T]:
+    """Run independent thunks (Spark actions on disjoint outputs) each on
+    its own thread and return their results in order.
+
+    Overlapping independent jobs lets one job's tasks back-fill the other's
+    straggler tail. Each thunk is wrapped with PySpark's
+    `inheritable_thread_target` in the calling thread, so its jobs carry
+    the caller's local properties (job tags, job group, description) and
+    session tags, and a caller's job tag counts every job they start."""
+    targets = [inheritable_thread_target(spark)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return [f.result() for f in futures]

@@ -32,7 +32,10 @@ from clinical_search_data_pipeline_spark.plans.introspect import (
     collect_stream_lint,
 )
 from clinical_search_data_pipeline_spark.registry import register
-from clinical_search_data_pipeline_spark.session import apply_runtime_confs
+from clinical_search_data_pipeline_spark.session import (
+    apply_runtime_confs,
+    run_concurrently,
+)
 from clinical_search_data_pipeline_spark.sources.readers import load_events
 from clinical_search_data_pipeline_spark.streaming.dedup import watermark_dedup
 from clinical_search_data_pipeline_spark.streaming.runner import run_to_memory
@@ -1214,11 +1217,7 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the frozen index BEFORE the stream: the first micro-batch
     # must not pay the corpus banding build (offline step in production).
     # The two cache fills are independent jobs — overlap them (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fk, fv = pool.submit(corpus_keys.count), pool.submit(corpus_vecs.count)
-        fk.result(), fv.result()
+    run_concurrently(spark, corpus_keys.count, corpus_vecs.count)
 
     out_dir = tempfile.mkdtemp(prefix="csdp_embgate_out_")
 

@@ -470,3 +470,24 @@ def test_serve_index_builds_once_per_source_content(spark, monkeypatch):
     monkeypatch.setattr(ai, "build_ann_index", boom)
     idx2 = ai.serve_index(spark, SF)
     assert _rows(ai.ann_index_topk(idx2, queries)) == first
+
+
+def test_build_and_write_jobs_all_carry_the_callers_job_tag(spark, tmp_path):
+    """The training and publish jobs run on engine threads
+    (`session.run_concurrently`); each still carries the caller's job tag,
+    so a tag set around build + write counts every job they start — the
+    tagged job ids are exactly the scheduler's job-id range."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    emb = read_table(spark, SF, "embeddings")
+    tag = f"ann-build-{tmp_path.name}"
+    first = jsc.dagScheduler().nextJobId()
+    sc.addJobTag(tag)
+    try:
+        ai.write_ann_index(ai.build_ann_index(emb, train_rounds=1), str(tmp_path))
+    finally:
+        sc.removeJobTag(tag)
+    end = jsc.dagScheduler().nextJobId()
+    tagged = sorted(jsc.statusTracker().getJobIdsForTag(tag))
+    assert end > first
+    assert tagged == list(range(first, end))

@@ -95,3 +95,29 @@ def test_only_the_gate_module_calls_gate_verdicts():
                             f"{path.relative_to(REPO)}:{node.lineno}: {name}"
                         )
     assert not found, "\n".join(found)
+
+
+def test_worker_daemon_imports_stay_light():
+    """Every Python worker is forked from the engine's daemon, so importing
+    its module loads neither pyspark.sql, pandas nor an engine operator."""
+    code = (
+        "import sys\n"
+        f"import {PACKAGE}.pydaemon\n"
+        "print(sorted(sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    loaded = ast.literal_eval(out.strip().splitlines()[-1])
+    assert f"{PACKAGE}.pydaemon" in loaded
+    heavy = [
+        m
+        for m in loaded
+        if m in ("pyspark.sql", "pandas")
+        or m.startswith(f"{PACKAGE}.operators")
+    ]
+    assert not heavy, heavy
