@@ -47,10 +47,11 @@ from pyspark.sql.types import (
 
 from clinical_search_data_pipeline_spark.operators.phash import (
     PHASH_HAM_MAX,
+    Modality,
     image_neardup_pairs as banded_hamming_pairs,  # modality-agnostic
 )
 from clinical_search_data_pipeline_spark.registry import register
-from clinical_search_data_pipeline_spark.sources.readers import fan_out, read_table
+from clinical_search_data_pipeline_spark.sources.readers import read_table
 
 FP_FRAMES = 65  # 64 energy-difference bits -> 4 x 16-bit bands
 FP_RATE = 8000
@@ -124,18 +125,8 @@ def audio_neardup_fingerprints(
 ) -> DataFrame:
     """(doc_id, sample_rate, n_samples, b0..b3) — each document's fixture
     WAV (`_audio_encoder`) fingerprinted (`_audio_fingerprinter`) in ONE
-    Python crossing (the dhash_neardup_images rationale): the
-    WAV payloads never round-trip through the JVM between encode and
-    decode."""
-    enc = _audio_encoder(wrap_base)
-    fp = _audio_fingerprinter()
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from fp(enc(batches))
-
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _fused, schema=AUDIO_FP_SCHEMA
-    )
+    Python crossing (`phash.Modality.fingerprints`)."""
+    return AUDIO.fingerprints(docs, wrap_base)
 
 
 def _audio_fingerprinter():
@@ -213,6 +204,11 @@ def _audio_fingerprinter():
             )
 
     return _fp
+
+
+AUDIO = Modality(
+    "audio", _audio_encoder, _audio_fingerprinter, AUDIO_FP_SCHEMA, AF_HAM_MAX
+)
 
 
 # DuckDB twin: recompute samples, frame energies, bits, band values from

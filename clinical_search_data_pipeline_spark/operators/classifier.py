@@ -24,10 +24,11 @@ from a lang-slice target to an arbitrary boolean label, with a prior term:
      logit-0 gate IS the probability-0.5 gate).
 
 Scale posture (100 TB): training is one feature explode + one
-n_buckets-key shuffle (KB-sized payload after partial aggregation) + two
-1-row aggregates broadcast back; scoring is one broadcast equi-join and a
-doc-keyed fold — the identical shape as the DSIR gate, so the fourth
-admission gate rides the same foreachBatch at no new shuffle class.
+n_buckets-key shuffle (KB-sized payload after partial aggregation), class
+totals summed over the model-sized dense relation and a 1-row prior
+broadcast back; scoring is one broadcast equi-join and a
+doc-keyed fold — the identical shape as the DSIR gate, so admission fits
+and scores both from one feature pass (`text_models`, `text_screen`).
 
 Reference parity: the reference has no learned curation (its quality
 logic is `processing/spark/jobs/etl_to_analytics_mart.py` rule filters);
@@ -36,14 +37,25 @@ this extends the admission family along the published CCNet construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.operators.fragments import (
     _DUCK_FEATS_CTE,
     N_BUCKETS,
+    TARGET_LANG,
 )
-from clinical_search_data_pipeline_spark.operators.importance import hashed_features
+from clinical_search_data_pipeline_spark.operators.importance import (
+    dense_bucket_counts,
+    dsir_counts,
+    dsir_log_ratio,
+    dsir_logw,
+    dsir_status,
+    hashed_features,
+    ordered_sum,
+    scored_features,
+    smoothed_log_ratio,
+)
 from clinical_search_data_pipeline_spark.operators.pipeline import (
     CORPUS_FILTER_ORACLE,
     corpus_filter,
@@ -58,6 +70,8 @@ __all__ = [
     "nb_quality_model",
     "quality_labels",
     "quality_score",
+    "text_models",
+    "text_screen",
 ]
 
 QUALITY_GATE = 0.0  # on the logit: sigmoid-monotone twin of prob >= 0.5
@@ -77,6 +91,31 @@ def quality_labels(docs: DataFrame) -> DataFrame:
     )
 
 
+def quality_counts() -> dict[str, Column]:
+    """The naive-Bayes bucket counts: features of positive and of negative
+    documents."""
+    return {
+        "n_p": F.count(F.when(F.col("lab"), 1)),
+        "n_n": F.count(F.when(~F.col("lab"), 1)),
+    }
+
+
+def class_prior(labeled: DataFrame) -> DataFrame:
+    """1 row, `bias`: the add-one-smoothed document-class prior log-odds
+    (an empty label set gives ln(1/1) = 0, the NEUTRAL prior)."""
+    return labeled.agg(
+        F.log(
+            (F.count(F.when(F.col("lab"), 1)) + F.lit(1.0))
+            / (F.count(F.when(~F.col("lab"), 1)) + F.lit(1.0))
+        ).alias("bias")
+    )
+
+
+def quality_log_odds(n_buckets: int = N_BUCKETS) -> Column:
+    """w = ln(p(bucket | pos) / p(bucket | neg)), over `quality_counts`."""
+    return smoothed_log_ratio("n_p", "n_n", n_buckets).alias("w")
+
+
 def nb_quality_model(labeled: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     """Fit the frozen classifier on a labeled corpus: (bucket, w, bias),
     DENSE over [0, n_buckets). w is the add-one-smoothed naive-Bayes
@@ -84,39 +123,28 @@ def nb_quality_model(labeled: DataFrame, n_buckets: int = N_BUCKETS) -> DataFram
     document-class prior log-odds, constant on every row so ONE broadcast
     relation carries the whole model."""
     feats = hashed_features(labeled, n_buckets, carry=("lab",))
-    cnt = feats.groupBy("bucket").agg(
-        F.count(F.when(F.col("lab"), 1)).alias("n_p"),
-        F.count(F.when(~F.col("lab"), 1)).alias("n_n"),
+    dense = dense_bucket_counts(feats, quality_counts(), n_buckets)
+    return dense.crossJoin(F.broadcast(class_prior(labeled))).select(
+        "bucket", quality_log_odds(n_buckets), "bias"
     )
-    # empty-label cold start: sum() over zero buckets is NULL -> NULL
-    # weights -> silent wholesale rejection; coalescing to 0 yields the
-    # NEUTRAL model (w = 0, bias = ln(1/1) = 0 -> prob 0.5, admitted)
-    tot = cnt.agg(
-        F.coalesce(F.sum("n_p"), F.lit(0)).alias("t_p"),
-        F.coalesce(F.sum("n_n"), F.lit(0)).alias("t_n"),
-    )
-    prior = labeled.agg(
-        F.log(
-            (F.count(F.when(F.col("lab"), 1)) + F.lit(1.0))
-            / (F.count(F.when(~F.col("lab"), 1)) + F.lit(1.0))
-        ).alias("bias")
-    )
-    domain = (
-        labeled.sparkSession.range(n_buckets).select(F.col("id").alias("bucket"))
-    )
-    dense = domain.join(F.broadcast(cnt), "bucket", "left").fillna(0, ["n_p", "n_n"])
-    return (
-        dense.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(prior))
-        .select(
-            "bucket",
-            (
-                F.log((F.col("n_p") + 1) / (F.col("t_p") + F.lit(float(n_buckets))))
-                - F.log((F.col("n_n") + 1) / (F.col("t_n") + F.lit(float(n_buckets))))
-            ).alias("w"),
-            "bias",
-        )
-    )
+
+
+def quality_logit(arr: str = "fs") -> Column:
+    """bias + the order-pinned fold of `arr`'s feature weights, to 4 dp."""
+    return F.round(ordered_sum("w", arr) + F.col("bias"), 4)
+
+
+def quality_columns(logit: Column, status: str = "status") -> list[Column]:
+    """logit, prob and the gate verdict from a 4-dp logit. prob is
+    computed from the ROUNDED logit so both engines exponentiate the
+    identical double; logit >= QUALITY_GATE is the prob >= 0.5 gate."""
+    return [
+        logit.alias("logit"),
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 4).alias("prob"),
+        F.when(logit >= QUALITY_GATE, "admitted")
+        .otherwise("rejected")
+        .alias(status),
+    ]
 
 
 def quality_score(
@@ -125,32 +153,58 @@ def quality_score(
     """(doc_id, lang, n_feats, logit, prob, status): score documents under
     a FROZEN model — one broadcast equi-join on bucket + a doc_id-keyed
     ordered fold; total over any input (dense domain + the one-word-doc
-    bigram guard in hashed_features). prob is computed from the ROUNDED
-    logit so both engines exponentiate the identical double."""
-    feats = hashed_features(docs, n_buckets)
-    scored = (
-        feats.join(F.broadcast(model), "bucket")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_feats"),
-            F.array_sort(F.collect_list(F.struct("pos", "kind", "w"))).alias("ws"),
-            F.first("bias").alias("bias"),
-        )
+    bigram guard in hashed_features)."""
+    feats = hashed_features(docs, n_buckets).join(F.broadcast(model), "bucket")
+    logit = quality_logit()
+    return scored_features(feats, ("w",), first=("bias",)).select(
+        "doc_id", "lang", "n_feats", *quality_columns(logit)
     )
-    fold = (
-        "aggregate(transform(ws, s -> s.w), CAST(0.0 AS DOUBLE), "
-        "(acc, x) -> acc + x)"
+
+
+def text_models(
+    labeled: DataFrame,
+    target_lang: str = TARGET_LANG,
+    n_buckets: int = N_BUCKETS,
+) -> DataFrame:
+    """(bucket, lr, w, bias): the DSIR model (`dsir_model` over the same
+    documents) and the naive-Bayes model (`nb_quality_model`) fitted
+    together — ONE feature pass over `labeled`, ONE bucket aggregation
+    taking all four counts and one dense domain join. `lab` does not
+    change the features, so every count equals its separate fit's."""
+    feats = hashed_features(labeled, n_buckets, carry=("lab",))
+    counts = {**dsir_counts(target_lang), **quality_counts()}
+    dense = dense_bucket_counts(feats, counts, n_buckets)
+    return dense.crossJoin(F.broadcast(class_prior(labeled))).select(
+        "bucket", dsir_log_ratio(n_buckets), quality_log_odds(n_buckets), "bias"
     )
-    logit = F.round(F.expr(fold) + F.col("bias"), 4)
-    return scored.select(
+
+
+def text_screen(
+    docs: DataFrame,
+    lr: DataFrame,
+    clf: DataFrame,
+    n_buckets: int = N_BUCKETS,
+) -> DataFrame:
+    """(doc_id, lang, n_feats, logw, dsir_status, logit, prob,
+    quality_status): `dsir_score` and `quality_score` in one pass — ONE
+    feature projection broadcast-joined to both frozen models (`lr`:
+    (bucket, lr), `clf`: (bucket, w, bias)) and ONE (doc_id, lang)
+    aggregate whose (pos, kind)-sorted array folds both sums, in each
+    gate's own order."""
+    feats = (
+        hashed_features(docs, n_buckets)
+        .join(F.broadcast(lr), "bucket")
+        .join(F.broadcast(clf), "bucket")
+    )
+    logw = dsir_logw()
+    logit = quality_logit()
+    return scored_features(feats, ("lr", "w"), first=("bias",)).select(
         "doc_id",
         "lang",
         "n_feats",
-        logit.alias("logit"),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 4).alias("prob"),
-        F.when(logit >= QUALITY_GATE, "admitted")
-        .otherwise("rejected")
-        .alias("status"),
+        logw.alias("logw"),
+        dsir_status(logw).alias("dsir_status"),
+        *quality_columns(logit, status="quality_status"),
     )
 
 
@@ -189,11 +243,7 @@ def logistic_refine(
             F.first("bias").alias("bias"),
         )
     )
-    fold = (
-        "aggregate(transform(ws, s -> s.w), CAST(0.0 AS DOUBLE), "
-        "(acc, x) -> acc + x)"
-    )
-    logit = F.round(F.expr(fold) + F.col("bias"), 4)
+    logit = quality_logit("ws")
     resid = per_doc.select(
         "doc_id",
         F.round(

@@ -598,7 +598,10 @@ def batch_vs_corpus(
     t = JACCARD_THRESHOLD if threshold is None else threshold
     kk = SHINGLE_K if k is None else k
     corpus_sets, corpus_prefix, df_stats = corpus_index
-    batch_sets = shingle_sets(batch, kk).hint("rebalance")
+    # no rebalance hint: shingle_sets already round-robins through fan_out,
+    # and a second RoundRobin exchange on this uncached relation costs a
+    # job per micro-batch (the hints on CACHED set relations coalesce)
+    batch_sets = shingle_sets(batch, kk)
     batch_prefix = _batch_prefix(batch_sets, df_stats, t)
     size_ok = (F.col("a.n") >= t * F.col("b.n")) & (F.col("b.n") >= t * F.col("a.n"))
     cand = (

@@ -1,24 +1,33 @@
-"""The seven admission gates, one record each.
+"""The seven admission gates, decided in four screen passes.
 
 A gate screens incoming documents against a frozen index of the standing
-corpus. Its record says, once, everything the admission path needs:
+corpus. Gates that share their work share a pass: DSIR and quality score
+the same hashed features (`text`), and the image, audio and video screens
+fingerprint the same documents in one Python crossing (`media`). Each
+pass record says, once, everything the admission path needs:
 
 * ``tables`` — the index relations it persists, in publish order;
-* ``build(corpus, split)`` — ``{table: DataFrame}`` from scratch;
+* ``build(corpus, split, gates)`` — ``{table: DataFrame}`` from scratch.
+  A fused build also returns the cached relation its tables project
+  from, under the pass's name (never persisted; a full refresh releases
+  it with the tables);
 * ``delta(old, increment, merged, split)`` — ``{table: (DataFrame, mode)}``
   folding an admitted increment in: ``"append"`` rows union into the old
   relation, ``"overwrite"`` rows replace it, and a table left out is
   carried unchanged;
-* ``verdict(batch, idx, split)`` — one row per batch document, the frame
-  its registered ``q_stream_*`` query writes;
-* ``admission`` — the ``(column, alias)`` projection the seven-way
-  admission verdict takes from that frame, and ``passing``, the value of
-  its ``<name>_status`` column that admits.
+* ``screen(batch, idx, split, gates)`` — one row per batch document
+  carrying every listed gate's columns;
+* ``decides`` — one `Decision` per gate: its registered ``q_stream_*``
+  frame projected from the screen, the ``(column, alias)`` projection the
+  admission verdict takes from the screen, and ``passing``, the value of
+  its ``<name>_status`` verdict column that admits.
 
-``split`` is the media wrap base (fixture geometry). Every verdict depends
-on one document and the frozen index only, so micro-batch boundaries
-cannot change any row. Operator modules are imported inside the functions:
-importing this module costs nothing until a gate runs.
+``gates`` names the gates a caller wants screened (a subset of
+``decides``); the media pass fingerprints only those modalities.
+``split`` is the media wrap base (fixture geometry). Every verdict
+depends on one document and the frozen index only, so micro-batch
+boundaries cannot change any row. Operator modules are imported inside
+the functions: importing this module costs nothing until a gate runs.
 """
 
 from __future__ import annotations
@@ -36,16 +45,17 @@ APPEND, OVERWRITE = "append", "overwrite"
 Index = Mapping[str, DataFrame]
 
 
+def _same(screen: DataFrame) -> DataFrame:
+    return screen
+
+
 @dataclass(frozen=True)
-class Gate:
+class Decision:
+    """One gate a pass decides."""
+
     name: str
-    tables: tuple[str, ...]
-    build: Callable[[DataFrame, int], dict[str, DataFrame]]
-    delta: Callable[
-        [Index, DataFrame, DataFrame, int], dict[str, tuple[DataFrame, str]]
-    ]
-    verdict: Callable[[DataFrame, Index, int], DataFrame]
     admission: tuple[tuple[str, str], ...]
+    frame: Callable[[DataFrame], DataFrame] = _same
     passing: str = "admitted"
 
     @property
@@ -53,10 +63,26 @@ class Gate:
         return f"{self.name}_status"
 
 
+@dataclass(frozen=True)
+class ScreenPass:
+    name: str
+    tables: tuple[str, ...]
+    build: Callable[[DataFrame, int, tuple[str, ...]], dict[str, DataFrame]]
+    delta: Callable[
+        [Index, DataFrame, DataFrame, int], dict[str, tuple[DataFrame, str]]
+    ]
+    screen: Callable[[DataFrame, Index, int, tuple[str, ...]], DataFrame]
+    decides: tuple[Decision, ...]
+
+    @property
+    def gates(self) -> tuple[str, ...]:
+        return tuple(d.name for d in self.decides)
+
+
 # -- text near-dup vs the corpus (prefix-filtered shingle Jaccard) ---------
 
 
-def _dup_build(corpus: DataFrame, split: int) -> dict[str, DataFrame]:
+def _dup_build(corpus: DataFrame, split: int, gates) -> dict[str, DataFrame]:
     from clinical_search_data_pipeline_spark.operators.curation import (
         corpus_prefix_index,
     )
@@ -99,7 +125,7 @@ def _dup_delta(old: Index, increment, merged, split):
     }
 
 
-def _dup_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
+def _dup_screen(batch: DataFrame, idx: Index, split: int, gates) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.curation import (
         batch_vs_corpus,
     )
@@ -109,52 +135,44 @@ def _dup_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
 
 
 # -- the two dense models: DSIR importance and the NB quality classifier ---
-# Both re-aggregate over `merged` on refresh: O(corpus) scans, but cheap
-# single-pass aggregations with no joins or windows — the sanctioned
-# full-rebuild remainder of an otherwise O(increment) refresh.
+# One feature pass fits both (`classifier.text_models`), cached once;
+# `lr_model` and `clf_model` are its projections. A refresh re-aggregates
+# over `merged`: an O(corpus) scan, but a cheap single-pass aggregation
+# with no joins or windows — the sanctioned full-rebuild remainder of an
+# otherwise O(increment) refresh.
 
 
-def _dsir_model(docs: DataFrame) -> DataFrame:
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        dsir_model,
-    )
-
-    return dsir_model(docs)
-
-
-def _dsir_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        DSIR_GATE,
-        dsir_score,
-    )
-
-    return dsir_score(batch, idx["lr_model"]).withColumn(
-        "status",
-        F.when(F.col("logw") >= DSIR_GATE, "admitted").otherwise("rejected"),
-    )
-
-
-def _quality_model(docs: DataFrame) -> DataFrame:
+def _text_build(docs: DataFrame, split: int, gates) -> dict[str, DataFrame]:
     from clinical_search_data_pipeline_spark.operators.classifier import (
-        nb_quality_model,
         quality_labels,
+        text_models,
     )
 
-    return nb_quality_model(quality_labels(docs))
+    fused = engine_cache(text_models(quality_labels(docs)))
+    return {
+        "lr_model": fused.select("bucket", "lr"),
+        "clf_model": fused.select("bucket", "w", "bias"),
+        "text": fused,
+    }
 
 
-def _quality_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
+def _text_delta(old: Index, increment, merged, split):
+    models = _text_build(merged, split, TEXT.gates)
+    return {t: (models[t], OVERWRITE) for t in ("lr_model", "clf_model")}
+
+
+def _text_screen(batch: DataFrame, idx: Index, split: int, gates) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.classifier import (
-        quality_score,
+        text_screen,
     )
 
-    return quality_score(batch, idx["clf_model"])
+    return text_screen(batch, idx["lr_model"], idx["clf_model"])
 
 
 # -- verbatim-span contamination vs the corpus gram index ------------------
 
 
-def _span_build(corpus: DataFrame, split: int) -> dict[str, DataFrame]:
+def _span_build(corpus: DataFrame, split: int, gates) -> dict[str, DataFrame]:
     from clinical_search_data_pipeline_spark.operators.spans import (
         corpus_gram_bloom,
         corpus_gram_index,
@@ -198,7 +216,7 @@ def _span_delta(old: Index, increment, merged, split):
     }
 
 
-def _span_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
+def _span_screen(batch: DataFrame, idx: Index, split: int, gates) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.spans import (
         span_contamination,
     )
@@ -210,129 +228,132 @@ def _span_verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
 
 # -- perceptual near-dup of attached media (image / audio / video) ---------
 # Fingerprint relations are doc-local and deterministic: the increment's
-# rows union in, which is EXACTLY the full-rebuild relation. The banded-
-# Hamming probe (image_vs_corpus) is modality-agnostic.
+# rows union in, which is EXACTLY the full-rebuild relation. One
+# `media_fingerprints` crossing covers every screened modality; each
+# `<modality>_index` is its projection.
 
 
-def _image_fp():
+def _media_build(docs: DataFrame, split: int, gates) -> dict[str, DataFrame]:
     from clinical_search_data_pipeline_spark.operators.phash import (
-        PHASH_HAM_MAX,
-        dhash_neardup_images,
+        media_fingerprints,
+        media_index,
     )
 
-    return dhash_neardup_images, PHASH_HAM_MAX
+    fused = engine_cache(media_fingerprints(docs, gates, wrap_base=split))
+    return {f"{m}_index": media_index(fused, m) for m in gates} | {
+        "media": fused
+    }
 
 
-def _audio_fp():
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        AF_HAM_MAX,
-        audio_neardup_fingerprints,
+def _media_delta(old: Index, increment, merged, split):
+    fps = _media_build(increment, split, MEDIA.gates)
+    return {f"{m}_index": (fps[f"{m}_index"], APPEND) for m in MEDIA.gates}
+
+
+def _media_screen(batch: DataFrame, idx: Index, split: int, gates) -> DataFrame:
+    from clinical_search_data_pipeline_spark.operators.phash import (
+        media_vs_corpus,
     )
 
-    return audio_neardup_fingerprints, AF_HAM_MAX
+    corpus = {m: idx[f"{m}_index"] for m in gates}
+    return media_vs_corpus(corpus, batch, wrap_base=split)
 
 
-def _video_fp():
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        VF_HAM_MAX,
-        video_neardup_fingerprints,
-    )
-
-    return video_neardup_fingerprints, VF_HAM_MAX
-
-
-def _media_gate(name: str, fingerprinter: Callable[[], tuple]) -> Gate:
-    """`fingerprinter()` -> (fingerprint operator, Hamming verify bound)."""
-    table = f"{name}_index"
-
-    def fingerprints(docs: DataFrame, split: int) -> DataFrame:
-        fp, _ = fingerprinter()
-        return fp(docs, wrap_base=split)
-
-    def verdict(batch: DataFrame, idx: Index, split: int) -> DataFrame:
-        from clinical_search_data_pipeline_spark.operators.phash import (
-            image_vs_corpus,
-        )
-
-        _, ham_max = fingerprinter()
-        # the all-docs universe comes from the raw batch's doc_ids, so the
-        # batch decode+hash is consumed once, lazily inside the verdict
-        # action (one job per micro-batch, no per-batch checkpoint)
-        return image_vs_corpus(
-            idx[table],
-            fingerprints(batch, split),
-            ham_max=ham_max,
-            dup_status=f"dup_{name}",
-            batch_docs=batch,
-        )
-
-    return Gate(
-        name=name,
-        tables=(table,),
-        build=lambda corpus, split: {
-            table: engine_cache(fingerprints(corpus, split))
-        },
-        delta=lambda old, increment, merged, split: {
-            table: (fingerprints(increment, split), APPEND)
-        },
-        verdict=verdict,
-        admission=(
-            ("n_corpus_matches", f"n_{name}_matches"),
-            ("status", f"{name}_status"),
+def _media_decision(name: str) -> Decision:
+    n, status = f"n_{name}_matches", f"{name}_status"
+    return Decision(
+        name,
+        admission=((n, n), (status, status)),
+        frame=lambda screen: screen.select(
+            "doc_id",
+            F.col(n).alias("n_corpus_matches"),
+            F.col(status).alias("status"),
         ),
     )
 
 
-def _model_gate(name: str, table: str, model, verdict, admission) -> Gate:
-    """A gate whose index is one small dense model over the corpus."""
-    return Gate(
-        name=name,
-        tables=(table,),
-        build=lambda corpus, split: {table: engine_cache(model(corpus))},
-        delta=lambda old, increment, merged, split: {
-            table: (model(merged), OVERWRITE)
-        },
-        verdict=verdict,
-        admission=admission,
-    )
+TEXT_FRAME = ("doc_id", "lang", "n_feats")
 
+TEXT = ScreenPass(
+    name="text",
+    tables=("lr_model", "clf_model"),
+    build=_text_build,
+    delta=_text_delta,
+    screen=_text_screen,
+    decides=(
+        Decision(
+            "dsir",
+            admission=(("logw", "logw"), ("dsir_status", "dsir_status")),
+            frame=lambda screen: screen.select(
+                *TEXT_FRAME, "logw", F.col("dsir_status").alias("status")
+            ),
+        ),
+        Decision(
+            "quality",
+            admission=(
+                ("logit", "quality_logit"),
+                ("quality_status", "quality_status"),
+            ),
+            frame=lambda screen: screen.select(
+                *TEXT_FRAME,
+                "logit",
+                "prob",
+                F.col("quality_status").alias("status"),
+            ),
+        ),
+    ),
+)
 
-GATES: tuple[Gate, ...] = (
-    Gate(
+MEDIA = ScreenPass(
+    name="media",
+    tables=("image_index", "audio_index", "video_index"),
+    build=_media_build,
+    delta=_media_delta,
+    screen=_media_screen,
+    decides=tuple(_media_decision(m) for m in ("image", "audio", "video")),
+)
+
+GATES: tuple[ScreenPass, ...] = (
+    ScreenPass(
         name="dup",
         tables=("prefix_sets", "prefix_prefixes", "prefix_dfreq"),
         build=_dup_build,
         delta=_dup_delta,
-        verdict=_dup_verdict,
-        admission=(
-            ("status", "dup_status"),
-            ("n_corpus_matches", "n_corpus_matches"),
+        screen=_dup_screen,
+        decides=(
+            Decision(
+                "dup",
+                admission=(
+                    ("status", "dup_status"),
+                    ("n_corpus_matches", "n_corpus_matches"),
+                ),
+            ),
         ),
     ),
-    _model_gate(
-        "dsir", "lr_model", _dsir_model, _dsir_verdict,
-        (("logw", "logw"), ("status", "dsir_status")),
-    ),
-    Gate(
+    TEXT,
+    ScreenPass(
         name="span",
         tables=("gram_index", "gram_bloom"),
         build=_span_build,
         delta=_span_delta,
-        verdict=_span_verdict,
-        admission=(
-            ("covered_words", "covered_words"),
-            ("longest_run", "longest_run"),
-            ("status", "span_status"),
+        screen=_span_screen,
+        decides=(
+            Decision(
+                "span",
+                admission=(
+                    ("covered_words", "covered_words"),
+                    ("longest_run", "longest_run"),
+                    ("status", "span_status"),
+                ),
+                passing="clean",
+            ),
         ),
-        passing="clean",
     ),
-    _model_gate(
-        "quality", "clf_model", _quality_model, _quality_verdict,
-        (("logit", "quality_logit"), ("status", "quality_status")),
-    ),
-    _media_gate("image", _image_fp),
-    _media_gate("audio", _audio_fp),
-    _media_gate("video", _video_fp),
+    MEDIA,
 )
 
-GATE: dict[str, Gate] = {g.name: g for g in GATES}
+# the gates in the admission verdict's pinned column order
+VERDICT_ORDER = ("dup", "dsir", "span", "quality", "image", "audio", "video")
+
+DECISION: dict[str, Decision] = {d.name: d for p in GATES for d in p.decides}
+PASS_OF: dict[str, ScreenPass] = {g: p for p in GATES for g in p.gates}

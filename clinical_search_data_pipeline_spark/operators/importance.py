@@ -26,13 +26,12 @@ after `fan_out`), shuffled once on the hash bucket (64 well-spread keys —
 partial aggregation collapses this to at most 64 rows per input partition
 map-side, so the shuffle payload is KB-sized regardless of corpus size)
 and once on doc_id for the ordered re-collection. The model itself never
-exceeds N_BUCKETS rows. No UDFs, no cross join except the broadcast
-1-row totals.
+exceeds N_BUCKETS rows. No UDFs, no cross join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.functions.hashing import duck_hash64, hash64
@@ -99,32 +98,61 @@ def hashed_features(
     )
 
 
-def bucket_log_ratios(
-    feats: DataFrame,
-    target_lang: str = TARGET_LANG,
-    n_buckets: int = N_BUCKETS,
+def dsir_counts(target_lang: str = TARGET_LANG) -> dict[str, Column]:
+    """The DSIR bucket counts: every feature (raw model) and the target
+    slice's features (`lang = target_lang`)."""
+    return {
+        "n_raw": F.count("*"),
+        "n_t": F.count(F.when(F.col("lang") == target_lang, 1)),
+    }
+
+
+def dense_bucket_counts(
+    feats: DataFrame, counts: dict[str, Column], n_buckets: int = N_BUCKETS
 ) -> DataFrame:
-    """(bucket, lr): add-one-smoothed ln(p_target / p_raw) per hash bucket.
-    One n_buckets-key shuffle; the result is model-sized (<= n_buckets
-    rows). `n_buckets` must match the value the features were hashed with."""
-    cnt = feats.groupBy("bucket").agg(
-        F.count("*").alias("n_raw"),
-        F.count(F.when(F.col("lang") == target_lang, 1)).alias("n_t"),
+    """(bucket, *counts, *tot_<count>): one bucket aggregation of `feats`
+    taking every count in `counts`, DENSE over the whole domain
+    [0, n_buckets) (zero-count buckets read 0, so any later scoring join
+    is a plain inner broadcast equi-join with no out-of-vocabulary case),
+    each row carrying the corpus totals. Model-sized; the plan shape is
+    N-independent, so a 100 TB caller can match DSIR's ~10k web-corpus
+    buckets per call. `n_buckets` must match the features' hashing."""
+    cnt = feats.groupBy("bucket").agg(*[c.alias(n) for n, c in counts.items()])
+    domain = feats.sparkSession.range(n_buckets).select(
+        F.col("id").alias("bucket")
     )
-    # coalesce: sum() over ZERO buckets (an empty corpus at cold start) is
-    # NULL, which would silently null every ratio; 0 yields the NEUTRAL
-    # smoothed model (lr = 0 everywhere) instead
-    tot = cnt.agg(
-        F.coalesce(F.sum("n_raw"), F.lit(0)).alias("t_r"),
-        F.coalesce(F.sum("n_t"), F.lit(0)).alias("t_t"),
+    dense = domain.join(F.broadcast(cnt), "bucket", "left").fillna(
+        0, list(counts)
     )
-    return cnt.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        (
-            F.log((F.col("n_t") + 1) / (F.col("t_t") + F.lit(float(n_buckets))))
-            - F.log((F.col("n_raw") + 1) / (F.col("t_r") + F.lit(float(n_buckets))))
-        ).alias("lr"),
+    # totals over the n_buckets dense rows (a global window over a
+    # model-sized relation): an aggregate of `cnt` is a second plan branch
+    # that re-runs the feature pass and the bucket shuffle (measured: 7 ->
+    # 5 jobs per dsir_model at sf0.001). Summing zero-filled rows also
+    # keeps an EMPTY corpus at the NEUTRAL model (every total 0 -> every
+    # ratio 0 -> the >= 0 gates ADMIT) instead of NULL totals that would
+    # silently reject everything.
+    whole = Window.partitionBy()
+    return dense.select(
+        "*", *[F.sum(n).over(whole).alias(f"tot_{n}") for n in counts]
     )
+
+
+def smoothed_log_ratio(num: str, den: str, n_buckets: int = N_BUCKETS) -> Column:
+    """ln p_num(bucket) - ln p_den(bucket) over `dense_bucket_counts`
+    columns, each distribution add-one smoothed over the n_buckets
+    domain — the DSIR log-ratio and the naive-Bayes log-odds alike."""
+
+    def log_p(n: str) -> Column:
+        return F.log(
+            (F.col(n) + 1) / (F.col(f"tot_{n}") + F.lit(float(n_buckets)))
+        )
+
+    return log_p(num) - log_p(den)
+
+
+def dsir_log_ratio(n_buckets: int = N_BUCKETS) -> Column:
+    """lr = ln(p_target / p_raw) per bucket, over `dsir_counts` columns."""
+    return smoothed_log_ratio("n_t", "n_raw", n_buckets).alias("lr")
 
 
 def dsir_model(
@@ -134,37 +162,48 @@ def dsir_model(
 ) -> DataFrame:
     """Fit the frozen model on a standing corpus: (bucket, lr) DENSE over
     the whole bucket domain [0, n_buckets) — zero-count buckets carry the
-    add-one-smoothed ratio by construction, so any later scoring join is a
-    plain inner broadcast equi-join with no out-of-vocabulary special
-    case. Model-sized (exactly n_buckets rows; the plan shape is
-    N-independent, so a 100 TB caller can match DSIR's ~10k web-corpus
-    buckets per call — the module constant is only the fixture default)."""
-    feats = hashed_features(corpus, n_buckets)
-    cnt = feats.groupBy("bucket").agg(
-        F.count("*").alias("n_raw"),
-        F.count(F.when(F.col("lang") == target_lang, 1)).alias("n_t"),
+    add-one-smoothed ratio by construction (`dense_bucket_counts`), so
+    scoring is total over any input. Exactly n_buckets rows (the module
+    constant is only the fixture default)."""
+    dense = dense_bucket_counts(
+        hashed_features(corpus, n_buckets), dsir_counts(target_lang), n_buckets
     )
-    # empty-corpus cold start: sum() over zero buckets is NULL -> every
-    # ratio NULL -> every score NULL -> silent wholesale rejection at the
-    # gate; coalescing to 0 gives the NEUTRAL model (lr = 0, logw = 0 ->
-    # the >= 0 gate ADMITS, which is the right no-evidence behavior)
-    tot = cnt.agg(
-        F.coalesce(F.sum("n_raw"), F.lit(0)).alias("t_r"),
-        F.coalesce(F.sum("n_t"), F.lit(0)).alias("t_t"),
+    return dense.select("bucket", dsir_log_ratio(n_buckets))
+
+
+def scored_features(
+    feats: DataFrame, values: tuple[str, ...], first: tuple[str, ...] = ()
+) -> DataFrame:
+    """(doc_id, lang, n_feats, fs, *first): each document's features
+    re-collected as one (pos, kind, *values) array sorted on (pos, kind) —
+    unique per document, so `values` never decide the order — for
+    `ordered_sum` to fold; `first` columns are per-model constants."""
+    return feats.groupBy("doc_id", "lang").agg(
+        F.count("*").alias("n_feats"),
+        F.array_sort(F.collect_list(F.struct("pos", "kind", *values))).alias(
+            "fs"
+        ),
+        *[F.first(c).alias(c) for c in first],
     )
-    domain = (
-        corpus.sparkSession.range(n_buckets).select(F.col("id").alias("bucket"))
+
+
+def ordered_sum(field: str, arr: str = "fs") -> Column:
+    """The ORDER-PINNED left fold of `arr`'s `field` from an explicit 0.0
+    seed: the float sum is bit-identical on both engines."""
+    return F.expr(
+        f"aggregate(transform({arr}, s -> s.{field}), CAST(0.0 AS DOUBLE), "
+        "(acc, x) -> acc + x)"
     )
-    dense = domain.join(F.broadcast(cnt), "bucket", "left").fillna(
-        0, ["n_raw", "n_t"]
-    )
-    return dense.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        (
-            F.log((F.col("n_t") + 1) / (F.col("t_t") + F.lit(float(n_buckets))))
-            - F.log((F.col("n_raw") + 1) / (F.col("t_r") + F.lit(float(n_buckets))))
-        ).alias("lr"),
-    )
+
+
+def dsir_logw() -> Column:
+    """logw, the 4-dp DSIR log importance weight of a `scored_features`
+    row whose features carry `lr`."""
+    return F.round(ordered_sum("lr"), 4)
+
+
+def dsir_status(logw: Column) -> Column:
+    return F.when(logw >= DSIR_GATE, "admitted").otherwise("rejected")
 
 
 def dsir_score(
@@ -175,21 +214,9 @@ def dsir_score(
     fold. Total over any input (the model covers the full bucket domain),
     which is the ingest-gate requirement. `n_buckets` must match the
     model's domain."""
-    feats = hashed_features(docs, n_buckets)
-    scored = (
-        feats.join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").alias("n_feats"),
-            F.array_sort(F.collect_list(F.struct("pos", "kind", "lr"))).alias("lrs"),
-        )
-    )
-    fold = (
-        "aggregate(transform(lrs, s -> s.lr), CAST(0.0 AS DOUBLE), "
-        "(acc, x) -> acc + x)"
-    )
-    return scored.select(
-        "doc_id", "lang", "n_feats", F.round(F.expr(fold), 4).alias("logw")
+    feats = hashed_features(docs, n_buckets).join(F.broadcast(lr), "bucket")
+    return scored_features(feats, ("lr",)).select(
+        "doc_id", "lang", "n_feats", dsir_logw().alias("logw")
     )
 
 

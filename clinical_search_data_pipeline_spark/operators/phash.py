@@ -37,7 +37,9 @@ published dHash construction (Krawetz 2013, "Kind of Like That").
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Mapping
+from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd
 
@@ -73,6 +75,44 @@ HASH_SCHEMA = StructType(
         StructField("b3", IntegerType()),
     ]
 )
+
+
+BatchFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
+
+
+@dataclass(frozen=True)
+class Modality:
+    """One media fingerprint family: `encoder(wrap_base)` turns doc_ids
+    into fixture payloads, `fingerprinter()` turns payloads into `schema`
+    rows (doc_id first, then the family's columns ending in 4 16-bit
+    bands b0..b3), verified within Hamming distance `ham_max`."""
+
+    name: str
+    encoder: Callable[[int | None], BatchFn]
+    fingerprinter: Callable[[], BatchFn]
+    schema: StructType
+    ham_max: int
+
+    def stage(self, wrap_base: int | None) -> BatchFn:
+        """Encoder feeding fingerprinter inside one Python worker, so the
+        payload bytes never enter the JVM (a two-stage chain of
+        MapInPandas nodes measured ~0.4 s per evaluation on a 125-doc
+        micro-batch of pure boundary cost)."""
+        enc = self.encoder(wrap_base)
+        fp = self.fingerprinter()
+
+        def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            yield from fp(enc(batches))
+
+        return _fused
+
+    def fingerprints(
+        self, docs: DataFrame, wrap_base: int | None = None
+    ) -> DataFrame:
+        """`schema` rows for every document, in one Python crossing."""
+        return fan_out(docs.select("doc_id")).mapInPandas(
+            self.stage(wrap_base), schema=self.schema
+        )
 
 
 def _image_encoder(wrap_base: int | None):
@@ -149,19 +189,8 @@ def dhash_neardup_images(
 ) -> DataFrame:
     """(doc_id, fmt, width, height, b0..b3) — each document's fixture
     image (`_image_encoder`) dHashed (`_image_hasher`) in ONE Python
-    crossing: the encoder generator feeds the hasher
-    generator inside one Python worker, so the payload bytes never enter
-    the JVM (a two-stage chain of MapInPandas nodes measured ~0.4 s per
-    evaluation on a 125-doc micro-batch of pure boundary cost)."""
-    enc = _image_encoder(wrap_base)
-    hsh = _image_hasher()
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from hsh(enc(batches))
-
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _fused, schema=HASH_SCHEMA
-    )
+    crossing (`Modality.fingerprints`)."""
+    return IMAGE.fingerprints(docs, wrap_base)
 
 
 def _image_hasher():
@@ -239,6 +268,11 @@ def _image_hasher():
             )
 
     return _hash
+
+
+IMAGE = Modality(
+    "image", _image_encoder, _image_hasher, HASH_SCHEMA, PHASH_HAM_MAX
+)
 
 
 def image_neardup_pairs(
@@ -473,6 +507,14 @@ def q_image_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The band layout every media screen joins on: the corpus side's bands
+# as a0..a3, the batch side's as c0..c3, one (band_idx, band_val) row per
+# band, and the exact Hamming distance between the two 64-bit hashes.
+_A_COLS = [f"b{b} AS a{b}" for b in range(PHASH_BANDS)]
+_STACK = "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
+_HAM = " + ".join(f"bit_count(a{b} ^ c{b})" for b in range(PHASH_BANDS))
+
+
 def image_vs_corpus(
     corpus_hashes: DataFrame,
     batch_hashes: DataFrame,
@@ -503,30 +545,174 @@ def image_vs_corpus(
     relation: the decode+hash lineage then runs twice per action.
 
     Modality-agnostic (like image_neardup_pairs): any 4x16-bit-band hash
-    frame works — the audio/video admission gates pass their fingerprint
-    frames here with `dup_status` 'dup_audio'/'dup_video'."""
-    a_cols = [f"b{b} AS a{b}" for b in range(PHASH_BANDS)]
-    c_cols = [f"b{b} AS c{b}" for b in range(PHASH_BANDS)]
-    stack = "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band_idx, band_val)"
-    c_long = corpus_hashes.selectExpr("doc_id AS doc_a", *a_cols, stack)
-    b_long = batch_hashes.selectExpr("doc_id AS doc_b", *c_cols, stack)
-    ham = " + ".join(f"bit_count(a{b} ^ c{b})" for b in range(PHASH_BANDS))
-    per_doc = (
-        b_long.join(c_long, ["band_idx", "band_val"])
-        .filter(F.expr(ham) <= ham_max)
-        .groupBy("doc_b")
-        .agg(F.countDistinct("doc_a").alias("n_corpus_matches"))
-    )
+    frame works, with `dup_status` e.g. 'dup_audio'/'dup_video'. The
+    admission path screens every modality at once (`media_vs_corpus`)."""
     universe = (
         batch_docs if batch_docs is not None else batch_hashes
     ).select("doc_id")
-    return (
-        universe.join(per_doc, universe["doc_id"] == per_doc["doc_b"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_corpus_matches", F.lit(0)).alias("n_corpus_matches"),
-            F.when(F.coalesce("n_corpus_matches", F.lit(0)) > 0, dup_status)
-            .otherwise("admitted")
-            .alias("status"),
+    b_long = batch_hashes.selectExpr(
+        "'m' AS modality",
+        "doc_id AS doc_b",
+        *[f"b{b} AS c{b}" for b in range(PHASH_BANDS)],
+        _STACK,
+    )
+    return _band_matches(
+        b_long, _corpus_bands(corpus_hashes, "m", ham_max), universe,
+        {"m": dup_status},
+    ).select(
+        "doc_id",
+        F.col("n_m_matches").alias("n_corpus_matches"),
+        F.col("m_status").alias("status"),
+    )
+
+
+def _corpus_bands(hashes: DataFrame, modality: str, ham_max: int) -> DataFrame:
+    """A frozen fingerprint index as (modality, ham_max, doc_a, a0..a3,
+    band_idx, band_val) rows, one per band."""
+    return hashes.selectExpr(
+        f"'{modality}' AS modality",
+        f"{ham_max} AS ham_max",
+        "doc_id AS doc_a",
+        *_A_COLS,
+        _STACK,
+    )
+
+
+def _band_matches(
+    batch_bands: DataFrame,
+    corpus_bands: DataFrame,
+    universe: DataFrame,
+    dup_status: Mapping[str, str],
+) -> DataFrame:
+    """(doc_id, n_<m>_matches, <m>_status for each modality m in
+    `dup_status`) for every doc_id of `universe`: ONE equi-join of the
+    batch's band rows (modality, doc_b, c0..c3, band_idx, band_val) with
+    `_corpus_bands` rows on (modality, band_idx, band_val), the Hamming
+    verify as a per-row filter under each modality's bound, and
+    `countDistinct` corpus matches per modality (a pair sharing several
+    bands counts once). Zero matches -> 'admitted', else dup_status[m]."""
+    per_doc = (
+        batch_bands.join(corpus_bands, ["modality", "band_idx", "band_val"])
+        .filter(F.expr(_HAM) <= F.col("ham_max"))
+        .groupBy("doc_b")
+        .agg(
+            *[
+                F.countDistinct(
+                    F.when(F.col("modality") == m, F.col("doc_a"))
+                ).alias(f"n_{m}_matches")
+                for m in dup_status
+            ]
         )
+    )
+    cols = []
+    for m, dup in dup_status.items():
+        n = F.coalesce(f"n_{m}_matches", F.lit(0))
+        cols += [
+            n.alias(f"n_{m}_matches"),
+            F.when(n > 0, dup).otherwise("admitted").alias(f"{m}_status"),
+        ]
+    return universe.join(
+        per_doc, universe["doc_id"] == per_doc["doc_b"], "left"
+    ).select("doc_id", *cols)
+
+
+# -- the media pass: every modality's fingerprints in one Python crossing --
+
+MEDIA = ("image", "audio", "video")
+
+
+def media_modalities() -> dict[str, Modality]:
+    """{name: Modality} for the image/audio/video fingerprint families
+    (imported here: audiofp and videofp import this module)."""
+    from clinical_search_data_pipeline_spark.operators.audiofp import AUDIO
+    from clinical_search_data_pipeline_spark.operators.videofp import VIDEO
+
+    return {m.name: m for m in (IMAGE, AUDIO, VIDEO)}
+
+
+def media_fingerprints(
+    docs: DataFrame,
+    modalities: tuple[str, ...] = MEDIA,
+    wrap_base: int | None = None,
+) -> DataFrame:
+    """(doc_id, <modality>_<column> ...): every listed modality's
+    fingerprint columns for each document from ONE fan_out and ONE
+    mapInPandas — each Arrow batch runs through every modality's own
+    encoder→fingerprinter stage (`Modality.stage`) inside the same Python
+    worker. A stage whose rows do not line up with the batch's doc_ids
+    fails the task instead of pairing one document's columns with
+    another's. `media_index` projects one modality's frame back out."""
+    import numpy as _np
+
+    specs = media_modalities()
+    stages = [(m, specs[m].stage(wrap_base)) for m in modalities]
+    schema = StructType(
+        [StructField("doc_id", LongType())]
+        + [
+            StructField(f"{m}_{f.name}", f.dataType, f.nullable)
+            for m in modalities
+            for f in specs[m].schema.fields[1:]
+        ]
+    )
+
+    def _media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            doc_ids = pdf["doc_id"].to_numpy()
+            cols = {"doc_id": doc_ids}
+            for m, stage in stages:
+                fp = pd.concat(list(stage(iter([pdf]))), ignore_index=True)
+                if not _np.array_equal(fp["doc_id"].to_numpy(), doc_ids):
+                    raise ValueError(
+                        f"{m} fingerprint rows do not line up with their "
+                        "batch's doc_ids"
+                    )
+                cols.update(
+                    {f"{m}_{c}": fp[c].to_numpy() for c in fp.columns[1:]}
+                )
+            yield pd.DataFrame(cols)
+
+    return fan_out(docs.select("doc_id")).mapInPandas(_media, schema=schema)
+
+
+def media_index(fingerprints: DataFrame, modality: str) -> DataFrame:
+    """One modality's fingerprint frame (its own schema, e.g. HASH_SCHEMA
+    for images) projected out of a `media_fingerprints` frame."""
+    fields = media_modalities()[modality].schema.fields[1:]
+    return fingerprints.select(
+        "doc_id", *[F.col(f"{modality}_{f.name}").alias(f.name) for f in fields]
+    )
+
+
+def media_vs_corpus(
+    corpus: Mapping[str, DataFrame],
+    batch: DataFrame,
+    wrap_base: int | None = None,
+) -> DataFrame:
+    """(doc_id, n_<m>_matches, <m>_status for each modality m in
+    `corpus`): `image_vs_corpus` for every modality at once. `corpus`
+    maps each screened modality to its frozen fingerprint index; the
+    batch is fingerprinted by ONE `media_fingerprints` crossing, unpivoted
+    to (modality, band) rows by one stack and screened by ONE
+    `_band_matches` join over every modality; every batch doc gets a row.
+    Each modality's columns equal its own `image_vs_corpus` verdict."""
+    mods = tuple(corpus)
+    specs = media_modalities()
+    c_long = reduce(
+        DataFrame.unionByName,
+        [_corpus_bands(corpus[m], m, specs[m].ham_max) for m in mods],
+    )
+    rows = ", ".join(
+        f"'{m}', {b}, {m}_b{b}, "
+        + ", ".join(f"{m}_b{i}" for i in range(PHASH_BANDS))
+        for m in mods
+        for b in range(PHASH_BANDS)
+    )
+    cs = ", ".join(f"c{b}" for b in range(PHASH_BANDS))
+    b_long = media_fingerprints(batch, mods, wrap_base).selectExpr(
+        "doc_id AS doc_b",
+        f"stack({PHASH_BANDS * len(mods)}, {rows}) "
+        f"AS (modality, band_idx, band_val, {cs})",
+    )
+    return _band_matches(
+        b_long, c_long, batch.select("doc_id"), {m: f"dup_{m}" for m in mods}
     )

@@ -43,10 +43,11 @@ from pyspark.sql.types import (
 
 from clinical_search_data_pipeline_spark.operators.phash import (
     PHASH_HAM_MAX,
+    Modality,
     image_neardup_pairs as banded_hamming_pairs,  # modality-agnostic
 )
 from clinical_search_data_pipeline_spark.registry import register
-from clinical_search_data_pipeline_spark.sources.readers import fan_out, read_table
+from clinical_search_data_pipeline_spark.sources.readers import read_table
 
 FP_BITS = 64  # consecutive-frame comparisons -> 4 x 16-bit bands
 VF_HAM_MAX = PHASH_HAM_MAX
@@ -132,18 +133,9 @@ def video_neardup_fingerprints(
 ) -> DataFrame:
     """(doc_id, width, height, fps_num, n_frames, b0..b3) — each
     document's fixture clip (`_video_encoder`) fingerprinted
-    (`_video_fingerprinter`) in ONE Python crossing (the
-    dhash_neardup_images rationale): the Y4M payloads never round-trip
-    through the JVM between encode and decode."""
-    enc = _video_encoder(wrap_base)
-    fp = _video_fingerprinter()
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from fp(enc(batches))
-
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        _fused, schema=VIDEO_FP_SCHEMA
-    )
+    (`_video_fingerprinter`) in ONE Python crossing
+    (`phash.Modality.fingerprints`)."""
+    return VIDEO.fingerprints(docs, wrap_base)
 
 
 def _video_fingerprinter():
@@ -194,6 +186,11 @@ def _video_fingerprinter():
             )
 
     return _fp
+
+
+VIDEO = Modality(
+    "video", _video_encoder, _video_fingerprinter, VIDEO_FP_SCHEMA, VF_HAM_MAX
+)
 
 
 # DuckDB twin: per-frame luma energies, difference-sign bits, band values

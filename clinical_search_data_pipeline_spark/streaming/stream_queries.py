@@ -583,31 +583,38 @@ def run_staged_stream(spark: SparkSession, staging: str, process) -> None:
 
 
 def screen_stream(spark: SparkSession, sf_dir: str, gate: str) -> DataFrame:
-    """One admission gate (operators/gates.GATE[gate]) as a streaming
-    query: its index is built ONCE over the standing corpus (doc_id <
-    INCREMENT_SPLIT) as a static side, the batch partition streams in over
+    """One admission gate as a streaming query: the screen pass that
+    decides it (operators/gates.PASS_OF[gate]) builds its index ONCE over
+    the standing corpus (doc_id < INCREMENT_SPLIT) as a static side for
+    that gate alone, the batch partition streams in over
     several micro-batches, and each micro-batch's verdicts append to the
-    sink — how a 100 TB pipeline admits deltas without re-pairing the
-    corpus against itself. Verdicts are micro-batch-invariant, so the
-    accumulated sink equals the one-shot batch run. Each verdict frame is
+    sink as the gate's own frame (`Decision.frame`) — how a 100 TB
+    pipeline admits deltas without re-pairing the corpus against itself.
+    Verdicts are micro-batch-invariant, so the accumulated sink equals the
+    one-shot batch run. Each verdict frame is
     linted right before its write (plans/introspect.collect_stream_lint:
     the linted plan IS the executed plan)."""
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
     )
-    from clinical_search_data_pipeline_spark.operators.gates import GATE
+    from clinical_search_data_pipeline_spark.operators.gates import (
+        DECISION,
+        PASS_OF,
+    )
     from clinical_search_data_pipeline_spark.sources.readers import read_table
 
-    g = GATE[gate]
+    p, only = PASS_OF[gate], (gate,)
     apply_runtime_confs(spark)
     corpus = read_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < INCREMENT_SPLIT
     )
-    idx = g.build(corpus, INCREMENT_SPLIT)
+    idx = p.build(corpus, INCREMENT_SPLIT, only)
     out_dir = tempfile.mkdtemp(prefix=f"csdp_{gate}_gate_out_")
 
     def screen(batch_df: DataFrame, _batch_id: int) -> None:
-        verdicts = g.verdict(batch_df, idx, INCREMENT_SPLIT)
+        verdicts = DECISION[gate].frame(
+            p.screen(batch_df, idx, INCREMENT_SPLIT, only)
+        )
         collect_stream_lint(verdicts)
         verdicts.write.mode("append").parquet(out_dir)
 
@@ -858,7 +865,7 @@ def q_span_gate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
     )
-    from clinical_search_data_pipeline_spark.operators.gates import GATE
+    from clinical_search_data_pipeline_spark.operators.gates import PASS_OF
     from clinical_search_data_pipeline_spark.sources.readers import read_table
 
     docs = read_table(spark, sf_dir, "documents")
@@ -869,8 +876,9 @@ def q_span_gate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count (its own action), the bloom bitset build, and the exact verify
     # join — so without the cache the distinct shuffle runs up to three
     # times per run
-    span = GATE["span"]
-    return span.verdict(batch, span.build(corpus, INCREMENT_SPLIT), INCREMENT_SPLIT)
+    span = PASS_OF["span"]
+    idx = span.build(corpus, INCREMENT_SPLIT, span.gates)
+    return span.screen(batch, idx, INCREMENT_SPLIT, span.gates)
 
 
 # ---------------------------------------------------------------------------

@@ -601,8 +601,8 @@ def _timed_gate_index_lifecycle(
 
     * gate_index_build_vs_probe (#7): run-1 cost (build all eight gate
       indexes + publish them as snapshot artifacts) vs run-2 cost (read
-      the committed artifacts and screen a FIXED batch through all seven
-      probe gates). The probe must stay ~flat-ish in corpus size modulo
+      the committed artifacts and screen a FIXED batch through the four
+      screen passes). The probe must stay ~flat-ish in corpus size modulo
       the index-probe growth the per-gate screens already measure — run 2
       never re-derives anything.
     * gate_index_refresh (#2): folding a FIXED ~40-doc increment into the
@@ -635,8 +635,9 @@ def _timed_gate_index_lifecycle(
     )
 
     def _probe_all(b, idx):
-        for g in GATES:
-            g.verdict(b, idx, split).write.format("noop").mode("overwrite").save()
+        for p in GATES:
+            screen = p.screen(b, idx, split, p.gates)
+            screen.write.format("noop").mode("overwrite").save()
 
     def _force(idx) -> int:
         return sum(df.count() for df in idx.values())

@@ -70,6 +70,8 @@ GATE_VERDICT_PRIMITIVES = {
     "span_contamination",
     "quality_score",
     "image_vs_corpus",
+    "text_screen",
+    "media_vs_corpus",
 }
 
 

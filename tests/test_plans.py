@@ -308,3 +308,56 @@ def test_simhash_fingerprints_zero_shuffle(spark):
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Exchange SinglePartition" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
+
+
+def _outside_cached(plan: str) -> list[str]:
+    """The lines of a 'simple' plan outside every InMemoryRelation subtree
+    (a cached relation's plan prints under its scan but runs once, when
+    the cache fills, not per query)."""
+    kept, cut = [], None
+    for line in plan.splitlines():
+        col = line.find("+- ")
+        col = col if col >= 0 else len(line) - len(line.lstrip(" :"))
+        if cut is not None and col > cut:
+            continue
+        cut = None
+        kept.append(line)
+        if "InMemoryRelation" in line:
+            cut = col
+    return kept
+
+
+def test_admission_screens_each_batch_in_four_passes(spark):
+    """Four screen passes for seven gates: one micro-batch's admission
+    verdict crosses into Python ONCE for all three media modalities and
+    featurizes its text ONCE for both DSIR and quality, and the built
+    media index is ONE more Python crossing (its three tables project one
+    cached fingerprint relation)."""
+    import re
+
+    from clinical_search_data_pipeline_spark.jobs.pipelines import (
+        _admission_verdicts,
+        build_gate_indexes,
+    )
+    from clinical_search_data_pipeline_spark.operators.curation import (
+        INCREMENT_SPLIT,
+    )
+    from clinical_search_data_pipeline_spark.sources.readers import read_table
+
+    docs = read_table(spark, SF_SMOKE, "documents")
+    corpus = docs.filter(F.col("doc_id") < INCREMENT_SPLIT)
+    batch = docs.filter(F.col("doc_id") >= INCREMENT_SPLIT)
+    idx = build_gate_indexes(corpus, INCREMENT_SPLIT)
+    plan = pl.physical_plan(
+        _admission_verdicts(batch, idx, INCREMENT_SPLIT), "simple"
+    )
+    per_batch = _outside_cached(plan)
+    assert sum("MapInPandas" in line for line in per_batch) == 1, plan
+    features = [
+        line
+        for line in per_batch
+        if "Generate explode(concat(transform(" in line and "struct(pos" in line
+    ]
+    assert len(features) == 1, plan
+    crossings = set(re.findall(r"MapInPandas [^\n]*?\)#(\d+),", plan))
+    assert len(crossings) == 2, plan
