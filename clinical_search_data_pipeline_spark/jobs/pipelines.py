@@ -117,8 +117,8 @@ def mart_etl_job(
     set — `mart_load_job(..., snapshot=True)` and `resolve_mart_versions`
     read through it, so a reader racing the ETL gets all-old or all-new
     marts, never new daily_traffic joined to old popular_documents; a
-    crash before the pin leaves the previous complete set live (the ANN
-    index's META_TABLE pattern, operators/ann_index.py, generalized).
+    crash before the pin leaves the previous complete set live (the pin
+    set is committed by `sinks/manifest.publish_pins`).
     `mart_load_job(..., snapshot=True)` is the matching reader.
 
     ``expect`` (snapshot path only) maps mart name -> {expectation name ->
@@ -185,37 +185,17 @@ def mart_etl_job(
                     mart.write.mode("overwrite").parquet(path)
                 written[name] = int(obs.get["rows"])
         if snapshot:
-            _pin_mart_versions(events.sparkSession, out_dir, versions)
+            # full publish: the set is complete by construction, so
+            # last-writer-wins between two full ETLs needs no CAS
+            manifest_sink.publish_pins(
+                events.sparkSession, f"{out_dir}/{MART_META_TABLE}", versions
+            )
     finally:
         events.unpersist()
     return written
 
 
 MART_META_TABLE = "_mart_meta"  # (table, version) pin rows — committed LAST
-
-
-def _pin_mart_versions(
-    spark: SparkSession,
-    out_dir: str,
-    versions: Mapping[str, int],
-    expected_parent=manifest_sink._UNSET,
-) -> int:
-    """Land the consistent-read pin: one snapshot commit whose rows name
-    the exact per-mart versions of this publish. Committed AFTER every
-    mart — the pin either names a complete new set or never lands.
-    ``expected_parent`` forwards the snapshot sink's CAS for read-modify-
-    write pinners (the incremental backfill); the full ETL overwrites
-    unconditionally — its set is complete by construction, so
-    last-writer-wins between two full publishes is safe."""
-    pins = spark.createDataFrame(
-        sorted(versions.items()), "table string, version int"
-    )
-    return manifest_sink.write_snapshot(
-        pins,
-        f"{out_dir}/{MART_META_TABLE}",
-        mode="overwrite",
-        expected_parent=expected_parent,
-    )
 
 
 def resolve_mart_versions(
@@ -225,12 +205,9 @@ def resolve_mart_versions(
     pin exists (pre-pin tables, or non-snapshot layouts). A few bounded
     rows on the driver."""
     try:
-        pins = manifest_sink.read_snapshot(
-            spark, f"{marts_dir}/{MART_META_TABLE}"
-        )
+        return manifest_sink.read_pins(spark, f"{marts_dir}/{MART_META_TABLE}")[1]
     except FileNotFoundError:
         return None
-    return {r.table: r.version for r in pins.collect()}
 
 
 def mart_etl_incremental_job(
@@ -291,19 +268,9 @@ def mart_etl_incremental_job(
             meta = f"{out_dir}/{MART_META_TABLE}"
             for _ in range(5):
                 try:
-                    pin_v = manifest_sink.latest_version(meta)
+                    pin_v, prior = manifest_sink.read_pins(spark, meta)
                 except FileNotFoundError:
-                    pin_v = None
-                prior = (
-                    {
-                        r.table: r.version
-                        for r in manifest_sink.read_snapshot(
-                            spark, meta, version=pin_v
-                        ).collect()
-                    }
-                    if pin_v is not None
-                    else {}
-                )
+                    pin_v, prior = None, {}
                 # per-table versions are monotone, so max() never rolls a
                 # rival's newer commit back to this backfill's older one
                 folded = {
@@ -314,8 +281,8 @@ def mart_etl_incremental_job(
                     },
                 }
                 try:
-                    _pin_mart_versions(
-                        spark, out_dir, folded, expected_parent=pin_v
+                    manifest_sink.publish_pins(
+                        spark, meta, folded, expected_parent=pin_v
                     )
                     break
                 except manifest_sink.SnapshotConflict:
@@ -805,8 +772,9 @@ def training_export_job(
 
 # The gate indexes as persisted lake artifacts: one snapshot table per
 # index relation (operators/gates.py lists them per gate) plus a
-# (table, version) meta pin committed LAST — the exact consistency
-# discipline of operators/ann_index.write_ann_index. At 100 TB a per-run
+# (table, version) meta pin committed LAST through
+# sinks/manifest.publish_pins and resolved once through
+# sinks/manifest.read_pins. At 100 TB a per-run
 # rebuild of the standing-corpus indexes is the cost the BM25/ANN index
 # work already retired on the retrieval side;
 # `ingest_admission_job(gate_index_root=...)` closes the same gap for the
@@ -825,51 +793,39 @@ _CORPUS_PIN = "__corpus_table_version__"  # meta-pin sentinel row: the
 #                   crashed rows instead of duplicating doc_ids (ADVICE r11)
 
 
-def _publish_gate_meta(
-    spark: SparkSession,
+def write_gate_indexes(
+    idx: Mapping[str, DataFrame],
     root: str,
-    versions: dict[str, int],
-    expected_parent=manifest_sink._UNSET,
-) -> int:
-    rows = [(t, versions[t]) for t in GATE_INDEX_TABLES]
-    rows += [
-        (s, versions[s]) for s in (_LAKE_WATERMARK, _CORPUS_PIN) if s in versions
-    ]
-    return manifest_sink.write_snapshot(
-        spark.createDataFrame(rows, "table string, version int"),
-        f"{root}/{_GATE_META}",
-        mode="overwrite",
-        expected_parent=expected_parent,
-    )
-
-
-def write_gate_indexes(idx: Mapping[str, DataFrame], root: str) -> dict[str, int]:
+    lake_version: int | None = None,
+    corpus_version: int | None = None,
+) -> dict[str, int]:
     """Publish the gate indexes under `root`; returns {table: version}
     including the meta pin (committed last — readers resolving mid-publish
-    keep the previous complete view)."""
+    keep the previous complete view). `lake_version` and `corpus_version`
+    are the sentinel pins `publish_gate_index_increment` takes: a full
+    refresh that folded the admitted lake in up to some tip records it,
+    so a later incremental run resumes from there."""
     versions = {
         t: manifest_sink.write_snapshot(idx[t], f"{root}/{t}", mode="overwrite")
         for t in GATE_INDEX_TABLES
     }
-    spark = idx[GATE_INDEX_TABLES[0]].sparkSession
-    versions[_GATE_META] = _publish_gate_meta(spark, root, versions)
+    versions |= _sentinel_pins(lake_version, corpus_version)
+    versions[_GATE_META] = manifest_sink.publish_pins(
+        idx[GATE_INDEX_TABLES[0]].sparkSession, f"{root}/{_GATE_META}", versions
+    )
     return versions
 
 
-def _gate_meta(spark: SparkSession, root: str) -> tuple[int, dict[str, int]]:
-    """(meta version, its {table: version} pins), resolved at ONE pinned
-    meta commit (version lookup + pinned read — never two unpinned reads
-    that could straddle a concurrent refresh)."""
-    meta_v = manifest_sink.latest_version(f"{root}/{_GATE_META}")
-    pins = manifest_sink.read_snapshot(
-        spark, f"{root}/{_GATE_META}", version=meta_v
-    )
-    return meta_v, {r.table: r.version for r in pins.collect()}
+def _sentinel_pins(
+    lake_version: int | None, corpus_version: int | None
+) -> dict[str, int]:
+    pins = {_LAKE_WATERMARK: lake_version, _CORPUS_PIN: corpus_version}
+    return {t: v for t, v in pins.items() if v is not None}
 
 
 def gate_meta_versions(spark: SparkSession, root: str) -> dict[str, int]:
     """The meta pin's {table: version} map, sentinel rows included."""
-    return _gate_meta(spark, root)[1]
+    return manifest_sink.read_pins(spark, f"{root}/{_GATE_META}")[1]
 
 
 def read_gate_indexes(
@@ -968,11 +924,12 @@ def publish_gate_index_increment(
 ) -> dict[str, int]:
     """Incremental refresh of the PERSISTED gate artifacts: the appended
     relations commit as APPENDs folding in the meta-pinned base version
-    (the `add_to_ann_index` discipline — a crashed or race-losing
-    refresh's rows are never folded forward), the overwritten ones (small
-    by construction) replace theirs, a carried relation such as
-    `prefix_dfreq` keeps its pinned version UNTOUCHED (the frozen prefix
-    order), and a fresh meta pin lands LAST with `expected_parent` CAS.
+    (`base_version=` — a crashed or race-losing refresh's rows are never
+    folded forward), the overwritten ones (small by construction) replace
+    theirs, a carried relation such as `prefix_dfreq` keeps its pinned
+    version UNTOUCHED (the frozen prefix order), and a fresh meta pin
+    lands LAST (`manifest_sink.publish_pins`, CAS on the pin version
+    `read_pins` returned; a lost race raises SnapshotConflict).
     Data written per refresh is O(increment + small models), not
     O(corpus) — the production cadence VERDICT r9 #2 asked for.
 
@@ -982,10 +939,10 @@ def publish_gate_index_increment(
     `deltas` (a `gate_index_deltas` result) avoids recomputing the
     increment when the caller also updates the in-memory indexes."""
     # the CAS parent and the base versions come from ONE pinned resolution
-    # — an unpinned read plus a separate tip lookup could straddle a
-    # concurrent commit, CAS-ing against a tip whose pins were never read
-    # (the same two-reads race mart_load_job fixed; ADVICE r10)
-    meta_version, versions = _gate_meta(spark, root)
+    # (manifest_sink.read_pins) — an unpinned read plus a separate tip
+    # lookup could straddle a concurrent commit, CAS-ing against a tip
+    # whose pins were never read (ADVICE r10)
+    meta_version, versions = manifest_sink.read_pins(spark, f"{root}/{_GATE_META}")
     if deltas is None:
         deltas = gate_index_deltas(old, increment, merged, split)
     for t, (df, mode) in deltas.items():
@@ -993,12 +950,9 @@ def publish_gate_index_increment(
             df, f"{root}/{t}", mode=mode,
             base_version=versions[t] if mode == APPEND else None,
         )
-    if lake_version is not None:
-        versions[_LAKE_WATERMARK] = lake_version
-    if corpus_version is not None:
-        versions[_CORPUS_PIN] = corpus_version
-    versions[_GATE_META] = _publish_gate_meta(
-        spark, root, versions, expected_parent=meta_version
+    versions |= _sentinel_pins(lake_version, corpus_version)
+    versions[_GATE_META] = manifest_sink.publish_pins(
+        spark, f"{root}/{_GATE_META}", versions, expected_parent=meta_version
     )
     return versions
 
@@ -1278,8 +1232,13 @@ def ingest_admission_job(
             state["idx"] = build_gate_indexes(merged, split)
             if gate_index_root is not None:
                 # refreshed indexes become the durable artifacts the NEXT
-                # job run probes — the production loop VERDICT r8 #5
-                write_gate_indexes(state["idx"], gate_index_root)
+                # job run probes — the production loop VERDICT r8 #5 —
+                # pinned with the lake tip and corpus version they fold
+                # in, so an incremental restart resumes from there
+                write_gate_indexes(
+                    state["idx"], gate_index_root, lake_version=tip,
+                    corpus_version=state["corpus_version"],
+                )
         state["merged_lake_version"] = tip
         state["refreshes"] += 1
         if not incremental_refresh:

@@ -684,9 +684,8 @@ def write_ann_index(index: dict[str, DataFrame], root: str) -> dict[str, int]:
     of each" mid-re-index could pair new lists with an old model. So the
     LAST commit is a `meta` table pinning the exact (table, version)
     pair, and `read_ann_index` resolves through it: until the meta pin
-    lands, every reader keeps getting the previous complete index (the
-    same resolve-the-manifest-first discipline the snapshot sink applies
-    per table, lifted one level)."""
+    lands, every reader keeps getting the previous complete index
+    (`sinks/manifest.publish_pins` and `read_pins`)."""
     # The table publishes are independent write actions on disjoint
     # paths; running them concurrently lets the corpus-sized `lists` write
     # back-fill the 1-row `model` commit's scheduling gaps (guide §2.6).
@@ -708,11 +707,8 @@ def write_ann_index(index: dict[str, DataFrame], root: str) -> dict[str, int]:
         for name in INDEX_TABLES
     ]
     versions = dict(zip(INDEX_TABLES, run_concurrently(spark, *publishes)))
-    pins = spark.createDataFrame(
-        [(t, versions[t]) for t in INDEX_TABLES], "table string, version int"
-    )
-    versions[META_TABLE] = manifest.write_snapshot(
-        pins, f"{root}/{META_TABLE}", mode="overwrite"
+    versions[META_TABLE] = manifest.publish_pins(
+        spark, f"{root}/{META_TABLE}", versions
     )
     return versions
 
@@ -730,40 +726,6 @@ def _check_layout(root: str, versions: dict[str, int]) -> None:
         )
 
 
-def _pinned(spark: SparkSession, root: str) -> tuple[int, dict[str, int]]:
-    """(meta version, {table: version}) of the latest meta pin. Resolves
-    the pin version ONCE and reads the pins AT that version — two
-    unpinned reads could straddle a concurrent commit, CAS-ing against a
-    tip whose pins were never read (ADVICE r10)."""
-    meta_version = manifest.latest_version(f"{root}/{META_TABLE}")
-    pins = manifest.read_snapshot(
-        spark, f"{root}/{META_TABLE}", version=meta_version
-    )
-    versions = {r.table: r.version for r in pins.collect()}
-    _check_layout(root, versions)
-    return meta_version, versions
-
-
-def _publish_pins(
-    spark: SparkSession, root: str, versions: dict[str, int], parent: int
-) -> dict[str, int]:
-    """Commit the meta pin for `versions` with CAS on `parent`; returns
-    `versions` with the new meta version added."""
-    pins_df = spark.createDataFrame(
-        # carry EVERY pinned relation forward (tombstones included when a
-        # remove happened since the last compaction)
-        sorted(versions.items()),
-        "table string, version int",
-    )
-    versions[META_TABLE] = manifest.write_snapshot(
-        pins_df,
-        f"{root}/{META_TABLE}",
-        mode="overwrite",
-        expected_parent=parent,
-    )
-    return versions
-
-
 def read_ann_index(
     spark: SparkSession, root: str, versions: dict[str, int] | None = None
 ) -> dict[str, DataFrame]:
@@ -776,8 +738,7 @@ def read_ann_index(
     `ann_index_topk` masks it out. A root written in the superseded
     four-table layout raises ValueError (re-index it)."""
     if versions is None:
-        pins = manifest.read_snapshot(spark, f"{root}/{META_TABLE}")
-        versions = {r.table: r.version for r in pins.collect()}
+        versions = manifest.read_pins(spark, f"{root}/{META_TABLE}")[1]
     _check_layout(root, versions)
     names = list(INDEX_TABLES)
     if TOMBSTONE_TABLE in versions:
@@ -815,7 +776,8 @@ def add_to_ann_index(
     candidate list).
 
     Returns the new {table: version} map (model unchanged)."""
-    meta_version, versions = _pinned(spark, root)
+    meta_version, versions = manifest.read_pins(spark, f"{root}/{META_TABLE}")
+    _check_layout(root, versions)
     index = {
         name: manifest.read_snapshot(
             spark, f"{root}/{name}", version=versions[name]
@@ -839,7 +801,10 @@ def add_to_ann_index(
         collect_stats=False,
         base_version=versions["lists"],
     )
-    return _publish_pins(spark, root, versions, meta_version)
+    versions[META_TABLE] = manifest.publish_pins(
+        spark, f"{root}/{META_TABLE}", versions, expected_parent=meta_version
+    )
+    return versions
 
 
 def remove_from_ann_index(
@@ -859,7 +824,8 @@ def remove_from_ann_index(
             [(int(v),) for v in vec_ids], "vec_id long"
         )
     vec_ids = vec_ids.select("vec_id").distinct()
-    meta_version, versions = _pinned(spark, root)
+    meta_version, versions = manifest.read_pins(spark, f"{root}/{META_TABLE}")
+    _check_layout(root, versions)
     lists = manifest.read_snapshot(
         spark, f"{root}/lists", version=versions["lists"]
     )
@@ -885,7 +851,10 @@ def remove_from_ann_index(
         versions[TOMBSTONE_TABLE] = manifest.write_snapshot(
             vec_ids, tomb_table, mode="overwrite", collect_stats=False
         )
-    return _publish_pins(spark, root, versions, meta_version)
+    versions[META_TABLE] = manifest.publish_pins(
+        spark, f"{root}/{META_TABLE}", versions, expected_parent=meta_version
+    )
+    return versions
 
 
 def compact_ann_index(
@@ -902,7 +871,8 @@ def compact_ann_index(
     `compact_snapshot` semantics — values unchanged, layout collapsed —
     so add+compact stays bit-equal to a fresh rebuild
     (tests/test_ann_index.py pins it)."""
-    meta_version, versions = _pinned(spark, root)
+    meta_version, versions = manifest.read_pins(spark, f"{root}/{META_TABLE}")
+    _check_layout(root, versions)
     lists = manifest.read_snapshot(
         spark, f"{root}/lists", version=versions["lists"]
     )
@@ -926,7 +896,10 @@ def compact_ann_index(
             mode="overwrite",
             collect_stats=False,
         )
-    return _publish_pins(spark, root, versions, meta_version)
+    versions[META_TABLE] = manifest.publish_pins(
+        spark, f"{root}/{META_TABLE}", versions, expected_parent=meta_version
+    )
+    return versions
 
 
 def ann_index_topk(

@@ -52,6 +52,12 @@ without importing a lakehouse:
   (O(delta)), replace commits derive deletes/inserts from the replaced
   partitions' file sets, compactions contribute zero rows, and opaque
   overwrites still refuse. Feed horizon = vacuum retention;
+* ``publish_pins`` / ``read_pins`` give a SET of tables one commit point
+  (the per-table discipline lifted one level): the members commit first,
+  then a ``(table, version)`` pin table, and readers resolve every member
+  through one pin version — a crash or a reader racing the publish sees
+  the previous complete set (the marts' ``_mart_meta``, the ANN and
+  gate-index ``meta`` tables);
 * ``read_snapshot(as_of_ts=...)`` resolves a version by commit wall-clock
   (``committed_at`` recorded per manifest) — Delta's timestampAsOf;
 * ``write_snapshot(mode="append", allow_new_columns=True)`` and
@@ -1765,6 +1771,38 @@ def read_snapshot(
             else df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
         )
     return df
+
+
+PIN_SCHEMA = "table string, version int"  # one row per member table
+
+
+def publish_pins(
+    spark: SparkSession,
+    meta_table: str,
+    pins: dict[str, int],
+    expected_parent: int | None = _UNSET,  # type: ignore[assignment]
+) -> int:
+    """Commit the pin set `pins` ({table: version}) as one overwrite
+    snapshot of `meta_table`; returns its version. Call it after every
+    member commit has returned. ``expected_parent`` is the CAS a
+    read-modify-write publisher passes (the version `read_pins` returned);
+    a full publish names its whole set and may omit it."""
+    return write_snapshot(
+        spark.createDataFrame(sorted(pins.items()), PIN_SCHEMA),
+        meta_table,
+        mode="overwrite",
+        expected_parent=expected_parent,
+    )
+
+
+def read_pins(spark: SparkSession, meta_table: str) -> tuple[int, dict[str, int]]:
+    """(pin version, {table: version}) of the latest pin set. The version
+    is resolved ONCE and the pins read at it, so a CAS against the
+    returned version covers exactly the pins that were read (raises
+    FileNotFoundError when no pin set was published)."""
+    version = latest_version(meta_table)
+    pins = read_snapshot(spark, meta_table, version=version).collect()
+    return version, {r.table: r.version for r in pins}
 
 
 def net_changes(changes: DataFrame, keys, strict: bool = True) -> DataFrame:

@@ -203,121 +203,47 @@ def _timed_admission_gates(
     spark, src: str, scaled_dir: str, factor: int, results: dict
 ) -> None:
     """The flagship ingest story measured (VERDICT r06 #7): for each of the
-    seven admission gates, time the frozen-INDEX/MODEL build and the
-    per-batch SCREEN separately at 1x vs FACTORx standing corpus with a
-    FIXED batch (the src batch partition; copy 0 of the scaled corpus is
-    the identity replica, so the batch meets identical matches in both
-    runs). The screen against the engine-cached index must grow far
-    sublinearly in corpus size — a batch admission is an index probe, not
-    a corpus rescan (the gram/prefix index relations are what production
-    backs with bloom filters; model-sized gates are corpus-independent by
-    construction)."""
+    four admission screen passes (operators/gates.GATES — what
+    `ingest_admission_job` runs), time the frozen-INDEX/MODEL build and
+    the per-batch SCREEN separately at 1x vs FACTORx standing corpus with
+    a FIXED batch (the src batch partition; copy 0 of the scaled corpus is
+    the identity replica). The screen against the engine-cached index must
+    grow far sublinearly in corpus size — a batch admission is an index
+    probe, not a corpus rescan (model-sized passes are corpus-independent
+    by construction). One `admission_<pass>` entry per pass."""
     from pyspark.sql import functions as F
 
     from clinical_search_data_pipeline_spark.caching import engine_cache
-    from clinical_search_data_pipeline_spark.operators.classifier import (
-        nb_quality_model,
-        quality_labels,
-        quality_score,
-    )
     from clinical_search_data_pipeline_spark.operators.curation import (
         INCREMENT_SPLIT,
-        batch_vs_corpus,
-        corpus_prefix_index,
     )
-    from clinical_search_data_pipeline_spark.operators.importance import (
-        dsir_model,
-        dsir_score,
-    )
+    from clinical_search_data_pipeline_spark.operators.gates import GATES
     from clinical_search_data_pipeline_spark.operators.spans import (
         corpus_gram_bloom,
         corpus_gram_index,
-        span_contamination,
         word_grams,
     )
 
+    split = INCREMENT_SPLIT
     docs_base = spark.read.parquet(f"{src}/documents.parquet")
     docs_scaled = spark.read.parquet(f"{scaled_dir}/documents.parquet")
-    batch = docs_base.filter(F.col("doc_id") >= INCREMENT_SPLIT)
+    batch = docs_base.filter(F.col("doc_id") >= split)
 
-    from clinical_search_data_pipeline_spark.operators.audiofp import (
-        AF_HAM_MAX,
-        audio_neardup_fingerprints,
-    )
-    from clinical_search_data_pipeline_spark.operators.phash import (
-        dhash_neardup_images,
-        image_vs_corpus,
-    )
-    from clinical_search_data_pipeline_spark.operators.videofp import (
-        VF_HAM_MAX,
-        video_neardup_fingerprints,
-    )
-
-    # Perceptual gates measured with plain in-decade planting (no
-    # wrap_base): batch docs' leaders live in the corpus, and copy 0 of
-    # the scaled corpus is the identity replica while the other copies
-    # carry SHIFTED doc_ids (disjoint media) — so the fixed batch meets
-    # identical matches vs the 1x and Nx corpora and the screen ratio
-    # isolates index-probe cost, not fixture leader-concentration.
-    gates = {
-        "admission_neardup": (
-            corpus_prefix_index,
-            lambda b, idx: batch_vs_corpus(idx, b),
-        ),
-        "admission_dsir": (dsir_model, dsir_score),
-        "admission_span": (corpus_gram_index, span_contamination),
-        "admission_span_bloom": (
-            lambda c: (lambda idx: (idx, corpus_gram_bloom(idx)))(
-                corpus_gram_index(c)
-            ),
-            lambda b, idx: span_contamination(b, idx[0], bloom=idx[1]),
-        ),
-        "admission_quality": (
-            lambda c: nb_quality_model(quality_labels(c)),
-            quality_score,
-        ),
-        "admission_image": (
-            dhash_neardup_images,
-            lambda b, idx: image_vs_corpus(
-                idx, dhash_neardup_images(b)
-            ),
-        ),
-        "admission_audio": (
-            audio_neardup_fingerprints,
-            lambda b, idx: image_vs_corpus(
-                idx,
-                audio_neardup_fingerprints(b),
-                ham_max=AF_HAM_MAX,
-                dup_status="dup_audio",
-            ),
-        ),
-        "admission_video": (
-            video_neardup_fingerprints,
-            lambda b, idx: image_vs_corpus(
-                idx,
-                video_neardup_fingerprints(b),
-                ham_max=VF_HAM_MAX,
-                dup_status="dup_video",
-            ),
-        ),
-    }
-    def _freeze(side):
-        # corpus_prefix_index returns a tuple of relations; cache each
-        if isinstance(side, tuple):
-            parts = tuple(engine_cache(p) for p in side)
-            return parts, sum(p.count() for p in parts)
-        cached = engine_cache(side)
-        return cached, cached.count()
-
-    for name, (build, screen) in gates.items():
-        entry: dict = {"batch": "src doc_id >= split (fixed across runs)"}
+    for p in GATES:
+        name = f"admission_{p.name}"
+        entry: dict = {
+            "batch": "src doc_id >= split (fixed across runs)",
+            "gates": list(p.gates),
+        }
         for tag, corpus in (("base", docs_base), ("scaled", docs_scaled)):
             t0 = time.perf_counter()
-            idx, n_idx = _freeze(build(corpus))  # build cost = cache fill
+            idx = p.build(corpus, split, p.gates)
+            n_idx = sum(idx[t].count() for t in p.tables)  # cache fill
             entry[f"index_{tag}_sec"] = round(time.perf_counter() - t0, 3)
             entry[f"index_{tag}_rows"] = n_idx
             t0 = time.perf_counter()
-            screen(batch, idx).write.format("noop").mode("overwrite").save()
+            screen = p.screen(batch, idx, split, p.gates)
+            screen.write.format("noop").mode("overwrite").save()
             entry[f"screen_{tag}_sec"] = round(time.perf_counter() - t0, 3)
             release_caches()
         entry["index_ratio"] = round(
@@ -571,7 +497,7 @@ def _timed_admission_gates(
     }
     grams = engine_cache(word_grams(batch))
     total = grams.count()
-    entry = results["admission_span_bloom"]
+    entry = results["admission_span"]
     entry["grams_batch_total"] = total
     for tag, corpus in corpus_disjoint.items():
         idx = engine_cache(corpus_gram_index(corpus))
@@ -585,7 +511,7 @@ def _timed_admission_gates(
             after / max(total, 1), 4
         )
         print(
-            f"# admission_span_bloom[{tag}]: exact-join input {total} -> "
+            f"# admission_span[{tag}]: exact-join input {total} -> "
             f"{after} grams ({after / max(total, 1):.1%} survive; "
             f"{members} true members) vs a disjoint "
             f"{entry[f'disjoint_{tag}_index_grams']}-gram corpus index",

@@ -1,8 +1,10 @@
 """Module structure of the package: the ANN quantizers have one owner
 (operators/ann_index.py imports no other operator module but
-`fragments`), and every `from clinical_search_data_pipeline_spark... import
-X` in the package and the root scripts resolves — including imports inside
-functions, which otherwise fail only when a rarely run path is taken."""
+`fragments`), the pin tables of multi-table artifacts have one writer
+(sinks/manifest.py), and every `from clinical_search_data_pipeline_spark...
+import X` in the package and the root scripts resolves — including imports
+inside functions, which otherwise fail only when a rarely run path is
+taken."""
 
 from __future__ import annotations
 
@@ -123,3 +125,43 @@ def test_worker_daemon_imports_stay_light():
         or m.startswith(f"{PACKAGE}.operators")
     ]
     assert not heavy, heavy
+
+
+def _names_in(node) -> list[str]:
+    """Every identifier, attribute and string constant under `node`."""
+    out = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.append(n.value)
+        elif isinstance(n, (ast.Name, ast.Attribute)):
+            out.append(getattr(n, "id", None) or n.attr)
+    return out
+
+
+def test_only_the_manifest_sink_writes_pin_tables():
+    """A multi-table artifact's (table, version) pin set has one writer
+    and one reader, sinks/manifest.publish_pins and read_pins: no other
+    package module spells the pin schema or writes a snapshot under a
+    meta table, so a second copy of the protocol cannot come back."""
+    home = REPO / PACKAGE / "sinks" / "manifest.py"
+    found = []
+    for path in sorted((REPO / PACKAGE).rglob("*.py")):
+        if path == home:
+            continue
+        rel = path.relative_to(REPO)
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Constant) and (
+                node.value == "table string, version int"
+            ):
+                found.append(f"{rel}:{node.lineno}: the pin schema")
+            if not isinstance(node, ast.Call) or (
+                getattr(node.func, "id", None)
+                or getattr(node.func, "attr", None)
+            ) != "write_snapshot":
+                continue
+            table = node.args[1:2] + [
+                k.value for k in node.keywords if k.arg == "table"
+            ]
+            if any("meta" in w.lower() for t in table for w in _names_in(t)):
+                found.append(f"{rel}:{node.lineno}: a meta-table write")
+    assert not found, "\n".join(found)

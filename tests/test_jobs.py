@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinical_search_data_pipeline_spark.jobs import pipelines
@@ -1044,12 +1045,18 @@ def test_incremental_refresh_publishes_appendy_artifacts(spark, tmp_path):
     )
 
 
-def test_incremental_refresh_restart_resumes_from_watermark(spark, tmp_path):
+@pytest.mark.parametrize(
+    "first_incremental", [True, False], ids=["incremental", "full"]
+)
+def test_incremental_refresh_restart_resumes_from_watermark(
+    spark, tmp_path, first_incremental
+):
     """Restart safety for the incremental loop: the artifacts record the
     admitted-lake version they reflect (a meta-pin sentinel), a restarted
     job resumes the change feed from it instead of re-folding history
     (no duplicate index rows), and the standing corpus is not re-seeded
-    over its folded-in admissions."""
+    over its folded-in admissions. The first run's refresh is either
+    incremental or a full rebuild; both pin the lake tip they folded in."""
     import os
 
     from clinical_search_data_pipeline_spark.jobs.pipelines import (
@@ -1087,7 +1094,7 @@ def test_incremental_refresh_restart_resumes_from_watermark(spark, tmp_path):
         spark, SF_SMOKE, str(tmp_path / "out1"),
         snapshot_table=lake, refresh_every=1,
         staging_dir=stage_one("flat1", doc_a),
-        gate_index_root=root, incremental_refresh=True,
+        gate_index_root=root, incremental_refresh=first_incremental,
     )
     wm1 = gate_index_lake_version(spark, root)
     lake_tip = m.snapshots(lake)[-1]["version"]
