@@ -1105,6 +1105,16 @@ def ingest_admission_job(
     docs = read_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < split)
 
+    corpus_table = f"{snapshot_table}_corpus" if snapshot_table else None
+    seeded = None
+    if refresh_every is not None and not manifest_sink.snapshots(corpus_table):
+        # seed the standing corpus as snapshot v1 — every refresh is a
+        # further atomic version on this table. A restart finds the table
+        # already seeded and must NOT overwrite the folded-in admissions.
+        # Seeded BEFORE the first index publish, so that pin names it.
+        seeded = manifest_sink.write_snapshot(
+            corpus, corpus_table, mode="overwrite"
+        )
     meta_pins: dict[str, int] | None = None
     if gate_index_root is not None and gate_indexes_published(gate_index_root):
         # resolve the meta pin ONCE and derive indexes, lake watermark,
@@ -1125,18 +1135,20 @@ def ingest_admission_job(
     else:
         first_idx = build_gate_indexes(corpus, split)
         if gate_index_root is not None:
-            write_gate_indexes(first_idx, gate_index_root)
+            # with refreshes, the first pin records the lake (nothing
+            # folded yet) and the seeded corpus these indexes were built
+            # from: a refresh that dies before its own pin then replays
+            # from the seed instead of stacking on its crashed append
+            write_gate_indexes(
+                first_idx, gate_index_root,
+                lake_version=None if refresh_every is None else 0,
+                corpus_version=seeded,
+            )
         gate_index_source = "built"
         lake_watermark = 0
     state: dict = {"idx": first_idx, "batches": 0, "screened": 0,
                    "admitted": 0, "refreshes": 0,
                    "merged_lake_version": lake_watermark}
-    corpus_table = f"{snapshot_table}_corpus" if snapshot_table else None
-    if refresh_every is not None and not manifest_sink.snapshots(corpus_table):
-        # seed the standing corpus as snapshot v1 — every refresh is a
-        # further atomic version on this table. A restart finds the table
-        # already seeded and must NOT overwrite the folded-in admissions.
-        manifest_sink.write_snapshot(corpus, corpus_table, mode="overwrite")
     if refresh_every is not None:
         # the corpus version incremental folds build on: the durable meta
         # pin when artifacts were read back (a crashed append whose pin

@@ -8,8 +8,9 @@ solve this with a commit log; this sink implements the minimal, dependency-
 free core of that idea — enough to make a 100 TB mart publish atomic —
 without importing a lakehouse:
 
-* data files are written ONCE into an immutable per-snapshot directory
-  (``files/v<version>/``) by Spark's normal parallel committer;
+* data files are written ONCE into an immutable writer-unique stage
+  directory (``files/stage-<uuid>/``) by Spark's normal parallel
+  committer;
 * a snapshot becomes visible only when a single JSON **manifest** naming
   exactly its files is linked into ``_manifests/v<version>.json``. The link
   is ``os.link`` (create-exclusive, atomic on POSIX; fails with EEXIST
@@ -29,13 +30,20 @@ without importing a lakehouse:
   snapshot's files PLUS the new directory — an incremental publish reuses
   already-written data files, the property that makes per-batch publishing
   affordable at scale;
-* losers of a concurrent commit race get EEXIST, re-read the log, and
-  retry with the next version (optimistic concurrency, single winner per
-  version — the same contract as Delta/Iceberg's commit point);
-  read-modify-write publishers (merge, compact) additionally pin
-  ``expected_parent`` so a concurrent commit between their read and their
-  write raises `SnapshotConflict` instead of silently dropping it
-  (lost-update protection — Delta's "serializable commit" check);
+* every writer is a per-attempt PLAN (base version, entries it keeps,
+  frames it stages, change rows, mode) handed to ONE optimistic commit
+  primitive, ``_commit``, which stages, builds the manifest, links it and
+  retries — every DML statement is one optimistic log commit, as in
+  Delta Lake. A writer that loses the race for a version (single winner
+  per version — Delta/Iceberg's commit point) does one of three things:
+  a stage-once writer (``write_snapshot``, ``replace_partitions``)
+  re-links the files it already staged onto the new tip, re-running no
+  Spark job; a pinned writer (``expected_parent=``) raises
+  `SnapshotConflict`; a read-modify-write writer (merge, DELETE, UPDATE,
+  CDC apply, compact) discards its stage and re-plans from the new tip,
+  so a concurrent commit is folded in, never dropped (lost-update
+  protection — Delta's "serializable commit" check). The primitive
+  deletes every directory an attempt staged but did not link;
 * ``delete_from_snapshot`` is ``DELETE FROM ... WHERE`` — partition/stats
   pruning picks the touched files, only those rewrite without their
   matching rows, everything else carries by reference, and the deleted
@@ -69,10 +77,11 @@ without importing a lakehouse:
 * ``vacuum`` deletes data directories no retained manifest references,
   but never a stage directory younger than ``retention`` seconds — an
   in-flight writer's staged-but-uncommitted data is not garbage (the same
-  reasoning as Delta VACUUM's retention window). ``write_snapshot``
+  reasoning as Delta VACUUM's retention window). Every commit
   additionally re-verifies its staged files exist immediately before the
-  commit link and aborts if a rogue vacuum removed them, so a manifest can
-  never name deleted files.
+  link and aborts if a rogue vacuum removed them, so a manifest can never
+  name deleted files. A writer killed between staging and its link
+  leaves its stage for vacuum.
 
 Layout:
     table/
@@ -118,6 +127,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -149,7 +159,7 @@ DEFAULT_RETENTION_SECONDS = 24 * 3600
 class SnapshotConflict(RuntimeError):
     """A commit found a different parent version than the caller pinned
     with ``expected_parent`` — the table moved between the caller's read
-    and its write. Re-run the read-modify-write loop."""
+    and its write. Re-read and publish again."""
 
 
 class ExpectationViolation(ValueError):
@@ -227,9 +237,10 @@ def _enforce_expectations(
     ``on_violation='fail'``: any violation raises ExpectationViolation
     and nothing commits — the previous version stays live. On
     write_snapshot's observed-metrics path the data IS staged first (the
-    gate metrics ride the staged write) and the stage directory is
-    deleted before the raise; this pinned path (taken with table-level
-    gates, or when CollectMetrics rejects a gate) raises before staging.
+    gate metrics ride the staged write) and the commit primitive deletes
+    the stage directory as the gate raises; this pinned path (taken with
+    table-level gates, or when CollectMetrics rejects a gate) raises
+    before staging.
     A crash between staging and the delete leaves an unreferenced stage
     directory that readers never see and `vacuum` reclaims.
     ``'quarantine'``: violating rows are appended to the sibling
@@ -551,8 +562,8 @@ def _commit_manifest(
 ) -> bool:
     """The single commit point every writer funnels through: publish the
     version's JSON create-exclusively through the CommitStore (returns
-    False on a lost race so the caller's optimistic loop retries), then
-    write the tip hint and any due checkpoint sidecar.
+    False on a lost race so `_commit` retries), then write the tip hint
+    and any due checkpoint sidecar.
 
     ``manifest`` always carries the FULL file list (writers build it in
     memory anyway — list/pointer work, not serialization). ``delta``
@@ -695,6 +706,216 @@ def _footer_stats(abs_path: str) -> tuple[int, dict[str, list]]:
     }
 
 
+def _shape(schema: StructType) -> list[tuple]:
+    """Field names and types: schemas compare on these, because a parquet
+    read is always nullable while an in-memory frame may carry non-null
+    fields for the same data."""
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+class _Plan(NamedTuple):
+    """One commit attempt of a writer, planned against the tip `_commit`
+    resolved. ``base`` is the version whose files ``keep`` carries by
+    reference (for a plain overwrite, None); its manifest ``base_man``
+    also lends the commit its CDC replay watermark. ``data`` stages as the
+    new data files, ``changes`` (cdf ``"rows"``) as the commit's change
+    files. ``cdf`` is ``"rows"``, ``"fileset"`` (replaced files are
+    deletes, staged files inserts) or a recorded value such as
+    ``{"kind": "noop"}``."""
+
+    mode: str
+    schema: str
+    partition_by: list[str]
+    data: DataFrame
+    base: int | None = None
+    base_man: dict | None = None
+    keep: Sequence[dict] = ()
+    changes: DataFrame | None = None
+    cdf: str | dict | None = None
+    extra: dict | None = None
+
+
+def _commit(
+    table: str,
+    plan: Callable[[int | None], _Plan | int],
+    what: str,
+    retries: int,
+    expected_parent: int | None = _UNSET,  # type: ignore[assignment]
+    replan: bool = False,
+    collect_stats: bool = True,
+    staged_fields: Callable[[], dict] | None = None,
+) -> int:
+    """The one optimistic copy-on-write commit every writer runs; returns
+    the committed version. Each attempt resolves the tip, asks `plan` for
+    the commit against it (an int instead means "nothing to commit: the
+    table stays at this version"), stages the planned frames under
+    writer-unique ``stage-``/``cdf-`` directories with footer stats,
+    checks that the staged files still exist (a rogue vacuum may have
+    reclaimed them), builds the manifest and links it create-exclusively
+    (`_commit_manifest`, which refuses a version a rival took).
+    ``staged_fields`` runs once after staging and returns manifest fields
+    only the staged write decides (expectation counts); raising from it
+    aborts the commit.
+
+    A lost race is handled one of three ways:
+
+    * pinned (``expected_parent`` given): raise `SnapshotConflict`;
+    * ``replan``: discard the staged directories and plan again from the
+      new tip (the read-modify-write writers);
+    * otherwise: plan again, but re-link the files already staged — no
+      Spark job re-runs.
+
+    Every directory this call staged and did not link is deleted when it
+    returns or raises, a lost race included; a hard kill leaves it to
+    `vacuum`."""
+    pinned = expected_parent is not _UNSET
+    files_dir = os.path.join(table, _FILES_DIR)
+    staged: list[str] = []  # directories staged here and not linked
+    new_entries: list[dict] = []
+    changes_dir = None
+    fields: dict = {}
+
+    def stage(frame: DataFrame, kind: str, partition_by=()) -> str:
+        # writer-unique: the version is only decided at link time, so two
+        # racing writers never write into the same directory
+        name = f"{kind}-{uuid.uuid4().hex}"
+        staged.append(name)
+        writer = frame.write.mode("error")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(os.path.join(files_dir, name))
+        return name
+
+    try:
+        for _ in range(retries):
+            parent = _tip(table)
+            if pinned and parent != expected_parent:
+                raise SnapshotConflict(
+                    f"{table}: expected parent {expected_parent}, "
+                    f"found {parent}"
+                )
+            p = plan(parent)
+            if not isinstance(p, _Plan):
+                return p
+            if not staged:
+                data_dir = stage(p.data, "stage", p.partition_by)
+                new_entries = []
+                for rel in _list_part_files(os.path.join(files_dir, data_dir)):
+                    rows, stats = (
+                        _footer_stats(os.path.join(files_dir, data_dir, rel))
+                        if collect_stats
+                        else (None, {})
+                    )
+                    new_entries.append(
+                        {
+                            "path": f"{data_dir}/{rel}",
+                            "partition": _partition_of(rel),
+                            "rows": rows,
+                            "stats": stats,
+                        }
+                    )
+                changes_dir = (
+                    stage(p.changes, "cdf") if p.changes is not None else None
+                )
+                fields = staged_fields() if staged_fields else {}
+            paths = [e["path"] for e in new_entries]
+            kept = {e["path"] for e in p.keep}
+            removed = (
+                [e["path"] for e in _entries(p.base_man)
+                 if e["path"] not in kept]
+                if p.base_man is not None
+                else []
+            )
+            files = list(p.keep) + new_entries
+            version = (parent or 0) + 1
+            manifest = {
+                "version": version,
+                "parent": parent,
+                "mode": p.mode,
+                "schema": p.schema,
+                "partition_by": p.partition_by,
+                "files": files,
+                "num_files": len(files),
+                "committed_at": time.time(),
+            }
+            if p.mode == "append" and p.base is not None:
+                # the version whose files this append folded in — the
+                # change feed diffs against it (≠ parent only under
+                # base_version)
+                manifest["append_base"] = p.base
+            if p.cdf == "rows":
+                manifest["cdf"] = {"kind": "rows", "dir": changes_dir}
+            elif p.cdf == "fileset":
+                manifest["cdf"] = {
+                    "kind": "fileset",
+                    "removed": removed,
+                    "added": paths,
+                }
+            elif p.cdf is not None:
+                manifest["cdf"] = p.cdf
+            if p.base_man is not None:
+                # a commit that keeps its base's rows carries the CDC
+                # replay watermark; only a plain overwrite severs it
+                manifest.update(_carry_watermark(p.base_man) or {})
+            manifest.update(p.extra or {})
+            manifest.update(fields)
+            # rewriting commits that keep part of their base store only
+            # their file delta; an overwrite's file list IS its delta
+            delta = (
+                {"vs": p.base, "add": new_entries, "remove": removed}
+                if p.base is not None and p.mode != "overwrite"
+                else None
+            )
+            # last check before the link: a rogue vacuum may have reclaimed
+            # the staged files, and a manifest naming them would poison the
+            # version for every reader
+            gone = [
+                path
+                for path in paths + ([changes_dir] if changes_dir else [])
+                if not os.path.exists(os.path.join(files_dir, path))
+            ]
+            if gone:
+                raise RuntimeError(
+                    f"staged files vanished before commit at {table} "
+                    f"(vacuumed?): {gone[:3]}"
+                    f"{'...' if len(gone) > 3 else ''}"
+                )
+            # once linked, only an empty rewrite's data dir (every touched
+            # row deleted) stays unreferenced
+            linked_leftover = [] if paths else [data_dir]
+            try:
+                won = _commit_manifest(table, version, manifest, delta)
+            except BaseException:
+                # the CAS itself raised: delete only what provably did
+                # not link (an ambiguous put may have landed)
+                try:
+                    ours = _read_stored(table, version).get(
+                        "committed_at"
+                    ) == manifest["committed_at"]
+                except FileNotFoundError:
+                    ours = False
+                except Exception:
+                    ours = True  # unknown: leave the files to vacuum
+                if ours:
+                    staged = linked_leftover
+                raise
+            if won:
+                staged = linked_leftover
+                return version
+            if replan:
+                for name in staged:
+                    shutil.rmtree(
+                        os.path.join(files_dir, name), ignore_errors=True
+                    )
+                staged = []
+        raise RuntimeError(
+            f"{what} lost {retries} races on {table}; giving up"
+        )
+    finally:
+        for name in staged:
+            shutil.rmtree(os.path.join(files_dir, name), ignore_errors=True)
+
+
 def write_snapshot(
     df: DataFrame,
     table: str,
@@ -705,19 +926,17 @@ def write_snapshot(
     collect_stats: bool = True,
     base_version: int | None = None,
     allow_new_columns: bool = False,
-    cdf: dict | None = None,
     expect: dict | None = None,
     on_violation: str = "fail",
     expect_agg: dict | None = None,
-    manifest_extra: dict | None = None,
 ) -> int:
     """Publish `df` as a new snapshot of `table`; returns the version.
 
     ``overwrite``: the new snapshot is exactly `df`. ``append``: the new
     snapshot is the parent snapshot's files plus `df`'s — the parent data
     is NOT rewritten. Either way nothing is visible until the manifest
-    link lands, and a crash before it leaves only an orphan data directory
-    (invisible to readers, reclaimed by vacuum after its retention window).
+    link lands. `df` is staged once: a commit that loses a race re-links
+    the same files onto the new tip.
 
     ``partition_by`` writes hive-layout files and records each file's
     partition values (plus footer min/max stats when ``collect_stats``) in
@@ -726,9 +945,8 @@ def write_snapshot(
 
     ``expected_parent`` (optional) pins the parent version this commit
     must land on: if the table's latest version differs at commit time,
-    raises `SnapshotConflict` instead of publishing — the lost-update
-    guard for read-modify-write publishers (merge, compact). ``None``
-    means "expect an empty table".
+    raises `SnapshotConflict` instead of publishing. ``None`` means
+    "expect an empty table".
 
     ``base_version`` (append mode only) folds in the files of THAT
     committed version instead of the current tip's. A publisher whose
@@ -745,11 +963,6 @@ def write_snapshot(
     travel to a pre-evolution version still reads the old schema. The
     default remains refuse-on-drift — silent widening is how column typos
     become permanent.
-
-    ``cdf`` (internal) records how row-level changes across this commit
-    are derivable for `snapshot_change_feed` (see module docs): commits
-    without it are append (delta = file diff) or opaque overwrites (the
-    feed refuses).
 
     ``expect`` maps expectation name -> predicate (pyspark Column or SQL
     string) enforced at write time (`_enforce_expectations`): under
@@ -783,14 +996,70 @@ def write_snapshot(
     for c in partition_by:
         if c not in df.columns:
             raise ValueError(f"partition column {c!r} not in dataframe")
-    expectation_counts: dict[str, int] | None = None
-    gated = None
-    observation = None
     expect = _predicates("expect", expect)
     expect_agg = _predicates("expect_agg", expect_agg)
     if (expect or expect_agg) and on_violation not in ("fail", "quarantine"):
         raise ValueError(f"unknown on_violation: {on_violation!r}")
-    if expect and not expect_agg:
+
+    def plan(parent: int | None, frame: DataFrame) -> _Plan:
+        schema_json = frame.schema.json()
+        if mode == "overwrite" or parent is None:
+            return _Plan(mode, schema_json, partition_by, frame)
+        base = parent if base_version is None else base_version
+        if not _STORE.exists(_manifest_path(table, base)):
+            raise FileNotFoundError(
+                f"append base_version v{base} not found at {table}"
+            )
+        pm = _read_manifest(table, base)
+        if pm["schema"] != schema_json:
+            if _shape(
+                StructType.fromJson(json.loads(pm["schema"]))
+            ) == _shape(frame.schema):
+                # nullability-only difference (a parquet read is always
+                # nullable, an in-memory frame may not be): keep the
+                # base's recorded, always-nullable form
+                schema_json = pm["schema"]
+            else:
+                schema_json = (
+                    _evolved_schema_json(pm["schema"], frame.schema)
+                    if allow_new_columns
+                    else None
+                )
+                if schema_json is None:
+                    # mixing schemas under one manifest would make the
+                    # reader null-fill silently (explicit-schema parquet
+                    # scan) — fail loudly unless the caller opted into a
+                    # strict widen-only evolution
+                    raise ValueError(
+                        f"append schema differs from snapshot v{base} at "
+                        f"{table}; publish mode='overwrite' to change "
+                        "schema, or pass allow_new_columns=True to add "
+                        "columns"
+                    )
+        if pm.get("partition_by", []) != partition_by:
+            raise ValueError(
+                f"append partitioning {partition_by} differs from "
+                f"snapshot v{base} at {table} "
+                f"({pm.get('partition_by', [])})"
+            )
+        return _Plan(
+            mode, schema_json, partition_by, frame, base, pm, _entries(pm)
+        )
+
+    def commit(frame: DataFrame, fields=None) -> int:
+        return _commit(
+            table,
+            lambda parent: plan(parent, frame),
+            "snapshot commit",
+            max_retries,
+            expected_parent=expected_parent,
+            collect_stats=collect_stats,
+            staged_fields=fields,
+        )
+
+    if not (expect or expect_agg):
+        return commit(df)
+    if not expect_agg:
         # Fast path (guide §2.6/§5: fold the gate into the write action):
         # row-level predicates ride the staged write itself as observed
         # metrics (`DataFrame.observe` / CollectMetrics), so the common
@@ -798,9 +1067,10 @@ def write_snapshot(
         # on EXACTLY the rows the write staged (code review r12's
         # nondeterministic-lineage concern), and a retried task can only
         # inflate a violation count, which fails closed. On violation the
-        # staged directory — never visible to readers, the manifest link
-        # has not landed — is deleted before the gate raises or falls back
-        # to the quarantine split below.
+        # gate raises inside the commit, which deletes the staged
+        # directory (never visible to readers: the manifest link has not
+        # landed) before the raise propagates or the quarantine split
+        # below runs.
         try:
             from pyspark.sql import Observation
 
@@ -819,199 +1089,42 @@ def write_snapshot(
             # CollectMetrics rejects some shapes at analysis time — take
             # the pinned path below, identical semantics
             observation = None
-    if (expect or expect_agg) and observation is None:
-        # pinned path: the row gate, then the exact table-level gate over
-        # the frame that will PUBLISH (the row-gated survivors under
-        # quarantine mode), all before staging
-        gated = df.persist()
-        try:
-            expectation_counts = {}
-            if expect:
-                df, row_counts = _enforce_expectations(
-                    gated, table, expect, on_violation
-                )
-                expectation_counts.update(row_counts)
-            if expect_agg:
-                expectation_counts.update(
-                    _enforce_agg_expectations(df, table, expect_agg)
-                )
-        except BaseException:
-            gated.unpersist()
-            raise
-    # Stage data under a writer-unique name first: the snapshot version is
-    # only decided at commit time, so two racing writers never write into
-    # the same directory.
-    stage = f"stage-{uuid.uuid4().hex}"
-    stage_dir = os.path.join(table, _FILES_DIR, stage)
+        if observation is not None:
 
-    def _write_stage(frame: DataFrame) -> None:
-        writer = frame.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage_dir)
+            def observed() -> dict:
+                got = observation.get  # blocks on the staging write
+                counts = {name: int(got[name]) for name in expect}
+                if any(counts.values()):
+                    raise ExpectationViolation(table, counts)
+                return {"expectations": counts}
 
-    try:
-        _write_stage(df)
-    finally:
-        if gated is not None:
-            gated.unpersist()
-    if observation is not None:
-        got = observation.get  # blocks on the write action just executed
-        row_counts = {name: int(got[name]) for name in expect}
-        if any(row_counts.values()):
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            if on_violation == "fail":
-                raise ExpectationViolation(table, row_counts)
+            try:
+                return commit(df, observed)
+            except ExpectationViolation:
+                if on_violation == "fail":
+                    raise
             # quarantine: re-run the pinned split path — the discarded
             # staged copy is replaced wholesale by the survivors' write,
             # so the published rows and the gate still see one evaluation
-            gated = df.persist()
-            try:
-                df, row_counts = _enforce_expectations(
-                    gated, table, expect, on_violation
-                )
-                _write_stage(df)
-            finally:
-                gated.unpersist()
-        expectation_counts = row_counts
-    new_entries = []
-    for rel in _list_part_files(stage_dir):
-        rows, stats = (
-            _footer_stats(os.path.join(stage_dir, rel))
-            if collect_stats
-            else (None, {})
-        )
-        new_entries.append(
-            {
-                "path": f"{stage}/{rel}",
-                "partition": _partition_of(rel),
-                "rows": rows,
-                "stats": stats,
-            }
-        )
-    schema_json = df.schema.json()
-
-    def _abort(exc: Exception):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise exc
-
-    for _ in range(max_retries):
-        parent = _tip(table)
-        if expected_parent is not _UNSET and parent != expected_parent:
-            _abort(
-                SnapshotConflict(
-                    f"{table}: expected parent {expected_parent}, "
-                    f"found {parent}"
-                )
+    # pinned path: the row gate, then the exact table-level gate over the
+    # frame that will PUBLISH (the row-gated survivors under quarantine
+    # mode), all before staging
+    gated = df.persist()
+    try:
+        counts: dict[str, int] = {}
+        if expect:
+            df, row_counts = _enforce_expectations(
+                gated, table, expect, on_violation
             )
-        version = (parent or 0) + 1
-        files = list(new_entries)
-        commit_schema_json = schema_json
-        delta = None
-        if mode == "append" and parent is not None:
-            base = parent if base_version is None else base_version
-            if not _STORE.exists(_manifest_path(table, base)):
-                _abort(
-                    FileNotFoundError(
-                        f"append base_version v{base} not found at {table}"
-                    )
-                )
-            pm = _read_manifest(table, base)
-            if pm["schema"] != schema_json:
-                shape = lambda s: [  # noqa: E731
-                    (f.name, f.dataType) for f in s.fields
-                ]
-                if shape(
-                    StructType.fromJson(json.loads(pm["schema"]))
-                ) == shape(df.schema):
-                    # nullability-only difference (a parquet read is
-                    # always nullable, an in-memory frame may not be):
-                    # keep the base's recorded, always-nullable form
-                    commit_schema_json = pm["schema"]
-                else:
-                    evolved = (
-                        _evolved_schema_json(pm["schema"], df.schema)
-                        if allow_new_columns
-                        else None
-                    )
-                    if evolved is None:
-                        # mixing schemas under one manifest would make the
-                        # reader null-fill silently (explicit-schema
-                        # parquet scan) — fail loudly unless the caller
-                        # opted into a strict widen-only evolution
-                        _abort(
-                            ValueError(
-                                f"append schema differs from snapshot "
-                                f"v{base} at {table}; publish "
-                                "mode='overwrite' to change schema, or "
-                                "pass allow_new_columns=True to add "
-                                "columns"
-                            )
-                        )
-                    commit_schema_json = evolved
-            if pm.get("partition_by", []) != partition_by:
-                _abort(
-                    ValueError(
-                        f"append partitioning {partition_by} differs from "
-                        f"snapshot v{base} at {table} "
-                        f"({pm.get('partition_by', [])})"
-                    )
-                )
-            files = _entries(pm) + files
-            # stored form is O(increment): the new entries relative to
-            # the folded base (exactly what the in-memory fold added)
-            delta = {"vs": base, "add": new_entries, "remove": []}
-        # A rogue/misconfigured vacuum may have reclaimed the stage while
-        # we raced: never link a manifest naming files that are not there.
-        gone = [
-            e["path"]
-            for e in new_entries
-            if not os.path.exists(os.path.join(table, _FILES_DIR, e["path"]))
-        ]
-        if gone:
-            raise RuntimeError(
-                f"staged files vanished before commit at {table} "
-                f"(vacuumed?): {gone[:3]}{'...' if len(gone) > 3 else ''}"
-            )
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": mode,
-            "schema": commit_schema_json,
-            "partition_by": partition_by,
-            "files": files,
-            "num_files": len(files),
-            "committed_at": time.time(),
-        }
-        if mode == "append" and parent is not None:
-            # the version whose files this append folded in — the change
-            # feed diffs against it (≠ parent only under base_version)
-            manifest["append_base"] = (
-                parent if base_version is None else base_version
-            )
-            # appends preserve the base's rows like every other
-            # maintenance commit, so they carry the CDC replay watermark
-            # too (code review r13 — only a wholesale overwrite severs)
-            manifest.update(_carry_watermark(pm) or {})
-        if cdf is not None:
-            manifest["cdf"] = cdf
-        if manifest_extra:
-            # caller-owned commit metadata (e.g. the CDC apply's
-            # applied_source_tip watermark); survives delta storage like
-            # every other manifest field
-            manifest.update(manifest_extra)
-        if expectation_counts is not None:
-            # evidence the gate ran: per-expectation violation counts
-            # (zeros under on_violation='fail'; quarantined row counts
-            # under 'quarantine')
-            manifest["expectations"] = expectation_counts
-        # create-exclusive: exactly one writer wins each version; a lost
-        # race re-reads the log and retries
-        if _commit_manifest(table, version, manifest, delta=delta):
-            return version
-    raise RuntimeError(
-        f"snapshot commit lost {max_retries} races on {table}; giving up"
-    )
+            counts.update(row_counts)
+        if expect_agg:
+            counts.update(_enforce_agg_expectations(df, table, expect_agg))
+        # evidence the gate ran: per-expectation violation counts (zeros
+        # under on_violation='fail'; quarantined row counts under
+        # 'quarantine')
+        return commit(df, lambda: {"expectations": counts})
+    finally:
+        gated.unpersist()
 
 
 def _evolved_schema_json(old_schema_json: str, new_schema) -> str | None:
@@ -1052,15 +1165,14 @@ def merge_snapshot(
     snapshot (readers see the pre-merge or post-merge table, never a mix).
 
     Replay-idempotent by construction: merging the same `df` twice yields
-    the same table. Lost-update safe: the base version is pinned via
-    ``expected_parent`` — if a concurrent writer (e.g. the
+    the same table. Lost-update safe: if a concurrent writer (e.g. the
     ingest_admission_job micro-batch append) commits between this merge's
-    read and its write, the commit raises `SnapshotConflict` and the WHOLE
-    read-merge-write re-runs against the new latest version, so the
-    concurrent rows are merged, never dropped. The anti-join + union is a
-    key-partitioned shuffle of the current snapshot — at 100 TB, partition
-    the table so the merge prunes to affected partitions (the same
-    discipline the JDBC staged merge documents).
+    read and its write, the WHOLE read-merge-write re-runs against the new
+    latest version, so the concurrent rows are merged, never dropped. The
+    anti-join + union is a key-partitioned shuffle of the current
+    snapshot — at 100 TB, partition the table so the merge prunes to
+    affected partitions (the same discipline the JDBC staged merge
+    documents).
 
     ``allow_new_columns`` opts merge into the same widen-only schema
     evolution appends have (Delta's mergeSchema): `df` may carry NEW
@@ -1070,24 +1182,14 @@ def merge_snapshot(
     stay composable across the evolution). Default remains
     refuse-on-drift."""
     spark = df.sparkSession
-    last_exc: Exception | None = None
-    for _ in range(max_conflict_retries):
-        base = _tip(table)
-        if base is None:
-            try:
-                return write_snapshot(
-                    df, table, mode="overwrite", expected_parent=None
-                )
-            except SnapshotConflict as exc:  # rival bootstrapped the table
-                last_exc = exc
-                continue
+
+    def plan(base: int | None) -> _Plan:
+        if base is None:  # bootstrap: the merge is the first snapshot
+            return _Plan("overwrite", df.schema.json(), [], df)
         man = _read_manifest(table, base)
-        pb = man.get("partition_by", [])
         current = read_snapshot(spark, table, version=base)
-        # compare name+type only: a parquet read is always nullable, while
-        # an in-memory frame may carry non-null fields for the same data
-        shape = lambda s: [(f.name, f.dataType) for f in s.fields]  # noqa: E731
-        if shape(current.schema) != shape(df.schema):
+        incoming = df
+        if _shape(current.schema) != _shape(df.schema):
             evolved = (
                 _evolved_schema_json(man["schema"], df.schema)
                 if allow_new_columns
@@ -1111,44 +1213,26 @@ def merge_snapshot(
                     )
             order = [f.name for f in widened.fields]
             current = current.select(*order)
-            df = df.select(*order)
-        merged = current.join(
-            df.select(*keys).distinct(), list(keys), "left_anti"
-        ).unionByName(df)
+            incoming = df.select(*order)
+        keyset = incoming.select(*keys).distinct()
+        merged = current.join(keyset, list(keys), "left_anti").unionByName(
+            incoming
+        )
         # Change-data-feed record: the merge's row-level delta is the
         # matched pre-images (deletes) plus the increment (inserts) —
         # O(delta + matched), computed from joins the merge performs
         # anyway, and written ONCE at commit time so downstream
         # incremental consumers never diff two full snapshots.
-        matched = current.join(
-            df.select(*keys).distinct(), list(keys), "left_semi"
-        )
+        matched = current.join(keyset, list(keys), "left_semi")
         changes = matched.withColumn(
             "_change_type", F.lit("delete")
-        ).unionByName(df.withColumn("_change_type", F.lit("insert")))
-        cdf_stage = f"cdf-{uuid.uuid4().hex}"
-        changes.write.mode("error").parquet(
-            os.path.join(table, _FILES_DIR, cdf_stage)
+        ).unionByName(incoming.withColumn("_change_type", F.lit("insert")))
+        return _Plan(
+            "overwrite", merged.schema.json(), man.get("partition_by", []),
+            merged, base, man, changes=changes, cdf="rows",
         )
-        try:
-            return write_snapshot(
-                merged,
-                table,
-                mode="overwrite",
-                partition_by=pb,
-                expected_parent=base,
-                cdf={"kind": "rows", "dir": cdf_stage},
-                manifest_extra=_carry_watermark(man),
-            )
-        except SnapshotConflict as exc:
-            shutil.rmtree(
-                os.path.join(table, _FILES_DIR, cdf_stage),
-                ignore_errors=True,
-            )
-            last_exc = exc  # table moved under us — recompute from new tip
-    raise RuntimeError(
-        f"merge lost {max_conflict_retries} concurrent commits on {table}"
-    ) from last_exc
+
+    return _commit(table, plan, "merge", max_conflict_retries, replan=True)
 
 
 def replace_partitions(
@@ -1172,8 +1256,9 @@ def replace_partitions(
     driver read — a backfill touches few partitions by construction).
     Rows of `df` outside `values` raise: silently dropping them or
     silently leaking them into surviving partitions are both wrong.
-    The table must already exist partitioned by exactly [partition_col]."""
-    spark = df.sparkSession
+    The table must already exist partitioned by exactly [partition_col].
+    `df` is staged once: a commit that loses a race re-links the same
+    files onto the new tip."""
     if values is None:
         values = [
             r[0] for r in df.select(partition_col).distinct().collect()
@@ -1199,45 +1284,20 @@ def replace_partitions(
             "partitions"
         )
     value_strs = {str(v) for v in values}
-    stage = f"stage-{uuid.uuid4().hex}"
-    stage_dir = os.path.join(table, _FILES_DIR, stage)
-    df.write.mode("error").partitionBy(partition_col).parquet(stage_dir)
-    new_entries = []
-    for rel in _list_part_files(stage_dir):
-        rows, stats = (
-            _footer_stats(os.path.join(stage_dir, rel))
-            if collect_stats
-            else (None, {})
-        )
-        new_entries.append(
-            {
-                "path": f"{stage}/{rel}",
-                "partition": _partition_of(rel),
-                "rows": rows,
-                "stats": stats,
-            }
-        )
 
-    for _ in range(max_retries):
-        parent = _tip(table)
+    def plan(parent: int | None) -> _Plan:
         if parent is None:
-            shutil.rmtree(stage_dir, ignore_errors=True)
             raise FileNotFoundError(
                 f"replace_partitions needs an existing snapshot at {table}"
             )
         pm = _read_manifest(table, parent)
         if pm.get("partition_by", []) != [partition_col]:
-            shutil.rmtree(stage_dir, ignore_errors=True)
             raise ValueError(
                 f"{table} is partitioned by {pm.get('partition_by', [])}, "
                 f"not [{partition_col!r}]"
             )
-        # name+type only (merge_snapshot's rule): a parquet read is always
-        # nullable while an in-memory frame may carry non-null fields
         parent_schema = StructType.fromJson(json.loads(pm["schema"]))
-        shape = lambda s: [(f.name, f.dataType) for f in s.fields]  # noqa: E731
-        if shape(parent_schema) != shape(df.schema):
-            shutil.rmtree(stage_dir, ignore_errors=True)
+        if _shape(parent_schema) != _shape(df.schema):
             raise ValueError(
                 f"replace schema differs from snapshot v{parent} at {table}"
             )
@@ -1246,58 +1306,21 @@ def replace_partitions(
             for e in _entries(pm)
             if e.get("partition", {}).get(partition_col) not in value_strs
         ]
-        files = carried + new_entries
-        removed = [
-            e["path"]
-            for e in _entries(pm)
-            if e.get("partition", {}).get(partition_col) in value_strs
-        ]
-        gone = [
-            e["path"]
-            for e in new_entries
-            if not os.path.exists(os.path.join(table, _FILES_DIR, e["path"]))
-        ]
-        if gone:
-            raise RuntimeError(
-                f"staged files vanished before commit at {table} "
-                f"(vacuumed?): {gone[:3]}"
-            )
-        version = parent + 1
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": "replace",
-            # keep the PARENT's recorded schema: the carried files were
-            # written under it, and it is the always-nullable read form —
-            # declaring a new frame's non-null fields over old files
-            # would misstate the carried data
-            "schema": pm["schema"],
-            "partition_by": [partition_col],
-            "files": files,
-            "num_files": len(files),
-            "committed_at": time.time(),
-            # change feed derivation: the replaced partitions' old files
-            # are row-level deletes, the staged files row-level inserts;
-            # untouched partitions (carried by reference) contribute none
-            "cdf": {
-                "kind": "fileset",
-                "removed": removed,
-                "added": [e["path"] for e in new_entries],
-            },
-        }
-        manifest.update(_carry_watermark(pm) or {})
-        # stored form is O(touched partitions): replaced paths out, staged
-        # entries in — carried partitions never serialize again
-        if _commit_manifest(
-            table,
-            version,
-            manifest,
-            delta={"vs": parent, "add": new_entries, "remove": removed},
-        ):
-            return version
-        # lost the race — recompute against the new tip
-    raise RuntimeError(
-        f"replace_partitions lost {max_retries} races on {table}; giving up"
+        # keep the PARENT's recorded schema: the carried files were
+        # written under it, and it is the always-nullable read form —
+        # declaring a new frame's non-null fields over old files would
+        # misstate the carried data. Change feed: the replaced partitions'
+        # old files are row-level deletes, the staged files row-level
+        # inserts; untouched partitions (carried by reference) contribute
+        # none.
+        return _Plan(
+            "replace", pm["schema"], [partition_col], df, parent, pm, carried,
+            cdf="fileset",
+        )
+
+    return _commit(
+        table, plan, "replace_partitions", max_retries,
+        collect_stats=collect_stats,
     )
 
 
@@ -1323,103 +1346,42 @@ def delete_from_snapshot(
     stays O(delta). A predicate matching nothing commits nothing.
 
     Returns (version, n_deleted) — version is the unchanged tip when
-    n_deleted == 0. Lost-update safe via the same optimistic loop as
-    merge/compact: a concurrent commit between read and link re-runs the
-    whole prune-rewrite against the new tip."""
-    for _ in range(max_conflict_retries):
-        base = _tip(table)
+    n_deleted == 0. Lost-update safe: a concurrent commit between read
+    and link re-runs the whole prune-rewrite against the new tip."""
+    n_deleted = 0
+
+    def plan(base: int | None) -> _Plan | int:
+        nonlocal n_deleted
+        n_deleted = 0  # a replan may find nothing left to touch
         if base is None:
             raise FileNotFoundError(f"no committed snapshots at {table}")
         man = _read_manifest(table, base)
         schema = StructType.fromJson(json.loads(man["schema"]))
         pb = man.get("partition_by", [])
-        unknown = [c for c in where if c not in schema.fieldNames()]
-        if unknown:
-            raise KeyError(f"where columns not in snapshot schema: {unknown}")
+        # NULLs never match, and ~match must keep them
+        match = F.coalesce(_where_match(where, schema), F.lit(False))
         entries = _entries(man)
         touched = [e for e in entries if _keep_entry(e, where, pb)]
-        carried = [e for e in entries if not _keep_entry(e, where, pb)]
         if not touched:
-            return base, 0
+            return base
         tdf = _scan_entries(spark, table, touched, schema, pb)
-        match = None
-        for col, pred in where.items():
-            lo, hi = _bounds(pred)
-            cond = (
-                F.col(col) == F.lit(lo)
-                if lo is hi or lo == hi
-                else F.col(col).between(F.lit(lo), F.lit(hi))
-            )
-            match = cond if match is None else (match & cond)
-        match = F.coalesce(match, F.lit(False))  # NULLs never match
         deleted = tdf.filter(match)
-        kept = tdf.filter(~match)
-        n_del = deleted.count()
-        if n_del == 0:
-            return base, 0  # stats were conservative; nothing to rewrite
-
-        stage = f"stage-{uuid.uuid4().hex}"
-        stage_dir = os.path.join(table, _FILES_DIR, stage)
-        writer = kept.write.mode("error")
-        if pb:
-            writer = writer.partitionBy(*pb)
-        writer.parquet(stage_dir)
-        new_entries = []
-        for rel in _list_part_files(stage_dir):
-            rows, stats = (
-                _footer_stats(os.path.join(stage_dir, rel))
-                if collect_stats
-                else (None, {})
-            )
-            new_entries.append(
-                {
-                    "path": f"{stage}/{rel}",
-                    "partition": _partition_of(rel),
-                    "rows": rows,
-                    "stats": stats,
-                }
-            )
-        cdf_stage = f"cdf-{uuid.uuid4().hex}"
-        deleted.withColumn("_change_type", F.lit("delete")).write.mode(
-            "error"
-        ).parquet(os.path.join(table, _FILES_DIR, cdf_stage))
-
-        files = carried + new_entries
-        version = base + 1
-        manifest = {
-            "version": version,
-            "parent": base,
-            "mode": "delete",
-            "schema": man["schema"],  # kept rows carry the read form
-            "partition_by": pb,
-            "files": files,
-            "num_files": len(files),
-            "committed_at": time.time(),
-            "cdf": {"kind": "rows", "dir": cdf_stage},
-        }
-        manifest.update(_carry_watermark(man) or {})
-        # stored form is O(touched files): the pruned-and-rewritten paths
-        # out, their replacements in — carried files never serialize again
-        if _commit_manifest(
-            table,
-            version,
-            manifest,
-            delta={
-                "vs": base,
-                "add": new_entries,
-                "remove": [e["path"] for e in touched],
-            },
-        ):
-            return version, n_del
-        # lost the race — recompute against the new tip
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(table, _FILES_DIR, cdf_stage),
-            ignore_errors=True,
+        n_deleted = deleted.count()
+        if n_deleted == 0:
+            return base  # stats were conservative; nothing to rewrite
+        carried = [e for e in entries if not _keep_entry(e, where, pb)]
+        return _Plan(
+            "delete", man["schema"], pb, tdf.filter(~match), base, man,
+            carried,
+            changes=deleted.withColumn("_change_type", F.lit("delete")),
+            cdf="rows",
         )
-    raise RuntimeError(
-        f"delete lost {max_conflict_retries} concurrent commits on {table}"
+
+    version = _commit(
+        table, plan, "delete", max_conflict_retries, replan=True,
+        collect_stats=collect_stats,
     )
+    return version, n_deleted
 
 
 def update_snapshot(
@@ -1452,20 +1414,22 @@ def update_snapshot(
     Updating a partition column is allowed (updated rows move to their
     new partition directory in the rewrite); predicates on OTHER columns
     still prune. Returns (version, n_updated) — the unchanged tip when
-    nothing matches. Lost-update safe via the same optimistic retry loop
-    as merge/delete/compact."""
+    nothing matches. Lost-update safe like DELETE: a concurrent commit
+    re-runs the whole prune-rewrite against the new tip."""
     from pyspark.sql import Column
 
-    for _ in range(max_conflict_retries):
-        base = _tip(table)
+    n_updated = 0
+
+    def plan(base: int | None) -> _Plan | int:
+        nonlocal n_updated
+        n_updated = 0  # a replan may find nothing left to touch
         if base is None:
             raise FileNotFoundError(f"no committed snapshots at {table}")
         man = _read_manifest(table, base)
         schema = StructType.fromJson(json.loads(man["schema"]))
         pb = man.get("partition_by", [])
-        unknown = [c for c in where if c not in schema.fieldNames()]
-        if unknown:
-            raise KeyError(f"where columns not in snapshot schema: {unknown}")
+        # NULLs never match, and ~match must keep them
+        match = F.coalesce(_where_match(where, schema), F.lit(False))
         unknown = [c for c in set if c not in schema.fieldNames()]
         if unknown:
             raise KeyError(f"set columns not in snapshot schema: {unknown}")
@@ -1473,26 +1437,13 @@ def update_snapshot(
             raise ValueError("update_snapshot needs at least one set column")
         entries = _entries(man)
         touched = [e for e in entries if _keep_entry(e, where, pb)]
-        carried = [e for e in entries if not _keep_entry(e, where, pb)]
         if not touched:
-            return base, 0
+            return base
         tdf = _scan_entries(spark, table, touched, schema, pb)
-        match = None
-        for col, pred in where.items():
-            lo, hi = _bounds(pred)
-            cond = (
-                F.col(col) == F.lit(lo)
-                if lo is hi or lo == hi
-                else F.col(col).between(F.lit(lo), F.lit(hi))
-            )
-            match = cond if match is None else (match & cond)
-        match = F.coalesce(match, F.lit(False))  # NULLs never match
         matched = tdf.filter(match)
-        kept = tdf.filter(~match)
-        n_upd = matched.count()
-        if n_upd == 0:
-            return base, 0  # stats were conservative; nothing to rewrite
-
+        n_updated = matched.count()
+        if n_updated == 0:
+            return base  # stats were conservative; nothing to rewrite
         # ALL set expressions evaluate against the PRE-IMAGE row (SQL
         # UPDATE semantics): one select, never sequential withColumns —
         # {'a': col('b'), 'b': col('a')} must swap, not cascade, and the
@@ -1507,70 +1458,21 @@ def update_snapshot(
             else:
                 exprs.append(F.col(name))
         updated = matched.select(*exprs)
-
-        stage = f"stage-{uuid.uuid4().hex}"
-        stage_dir = os.path.join(table, _FILES_DIR, stage)
-        writer = kept.unionByName(updated).write.mode("error")
-        if pb:
-            writer = writer.partitionBy(*pb)
-        writer.parquet(stage_dir)
-        new_entries = []
-        for rel in _list_part_files(stage_dir):
-            rows, stats = (
-                _footer_stats(os.path.join(stage_dir, rel))
-                if collect_stats
-                else (None, {})
-            )
-            new_entries.append(
-                {
-                    "path": f"{stage}/{rel}",
-                    "partition": _partition_of(rel),
-                    "rows": rows,
-                    "stats": stats,
-                }
-            )
-        cdf_stage = f"cdf-{uuid.uuid4().hex}"
-        matched.withColumn("_change_type", F.lit("delete")).unionByName(
-            updated.withColumn("_change_type", F.lit("insert"))
-        ).write.mode("error").parquet(
-            os.path.join(table, _FILES_DIR, cdf_stage)
+        carried = [e for e in entries if not _keep_entry(e, where, pb)]
+        return _Plan(
+            "update", man["schema"], pb,
+            tdf.filter(~match).unionByName(updated), base, man, carried,
+            changes=matched.withColumn(
+                "_change_type", F.lit("delete")
+            ).unionByName(updated.withColumn("_change_type", F.lit("insert"))),
+            cdf="rows",
         )
 
-        files = carried + new_entries
-        version = base + 1
-        manifest = {
-            "version": version,
-            "parent": base,
-            "mode": "update",
-            "schema": man["schema"],
-            "partition_by": pb,
-            "files": files,
-            "num_files": len(files),
-            "committed_at": time.time(),
-            "cdf": {"kind": "rows", "dir": cdf_stage},
-        }
-        manifest.update(_carry_watermark(man) or {})
-        # same O(touched files) stored form as DELETE
-        if _commit_manifest(
-            table,
-            version,
-            manifest,
-            delta={
-                "vs": base,
-                "add": new_entries,
-                "remove": [e["path"] for e in touched],
-            },
-        ):
-            return version, n_upd
-        # lost the race — recompute against the new tip
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(table, _FILES_DIR, cdf_stage),
-            ignore_errors=True,
-        )
-    raise RuntimeError(
-        f"update lost {max_conflict_retries} concurrent commits on {table}"
+    version = _commit(
+        table, plan, "update", max_conflict_retries, replan=True,
+        collect_stats=collect_stats,
     )
+    return version, n_updated
 
 
 def _cmp_key(v):
@@ -1611,6 +1513,25 @@ def _bounds(pred) -> tuple:
     if isinstance(pred, tuple) and len(pred) == 2:
         return pred
     return (pred, pred)
+
+
+def _where_match(where: dict, schema: StructType):
+    """A `where` mapping (column -> value, or inclusive (lo, hi)) as one
+    AND-ed Column predicate, None when empty; KeyError names columns the
+    schema lacks. NULLs never match."""
+    unknown = [c for c in where if c not in schema.fieldNames()]
+    if unknown:
+        raise KeyError(f"where columns not in snapshot schema: {unknown}")
+    match = None
+    for col, pred in where.items():
+        lo, hi = _bounds(pred)
+        cond = (
+            F.col(col) == F.lit(lo)
+            if lo is hi or lo == hi
+            else F.col(col).between(F.lit(lo), F.lit(hi))
+        )
+        match = cond if match is None else (match & cond)
+    return match
 
 
 def _keep_entry(entry: dict, where: dict, partition_by: list[str]) -> bool:
@@ -1754,23 +1675,14 @@ def read_snapshot(
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     partition_by = manifest.get("partition_by", [])
     where = where or {}
-    unknown = [c for c in where if c not in schema.fieldNames()]
-    if unknown:
-        raise KeyError(f"where columns not in snapshot schema: {unknown}")
+    match = _where_match(where, schema)
     entries = [
         e
         for e in _entries(manifest)
         if _keep_entry(e, where, partition_by)
     ]
     df = _scan_entries(spark, table, entries, schema, partition_by)
-    for col, pred in where.items():
-        lo, hi = _bounds(pred)
-        df = (
-            df.filter(F.col(col) == F.lit(lo))
-            if lo is hi or lo == hi
-            else df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-        )
-    return df
+    return df if match is None else df.filter(match)
 
 
 PIN_SCHEMA = "table string, version int"  # one row per member table
@@ -1875,16 +1787,15 @@ def apply_changes_to_snapshot(
     scan to find that out. Maintenance commits between applies
     (compact / DELETE / UPDATE / merge / replace_partitions) carry the
     watermark forward (`_carry_watermark`), so the short-circuit
-    survives them; only a wholesale manual overwrite drops it. (Assumes the replica is fed from ONE source
-    feed, the function's contract anyway — commit versions from two
-    different sources are not comparable.) Bootstrap:
-    applying a feed
-    from version 0 into an empty table materializes the source. An empty
-    net delta commits nothing. Lost-update safe via the optimistic
-    expected_parent loop (concurrent replica writers re-run against the
-    new tip). Cost: the feed read is O(delta); the publish rewrites the
-    replica (merge_snapshot's posture — partition the replica so a
-    production apply prunes to affected partitions).
+    survives them; only a wholesale manual overwrite drops it. (Assumes
+    the replica is fed from ONE source feed, the function's contract
+    anyway — commit versions from two different sources are not
+    comparable.) Bootstrap: applying a feed from version 0 into an empty
+    table materializes the source. An empty net delta commits nothing.
+    Lost-update safe: a concurrent replica writer makes the apply re-run
+    against the new tip. Cost: the feed read is O(delta); the publish
+    rewrites the replica (merge_snapshot's posture — partition the
+    replica so a production apply prunes to affected partitions).
 
     Returns the replica's new (or unchanged) tip version."""
     spark = changes.sparkSession
@@ -1906,26 +1817,18 @@ def apply_changes_to_snapshot(
         if incoming_tip is not None
         else None
     )
-    last_exc: Exception | None = None
-    for _ in range(max_conflict_retries):
-        base = _tip(table)
+
+    def plan(base: int | None) -> _Plan | int:
         if base is None:
             if inserts.limit(1).count() == 0:
                 raise FileNotFoundError(
                     f"no committed snapshots at {table} and the feed "
                     "range nets to zero inserts — nothing to bootstrap"
                 )
-            try:
-                return write_snapshot(
-                    inserts,
-                    table,
-                    mode="overwrite",
-                    expected_parent=None,
-                    manifest_extra=watermark,
-                )
-            except SnapshotConflict as exc:
-                last_exc = exc
-                continue
+            return _Plan(
+                "overwrite", inserts.schema.json(), [], inserts,
+                extra=watermark,
+            )
         if net.limit(1).count() == 0:
             return base
         man = _read_manifest(table, base)
@@ -1939,7 +1842,6 @@ def apply_changes_to_snapshot(
             # keyed apply would converge to identical content, so skip
             # the commit entirely — O(1) metadata, no replica scan
             return base
-        pb = man.get("partition_by", [])
         schema = StructType.fromJson(json.loads(man["schema"]))
         if [f.name for f in schema.fields] != data_cols:
             raise ValueError(
@@ -1947,8 +1849,9 @@ def apply_changes_to_snapshot(
                 f"schema at {table}: {[f.name for f in schema.fields]}"
             )
         current = read_snapshot(spark, table, version=base)
-        kept = current.join(deletes_keys, keys, "left_anti")
-        merged = kept.unionByName(inserts)
+        merged = current.join(deletes_keys, keys, "left_anti").unionByName(
+            inserts
+        )
         # the replica's own change record: its matched pre-images as
         # deletes + the net inserts — O(delta + matched), like merge
         matched = current.join(deletes_keys, keys, "left_semi")
@@ -1959,33 +1862,17 @@ def apply_changes_to_snapshot(
         )
 
         collect_stream_lint(merged)
-        out_changes = matched.withColumn(
+        changes = matched.withColumn(
             "_change_type", F.lit("delete")
         ).unionByName(inserts.withColumn("_change_type", F.lit("insert")))
-        cdf_stage = f"cdf-{uuid.uuid4().hex}"
-        out_changes.write.mode("error").parquet(
-            os.path.join(table, _FILES_DIR, cdf_stage)
+        return _Plan(
+            "overwrite", merged.schema.json(), man.get("partition_by", []),
+            merged, base, man, changes=changes, cdf="rows", extra=watermark,
         )
-        try:
-            return write_snapshot(
-                merged,
-                table,
-                mode="overwrite",
-                partition_by=pb,
-                expected_parent=base,
-                cdf={"kind": "rows", "dir": cdf_stage},
-                manifest_extra=watermark,
-            )
-        except SnapshotConflict as exc:
-            shutil.rmtree(
-                os.path.join(table, _FILES_DIR, cdf_stage),
-                ignore_errors=True,
-            )
-            last_exc = exc
-    raise RuntimeError(
-        f"replica apply lost {max_conflict_retries} concurrent commits "
-        f"on {table}"
-    ) from last_exc
+
+    return _commit(
+        table, plan, "replica apply", max_conflict_retries, replan=True
+    )
 
 
 def compact_snapshot(
@@ -2016,12 +1903,10 @@ def compact_snapshot(
     at read time. Layout investment, not semantics: values and schema are
     unchanged.
 
-    Lost-update safe like merge_snapshot: the base version is pinned via
-    ``expected_parent``; a concurrent commit re-runs the compaction
-    against the new tip rather than silently discarding it."""
-    last_exc: Exception | None = None
-    for _ in range(max_conflict_retries):
-        base = _tip(table)
+    Lost-update safe like merge_snapshot: a concurrent commit re-runs the
+    compaction against the new tip rather than silently discarding it."""
+
+    def plan(base: int | None) -> _Plan:
         if base is None:
             raise FileNotFoundError(f"no committed snapshots at {table}")
         man = _read_manifest(table, base)
@@ -2062,23 +1947,14 @@ def compact_snapshot(
             )
         else:
             compacted = current.repartition(target_files)
-        try:
-            return write_snapshot(
-                compacted,
-                table,
-                mode="overwrite",
-                partition_by=pb,
-                expected_parent=base,
-                # a compaction/ZORDER rewrite is data-equivalent: the
-                # change feed across it is exactly zero rows
-                cdf={"kind": "noop"},
-                manifest_extra=_carry_watermark(man),
-            )
-        except SnapshotConflict as exc:
-            last_exc = exc
-    raise RuntimeError(
-        f"compact lost {max_conflict_retries} concurrent commits on {table}"
-    ) from last_exc
+        # a compaction/ZORDER rewrite is data-equivalent: the change feed
+        # across it is exactly zero rows
+        return _Plan(
+            "overwrite", compacted.schema.json(), pb, compacted, base, man,
+            cdf={"kind": "noop"},
+        )
+
+    return _commit(table, plan, "compact", max_conflict_retries, replan=True)
 
 
 def snapshot_changes(
@@ -2371,8 +2247,8 @@ def vacuum(
     modified within `retention_seconds`, which may belong to an in-flight
     writer that has staged data but not yet linked its manifest (deleting
     those would make the writer publish a manifest naming dead files; the
-    commit-side existence recheck in write_snapshot is the second half of
-    this defense). Returns the deleted directory names. Retained versions
+    commit-side existence recheck in `_commit` is the second half of this
+    defense). Returns the deleted directory names. Retained versions
     remain fully readable — referenced directories are never touched."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")

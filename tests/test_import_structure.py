@@ -1,10 +1,10 @@
 """Module structure of the package: the ANN quantizers have one owner
 (operators/ann_index.py imports no other operator module but
 `fragments`), the pin tables of multi-table artifacts have one writer
-(sinks/manifest.py), and every `from clinical_search_data_pipeline_spark...
-import X` in the package and the root scripts resolves — including imports
-inside functions, which otherwise fail only when a rarely run path is
-taken."""
+(sinks/manifest.py), the snapshot sink commits in one place, and every
+`from clinical_search_data_pipeline_spark... import X` in the package and
+the root scripts resolves — including imports inside functions, which
+otherwise fail only when a rarely run path is taken."""
 
 from __future__ import annotations
 
@@ -165,3 +165,36 @@ def test_only_the_manifest_sink_writes_pin_tables():
             if any("meta" in w.lower() for t in table for w in _names_in(t)):
                 found.append(f"{rel}:{node.lineno}: a meta-table write")
     assert not found, "\n".join(found)
+
+
+def test_the_snapshot_sink_commits_in_one_place():
+    """Every snapshot-sink writer commits through one primitive,
+    sinks/manifest._commit: it holds the module's one retry loop, its one
+    `_commit_manifest` call and its one manifest dict, it alone mints the
+    `stage-`/`cdf-` directory names, and `shutil.rmtree` runs only there
+    and in `vacuum` — so a writer cannot grow its own commit loop or
+    cleanup again."""
+    path = REPO / PACKAGE / "sinks" / "manifest.py"
+    found: dict[str, list[str]] = {}
+    for top in ast.parse(path.read_text(), filename=str(path)).body:
+        for node in ast.walk(top):
+            what = None
+            if isinstance(node, ast.Call):
+                f = node.func
+                what = getattr(f, "id", None) or getattr(f, "attr", None)
+            elif (
+                isinstance(node, ast.For)
+                and isinstance(node.iter, ast.Call)
+                and getattr(node.iter.func, "id", None) == "range"
+                and any("retr" in n for n in _names_in(node.iter))
+            ):
+                what = "retry loop"
+            elif isinstance(node, ast.Dict) and "num_files" in [
+                getattr(k, "value", None) for k in node.keys
+            ]:
+                what = "manifest dict"
+            if what:
+                found.setdefault(what, []).append(getattr(top, "name", "?"))
+    for what in ("_commit_manifest", "uuid4", "retry loop", "manifest dict"):
+        assert found.get(what) == ["_commit"], (what, found.get(what))
+    assert set(found["rmtree"]) == {"_commit", "vacuum"}, found["rmtree"]

@@ -1204,6 +1204,72 @@ def test_incremental_refresh_replayed_fold_does_not_duplicate(spark, tmp_path):
     assert corpus.filter(F.col("doc_id") == a_id).count() == 1
 
 
+def test_first_run_refresh_crash_replays_from_the_seed(
+    spark, tmp_path, monkeypatch
+):
+    """The first run seeds the standing corpus before it publishes the
+    built gate indexes, and that first pin names the seed. Its first
+    incremental refresh appends to the corpus, then dies before the
+    increment pin; the restart replays the feed onto the pinned seed, so
+    the pinned standing corpus holds every doc_id once."""
+    import os
+
+    from clinical_search_data_pipeline_spark.sinks import manifest as m
+    from clinical_search_data_pipeline_spark.sources.readers import read_table
+
+    out0 = str(tmp_path / "discover")
+    pipelines.ingest_admission_job(spark, SF_SMOKE, out0)
+    adm = sorted(
+        r.doc_id
+        for r in spark.read.parquet(out0).filter("admitted").collect()
+    )
+    docs = read_table(spark, SF_SMOKE, "documents")
+
+    def stage_one(name, doc_id):
+        flat = str(tmp_path / name)
+        os.makedirs(flat)
+        src_dir = str(tmp_path / f"{name}_src")
+        docs.filter(F.col("doc_id") == doc_id).coalesce(1).write.parquet(
+            src_dir
+        )
+        src = next(p for p in os.listdir(src_dir) if p.endswith(".parquet"))
+        os.link(os.path.join(src_dir, src), os.path.join(flat, "b0.parquet"))
+        return flat
+
+    root = str(tmp_path / "gidx")
+    lake = str(tmp_path / "lake")
+    corpus_table = f"{lake}_corpus"
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("died before the increment pin")
+
+    with monkeypatch.context() as patched:
+        patched.setattr(pipelines, "publish_gate_index_increment", crash)
+        # raised inside foreachBatch: the streaming query wraps it
+        with pytest.raises(Exception, match="increment pin"):
+            pipelines.ingest_admission_job(
+                spark, SF_SMOKE, str(tmp_path / "out1"),
+                snapshot_table=lake, refresh_every=1,
+                staging_dir=stage_one("flat1", adm[0]),
+                gate_index_root=root, incremental_refresh=True,
+            )
+    first_pin = pipelines.gate_index_corpus_version(spark, root)
+    assert m.latest_version(corpus_table) == 2  # the crashed append
+
+    pipelines.ingest_admission_job(
+        spark, SF_SMOKE, str(tmp_path / "out2"),
+        snapshot_table=lake, refresh_every=1,
+        staging_dir=stage_one("flat2", adm[1]),
+        gate_index_root=root, incremental_refresh=True,
+    )
+    pinned = pipelines.gate_index_corpus_version(spark, root)
+    corpus = m.read_snapshot(spark, corpus_table, version=pinned)
+    twice = corpus.groupBy("doc_id").count().filter("count > 1").collect()
+    assert twice == []
+    assert corpus.filter(F.col("doc_id").isin(adm[0], adm[1])).count() == 2
+    assert first_pin == 1  # the seed
+
+
 def test_mart_meta_pin_gives_all_old_or_all_new(spark, tmp_path):
     """VERDICT r11 #4: the four marts must tell ONE story. mart_etl_job
     lands a `_mart_meta` pin AFTER every mart commits; readers resolving

@@ -85,31 +85,87 @@ def test_vacuum_never_reclaims_inflight_stage(spark, tmp_path):
     assert m.vacuum(table, keep_last=1) == ["stage-inflight"]
 
 
-def test_commit_aborts_if_stage_vacuumed_under_writer(spark, tmp_path, monkeypatch):
+def _seed_for(spark, table, writer):
+    """Commit v1 (ids 0-2) at `table` and return a call of `writer` that
+    stages new files against it."""
+    if writer == "replace_partitions":
+        m.write_snapshot(
+            _df(spark, 0, 3).selectExpr("*", "id % 2 AS p"), table,
+            partition_by=["p"],
+        )
+        return lambda: m.replace_partitions(
+            _df(spark, 10, 12).selectExpr("*", "id % 2 AS p"), table, "p"
+        )
+    if writer == "apply_changes_to_snapshot":
+        source = table + "_source"
+        m.write_snapshot(_df(spark, 0, 3), source)
+        m.apply_changes_to_snapshot(
+            m.snapshot_change_feed(spark, source, since=0, until=1),
+            table, keys=["id"],
+        )
+        m.write_snapshot(_df(spark, 10, 12), source, mode="append")
+        feed = m.snapshot_change_feed(spark, source, since=1, until=2)
+        return lambda: m.apply_changes_to_snapshot(feed, table, keys=["id"])
+    m.write_snapshot(_df(spark, 0, 3), table)
+    return {
+        "write_snapshot": lambda: m.write_snapshot(
+            _df(spark, 10, 12), table, mode="append"
+        ),
+        "merge_snapshot": lambda: m.merge_snapshot(
+            _df(spark, 1, 12), table, keys=["id"]
+        ),
+        "delete_from_snapshot": lambda: m.delete_from_snapshot(
+            spark, table, where={"id": 1}
+        ),
+        "update_snapshot": lambda: m.update_snapshot(
+            spark, table, where={"id": 1}, set={"v": 0}
+        ),
+        "compact_snapshot": lambda: m.compact_snapshot(
+            spark, table, target_files=1
+        ),
+    }[writer]
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "write_snapshot",
+        "merge_snapshot",
+        "replace_partitions",
+        "delete_from_snapshot",
+        "update_snapshot",
+        "apply_changes_to_snapshot",
+        "compact_snapshot",
+    ],
+)
+def test_commit_aborts_if_stage_vacuumed_under_writer(
+    spark, tmp_path, monkeypatch, writer
+):
     """Second half of the vacuum defense: if a rogue vacuum (retention
     misconfigured to 0) reclaims the staged files after the write but
     before the manifest link, the commit must abort — a manifest naming
-    deleted files would poison the latest version for every reader."""
+    deleted files would poison the latest version for every reader.
+    Every writer commits through the same check."""
     import shutil as _sh
 
     table = str(tmp_path / "t")
-    m.write_snapshot(_df(spark, 0, 3), table)
-    real_tip = m._tip
+    run = _seed_for(spark, table, writer)
+    real_carry = m._carry_watermark
 
-    def vacuum_midway(t):
-        # runs inside write_snapshot's commit loop, after staging
-        for name in os.listdir(os.path.join(t, "files")):
-            d = os.path.join(t, "files", name)
+    def vacuum_midway(base_man):
+        # runs inside the commit, after staging and just before the link
+        for name in os.listdir(os.path.join(table, "files")):
+            d = os.path.join(table, "files", name)
             if not any(
                 e["path"].startswith(name + "/")
-                for e in m._entries(m._read_manifest(t, 1))
+                for e in m._entries(m._read_manifest(table, 1))
             ):
                 _sh.rmtree(d)
-        return real_tip(t)
+        return real_carry(base_man)
 
-    monkeypatch.setattr(m, "_tip", vacuum_midway)
+    monkeypatch.setattr(m, "_carry_watermark", vacuum_midway)
     with pytest.raises(RuntimeError, match="vanished"):
-        m.write_snapshot(_df(spark, 10, 12), table, mode="append")
+        run()
     monkeypatch.undo()
     # table is undamaged: latest version still the intact v1
     assert _ids(m.read_snapshot(spark, table)) == [0, 1, 2]
